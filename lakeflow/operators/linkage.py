@@ -161,7 +161,10 @@ def edit_distance_pairs(
         f"substring({text_col}, d.i + 1, d.j - d.i - 1), "
         f"substring({text_col}, d.j + 1))"
     )
-    keyed = df.select(
+    # A NULL block key pairs with nothing: the equi-join this grouping
+    # replaced never matched NULL = NULL, while groupBy would bucket NULLs.
+    blocked = df.dropna(subset=list(block_cols)) if block_cols else df
+    keyed = blocked.select(
         F.col(id_col).alias("id"),
         *[F.col(c) for c in block_cols],
         F.col(text_col),

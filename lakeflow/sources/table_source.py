@@ -515,8 +515,8 @@ class LakeflowTableWriter(DataSourceArrowWriter):
     fresh staging dir under ``<root>/data/`` and report per-shard min/max
     for every int/float/string column; ``commit`` (all tasks succeeded)
     merges those partials into dir-level zone maps and publishes the next
-    manifest through the SAME ``_publish_manifest`` the JVM path uses — so
-    txn watermarks, tags, governance policy, partition layouts and live
+    manifest through the SAME ``VersionedTable._commit`` the JVM path uses
+    — so txn watermarks, tags, governance policy, partition layouts and live
     deletion vectors all carry forward identically, and optimistic
     concurrency (atomic link, loser retries) applies unchanged. ``abort``
     removes the staging dir; an uncommitted staging dir is invisible (the
@@ -634,19 +634,18 @@ def _publish_shards(
                 merged[c] = [min(merged[c][0], lo), max(merged[c][1], hi)]
             else:
                 merged[c] = [lo, hi]
-    dirs = [] if overwrite else list(prev_m.get("dirs", []))
-    stats = {} if overwrite else dict(prev_m.get("stats", {}))
-    stats[staging] = merged
-    manifest = {
-        "version": (prev or 0) + 1,
-        "operation": operation,
-        "dirs": dirs + [staging],
-        "stats": stats,
-        "schema": prev_m.get("schema") or json.dumps(schema.jsonValue()),
-    }
+    changes: dict = {}
+    if not prev_m.get("schema"):
+        changes["schema"] = json.dumps(schema.jsonValue())
     if txn is not None:
-        manifest["txns"] = {txn[0]: txn[1]}
-    t._publish_manifest(manifest)
+        changes["txns"] = {txn[0]: txn[1]}
+    t._commit(
+        prev_m,
+        operation,
+        add=[(staging, {"stats": merged})],
+        keep=[] if overwrite else None,
+        **changes,
+    )
     return True
 
 

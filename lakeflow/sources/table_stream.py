@@ -51,6 +51,35 @@ def _versions(root: str) -> list[int]:
     )
 
 
+def _timestamp_cols(root: str) -> set[str]:
+    """The table's Spark ``TIMESTAMP`` columns (UTC instants) — from the
+    latest manifest's schema, the schema the stream is bound to."""
+    vs = _versions(root)
+    raw = _manifest(root, vs[-1]).get("schema") if vs else None
+    fields = json.loads(raw)["fields"] if raw else []
+    return {f["name"] for f in fields if f["type"] == "timestamp"}
+
+
+def _pylist(table, names, utc: set[str]) -> list:
+    """Python values of the column resolved by ``names`` (current name,
+    then historical aliases) — NULLs for a file written before the column
+    existed. Spark writes TIMESTAMP as INT96 by default, which pyarrow
+    reads tz-naive; those columns are made UTC here, since Spark's
+    conversion of a TIMESTAMP value needs the instant."""
+    import pyarrow as pa
+
+    if isinstance(names, str):  # pre-alias checkpoints
+        names = [names]
+    for n in names:
+        if n in table.column_names:
+            col = table.column(n)
+            naive = pa.types.is_timestamp(col.type) and not col.type.tz
+            if naive and names[0] in utc:
+                col = col.cast(pa.timestamp("us", tz="UTC"))
+            return col.to_pylist()
+    return [None] * table.num_rows
+
+
 class TableChangesDataSource(DataSource):
     """``format("lakeflow_table_changes")``; options: path, on_change
     (fail|skip), start_version (exclusive, default 0 = from genesis)."""
@@ -137,6 +166,7 @@ class TableChangesPartitionedReader(DataSourceStreamReader):
         self.start_version = start_version
         self.columns = columns
         self.mode = mode
+        self.utc = _timestamp_cols(root)
 
     def initialOffset(self) -> dict:
         return {"version": self.start_version}
@@ -223,14 +253,6 @@ class TableChangesPartitionedReader(DataSourceStreamReader):
         # Runs on an executor: local pyarrow read of one split.
         import pyarrow.parquet as pq
 
-        def col_of(t, names):
-            if isinstance(names, str):  # pre-alias checkpoints
-                names = [names]
-            for n in names:
-                if n in t.column_names:
-                    return t.column(n).to_pylist()
-            return [None] * t.num_rows
-
         if isinstance(partition, _DvPartition):
             dv = pq.read_table(partition.dv_path)
             by_file: dict[str, list[int]] = {}
@@ -243,12 +265,12 @@ class TableChangesPartitionedReader(DataSourceStreamReader):
             for fp, idxs in sorted(by_file.items()):
                 local = fp[7:] if fp.startswith("file://") else fp
                 t = pq.read_table(local).take(sorted(idxs))
-                cols = [col_of(t, c) for c in partition.columns]
+                cols = [_pylist(t, c, self.utc) for c in partition.columns]
                 rows.extend(r + ("delete",) for r in zip(*cols))
             return iter(rows)
 
         table = pq.read_table(partition.directory)
-        cols = [col_of(table, c) for c in partition.columns]
+        cols = [_pylist(table, c, self.utc) for c in partition.columns]
         out = list(zip(*cols)) if cols else []
         if self.mode == "cdf":
             out = [r + ("insert",) for r in out]
@@ -270,6 +292,7 @@ class TableChangesStreamReader(SimpleDataSourceStreamReader):
         self.on_change = on_change
         self.start_version = start_version
         self.columns = columns
+        self.utc = _timestamp_cols(root)
 
     def initialOffset(self) -> dict:
         return {"version": self.start_version}
@@ -303,18 +326,7 @@ class TableChangesStreamReader(SimpleDataSourceStreamReader):
                 continue
             for d in added:
                 table = pq.read_table(d)
-
-                def col_of(names):
-                    if isinstance(names, str):
-                        names = [names]
-                    for n in names:
-                        if n in table.column_names:
-                            return table.column(n).to_pylist()
-                    # Schema-evolution backfill: files written before a
-                    # column existed read NULL for it.
-                    return [None] * table.num_rows
-
-                cols = [col_of(c) for c in self.columns]
+                cols = [_pylist(table, c, self.utc) for c in self.columns]
                 rows.extend(zip(*cols) if cols else [])
             prev_dirs = set(m["dirs"])
         # List-backed: the engine pickles prefetched batches for replay.

@@ -44,21 +44,9 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakeflow.tables import _small_dirs
+
 _BATCH_RE = re.compile(r"^batch=(\d+)$")
-
-
-def _dir_bytes(path: str) -> int:
-    """Total bytes under ``path`` (0 if absent) — one os.walk, filesystem
-    metadata only. Shared by the size-triggered policies in sinks.py and
-    the dust-only fold selection below."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
 
 
 def _list_batches(parent: str) -> list[int]:
@@ -88,9 +76,10 @@ def _fold_batch_shards(
     ``parent`` into one shard (named for the highest folded id). Returns
     the number of shards folded away (0 = nothing to do).
 
-    ``small_max_bytes`` restricts the fold to DUST — shards at or under
-    that many bytes — leaving larger base shards in place (they were
-    already folded to target size once; rewriting them with every new
+    ``small_max_bytes`` restricts the fold to DUST — shards under that
+    many data bytes, the rule of ``tables._small_dirs`` — leaving larger
+    base shards in place (they were already folded to target size once;
+    rewriting them with every new
     fold is where fold-to-one's O(n²/target) lifetime write amplification
     comes from). A non-contiguous fold set is safe: the output shard takes
     the highest FOLDED id (just renamed away, so no collision), every
@@ -111,10 +100,9 @@ def _fold_batch_shards(
         batches[: max(0, len(batches) - keep_last)] if keep_last else batches
     )
     if small_max_bytes is not None:
-        fold_set = [
-            b for b in fold_set
-            if _dir_bytes(os.path.join(parent, f"batch={b}")) <= small_max_bytes
-        ]
+        paths = {b: os.path.join(parent, f"batch={b}") for b in fold_set}
+        dust = _small_dirs(list(paths.values()), small_max_bytes)
+        fold_set = [b for b, p in paths.items() if p in dust]
     if len(fold_set) < 2:
         return 0
     reader = spark.read.option("basePath", parent)

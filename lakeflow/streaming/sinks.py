@@ -426,14 +426,15 @@ def _autocompact_tables(
     small-file tail with the incremental compaction (cost O(small dirs),
     never O(table)). The trigger is a manifest-only count (one JSON read
     per batch, no data IO); the compaction manifest carries txn
-    watermarks forward (tables.py::_publish_manifest), so replay
+    watermarks forward (tables.py::VersionedTable._commit), so replay
     exactly-once is unaffected by a fold landing between a commit and its
     checkpoint.
 
     ``max_small_bytes`` is the SIZE-triggered variant (VERDICT r9 ask
     #4): fold once the DUST of the small-dir tail — dirs under
-    ``small_max_bytes``, excluding the largest of them — exceeds it, i.e.
-    once there is enough dust beyond the previous fold's output to be
+    ``small_max_bytes`` by the compaction's own rule
+    (``tables._small_dirs``), excluding the largest of them — exceeds it,
+    i.e. once there is enough dust beyond the previous fold's output to be
     worth one full-size file. Excluding the largest small dir keeps the
     trigger re-armable: the incremental compaction folds the small tail
     into one dir, and if that result is still under ``small_max_bytes`` a
@@ -445,7 +446,7 @@ def _autocompact_tables(
     whichever fires first folds."""
     if not every_n and not max_small_bytes:
         return
-    from lakeflow.streaming.compaction import _dir_bytes
+    from lakeflow.tables import _small_dirs
 
     for t in tables:
         n = t.n_data_dirs()
@@ -453,11 +454,7 @@ def _autocompact_tables(
             t.compact(small_dir_max_bytes=small_max_bytes)
             continue
         if max_small_bytes and n > 1:
-            small = [
-                b
-                for d in t.data_dirs()
-                if (b := _dir_bytes(d)) <= small_max_bytes
-            ]
+            small = list(_small_dirs(t.data_dirs(), small_max_bytes).values())
             if len(small) > 1 and sum(small) - max(small) > max_small_bytes:
                 t.compact(small_dir_max_bytes=small_max_bytes)
 
@@ -667,10 +664,10 @@ def _autocompact(
     if not every_n and not max_bytes:
         return
     from lakeflow.streaming.compaction import (
-        _dir_bytes,
         _list_batches,
         _recover_crashed_swap,
     )
+    from lakeflow.tables import _dir_bytes
 
     parents = (parents,) if isinstance(parents, str) else tuple(parents)
     for p in parents:

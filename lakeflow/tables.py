@@ -103,6 +103,63 @@ def _union_bloom_sets(prev_bloom: dict, dirs, exclude=()) -> dict | None:
     return out or None
 
 
+# The three classes of manifest key, which decide how ``_commit`` derives a
+# snapshot from its parent. PER-DIR maps are keyed by data dir and describe
+# that immutable dir's rows, so an entry is valid on every snapshot that
+# references the dir: it follows the dir and goes with it.
+_PER_DIR = ("stats", "bloom", "partitioning", "hidden_specs", "dir_parts")
+# DATA STATE describes a version's visible rows as a whole (deletion vectors,
+# ANALYZE sketches): it carries while any parent dir survives and is dropped
+# by a full rewrite, whose rows were read through it. TABLE POLICY carries
+# across every commit until a change set replaces it; ``txns`` merges per app
+# instead, newest marker winning, so no commit forgets stream progress.
+_POLICY = ("constraints", "generated", "masks", "row_filters", "refs", "txns")
+
+
+def _link_json(path: str, doc: dict, conflict: str) -> None:
+    """Publish ``doc`` at ``path`` with a write-then-link compare-and-swap.
+
+    The content lands in a hidden tmp file, then ``os.link`` creates the
+    final name — atomic, and failing with EEXIST if another writer already
+    published it, so of two racing writers exactly one wins and the loser
+    gets :class:`CommitConflictError` (message ``conflict``). A plain
+    ``os.replace`` would let the second writer silently overwrite the first.
+    """
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}-{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as fh:
+        json.dump(doc, fh)
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        raise CommitConflictError(conflict) from None
+    finally:
+        os.unlink(tmp)
+
+
+def _dir_bytes(path: str) -> int:
+    """Bytes of the data files under ``path`` (0 if absent) — filesystem
+    metadata only. Hidden and ``_``-prefixed files (checksums,
+    ``_SUCCESS``) are not data."""
+    total = 0
+    for r, _dirs, files in os.walk(path):
+        for f in files:
+            if not f.startswith((".", "_")):
+                try:
+                    total += os.path.getsize(os.path.join(r, f))
+                except OSError:
+                    pass  # moved away mid-walk by a concurrent fold
+    return total
+
+
+def _small_dirs(paths: Sequence[str], max_bytes: int) -> dict[str, int]:
+    """``{path: bytes}`` of the ``paths`` holding fewer than ``max_bytes``
+    data bytes: the one small-file rule shared by table compaction, its
+    size trigger and the streamed-index dust folds."""
+    sizes = {p: _dir_bytes(p) for p in paths}
+    return {p: b for p, b in sizes.items() if b < max_bytes}
+
+
 def _partition_token(partition_col: str):
     """Canonical partition-identity expression: Spark's string rendering of
     the value, with NULL and empty string collapsed to the Hive default
@@ -379,6 +436,16 @@ class VersionedTable:
         return StructType(list(current.fields) + added)
 
     # -- write path --------------------------------------------------------
+    def _head(self) -> dict:
+        """The current snapshot's manifest; raises on a table without one."""
+        version = self.current_version()
+        if version is None:
+            raise ValueError(f"table {self.root} has no snapshots")
+        return self._manifest(version)
+
+    def _new_dir(self, kind: str = "data") -> str:
+        return os.path.join(self.root, kind, uuid.uuid4().hex)
+
     def commit(
         self,
         df: DataFrame,
@@ -432,6 +499,8 @@ class VersionedTable:
         from ≤``bloom_bits`` bits of manifest metadata — ``scan_point`` then
         prunes dirs with no false negatives.
         """
+        from pyspark.sql.types import StructType
+
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
         txn_list: list[tuple[str, int]] | None = None
@@ -516,95 +585,213 @@ class VersionedTable:
                 write_df = write_df.repartition(
                     *[F.col(c) for c in phys_partition_by]
                 )
-            data_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
+            data_dir = self._new_dir()
             writer = write_df.write.mode("overwrite").format("parquet")
             if phys_partition_by:
                 writer = writer.partitionBy(*phys_partition_by)
             writer.save(data_dir)
 
         prev = self.current_version()
-        if mode == "overwrite" or prev is None:
-            dirs, stats, bloom = [], {}, {}
-            next_schema = df.schema
-        else:
-            pm = self._manifest(prev)
-            dirs, stats = pm["dirs"], dict(pm.get("stats", {}))
-            bloom = dict(pm.get("bloom", {}))
-            prev_schema = self.schema(prev)
-            next_schema = (
-                self._evolve_schema(prev_schema, df.schema, merge_schema)
-                if prev_schema is not None
-                else df.schema
+        parent = self._manifest(prev) if prev is not None else {}
+        append = mode == "append"
+        next_schema = df.schema
+        if append and parent.get("schema"):
+            next_schema = self._evolve_schema(
+                StructType.fromJson(json.loads(parent["schema"])),
+                df.schema,
+                merge_schema,
             )
-        if bloom:
+        if append and parent.get("bloom"):
             # The bloom modulus is fixed when the index is CREATED: per-dir
             # bit sets hashed mod different bloom_bits cannot share one
-            # probe (scan_point would compute positions mod the wrong
-            # modulus and prune dirs that DO contain the value — silent
-            # missing rows), so carried blooms pin bloom_bits for every
-            # later commit, whatever this call's argument says.
-            bloom_bits = pm.get("bloom_bits", bloom_bits)
-        if stats_cols or bloom_cols:
-            # ALL per-dir metadata (zone-map min/max + bloom bit sets) folds
-            # into ONE aggregate job over the freshly written dir — a
-            # commit-heavy streaming workload pays one metadata pass, not
-            # one per index kind per column. collect_set payload is bounded
-            # by bloom_bits, never by data size.
-            from pyspark.sql import functions as F
-
-            aggs = []
-            for c in stats_cols or ():
-                aggs.append(F.min(c).alias(f"min_{c}"))
-                aggs.append(F.max(c).alias(f"max_{c}"))
-            for c in bloom_cols or ():
-                h = F.md5(F.col(c).cast("string"))
-                for part, (lo, ln) in (("a", (1, 8)), ("b", (9, 8))):
-                    aggs.append(
-                        F.collect_set(
-                            F.conv(F.substring(h, lo, ln), 16, 10).cast(
-                                "bigint"
-                            )
-                            % bloom_bits
-                        ).alias(f"bloom_{part}_{c}")
-                    )
-            row = self.spark.read.parquet(data_dir).agg(*aggs).collect()[0]
-            if stats_cols:
-                stats[data_dir] = {
-                    c: [row[f"min_{c}"], row[f"max_{c}"]] for c in stats_cols
-                }
-            if bloom_cols:
-                bloom[data_dir] = {
-                    c: sorted(
-                        {int(b) for b in row[f"bloom_a_{c}"]}
-                        | {int(b) for b in row[f"bloom_b_{c}"]}
-                    )
-                    for c in bloom_cols
-                }
-        version = (prev or 0) + 1
-        manifest = {
-            "version": version,
-            "operation": _operation or mode,
-            "dirs": dirs + [data_dir],
-            "stats": stats,
-            "schema": json.dumps(next_schema.jsonValue()),
-        }
+            # probe (scan_point would prune dirs that DO contain the value),
+            # so an indexed table's modulus pins every later append,
+            # whatever this call's argument says.
+            bloom_bits = parent.get("bloom_bits", bloom_bits)
+        meta = self._dir_meta(data_dir, stats_cols, bloom_cols, bloom_bits)
         if partition_by:
             # Per-dir layout record: partition EVOLUTION is legal (a later
             # commit may choose different partition columns), and the read
             # path groups dirs by layout — a metadata-only change, as in
             # Iceberg, with no rewrite of existing dirs.
-            manifest["partitioning"] = {data_dir: phys_partition_by}
+            meta["partitioning"] = phys_partition_by
         if hidden:
-            manifest["hidden_specs"] = {
-                data_dir: {h: s["spec"] for h, s in hidden.items()}
-            }
-        if bloom:
-            manifest["bloom"] = bloom
-            manifest["bloom_bits"] = bloom_bits
+            meta["hidden_specs"] = {h: s["spec"] for h, s in hidden.items()}
+        changes: dict = {
+            "schema": json.dumps(next_schema.jsonValue()),
+            "bloom_bits": bloom_bits,
+        }
         if txn_list is not None:
-            manifest["txns"] = {a: v for a, v in txn_list}
-        self._publish_manifest(manifest)
-        return version
+            changes["txns"] = dict(txn_list)
+        return self._commit(
+            parent,
+            _operation or mode,
+            add=[(data_dir, meta)],
+            keep=None if append else [],
+            rows_unchanged=_operation == "compact",
+            **changes,
+        )
+
+    def _commit(
+        self,
+        parent: dict,
+        operation: str,
+        add: Sequence[tuple[str, dict]] = (),
+        keep: Sequence[str] | None = None,
+        dvs: Sequence[str] = (),
+        rows_unchanged: bool = False,
+        **changes,
+    ) -> int:
+        """The one commit seam: derive the next manifest from ``parent``
+        (the head's manifest, ``{}`` for a table's first snapshot) and a
+        change set, then publish it. Every mutation states its changes and
+        nothing else, so which key carries how is decided here alone:
+
+        - ``add``: the new data dirs, each with its per-dir entries
+          (``{"stats": ..., "bloom": ..., "partitioning": ...,
+          "hidden_specs": ..., "dir_parts": ...}``, any subset);
+        - ``keep``: the parent dirs that stay, in order (default: all;
+          ``[]`` for a full rewrite). Their per-dir entries carry over; a
+          removed dir's entries go with it;
+        - ``dvs``: deletion vectors added to the carried ones;
+        - ``rows_unchanged``: the snapshot holds exactly the parent's
+          visible rows (compaction, Z-order), so ANALYZE statistics stay;
+        - ``changes``: table-level keys replaced and written as given —
+          schema, policy, ``ndv``, ``delete_vectors`` resets, snapshot-only
+          keys. A per-dir map given here replaces the whole map (ALTER,
+          ANALYZE); ``txns`` merge into the parent's.
+
+        The bloom modulus travels with the bloom index. Keys outside
+        :data:`_PER_DIR`, the data state and :data:`_POLICY` (``content_fp``,
+        ``ff_branch``, ``fork_main_version``) describe one snapshot and
+        never carry. Returns the new version."""
+        keep = parent.get("dirs", []) if keep is None else list(keep)
+        m = {
+            "version": parent.get("version", 0) + 1,
+            "operation": operation,
+            "dirs": keep + [d for d, _meta in add],
+            "schema": parent.get("schema"),
+        }
+        for k in _PER_DIR:
+            entries = {d: parent[k][d] for d in keep if d in parent.get(k, {})}
+            entries.update((d, meta[k]) for d, meta in add if k in meta)
+            if entries or k == "stats":
+                m[k] = entries
+        if keep and parent.get("delete_vectors"):
+            m["delete_vectors"] = parent["delete_vectors"]
+        if (keep or rows_unchanged) and parent.get("ndv"):
+            # Statistics go STALE after an append, they don't vanish
+            # (noticing the drift is the planner's job); sketches of
+            # replaced data must not describe a rewrite's rows.
+            m["ndv"] = parent["ndv"]
+        if dvs:
+            m["delete_vectors"] = m.get("delete_vectors", []) + list(dvs)
+        m.update({k: parent[k] for k in _POLICY if parent.get(k)})
+        txns = {**parent.get("txns", {}), **changes.pop("txns", {})}
+        m.update(changes)
+        if txns:
+            m["txns"] = txns
+        if m.get("bloom"):
+            m.setdefault("bloom_bits", parent.get("bloom_bits"))
+        else:
+            m.pop("bloom_bits", None)
+        self._publish_manifest(m)
+        return m["version"]
+
+    @staticmethod
+    def _restore(src: dict, *keys: str) -> dict:
+        """The change set that re-creates ``src``'s data state over a parent
+        whose dirs all go: ``src``'s dirs with their per-dir entries, its
+        deletion vectors, ndv, schema and bloom modulus — plus ``keys``."""
+        add = [
+            (d, {k: src[k][d] for k in _PER_DIR if d in src.get(k, {})})
+            for d in src["dirs"]
+        ]
+        keys = ("schema", "bloom_bits", "delete_vectors", "ndv", *keys)
+        return {"add": add, "keep": [], **{k: src[k] for k in keys if k in src}}
+
+    def _publish_manifest(self, manifest: dict) -> None:
+        """Atomically publish a derived snapshot manifest with optimistic
+        concurrency (Iceberg's atomic metadata swap, via
+        :func:`_link_json`): of two writers racing from the same base
+        snapshot exactly one wins and the loser gets
+        :class:`CommitConflictError` (retry = re-read the new current
+        version, re-derive, re-commit — its data dir is orphaned until
+        :meth:`remove_orphans`)."""
+        version = manifest["version"]
+        manifest.setdefault(
+            "committed_at",
+            datetime.datetime.now(datetime.timezone.utc).isoformat(),
+        )
+        _link_json(
+            os.path.join(self._snap_dir, f"{version:08d}.json"),
+            manifest,
+            f"version {version} of {self.root} was committed concurrently; "
+            "re-read the table and retry the commit",
+        )
+        # Advance the O(1) latest pointer AFTER the manifest is durable, so
+        # the hint only ever names an existing manifest and can only LAG
+        # (current_version walks forward over any lag). Atomic replace; a
+        # concurrent older writer overwriting with a lower value is the
+        # same lag case. Best-effort: a failed hint write costs one
+        # fallback listing, never correctness.
+        self._write_latest_hint(version)
+
+    def _dir_meta(
+        self,
+        path: str,
+        stats_cols: Sequence[str] | None = None,
+        bloom_cols: Sequence[str] | None = None,
+        bloom_bits: int = 4096,
+        by=None,
+    ) -> dict:
+        """Per-dir index entries for freshly written rows under ``path``:
+        zone-map ``stats`` (min/max of ``stats_cols``) and ``bloom`` bit
+        sets (the distinct ``bloom_bits``-bucket positions of two
+        md5-derived hashes per value of ``bloom_cols``), both folded into
+        ONE aggregate job per write — a commit-heavy stream pays one
+        metadata pass, not one per index kind per column, and the
+        collect_set payload is bounded by ``bloom_bits``, never by data
+        size. With ``by`` (a column splitting one write into several dirs)
+        the job groups by it and returns ``{group value: entries}``."""
+        if not (stats_cols or bloom_cols):
+            return {}
+        from pyspark.sql import functions as F
+
+        aggs = []
+        for c in stats_cols or ():
+            aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
+        for c in bloom_cols or ():
+            h = F.md5(F.col(c).cast("string"))
+            for part, lo in (("a", 1), ("b", 9)):
+                aggs.append(
+                    F.collect_set(
+                        F.conv(F.substring(h, lo, 8), 16, 10).cast("bigint")
+                        % bloom_bits
+                    ).alias(f"bloom_{part}_{c}")
+                )
+
+        def entries(r) -> dict:
+            out = {}
+            if stats_cols:
+                out["stats"] = {
+                    c: [r[f"min_{c}"], r[f"max_{c}"]] for c in stats_cols
+                }
+            if bloom_cols:
+                out["bloom"] = {
+                    c: sorted(
+                        {int(b) for b in r[f"bloom_a_{c}"]}
+                        | {int(b) for b in r[f"bloom_b_{c}"]}
+                    )
+                    for c in bloom_cols
+                }
+            return out
+
+        frame = self.spark.read.parquet(path)
+        if by is None:
+            return entries(frame.agg(*aggs).collect()[0])
+        rows = frame.groupBy(by.alias("__g")).agg(*aggs).collect()
+        return {r["__g"]: entries(r) for r in rows}
 
     def delete_where(
         self,
@@ -622,54 +809,9 @@ class VersionedTable:
         documented full-rewrite fallback). Deleted rows stay visible via
         time travel until snapshots expire — exactly Delta's contract.
         """
-        from pyspark.sql import functions as F
-
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
-        touch = set(self._kept_dirs(m, prune_between or {}))
-        keep = [d for d in m["dirs"] if d not in touch]
-        new_dirs: list[str] = []
-        if touch:
-            survivors = self._read_dirs(sorted(touch), version).filter(
-                ~F.coalesce(F.expr(condition), F.lit(False))
-            )
-            new_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
-            survivors.write.mode("overwrite").parquet(new_dir)
-            new_dirs.append(new_dir)
-        # Index maintenance: kept dirs' entries stay valid verbatim; the
-        # survivors dir holds a SUBSET of the touched dirs' rows, so their
-        # envelope/bit-set unions remain safe over-approximations for it
-        # (false positives only) — without this, one DELETE stripped the
-        # whole table's scan_point pruning.
-        stats = {d: s for d, s in m.get("stats", {}).items() if d in keep}
-        prev_bloom = m.get("bloom", {})
-        bloom = {d: b for d, b in prev_bloom.items() if d in keep}
-        if new_dirs:
-            env = _union_stats_envelopes(m.get("stats", {}), sorted(touch))
-            if env:
-                stats[new_dirs[0]] = env
-            mb = _union_bloom_sets(prev_bloom, sorted(touch))
-            if mb:
-                bloom[new_dirs[0]] = mb
-        manifest = {
-            "version": version + 1,
-            "operation": "delete",
-            "dirs": keep + new_dirs,
-            "stats": stats,
-            "schema": m.get("schema"),
-        }
-        if bloom:
-            manifest["bloom"] = bloom
-            manifest["bloom_bits"] = m.get("bloom_bits")
-        dir_parts = {
-            d: p for d, p in m.get("dir_parts", {}).items() if d in keep
-        }
-        if dir_parts:
-            manifest["dir_parts"] = dir_parts
-        self._publish_manifest(manifest)
-        return version + 1
+        return self._rewrite_where(
+            "delete", condition, prune_between, lambda frame, cond: frame.filter(~cond)
+        )
 
     def update_where(
         self,
@@ -685,34 +827,16 @@ class VersionedTable:
         """
         from pyspark.sql import functions as F
 
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
-        touch = set(self._kept_dirs(m, prune_between or {}))
-        keep = [d for d in m["dirs"] if d not in touch]
-        new_dirs: list[str] = []
-        if touch:
-            cond = F.coalesce(F.expr(condition), F.lit(False))
-            frame = self._read_dirs(sorted(touch), version)
-            types = {f.name: f.dataType for f in frame.schema.fields}
-            for col in set_exprs:
-                if col not in types:
-                    raise ValueError(f"UPDATE of unknown column {col!r}")
+        def rewrite(frame: DataFrame, cond) -> DataFrame:
+            types = self._set_types(frame, set_exprs)
             # ONE select, so the WHERE and every SET expression evaluate
-            # against the PRE-update row (ANSI UPDATE semantics): chained
-            # withColumn would re-evaluate the condition on already-updated
-            # rows — a multi-column SET whose first assignment falsifies
-            # the WHERE silently skipped the rest. SET results cast back to
-            # the column's declared type (Delta's rule) so an expression
-            # like `v + 1` cannot fork the type between rewritten and
+            # against the PRE-update row (ANSI UPDATE semantics); SET
+            # results cast back to the column's declared type (Delta's
+            # rule) so `v + 1` cannot fork the type between rewritten and
             # carried-over files.
             frame = frame.select(
                 *[
-                    F.when(
-                        cond,
-                        F.expr(set_exprs[c]).cast(types[c]),
-                    )
+                    F.when(cond, F.expr(set_exprs[c]).cast(types[c]))
                     .otherwise(F.col(c))
                     .alias(c)
                     if c in set_exprs
@@ -724,44 +848,50 @@ class VersionedTable:
             # rewritten candidate rows are validated before any manifest
             # lands (carried-over dirs passed at their own publish).
             self._check_constraints(frame, self.constraints())
-            new_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
-            frame.write.mode("overwrite").parquet(new_dir)
-            new_dirs.append(new_dir)
-        # Same index maintenance as delete_where, with the SET columns
-        # excluded: updated values aren't covered by the old envelopes or
-        # bit sets (carrying them would prune wrongly — false negatives),
-        # while pass-through columns keep the safe union.
-        stats = {d: s for d, s in m.get("stats", {}).items() if d in keep}
-        prev_bloom = m.get("bloom", {})
-        bloom = {d: b for d, b in prev_bloom.items() if d in keep}
-        if new_dirs:
-            env = _union_stats_envelopes(
-                m.get("stats", {}), sorted(touch), exclude=set_exprs
-            )
-            if env:
-                stats[new_dirs[0]] = env
-            mb = _union_bloom_sets(
-                prev_bloom, sorted(touch), exclude=set_exprs
-            )
-            if mb:
-                bloom[new_dirs[0]] = mb
-        manifest = {
-            "version": version + 1,
-            "operation": "update",
-            "dirs": keep + new_dirs,
-            "stats": stats,
-            "schema": m.get("schema"),
-        }
-        if bloom:
-            manifest["bloom"] = bloom
-            manifest["bloom_bits"] = m.get("bloom_bits")
-        dir_parts = {
-            d: p for d, p in m.get("dir_parts", {}).items() if d in keep
-        }
-        if dir_parts:
-            manifest["dir_parts"] = dir_parts
-        self._publish_manifest(manifest)
-        return version + 1
+            return frame
+
+        return self._rewrite_where(
+            "update", condition, prune_between, rewrite, exclude=set_exprs
+        )
+
+    @staticmethod
+    def _set_types(frame: DataFrame, set_exprs: dict[str, str]) -> dict:
+        types = {f.name: f.dataType for f in frame.schema.fields}
+        for col in set_exprs:
+            if col not in types:
+                raise ValueError(f"UPDATE of unknown column {col!r}")
+        return types
+
+    def _rewrite_where(
+        self, operation, condition, prune_between, rewrite, exclude=()
+    ) -> int:
+        """Copy-on-write DML: dirs whose stats rule out ``prune_between``
+        carry over by reference; the candidates are read, passed through
+        ``rewrite(frame, condition)`` and written as one new dir. That dir
+        holds a SUBSET of the candidates' rows (or, for UPDATE, their
+        pass-through columns), so the union of their envelopes and bit sets
+        stays a safe over-approximation (false positives only) — except for
+        the ``exclude``d SET columns, whose new values the old entries do
+        not cover."""
+        from pyspark.sql import functions as F
+
+        m = self._head()
+        touched = set(self._kept_dirs(m, prune_between or {}))
+        keep = [d for d in m["dirs"] if d not in touched]
+        touch = sorted(touched)
+        add = []
+        if touch:
+            cond = F.coalesce(F.expr(condition), F.lit(False))
+            new_dir = self._new_dir()
+            rewrite(self._read_dirs(touch, m["version"]), cond).write.mode(
+                "overwrite"
+            ).parquet(new_dir)
+            meta = {
+                "stats": _union_stats_envelopes(m.get("stats", {}), touch, exclude),
+                "bloom": _union_bloom_sets(m.get("bloom", {}), touch, exclude),
+            }
+            add = [(new_dir, {k: v for k, v in meta.items() if v})]
+        return self._commit(m, operation, add=add, keep=keep)
 
     def rollback(self, to_version: int) -> int:
         """Restore the table to a prior snapshot's content as a NEW commit
@@ -770,43 +900,14 @@ class VersionedTable:
         the bad versions stay time-travelable for forensics, and readers of
         "latest" see the restored state immediately.
         """
-        m = self._manifest(to_version)  # raises if the version never existed
-        cur = self.current_version()
-        manifest = {
-            "version": cur + 1,
-            "operation": f"rollback_to_{to_version}",
-            "dirs": m["dirs"],
-            "stats": m.get("stats", {}),
-            "schema": m.get("schema"),
-            # DATA state restores from the target — including an explicitly
-            # EMPTY deletion-vector list and the target's per-dir layouts,
-            # or _publish_manifest's carry-forward would inject the CURRENT
-            # vectors/layout map and a restore past a MOR delete would keep
-            # the rows deleted. Governance state (constraints) and stream
-            # progress (txn watermarks) deliberately keep carrying from the
-            # current manifest: RESTORE rewinds data, not table policy.
-            "delete_vectors": m.get("delete_vectors", []),
-            "partitioning": m.get("partitioning", {}),
-            # ANALYZE statistics are DATA state too: restore them from the
-            # target (including an explicitly EMPTY block when the target
-            # was never analyzed), or _publish_manifest's shared-dirs carry
-            # would attach the ABANDONED head's ndv — row counts and
-            # sketches over data the restored snapshot no longer contains —
-            # and drop whatever the target itself had (ADVICE r7).
-            "ndv": m.get("ndv", {}),
-        }
-        # Per-dir layout metadata restores from the target for the same
-        # reason: the carry-forward keys off the ABANDONED head's manifest,
-        # which no longer records specs for dirs that only the target
-        # references — a rollback past a partition-evolution overwrite
-        # would otherwise strip the restored dirs' hidden-transform specs
-        # (losing their partition pruning) the same way it injected the
-        # wrong ndv block.
-        for k in ("dir_parts", "bloom", "bloom_bits", "hidden_specs"):
-            if k in m:
-                manifest[k] = m[k]
-        self._publish_manifest(manifest)
-        return cur + 1
+        # Data state restores from the target, including its deletion
+        # vectors, per-dir layouts and ANALYZE statistics; table policy and
+        # stream progress (txn watermarks) keep carrying from the current
+        # head: RESTORE rewinds data, not table policy.
+        target = self._manifest(to_version)  # raises if it never existed
+        return self._commit(
+            self._head(), f"rollback_to_{to_version}", **self._restore(target)
+        )
 
     def clone_to(
         self, dest_root: str, version: int | None = None
@@ -826,50 +927,21 @@ class VersionedTable:
         risky backfill/experiment against the clone, diff, then promote or
         drop — all without duplicating the base data.
         """
-        if version is None:
-            version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
+        m = self._head() if version is None else self._manifest(version)
         clone = VersionedTable(self.spark, dest_root)
         if clone.current_version() is not None:
             raise ValueError(f"clone destination {dest_root} is not empty")
-        manifest = {
-            "version": 1,
-            "operation": f"clone_of_{os.path.abspath(self.root)}@v{version}",
-            "dirs": m["dirs"],
-            "stats": m.get("stats", {}),
-            "schema": m.get("schema"),
-        }
-        # The clone must see the SAME rows as the source snapshot: deletion
-        # vectors and per-dir layouts are part of the data state (omitting
-        # the vectors resurrected MOR-deleted rows), and table policy
-        # (constraints) plus stream watermarks (txns) ride along the way
-        # Delta clones copy table properties — a stream repointed at the
-        # clone must not double-apply batches. Per-dir hidden-transform
-        # specs and ANALYZE statistics are data state too: they describe
-        # exactly the rows the clone references, so omitting them would
-        # silently strip the clone's partition pruning and force a
-        # re-ANALYZE of data that did not change (the rollback-provenance
-        # class of bug, at the clone boundary).
-        for k in (
-            "dir_parts",
-            "bloom",
-            "bloom_bits",
-            "n_rows",
-            "delete_vectors",
-            "partitioning",
-            "hidden_specs",
-            "ndv",
-            "constraints",
-            "generated",
-            "masks",
-            "row_filters",
-            "txns",
-        ):
-            if k in m:
-                manifest[k] = m[k]
-        clone._publish_manifest(manifest)
+        # The clone must see the SAME rows as the source snapshot (data
+        # state, including deletion vectors), and table policy plus stream
+        # watermarks ride along the way Delta clones copy table properties
+        # — a stream repointed at the clone must not double-apply batches.
+        # Tags name SOURCE versions, so they stay behind.
+        policy = [k for k in _POLICY if k != "refs"]
+        clone._commit(
+            {},
+            f"clone_of_{os.path.abspath(self.root)}@v{m['version']}",
+            **self._restore(m, *policy),
+        )
         return clone
 
     def commit_audited(
@@ -893,7 +965,7 @@ class VersionedTable:
         """
         from lakeflow.quality import enforce
 
-        staged = os.path.join(self.root, "data", uuid.uuid4().hex)
+        staged = self._new_dir()
         writer = df.write.mode("overwrite")
         partition_by = commit_kwargs.get("partition_by")
         if partition_by:
@@ -909,177 +981,13 @@ class VersionedTable:
             **commit_kwargs,
         )
 
-    def _publish_manifest(self, manifest: dict) -> None:
-        """Atomically publish a snapshot manifest with optimistic-concurrency
-        conflict detection (Iceberg's atomic metadata swap).
-
-        Write-then-LINK: the content lands in a hidden tmp file, then
-        ``os.link`` creates the versioned name — link is atomic AND fails
-        with EEXIST if another writer already published that version, so of
-        two writers racing from the same base snapshot exactly one wins and
-        the loser gets :class:`CommitConflictError` (retry = re-read the new
-        current version, re-derive, re-commit — its data dir is orphaned
-        until :meth:`remove_orphans`). A plain ``os.replace`` would let the
-        second writer silently overwrite the first's commit.
-        """
-        version = manifest["version"]
-        manifest.setdefault(
-            "committed_at",
-            datetime.datetime.now(datetime.timezone.utc).isoformat(),
-        )
-        # Transactional watermarks survive every manifest-producing path
-        # (DML, replace-partitions, rollback, compaction): carry the prior
-        # snapshot's per-app txn versions forward, newest markers winning —
-        # otherwise any unrelated commit would forget stream progress and a
-        # later replayed append would duplicate rows.
-        if version > 1:
-            try:
-                prev_m = self._manifest(version - 1)
-            except FileNotFoundError:
-                prev_m = {}
-            prev_txns = prev_m.get("txns", {})
-            if prev_txns:
-                merged = dict(prev_txns)
-                merged.update(manifest.get("txns", {}))
-                manifest["txns"] = merged
-            # Carried-over dirs keep their recorded partition layout, so
-            # every manifest-producing path (DML, compaction, rollback)
-            # preserves evolution history without knowing about it.
-            if "constraints" not in manifest and prev_m.get("constraints"):
-                manifest["constraints"] = prev_m["constraints"]
-            # Generated-column definitions are table policy like
-            # constraints: carry them across every manifest-producing path.
-            if "generated" not in manifest and prev_m.get("generated"):
-                manifest["generated"] = prev_m["generated"]
-            # Governance policy (column masks, row filters) likewise.
-            if "masks" not in manifest and prev_m.get("masks"):
-                manifest["masks"] = prev_m["masks"]
-            if "row_filters" not in manifest and prev_m.get("row_filters"):
-                manifest["row_filters"] = prev_m["row_filters"]
-            # Named refs (tags) likewise.
-            if "refs" not in manifest and prev_m.get("refs"):
-                manifest["refs"] = prev_m["refs"]
-            # ANALYZE-time statistics (NDV sketches + row count) survive
-            # incremental paths — statistics go STALE after an append,
-            # they don't vanish; noticing the drift is the planner's job
-            # (ndv_drift_report / ndv_planned_join), exactly as in
-            # Iceberg/Delta where ANALYZE output outlives appends. Same
-            # rule as deletion vectors: a FULL-REWRITE manifest (no shared
-            # dirs — overwrite, possibly with a new schema) drops them,
-            # because sketches of replaced data must not resurrect onto a
-            # snapshot they never described; re-ANALYZE after a rewrite.
-            # Rewrite-shaped paths whose rows are unchanged by construction
-            # are exempt: COMPACTION and Z-ORDER (both read through the
-            # deletion vectors and rewrite the same visible rows — a
-            # logical no-op, and discarding valid statistics would force a
-            # re-ANALYZE after every OPTIMIZE, ADVICE r7); rollback/drop/
-            # rename set the block explicitly so this carry never fires
-            # for them.
-            if "ndv" not in manifest and prev_m.get("ndv"):
-                if (
-                    set(manifest.get("dirs", [])) & set(prev_m.get("dirs", []))
-                    or manifest.get("operation") in ("compact", "optimize-zorder")
-                ):
-                    manifest["ndv"] = prev_m["ndv"]
-            # Deletion vectors ride along while any referenced dir survives;
-            # a full-rewrite manifest (no shared dirs) purges them — its
-            # data was read THROUGH the vectors, so the deletes are
-            # materialized.
-            if "delete_vectors" not in manifest and prev_m.get("delete_vectors"):
-                if set(manifest.get("dirs", [])) & set(prev_m.get("dirs", [])):
-                    manifest["delete_vectors"] = prev_m["delete_vectors"]
-            prev_part = prev_m.get("partitioning", {})
-            carried = {
-                d: prev_part[d]
-                for d in manifest.get("dirs", [])
-                if d in prev_part
-            }
-            if carried or manifest.get("partitioning"):
-                manifest["partitioning"] = {
-                    **carried,
-                    **manifest.get("partitioning", {}),
-                }
-            # Hidden-transform specs travel with their dirs, same as layout.
-            prev_hidden = prev_m.get("hidden_specs", {})
-            carried_hidden = {
-                d: prev_hidden[d]
-                for d in manifest.get("dirs", [])
-                if d in prev_hidden
-            }
-            if carried_hidden or manifest.get("hidden_specs"):
-                manifest["hidden_specs"] = {
-                    **carried_hidden,
-                    **manifest.get("hidden_specs", {}),
-                }
-            # Replace-partition coverage lists likewise: a dir's covered
-            # partition set is fixed when the dir is written, so surviving
-            # dirs keep their entries across every manifest-producing path
-            # — without this, a plain append onto a replace-partitions-
-            # managed table dropped the whole map and the next
-            # replace_partitions rewrote EVERY dir instead of the touched
-            # partitions (correct, but O(table) instead of O(batch)).
-            prev_dp = prev_m.get("dir_parts", {})
-            carried_dp = {
-                d: prev_dp[d]
-                for d in manifest.get("dirs", [])
-                if d in prev_dp
-            }
-            if carried_dp or manifest.get("dir_parts"):
-                manifest["dir_parts"] = {
-                    **carried_dp,
-                    **manifest.get("dir_parts", {}),
-                }
-            # Per-dir CONTENT metadata — zone-map envelopes and bloom bit
-            # sets — describes an immutable dir's rows, so it is correct on
-            # every snapshot that references the dir, whichever operation
-            # produced the manifest. Carrying it here (explicit entries
-            # winning) closes the whole forgot-to-carry bug class at once:
-            # before this, one MOR delete silently stripped the table's
-            # bloom index because delete_where_mor's hand-built manifest
-            # didn't mention it. (Unlike table-level ndv, which describes
-            # a VERSION's visible rows and must be set explicitly.)
-            for pd_key in ("stats", "bloom"):
-                prev_map = prev_m.get(pd_key, {})
-                carried_pd = {
-                    d: prev_map[d]
-                    for d in manifest.get("dirs", [])
-                    if d in prev_map
-                }
-                explicit = manifest.get(pd_key, {})
-                if carried_pd or explicit:
-                    manifest[pd_key] = {**carried_pd, **explicit}
-            if manifest.get("bloom") and manifest.get("bloom_bits") is None:
-                manifest["bloom_bits"] = prev_m.get("bloom_bits")
-        final = os.path.join(self._snap_dir, f"{version:08d}.json")
-        tmp = os.path.join(
-            self._snap_dir, f".{version:08d}-{uuid.uuid4().hex}.json.tmp"
-        )
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            raise CommitConflictError(
-                f"version {version} of {self.root} was committed concurrently; "
-                "re-read the table and retry the commit"
-            ) from None
-        finally:
-            os.unlink(tmp)
-        # Advance the O(1) latest pointer AFTER the manifest is durable, so
-        # the hint only ever names an existing manifest and can only LAG
-        # (current_version walks forward over any lag). Atomic replace; a
-        # concurrent older writer overwriting with a lower value is the
-        # same lag case. Best-effort: a failed hint write costs one
-        # fallback listing, never correctness.
-        self._write_latest_hint(version)
-
     def _write_latest_hint(self, version: int) -> None:
         """Best-effort atomic rewrite of the ``_latest_hint`` pointer. Safe
         to lose (current_version falls back to the listing) but — combined
         with the walk-forward probe — only safe to KEEP when no version gap
         sits directly above it, which publish order guarantees for commits
         and ``expire_snapshots`` re-establishes by rewriting the hint to
-        the surviving head (ADVICE r9)."""
+        the surviving head."""
         hint_path = os.path.join(self._snap_dir, "_latest_hint")
         hint_tmp = f"{hint_path}.{uuid.uuid4().hex}.tmp"
         try:
@@ -1129,107 +1037,64 @@ class VersionedTable:
         directory and reads back as NULL, as in Hive/Spark partitioned
         tables.
         """
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import StructType
+
         # Same CHECK-constraint gate as commit(): the incoming state frame
         # is bounded by the touched partitions, so the one-agg check stays
         # O(batch state), never O(table).
         self._check_constraints(df, self.constraints())
         shadow = f"{partition_col}__p"
+        prev = self.current_version()
+        parent = self._manifest(prev) if prev is not None else {}
 
-        # Per-dir index maintenance (stats + bloom), the same provenance
-        # rule as compact/zorder: a replace-managed table's indexes must not
-        # decay as dirs get rewritten. Kept dirs carry their entries; every
-        # NEW dir gets fresh ones in ONE per-write aggregate — stats over
-        # stats_cols (explicit, else derived from the prior snapshot's
-        # stats columns) and bloom bit sets over the prior bloom columns at
-        # the pinned bloom_bits. Cost is O(batch) per write_split job, and
-        # zero when the table carries no indexes.
-        _prev_for_meta = self.current_version()
-        _m_meta = self._manifest(_prev_for_meta) if _prev_for_meta else {}
-        prev_bloom_block = _m_meta.get("bloom", {})
-        bloom_bits = _m_meta.get("bloom_bits", 4096)
-        # Intersect the derived index columns with the batch frame's actual
-        # columns: old carried-over dirs can pin stats/bloom entries for
-        # columns a later schema evolution dropped, and an F.min/F.md5 over
-        # an absent column would fail a write that previously succeeded.
-        # Recording nothing for an absent column is the safe direction —
-        # missing metadata only costs pruning, never correctness (ADVICE
-        # r9).
-        _batch_cols = set(df.columns)
+        # Per-dir index maintenance (stats + bloom): a replace-managed
+        # table's indexes must not decay as dirs get rewritten. Every NEW
+        # dir gets fresh entries in ONE per-write aggregate — stats over
+        # stats_cols (explicit, else the parent's stats columns) and bloom
+        # bit sets over the parent's bloom columns at its pinned modulus.
+        # Both intersect the batch's columns: a carried dir can pin entries
+        # for a column a later schema change dropped, and recording nothing
+        # for it only costs pruning, never correctness.
+        batch_cols = set(df.columns)
         bloom_cols = sorted(
-            {c for cs in prev_bloom_block.values() for c in cs} & _batch_cols
+            {c for cs in parent.get("bloom", {}).values() for c in cs} & batch_cols
         )
         eff_stats_cols = sorted(
             (
                 set(stats_cols)
                 if stats_cols
-                else {c for cs in _m_meta.get("stats", {}).values() for c in cs}
+                else {c for cs in parent.get("stats", {}).values() for c in cs}
             )
-            & _batch_cols
+            & batch_cols
         )
-        new_stats: dict = {}
-        new_bloom: dict = {}
+        bloom_bits = parent.get("bloom_bits", 4096)
+        add: list[tuple[str, dict]] = []
 
-        def write_split(frame: DataFrame) -> dict[str, list[str]]:
+        def write_split(frame: DataFrame) -> None:
             """One write job, split into per-partition subdirectories via a
             shadow copy of the partition column (partitionBy strips its
             column from the data files; the shadow keeps the real column in
             place). Each subdir enters the manifest as a partition-pure dir,
             keyed by its canonical (unescaped) partition token.
             """
-            from pyspark.sql import functions as F
-
-            base = os.path.join(self.root, "data", uuid.uuid4().hex)
+            base = self._new_dir()
             frame.withColumn(shadow, F.col(partition_col)).write.mode(
                 "overwrite"
             ).partitionBy(shadow).parquet(base)
-            out = {
-                os.path.join(base, name): [
-                    _unescape_partition_dir(name.split("=", 1)[1])
-                ]
+            tokens = {
+                os.path.join(base, name): _unescape_partition_dir(
+                    name.split("=", 1)[1]
+                )
                 for name in os.listdir(base)
                 if name.startswith(f"{shadow}=")
             }
-            if out and (eff_stats_cols or bloom_cols):
-                token_to_dir = {parts[0]: d for d, parts in out.items()}
-                aggs = []
-                for c in eff_stats_cols:
-                    aggs.append(F.min(c).alias(f"min_{c}"))
-                    aggs.append(F.max(c).alias(f"max_{c}"))
-                for c in bloom_cols:
-                    h = F.md5(F.col(c).cast("string"))
-                    for part, (lo, ln) in (("a", (1, 8)), ("b", (9, 8))):
-                        aggs.append(
-                            F.collect_set(
-                                F.conv(F.substring(h, lo, ln), 16, 10).cast(
-                                    "bigint"
-                                )
-                                % bloom_bits
-                            ).alias(f"bloom_{part}_{c}")
-                        )
-                rows = (
-                    self.spark.read.parquet(base)
-                    .groupBy(_partition_token(shadow).alias("__t"))
-                    .agg(*aggs)
-                    .collect()
-                )
-                for r in rows:
-                    d = token_to_dir.get(r["__t"])
-                    if d is None:
-                        continue
-                    if eff_stats_cols:
-                        new_stats[d] = {
-                            c: [r[f"min_{c}"], r[f"max_{c}"]]
-                            for c in eff_stats_cols
-                        }
-                    if bloom_cols:
-                        new_bloom[d] = {
-                            c: sorted(
-                                {int(b) for b in r[f"bloom_a_{c}"]}
-                                | {int(b) for b in r[f"bloom_b_{c}"]}
-                            )
-                            for c in bloom_cols
-                        }
-            return out
+            metas = tokens and self._dir_meta(
+                base, eff_stats_cols, bloom_cols, bloom_bits,
+                by=_partition_token(shadow),
+            )
+            for d, token in tokens.items():
+                add.append((d, {"dir_parts": [token], **metas.get(token, {})}))
 
         # Canonical tokens of the partitions this batch touches, rendered by
         # Spark (not Python str()) so they match the directory names Spark
@@ -1242,79 +1107,51 @@ class VersionedTable:
         }
         if touched_values is not None:
             touched |= {_partition_value_token(v) for v in touched_values}
-        prev = self.current_version()
-        prev_schema = self.schema(prev) if prev is not None else None
-        if prev_schema is not None:
+        next_schema = df.schema
+        if parent.get("schema"):
+            next_schema = StructType.fromJson(json.loads(parent["schema"]))
             # Replace-partitions never evolves the schema (a CDC state frame
             # keeps one shape across batches); loud mismatch beats silent NULLs.
-            if {f.name: f.dataType for f in prev_schema.fields} != {
+            if {f.name: f.dataType for f in next_schema.fields} != {
                 f.name: f.dataType for f in df.schema.fields
             }:
                 raise ValueError(
                     "replace-partitions schema mismatch: table "
-                    f"{[(f.name, str(f.dataType)) for f in prev_schema.fields]} vs batch "
+                    f"{[(f.name, str(f.dataType)) for f in next_schema.fields]}"
+                    " vs batch "
                     f"{[(f.name, str(f.dataType)) for f in df.schema.fields]}"
                 )
-            next_schema = prev_schema
-        else:
-            next_schema = df.schema
-        keep_dirs: list[str] = []
+        prev_parts = parent.get("dir_parts", {})
+        keep: list[str] = []
         rewrite_dirs: list[str] = []
-        stats: dict = {}
-        dir_parts: dict[str, list] = {}
-        if prev is not None:
-            m = self._manifest(prev)
-            stats = dict(m.get("stats", {}))
-            prev_parts = m.get("dir_parts", {})
-            for d in m["dirs"]:
-                parts = prev_parts.get(d)
-                if parts is not None and not (set(parts) & touched):
-                    keep_dirs.append(d)
-                    dir_parts[d] = parts
-                else:
-                    # Unknown coverage or overlap → its untouched remainder
-                    # must be rewritten (empty in steady state: write_split
-                    # keeps every dir single-partition).
-                    rewrite_dirs.append(d)
-
-        new_dirs: list[str] = []
+        for d in parent.get("dirs", []):
+            parts = prev_parts.get(d)
+            # Unknown coverage or overlap → the dir's untouched remainder is
+            # rewritten (empty in steady state: write_split keeps every dir
+            # single-partition).
+            disjoint = parts is not None and not set(parts) & touched
+            (keep if disjoint else rewrite_dirs).append(d)
         if rewrite_dirs:
             # Token comparison is null-safe: NULL partition rows carry the
             # sentinel token, so they are kept when untouched and replaced
             # when the batch touches the NULL partition (a bare ~isin would
             # evaluate to NULL and silently drop them).
             remainder_reader = self.spark.read
-            if prev_schema is not None:
-                remainder_reader = remainder_reader.schema(prev_schema)
-            remainder = remainder_reader.parquet(*rewrite_dirs).filter(
-                ~_partition_token(partition_col).isin(list(touched))
+            if parent.get("schema"):
+                remainder_reader = remainder_reader.schema(next_schema)
+            write_split(
+                remainder_reader.parquet(*rewrite_dirs).filter(
+                    ~_partition_token(partition_col).isin(list(touched))
+                )
             )
-            rem = write_split(remainder)
-            new_dirs.extend(rem)
-            dir_parts.update(rem)
-        new = write_split(df)
-        new_dirs.extend(new)
-        dir_parts.update(new)
-
-        version = (prev or 0) + 1
-        manifest = {
-            "version": version,
-            "operation": _operation,
-            "dirs": keep_dirs + new_dirs,
-            "stats": {
-                **{d: s for d, s in stats.items() if d in keep_dirs},
-                **new_stats,
-            },
-            "dir_parts": dir_parts,
-            "schema": json.dumps(next_schema.jsonValue()),
-        }
-        bloom = {d: b for d, b in prev_bloom_block.items() if d in keep_dirs}
-        bloom.update(new_bloom)
-        if bloom:
-            manifest["bloom"] = bloom
-            manifest["bloom_bits"] = bloom_bits
-        self._publish_manifest(manifest)
-        return version
+        write_split(df)
+        return self._commit(
+            parent,
+            _operation,
+            add=add,
+            keep=keep,
+            schema=json.dumps(next_schema.jsonValue()),
+        )
 
     # -- read path ---------------------------------------------------------
     def read_partitions(
@@ -1731,10 +1568,7 @@ class VersionedTable:
         this attribution becomes a join on an extracted path token."""
         from pyspark.sql import functions as F
 
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
+        m = self._head()
         have = m.get("stats", {})
         targets = [
             d
@@ -1743,10 +1577,36 @@ class VersionedTable:
             or any(c not in have.get(d, {}) for c in cols)
         ]
         if not targets:
-            return version  # every dir already carries these stats
-        frame = self._read_dirs(targets, version, with_positions=True)
+            return m["version"]  # every dir already carries these stats
+        rows = self._per_dir_aggs(
+            targets,
+            m["version"],
+            lambda _payload: [
+                *[F.min(c).alias(f"min_{c}") for c in cols],
+                *[F.max(c).alias(f"max_{c}") for c in cols],
+            ],
+        )
+        stats = dict(have)
+        for d, r in rows.items():
+            stats.setdefault(d, {}).update(
+                {c: [r[f"min_{c}"], r[f"max_{c}"]] for c in cols}
+            )
+        return self._commit(m, f"analyze:{','.join(cols)}", stats=stats)
+
+    def _per_dir_aggs(self, dirs, version, aggs_for, dvs=None) -> dict:
+        """``{dir: Row}`` of the aggregates ``aggs_for(payload columns)``
+        over the visible rows of ``dirs``, in ONE scan: each row attributes
+        to its owning manifest dir through a CASE over its file path. The
+        CASE depth equals the dir count — fine at OPTIMIZE-maintained dir
+        counts; tens of thousands of dirs should compact first."""
+        from pyspark.sql import functions as F
+
+        frame = self._read_dirs(dirs, version, with_positions=True, dvs=dvs)
+        payload = [
+            c for c in frame.columns if c not in (self.POS_FILE, self.POS_INDEX)
+        ]
         owner = F.lit(None).cast("string")
-        for d in targets:
+        for d in dirs:
             # Path-boundary match (dir + "/"), not bare substring: a dir
             # that is a proper prefix of a sibling (…/_zb=1 vs …/_zb=12)
             # must not capture the sibling's rows regardless of CASE order.
@@ -1756,30 +1616,8 @@ class VersionedTable:
                 F.col(self.POS_FILE).contains(d.rstrip("/") + "/"),
                 F.lit(d),
             ).otherwise(owner)
-        rows = (
-            frame.groupBy(owner.alias("__dir"))
-            .agg(
-                *[F.min(c).alias(f"min_{c}") for c in cols],
-                *[F.max(c).alias(f"max_{c}") for c in cols],
-            )
-            .collect()
-        )
-        stats = dict(m.get("stats", {}))
-        for r in rows:
-            if r["__dir"] is None:
-                continue
-            stats.setdefault(r["__dir"], {}).update(
-                {c: [r[f"min_{c}"], r[f"max_{c}"]] for c in cols}
-            )
-        manifest = {
-            "version": version + 1,
-            "operation": f"analyze:{','.join(cols)}",
-            "dirs": m["dirs"],
-            "stats": stats,
-            "schema": m.get("schema"),
-        }
-        self._publish_manifest(manifest)
-        return manifest["version"]
+        rows = frame.groupBy(owner.alias("__dir")).agg(*aggs_for(sorted(payload)))
+        return {r["__dir"]: r for r in rows.collect() if r["__dir"] is not None}
 
     def analyze_ndv(self, cols: Sequence[str], k: int = 256) -> int:
         """``ANALYZE TABLE ... COMPUTE STATISTICS`` for DISTINCT COUNTS:
@@ -1801,11 +1639,8 @@ class VersionedTable:
 
         from lakeflow.operators.aggregates import kmv_uniform
 
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
-        frame = self.read(version)
+        m = self._head()
+        frame = self.read(m["version"])
         melted = frame.select(
             F.explode(
                 F.array(
@@ -1827,25 +1662,12 @@ class VersionedTable:
             .agg(F.sort_array(F.collect_list("u")).alias("minima"))
             .collect()
         )
-        n_rows = frame.count()
         ndv = dict(m.get("ndv", {}))
-        ndv["rows"] = n_rows
-        ndv.setdefault("cols", {})
+        ndv["rows"] = frame.count()
         ndv["cols"] = dict(ndv.get("cols", {}))
         for r in minima:
             ndv["cols"][r["col"]] = {"k": k, "minima": list(r["minima"])}
-        manifest = {
-            "version": version + 1,
-            "operation": f"analyze_ndv:{','.join(cols)}",
-            "dirs": m["dirs"],
-            "stats": m.get("stats", {}),
-            "schema": m.get("schema"),
-            "ndv": ndv,
-        }
-        if m.get("delete_vectors"):
-            manifest["delete_vectors"] = m["delete_vectors"]
-        self._publish_manifest(manifest)
-        return manifest["version"]
+        return self._commit(m, f"analyze_ndv:{','.join(cols)}", ndv=ndv)
 
     def ndv_rows(self) -> int:
         """The table-level row count recorded by the last ``ANALYZE`` —
@@ -1922,43 +1744,20 @@ class VersionedTable:
         rows attribute to their owning dir by path boundary, exactly like
         :meth:`analyze`. Re-seal after DML — fingerprints describe the
         VISIBLE rows of the sealed snapshot's dirs."""
-        from pyspark.sql import functions as F
-
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
-        frame = self._read_dirs(m["dirs"], version, with_positions=True)
-        cols = sorted(c for c in frame.columns
-                      if c not in (self.POS_FILE, self.POS_INDEX))
-        owner = F.lit(None).cast("string")
-        for d in m["dirs"]:
-            owner = F.when(
-                F.col(self.POS_FILE).contains(d.rstrip("/") + "/"), F.lit(d)
-            ).otherwise(owner)
-        rows = (
-            frame.groupBy(owner.alias("__dir"))
-            .agg(*self._row_digest_aggs(cols))
-            .collect()
+        m = self._head()
+        fps = self._content_fps(m["dirs"], m["version"])
+        # The DV state the fingerprints were taken under: verify compares
+        # apples to apples even if later DML adds vectors.
+        return self._commit(
+            m,
+            "seal",
+            content_fp=fps,
+            content_fp_dvs=m.get("delete_vectors", []),
         )
-        fps = {
-            r["__dir"]: [int(r["fp0"]), int(r["fp1"])]
-            for r in rows
-            if r["__dir"] is not None
-        }
-        manifest = {
-            "version": version + 1,
-            "operation": "seal",
-            "dirs": m["dirs"],
-            "stats": m.get("stats", {}),
-            "schema": m.get("schema"),
-            "content_fp": fps,
-            # DV state the fingerprints were taken under: verify compares
-            # apples to apples even if later DML adds vectors.
-            "content_fp_dvs": m.get("delete_vectors", []),
-        }
-        self._publish_manifest(manifest)
-        return manifest["version"]
+
+    def _content_fps(self, dirs, version, dvs=None) -> dict:
+        rows = self._per_dir_aggs(dirs, version, self._row_digest_aggs, dvs=dvs)
+        return {d: [int(r["fp0"]), int(r["fp1"])] for d, r in rows.items()}
 
     def verify_integrity(self, version: int | None = None) -> DataFrame:
         """Audit the data against the last seal at-or-before ``version``:
@@ -1966,9 +1765,6 @@ class VersionedTable:
         the seal recorded) and report ``(dir, ok)`` plus dirs that have
         since disappeared. A flipped byte, swapped file, or silently
         truncated shard flips ``ok`` for exactly its dir."""
-        from pyspark.sql import functions as F
-        from pyspark.sql import Row
-
         if version is None:
             version = self.current_version()
         sealed = None
@@ -1988,28 +1784,9 @@ class VersionedTable:
         out_rows = [Row(dir=d, ok=False) for d in missing]
 
         def digest(dirs: list[str]) -> dict:
-            frame = self._read_dirs(
-                dirs, sealed["version"], with_positions=True,
-                dvs=sealed.get("content_fp_dvs", []),
+            return self._content_fps(
+                dirs, sealed["version"], dvs=sealed.get("content_fp_dvs", [])
             )
-            cols = sorted(c for c in frame.columns
-                          if c not in (self.POS_FILE, self.POS_INDEX))
-            owner = F.lit(None).cast("string")
-            for d in dirs:
-                owner = F.when(
-                    F.col(self.POS_FILE).contains(d.rstrip("/") + "/"),
-                    F.lit(d),
-                ).otherwise(owner)
-            got = (
-                frame.groupBy(owner.alias("__dir"))
-                .agg(*self._row_digest_aggs(cols))
-                .collect()
-            )
-            return {
-                r["__dir"]: [int(r["fp0"]), int(r["fp1"])]
-                for r in got
-                if r["__dir"] is not None
-            }
 
         if live:
             try:
@@ -2051,10 +1828,8 @@ class VersionedTable:
 
         from lakeflow.catalog import zorder_value
 
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        df = self.read(version)
+        m = self._head()
+        df = self.read(m["version"])
         zdf, zcol = zorder_value(df, list(cols), bits)
         zr = zdf.agg(
             F.min(zcol).alias("lo"), F.max(zcol).alias("hi")
@@ -2065,7 +1840,7 @@ class VersionedTable:
             F.lit(n_dirs - 1),
             ((F.col(zcol) - F.lit(lo)) * n_dirs / F.lit(span)).cast("bigint"),
         )
-        parent = os.path.join(self.root, "data", uuid.uuid4().hex)
+        parent = self._new_dir()
         (
             zdf.withColumn("_zb", bucket)
             .repartition(n_dirs, "_zb")
@@ -2075,57 +1850,20 @@ class VersionedTable:
             .partitionBy("_zb")
             .parquet(parent)
         )
-        m = self._manifest(version)
         # Z-order is row-preserving, so a bloom index the table carried is
         # rebuilt over the clustered dirs in the SAME per-dir metadata pass
-        # as the stats (one aggregate job) — dropping it would silently
-        # strip scan_point pruning after every OPTIMIZE ZORDER.
-        bloom_cols = sorted(
-            {c for cs in m.get("bloom", {}).values() for c in cs}
+        # as the stats.
+        metas = self._dir_meta(
+            parent,
+            list(cols),
+            sorted({c for cs in m.get("bloom", {}).values() for c in cs}),
+            m.get("bloom_bits", 4096),
+            by=F.col("_zb"),
         )
-        bloom_bits = m.get("bloom_bits", 4096)
-        aggs = [
-            *[F.min(c).alias(f"min_{c}") for c in cols],
-            *[F.max(c).alias(f"max_{c}") for c in cols],
-        ]
-        for c in bloom_cols:
-            h = F.md5(F.col(c).cast("string"))
-            for part, (lo_ix, ln) in (("a", (1, 8)), ("b", (9, 8))):
-                aggs.append(
-                    F.collect_set(
-                        F.conv(F.substring(h, lo_ix, ln), 16, 10).cast("bigint")
-                        % bloom_bits
-                    ).alias(f"bloom_{part}_{c}")
-                )
-        stat_rows = (
-            self.spark.read.parquet(parent).groupBy("_zb").agg(*aggs).collect()
+        add = [(os.path.join(parent, f"_zb={b}"), metas[b]) for b in sorted(metas)]
+        return self._commit(
+            m, "optimize-zorder", add=add, keep=[], rows_unchanged=True
         )
-        dirs, stats, bloom = [], {}, {}
-        for r in sorted(stat_rows, key=lambda r: r["_zb"]):
-            d = os.path.join(parent, f"_zb={r['_zb']}")
-            dirs.append(d)
-            stats[d] = {c: [r[f"min_{c}"], r[f"max_{c}"]] for c in cols}
-            if bloom_cols:
-                bloom[d] = {
-                    c: sorted(
-                        {int(b) for b in r[f"bloom_a_{c}"]}
-                        | {int(b) for b in r[f"bloom_b_{c}"]}
-                    )
-                    for c in bloom_cols
-                }
-        new_version = version + 1
-        manifest = {
-            "version": new_version,
-            "operation": "optimize-zorder",
-            "dirs": dirs,
-            "stats": stats,
-            "schema": m.get("schema"),
-        }
-        if bloom:
-            manifest["bloom"] = bloom
-            manifest["bloom_bits"] = bloom_bits
-        self._publish_manifest(manifest)
-        return new_version
 
     def delete_where_mor(
         self,
@@ -2143,36 +1881,7 @@ class VersionedTable:
         reads through the vectors and purges them. Prior versions are
         untouched: time travel before the delete sees the rows.
         """
-        from pyspark.sql import functions as F
-
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
-        touch = self._kept_dirs(m, prune_between or {})
-        if not touch:
-            return version
-        cond = F.coalesce(F.expr(condition), F.lit(False))
-        frame = self._read_dirs(sorted(touch), version, with_positions=True)
-        matches = frame.filter(cond).select(
-            F.col(self.POS_FILE).alias("file_path"),
-            F.col(self.POS_INDEX).alias("row_index"),
-        )
-        dv_path = os.path.join(self.root, "dv", uuid.uuid4().hex)
-        matches.write.mode("overwrite").parquet(dv_path)
-        if self.spark.read.parquet(dv_path).isEmpty():
-            shutil.rmtree(dv_path)  # never referenced; don't leave residue
-            return version  # nothing matched: no new snapshot
-        manifest = {
-            "version": version + 1,
-            "operation": "delete-mor",
-            "dirs": m["dirs"],
-            "stats": m.get("stats", {}),
-            "schema": m.get("schema"),
-            "delete_vectors": m.get("delete_vectors", []) + [dv_path],
-        }
-        self._publish_manifest(manifest)
-        return manifest["version"]
+        return self._mor_where("delete-mor", condition, prune_between)
 
     def scan_physical(self, version: int | None = None) -> DataFrame:
         """Scan a snapshot's data files WITHOUT applying deletion vectors —
@@ -2201,58 +1910,59 @@ class VersionedTable:
         manifest there is no instant where a reader can see the rows doubled
         or missing. SET results cast to the declared column types, the same
         rule as :meth:`update_where`."""
+        return self._mor_where("update-mor", condition, prune_between, set_exprs)
+
+    def _mor_where(self, operation, condition, prune_between, set_exprs=None):
+        """Merge-on-read DML: one deletion vector hides the candidate rows
+        matching ``condition``; for an UPDATE, one new dir holds their
+        rewritten versions, in the same snapshot. No match, no snapshot."""
         from pyspark.sql import functions as F
 
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
+        m = self._head()
         touch = self._kept_dirs(m, prune_between or {})
         if not touch:
-            return version
-        cond = F.coalesce(F.expr(condition), F.lit(False))
-        frame = self._read_dirs(sorted(touch), version, with_positions=True)
-        payload = [
-            c for c in frame.columns if c not in (self.POS_FILE, self.POS_INDEX)
-        ]
-        types = {f.name: f.dataType for f in frame.schema.fields}
-        for col in set_exprs:
-            if col not in types:
-                raise ValueError(f"UPDATE of unknown column {col!r}")
-        matched = frame.filter(cond)
-        dv_path = os.path.join(self.root, "dv", uuid.uuid4().hex)
-        matched.select(
+            return m["version"]
+        frame = self._read_dirs(sorted(touch), m["version"], with_positions=True)
+        if set_exprs is not None:
+            types = self._set_types(frame, set_exprs)
+        matched = frame.filter(F.coalesce(F.expr(condition), F.lit(False)))
+        dv = self._write_dv(matched)
+        if dv is None:
+            return m["version"]
+        add = []
+        if set_exprs is not None:
+            # One select: every SET expression sees the PRE-update row, so
+            # cross-referencing SETs (a = b, b = a) swap instead of cascading.
+            rewritten = matched.select(
+                *[
+                    F.expr(set_exprs[c]).cast(types[c]).alias(c)
+                    if c in set_exprs
+                    else F.col(c)
+                    for c in matched.columns
+                    if c not in (self.POS_FILE, self.POS_INDEX)
+                ]
+            )
+            # Constraints gate MOR publishes too: only the rewritten rows are
+            # new — carried rows were validated at their own publish.
+            self._check_constraints(rewritten, self.constraints())
+            add = [(self._new_dir(), {})]
+            rewritten.write.mode("overwrite").parquet(add[0][0])
+        return self._commit(m, operation, add=add, dvs=[dv])
+
+    def _write_dv(self, rows: DataFrame) -> str | None:
+        """Write the (file, row-position) pairs of ``rows`` as a deletion
+        vector; None — leaving no residue — when no row matched."""
+        from pyspark.sql import functions as F
+
+        path = self._new_dir("dv")
+        rows.select(
             F.col(self.POS_FILE).alias("file_path"),
             F.col(self.POS_INDEX).alias("row_index"),
-        ).write.mode("overwrite").parquet(dv_path)
-        if self.spark.read.parquet(dv_path).isEmpty():
-            shutil.rmtree(dv_path)
-            return version
-        # One select: every SET expression sees the PRE-update row, so
-        # cross-referencing SETs (a = b, b = a) swap instead of cascading.
-        rewritten = matched.select(
-            *[
-                F.expr(set_exprs[c]).cast(types[c]).alias(c)
-                if c in set_exprs
-                else F.col(c)
-                for c in matched.columns
-            ]
-        )
-        # Constraints gate MOR publishes too: only the rewritten rows are
-        # new — carried rows were validated at their own publish.
-        self._check_constraints(rewritten.select(*payload), self.constraints())
-        new_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
-        rewritten.select(*payload).write.mode("overwrite").parquet(new_dir)
-        manifest = {
-            "version": version + 1,
-            "operation": "update-mor",
-            "dirs": m["dirs"] + [new_dir],
-            "stats": m.get("stats", {}),
-            "schema": m.get("schema"),
-            "delete_vectors": m.get("delete_vectors", []) + [dv_path],
-        }
-        self._publish_manifest(manifest)
-        return manifest["version"]
+        ).write.mode("overwrite").parquet(path)
+        if self.spark.read.parquet(path).isEmpty():
+            shutil.rmtree(path)
+            return None
+        return path
 
     def files(self, version: int | None = None) -> DataFrame:
         """Metadata table (Iceberg's ``t.files`` / Delta's DESCRIBE DETAIL
@@ -2368,37 +2078,18 @@ class VersionedTable:
         m = self._manifest(version)
         frame = self._read_dirs(m["dirs"], version, with_positions=True)
         keysel = batch.select(*list(keys)).distinct()
-        tagged = frame.select(
-            F.col(self.POS_FILE).alias("file_path"),
-            F.col(self.POS_INDEX).alias("row_index"),
-            *list(keys),
+        tagged = frame.select(self.POS_FILE, self.POS_INDEX, *list(keys))
+        dv = self._write_dv(
+            tagged.join(F.broadcast(keysel), list(keys), "left_semi")
         )
-        matched = tagged.join(F.broadcast(keysel), list(keys), "left_semi")
-        dv_path = os.path.join(self.root, "dv", uuid.uuid4().hex)
-        matched.select("file_path", "row_index").write.mode(
-            "overwrite"
-        ).parquet(dv_path)
-        has_dv = not self.spark.read.parquet(dv_path).isEmpty()
-        if not has_dv:
-            shutil.rmtree(dv_path)
-        new_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
+        new_dir = self._new_dir()
         payload = [
             c for c in frame.columns if c not in (self.POS_FILE, self.POS_INDEX)
         ]
         batch.select(*payload).write.mode("overwrite").parquet(new_dir)
-        manifest = {
-            "version": version + 1,
-            "operation": "upsert-mor",
-            "dirs": m["dirs"] + [new_dir],
-            "stats": m.get("stats", {}),
-            "schema": m.get("schema"),
-        }
-        if has_dv or m.get("delete_vectors"):
-            manifest["delete_vectors"] = m.get("delete_vectors", []) + (
-                [dv_path] if has_dv else []
-            )
-        self._publish_manifest(manifest)
-        return manifest["version"]
+        return self._commit(
+            m, "upsert-mor", add=[(new_dir, {})], dvs=[dv] if dv else []
+        )
 
     def add_column(self, name: str, dtype: str) -> int:
         """``ALTER TABLE ADD COLUMN`` — metadata-only (Iceberg/Delta): the
@@ -2407,10 +2098,8 @@ class VersionedTable:
         NULL-backfill contract as merge_schema evolution on append)."""
         from pyspark.sql.types import StructType, _parse_datatype_string
 
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        st = self.schema(version)
+        m = self._head()
+        st = self.schema(m["version"])
         if st is None:
             raise ValueError("pre-schema-tracking table cannot ALTER")
         if name in st.fieldNames():
@@ -2418,16 +2107,9 @@ class VersionedTable:
         new_st = StructType(
             list(st.fields)
         ).add(name, _parse_datatype_string(dtype), True)
-        m = self._manifest(version)
-        manifest = {
-            "version": version + 1,
-            "operation": f"add-column:{name}",
-            "dirs": m["dirs"],
-            "stats": m.get("stats", {}),
-            "schema": json.dumps(new_st.jsonValue()),
-        }
-        self._publish_manifest(manifest)
-        return manifest["version"]
+        return self._commit(
+            m, f"add-column:{name}", schema=json.dumps(new_st.jsonValue())
+        )
 
     def drop_column(self, name: str) -> int:
         """``ALTER TABLE DROP COLUMN`` — metadata-only: the column leaves
@@ -2436,16 +2118,13 @@ class VersionedTable:
         request the column from the parquet footers."""
         from pyspark.sql.types import StructType
 
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        st = self.schema(version)
+        m = self._head()
+        st = self.schema(m["version"])
         if st is None or name not in st.fieldNames():
             raise ValueError(f"no such column {name!r}")
         new_st = StructType([f for f in st.fields if f.name != name])
         if not new_st.fields:
             raise ValueError("cannot drop the last column")
-        m = self._manifest(version)
         for gname, spec in (m.get("generated") or {}).items():
             if gname != name and re.search(
                 rf"\b{re.escape(name)}\b", spec["expr"]
@@ -2466,51 +2145,24 @@ class VersionedTable:
                     f"column {name!r} is referenced by row filter "
                     f"{fname!r}: drop the filter first"
                 )
-        manifest = {
-            "version": version + 1,
-            "operation": f"drop-column:{name}",
-            "dirs": m["dirs"],
-            "stats": {
-                d: {c: v for c, v in cs.items() if c != name}
-                for d, cs in m.get("stats", {}).items()
-            },
+        # The column's stats, bloom bit sets, NDV sketch, own mask and
+        # derivation retire with it — replaced explicitly, so nothing can
+        # resurrect an index or a policy for a column the schema lacks.
+        def drop(block: dict) -> dict:
+            return {c: v for c, v in block.items() if c != name}
+
+        changes = {
             "schema": json.dumps(new_st.jsonValue()),
+            "stats": {d: drop(cs) for d, cs in m.get("stats", {}).items()},
         }
         if m.get("bloom"):
-            # The dropped column's bloom bit sets retire with it, same rule
-            # as its zone-map stats above — explicitly present so the
-            # per-dir carry in _publish_manifest cannot resurrect an index
-            # for a column the schema no longer has.
-            manifest["bloom"] = {
-                d: {c: v for c, v in cs.items() if c != name}
-                for d, cs in m["bloom"].items()
-            }
-        if m.get("generated"):
-            # Dropping a generated column retires its derivation too —
-            # explicitly present (possibly empty) so the carry-forward in
-            # _publish_manifest cannot resurrect it on the next commit.
-            manifest["generated"] = {
-                g: s for g, s in m["generated"].items() if g != name
-            }
-        if m.get("masks"):
-            # A dropped column's own mask retires with it (references by
-            # OTHER policies were rejected above).
-            manifest["masks"] = {
-                c: e for c, e in m["masks"].items() if c != name
-            }
+            changes["bloom"] = {d: drop(cs) for d, cs in m["bloom"].items()}
+        for k in ("generated", "masks"):
+            if m.get(k):
+                changes[k] = drop(m[k])
         if m.get("ndv"):
-            # The dropped column's NDV sketch retires with it — explicitly
-            # present so the carry-forward in _publish_manifest cannot
-            # resurrect stats for a column the schema no longer has.
-            ndv = dict(m["ndv"])
-            ndv["cols"] = {
-                c: v
-                for c, v in dict(ndv.get("cols", {})).items()
-                if c != name
-            }
-            manifest["ndv"] = ndv
-        self._publish_manifest(manifest)
-        return manifest["version"]
+            changes["ndv"] = {**m["ndv"], "cols": drop(m["ndv"].get("cols", {}))}
+        return self._commit(m, f"drop-column:{name}", **changes)
 
     def set_generated(self, name: str, dtype: str, expr: str) -> int:
         """Declare a GENERATED column (Delta's ``GENERATED ALWAYS AS`` — the
@@ -2526,9 +2178,8 @@ class VersionedTable:
 
         from pyspark.sql import functions as F
 
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
+        m = self._head()
+        version = m["version"]
         st = self.schema(version)
         if st is None:
             raise ValueError("pre-schema-tracking table cannot ALTER")
@@ -2562,19 +2213,13 @@ class VersionedTable:
             new_st = StructType(list(st.fields)).add(
                 name, _parse_datatype_string(dtype), True
             )
-        m = self._manifest(version)
-        gen = dict(m.get("generated", {}))
-        gen[name] = {"dtype": dtype, "expr": expr}
-        manifest = {
-            "version": version + 1,
-            "operation": f"add-generated:{name}",
-            "dirs": m["dirs"],
-            "stats": m.get("stats", {}),
-            "schema": json.dumps(new_st.jsonValue()),
-            "generated": gen,
-        }
-        self._publish_manifest(manifest)
-        return manifest["version"]
+        gen = {**m.get("generated", {}), name: {"dtype": dtype, "expr": expr}}
+        return self._commit(
+            m,
+            f"add-generated:{name}",
+            schema=json.dumps(new_st.jsonValue()),
+            generated=gen,
+        )
 
     def generated_columns(self) -> dict:
         v = self.current_version()
@@ -2625,10 +2270,8 @@ class VersionedTable:
         (drop the constraint first — Delta's rule)."""
         from pyspark.sql.types import StructField, StructType
 
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        st = self.schema(version)
+        m = self._head()
+        st = self.schema(m["version"])
         if st is None:
             raise ValueError("pre-schema-tracking table cannot ALTER")
         if old not in st.fieldNames():
@@ -2678,34 +2321,20 @@ class VersionedTable:
                 fields.append(StructField(new, f.dataType, f.nullable, md))
             else:
                 fields.append(f)
-        m = self._manifest(version)
-        manifest = {
-            "version": version + 1,
-            "operation": f"rename-column:{old}->{new}",
-            "dirs": m["dirs"],
-            "stats": {
-                d: {(new if c == old else c): v for c, v in cs.items()}
-                for d, cs in m.get("stats", {}).items()
-            },
+        # Stats, bloom bit sets and NDV sketches key on the LOGICAL column
+        # name: they rename with the column.
+        def rename(block: dict) -> dict:
+            return {(new if c == old else c): v for c, v in block.items()}
+
+        changes = {
             "schema": json.dumps(StructType(fields).jsonValue()),
+            "stats": {d: rename(cs) for d, cs in m.get("stats", {}).items()},
         }
-        if "bloom" in m:
-            manifest["bloom"] = {
-                d: {(new if c == old else c): v for c, v in cs.items()}
-                for d, cs in m["bloom"].items()
-            }
+        if m.get("bloom"):
+            changes["bloom"] = {d: rename(cs) for d, cs in m["bloom"].items()}
         if m.get("ndv"):
-            # NDV sketches key on the LOGICAL column name — rename the key
-            # with the column (explicitly present so the carry-forward in
-            # _publish_manifest cannot resurrect the old name).
-            ndv = dict(m["ndv"])
-            ndv["cols"] = {
-                (new if c == old else c): v
-                for c, v in dict(ndv.get("cols", {})).items()
-            }
-            manifest["ndv"] = ndv
-        self._publish_manifest(manifest)
-        return manifest["version"]
+            changes["ndv"] = {**m["ndv"], "cols": rename(m["ndv"].get("cols", {}))}
+        return self._commit(m, f"rename-column:{old}->{new}", **changes)
 
     def add_constraint(self, name: str, check_expr: str) -> int:
         """``ALTER TABLE ADD CONSTRAINT name CHECK (expr)`` (Delta's table
@@ -2718,41 +2347,27 @@ class VersionedTable:
         data violates). Constraints ride the manifest and survive every
         manifest-producing path, like txn watermarks."""
         version = self.current_version()
-        cons = dict(self.constraints())
-        cons[name] = check_expr
         if version is not None:
             self._check_constraints(self.read(version), {name: check_expr})
-        m = self._manifest(version) if version is not None else {"dirs": []}
-        manifest = {
-            "version": (version or 0) + 1,
-            "operation": f"add-constraint:{name}",
-            "dirs": m.get("dirs", []),
-            "stats": m.get("stats", {}),
-            "schema": m.get("schema"),
-            "constraints": cons,
-        }
-        self._publish_manifest(manifest)
-        return manifest["version"]
+        m = self._manifest(version) if version is not None else {}
+        return self._put_policy(
+            m, "constraints", f"add-constraint:{name}", name, check_expr
+        )
 
     def drop_constraint(self, name: str) -> int:
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        cons = dict(self.constraints())
-        cons.pop(name, None)
-        m = self._manifest(version)
-        manifest = {
-            "version": version + 1,
-            "operation": f"drop-constraint:{name}",
-            "dirs": m["dirs"],
-            "stats": m.get("stats", {}),
-            "schema": m.get("schema"),
-            "constraints": cons,
-        }
-        # Explicitly present (possibly empty) so the carry-forward in
-        # _publish_manifest does not resurrect the dropped rule.
-        self._publish_manifest(manifest)
-        return manifest["version"]
+        return self._put_policy(
+            self._head(), "constraints", f"drop-constraint:{name}", name
+        )
+
+    def _put_policy(
+        self, m: dict, key: str, operation: str, name: str, value=None
+    ) -> int:
+        """Metadata-only commit setting entry ``name`` of the policy map
+        ``key`` to ``value`` — or dropping it when ``value`` is None."""
+        block = {**m.get(key, {}), name: value}
+        if value is None:
+            del block[name]
+        return self._commit(m, operation, **{key: block})
 
     def constraints(self) -> dict:
         v = self.current_version()
@@ -2773,9 +2388,8 @@ class VersionedTable:
         The mask must preserve the column's type — Delta's rule, enforced at
         declaration time by resolving the expression against the current
         snapshot's plan (no data read)."""
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
+        m = self._head()
+        version = m["version"]
         st = self.schema(version)
         if st is not None and col not in st.fieldNames():
             raise ValueError(f"no such column {col!r}")
@@ -2791,17 +2405,10 @@ class VersionedTable:
                 f"({dict(base.dtypes)[col]} -> {masked_type}); "
                 "masks must be type-preserving"
             )
-        masks = dict(self.masks())
-        masks[col] = mask_expr
-        return self._publish_policy(version, f"set-mask:{col}", masks=masks)
+        return self._put_policy(m, "masks", f"set-mask:{col}", col, mask_expr)
 
     def drop_column_mask(self, col: str) -> int:
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        masks = dict(self.masks())
-        masks.pop(col, None)
-        return self._publish_policy(version, f"drop-mask:{col}", masks=masks)
+        return self._put_policy(self._head(), "masks", f"drop-mask:{col}", col)
 
     def set_row_filter(self, name: str, filter_expr: str) -> int:
         """``ALTER TABLE t SET ROW FILTER name AS (expr)``: governed reads
@@ -2809,27 +2416,18 @@ class VersionedTable:
         NULL excludes). Filters evaluate against UNMASKED values and all
         declared filters AND together, matching Delta's
         filters-before-masks evaluation order."""
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
         from pyspark.sql import functions as F
 
+        m = self._head()
         # Resolve plan-side so a typo fails at declaration, not read time.
-        self.read(version).filter(F.expr(filter_expr))
-        filters = dict(self.row_filters())
-        filters[name] = filter_expr
-        return self._publish_policy(
-            version, f"set-row-filter:{name}", row_filters=filters
+        self.read(m["version"]).filter(F.expr(filter_expr))
+        return self._put_policy(
+            m, "row_filters", f"set-row-filter:{name}", name, filter_expr
         )
 
     def drop_row_filter(self, name: str) -> int:
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        filters = dict(self.row_filters())
-        filters.pop(name, None)
-        return self._publish_policy(
-            version, f"drop-row-filter:{name}", row_filters=filters
+        return self._put_policy(
+            self._head(), "row_filters", f"drop-row-filter:{name}", name
         )
 
     # -- named refs (Iceberg tags) ------------------------------------------
@@ -2842,47 +2440,18 @@ class VersionedTable:
         matters operationally — ``expire_snapshots`` NEVER drops a tagged
         snapshot or its data, however old, until the tag is dropped. The tag
         map rides the manifest like constraints (metadata-only commit)."""
-        current = self.current_version()
-        if current is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        target = current if version is None else version
+        m = self._head()
+        target = m["version"] if version is None else version
         if target not in self.versions():
             raise ValueError(f"no such snapshot version {target}")
-        refs = dict(self.tags())
-        if name in refs:
+        if name in m.get("refs", {}):
             raise ValueError(f"tag {name!r} already exists (tags are immutable)")
-        refs[name] = target
-        m = self._manifest(current)
-        manifest = {
-            "version": current + 1,
-            "operation": f"create-tag:{name}@{target}",
-            "dirs": m["dirs"],
-            "stats": m.get("stats", {}),
-            "schema": m.get("schema"),
-            "refs": refs,
-        }
-        self._publish_manifest(manifest)
-        return manifest["version"]
+        return self._put_policy(
+            m, "refs", f"create-tag:{name}@{target}", name, target
+        )
 
     def drop_tag(self, name: str) -> int:
-        current = self.current_version()
-        if current is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        refs = dict(self.tags())
-        refs.pop(name, None)
-        m = self._manifest(current)
-        manifest = {
-            "version": current + 1,
-            "operation": f"drop-tag:{name}",
-            "dirs": m["dirs"],
-            "stats": m.get("stats", {}),
-            "schema": m.get("schema"),
-            # Explicitly present (possibly empty) so carry-forward cannot
-            # resurrect the dropped tag.
-            "refs": refs,
-        }
-        self._publish_manifest(manifest)
-        return manifest["version"]
+        return self._put_policy(self._head(), "refs", f"drop-tag:{name}", name)
 
     def tags(self) -> dict:
         v = self.current_version()
@@ -2920,25 +2489,16 @@ class VersionedTable:
         if os.path.isdir(bdir):
             raise ValueError(f"branch {name!r} already exists")
         os.makedirs(bdir)
-        m = self._manifest(target)
-        seed = {
-            k: m[k]
-            for k in (
-                "dirs", "stats", "schema", "partitioning", "hidden_specs",
-                "dir_parts", "ndv",
-                "constraints", "generated", "masks", "row_filters",
-                "delete_vectors", "bloom", "bloom_bits", "txns", "refs",
-            )
-            if k in m
-        }
-        seed["version"] = 1
-        seed["operation"] = f"branch:{name}@{target}"
-        # The fast-forward ancestry gate: main may not move past this
-        # version (except via this branch's own fast-forwards) or the
-        # branch can no longer fast-forward onto it.
-        seed["fork_main_version"] = current
         b = self.branch(name, _create=True)
-        b._publish_manifest(seed)
+        # fork_main_version is the fast-forward ancestry gate: main may not
+        # move past this version (except via this branch's own
+        # fast-forwards) or the branch can no longer fast-forward onto it.
+        b._commit(
+            {},
+            f"branch:{name}@{target}",
+            fork_main_version=current,
+            **self._restore(self._manifest(target), *_POLICY),
+        )
         return b
 
     def branch(self, name: str, _create: bool = False) -> "VersionedTable":
@@ -2995,38 +2555,16 @@ class VersionedTable:
                 f"main diverged since branch {name!r} forked at v{fork} "
                 f"(now v{current}); fast-forward must preserve ancestry"
             )
-        manifest = {
-            "version": current + 1,
-            "operation": f"fast-forward:{name}@{head}",
-            "dirs": hm["dirs"],
-            "stats": hm.get("stats", {}),
-            "schema": hm.get("schema"),
-            # Every policy/metadata key is set EXPLICITLY from the branch
-            # head (empty when absent) so _publish_manifest's carry-forward
-            # cannot re-inject main's stale state over the branch's.
-            "partitioning": hm.get("partitioning", {}),
-            "hidden_specs": hm.get("hidden_specs", {}),
-            "constraints": hm.get("constraints", {}),
-            "generated": hm.get("generated", {}),
-            "masks": hm.get("masks", {}),
-            "row_filters": hm.get("row_filters", {}),
-            "delete_vectors": hm.get("delete_vectors", []),
-            # Explicitly the branch head's statistics (possibly empty) —
-            # left unset, the shared-dirs carry would attach MAIN's ndv
-            # block to a snapshot that holds the BRANCH's rows: the
-            # wrong-provenance-statistics bug at the fast-forward boundary.
-            "ndv": hm.get("ndv", {}),
+        # Policy is the branch head's, an absent key meaning an empty one,
+        # so main's state cannot survive over the branch's.
+        changes = {
+            **{k: {} for k in _POLICY},
+            **self._restore(hm, *_POLICY),
             "refs": {**cur_m.get("refs", {}), **hm.get("refs", {})},
-            "txns": hm.get("txns", {}),
-            "ff_branch": name,
         }
-        if hm.get("bloom"):
-            manifest["bloom"] = hm["bloom"]
-            manifest["bloom_bits"] = hm.get("bloom_bits")
-        if hm.get("dir_parts"):
-            manifest["dir_parts"] = hm["dir_parts"]
-        self._publish_manifest(manifest)
-        return manifest["version"]
+        return self._commit(
+            cur_m, f"fast-forward:{name}@{head}", ff_branch=name, **changes
+        )
 
     def drop_branch(self, name: str) -> None:
         """Delete branch ``name``'s snapshot chain. Data dirs written only
@@ -3056,31 +2594,6 @@ class VersionedTable:
     def row_filters(self) -> dict:
         v = self.current_version()
         return {} if v is None else self._manifest(v).get("row_filters", {})
-
-    def _publish_policy(
-        self,
-        version: int,
-        operation: str,
-        masks: dict | None = None,
-        row_filters: dict | None = None,
-    ) -> int:
-        """Metadata-only policy snapshot: same dirs/stats/schema, new policy.
-        Keys are written explicitly (possibly empty) so the carry-forward in
-        :meth:`_publish_manifest` cannot resurrect a dropped rule."""
-        m = self._manifest(version)
-        manifest = {
-            "version": version + 1,
-            "operation": operation,
-            "dirs": m["dirs"],
-            "stats": m.get("stats", {}),
-            "schema": m.get("schema"),
-            "masks": self.masks() if masks is None else masks,
-            "row_filters": (
-                self.row_filters() if row_filters is None else row_filters
-            ),
-        }
-        self._publish_manifest(manifest)
-        return manifest["version"]
 
     def read_governed(
         self, version: int | None = None, timestamp: str | None = None
@@ -3132,13 +2645,7 @@ class VersionedTable:
             )
 
     # -- maintenance -------------------------------------------------------
-    def _dir_bytes(self, d: str) -> int:
-        return sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _dirs, files in os.walk(d)
-            for f in files
-            if not f.startswith((".", "_"))
-        )
+    _dir_bytes = staticmethod(_dir_bytes)
 
     def compact(
         self,
@@ -3158,109 +2665,56 @@ class VersionedTable:
         re-read (rewriting 100 TB to fix kilobyte files would be the
         classic compaction own-goal).
         """
+        m = self._head()
         if small_dir_max_bytes is None:
-            df = self.read()
             # A full compact is row-preserving, so indexes the table carried
-            # must not silently vanish with the rewritten dirs: when the
-            # caller gives no stats_cols, re-derive them from the prior
-            # snapshot's stats columns, and always rebuild the bloom index
-            # over its recorded columns at the pinned bloom_bits — commit
-            # folds both into its single metadata pass over the new dir.
-            kwargs: dict = {}
-            v0 = self.current_version()
-            if v0 is not None:
-                m0 = self._manifest(v0)
-                if stats_cols is None and m0.get("stats"):
-                    derived = sorted(
-                        {c for cs in m0["stats"].values() for c in cs}
-                    )
-                    if derived:
-                        stats_cols = derived
-                if m0.get("bloom"):
-                    kwargs["bloom_cols"] = sorted(
-                        {c for cs in m0["bloom"].values() for c in cs}
-                    )
-                    kwargs["bloom_bits"] = m0.get("bloom_bits", 4096)
+            # must not vanish with the rewritten dirs: without explicit
+            # stats_cols it re-derives the parent's stats columns, and it
+            # always rebuilds the bloom index over its recorded columns at
+            # the pinned modulus — commit folds both into its single
+            # metadata pass over the new dir.
+            if stats_cols is None:
+                stats_cols = sorted(
+                    {c for cs in m.get("stats", {}).values() for c in cs}
+                ) or None
+            bloom_cols = sorted({c for cs in m.get("bloom", {}).values() for c in cs})
             return self.commit(
-                df, mode="overwrite", stats_cols=stats_cols,
-                _operation="compact", **kwargs,
+                self.read(m["version"]),
+                mode="overwrite",
+                stats_cols=stats_cols,
+                bloom_cols=bloom_cols or None,
+                bloom_bits=m.get("bloom_bits", 4096),
+                _operation="compact",
             )
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
-        small = [d for d in m["dirs"] if self._dir_bytes(d) < small_dir_max_bytes]
+        small = _small_dirs(m["dirs"], small_dir_max_bytes)
         if len(small) <= 1:
             # Nothing to coalesce; skip the no-op commit.
-            return version
-        keep = [d for d in m["dirs"] if d not in set(small)]
-        merged_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
-        self._read_dirs(small, version).write.mode("overwrite").parquet(merged_dir)
-
-        prev_stats = m.get("stats", {})
-        stats = {d: s for d, s in prev_stats.items() if d in keep}
-        if stats_cols:
-            from pyspark.sql import functions as F
-
-            row = (
-                self.spark.read.parquet(merged_dir)
-                .agg(
-                    *[F.min(c).alias(f"min_{c}") for c in stats_cols],
-                    *[F.max(c).alias(f"max_{c}") for c in stats_cols],
-                )
-                .collect()[0]
-            )
-            stats[merged_dir] = {
-                c: [row[f"min_{c}"], row[f"max_{c}"]] for c in stats_cols
-            }
-        else:
-            # Envelope union, zero IO: the merged dir holds exactly the
-            # folded dirs' rows, so its min/max per column is the union of
-            # their recorded envelopes — file-skip pruning must not
-            # silently degrade just because an auto-compaction fold didn't
-            # re-specify stats_cols (helper skips columns missing from or
-            # null in any folded envelope; a partial union would wrongly
-            # prune).
-            merged_stats = _union_stats_envelopes(prev_stats, small)
-            if merged_stats:
-                stats[merged_dir] = merged_stats
-        dir_parts = {
-            d: p for d, p in m.get("dir_parts", {}).items() if d in keep
+            return m["version"]
+        keep = [d for d in m["dirs"] if d not in small]
+        merged_dir = self._new_dir()
+        self._read_dirs(list(small), m["version"]).write.mode("overwrite").parquet(
+            merged_dir
+        )
+        # The merged dir holds exactly the folded dirs' rows, so without
+        # stats_cols its envelope per column is the union of theirs, its
+        # bloom bit set the bitwise union (the modulus is pinned), and its
+        # partition coverage the union of theirs — zero IO, and file-skip
+        # pruning does not degrade because an auto-compaction fold did not
+        # re-specify stats_cols.
+        meta = self._dir_meta(merged_dir, stats_cols) or {
+            "stats": _union_stats_envelopes(m.get("stats", {}), small)
         }
-        prev_parts = m.get("dir_parts", {})
-        if all(prev_parts.get(d) is not None for d in small):
-            # Coverage union keeps the merged dir partition-prunable.
-            dir_parts[merged_dir] = sorted(
-                {p for d in small for p in prev_parts[d]}
-            )
-        # Bloom indexes are per-dir metadata like stats and must survive the
-        # fold (the same provenance class as the ndv/rollback fixes): kept
-        # dirs carry theirs verbatim, and because bloom_bits is pinned at
-        # index creation, the merged dir's filter for a column is the
-        # BITWISE UNION of the folded dirs' bit sets — zero IO, no false
-        # negatives. A column missing from ANY folded dir gets no merged
-        # bloom (scan_point treats missing as "could contain", which is
-        # safe; a partial union would wrongly skip the missing dir's keys).
-        prev_bloom = m.get("bloom", {})
-        bloom = {d: b for d, b in prev_bloom.items() if d in keep}
-        merged_bloom = _union_bloom_sets(prev_bloom, small)
-        if merged_bloom:
-            bloom[merged_dir] = merged_bloom
-        new_version = version + 1
-        manifest = {
-            "version": new_version,
-            "operation": "compact",
-            "dirs": keep + [merged_dir],
-            "stats": stats,
-            "schema": m.get("schema"),
-        }
-        if dir_parts:
-            manifest["dir_parts"] = dir_parts
-        if bloom:
-            manifest["bloom"] = bloom
-            manifest["bloom_bits"] = m.get("bloom_bits")
-        self._publish_manifest(manifest)
-        return new_version
+        meta["bloom"] = _union_bloom_sets(m.get("bloom", {}), small)
+        parts = m.get("dir_parts", {})
+        if all(parts.get(d) is not None for d in small):
+            meta["dir_parts"] = sorted({p for d in small for p in parts[d]})
+        return self._commit(
+            m,
+            "compact",
+            add=[(merged_dir, {k: v for k, v in meta.items() if v is not None})],
+            keep=keep,
+            rows_unchanged=True,
+        )
 
     # -- maintenance -------------------------------------------------------
     def expire_snapshots(self, keep_last: int = 1) -> list[int]:
@@ -3318,8 +2772,7 @@ class VersionedTable:
             # walk-forward probe stop at the gap and report v3 as head —
             # and the next commit would shadow-publish v4 below the real
             # head. Re-pin the hint to the surviving head so a gap above
-            # the hint can never coexist with a valid-looking hint
-            # (ADVICE r9).
+            # the hint can never coexist with a valid-looking hint.
             survivors = self.versions()
             if survivors:
                 self._write_latest_hint(survivors[-1])
@@ -3547,9 +3000,7 @@ class TableCatalog:
             t.compact()  # full rewrite: materializes and purges the vectors
             report["compacted"] = True
             m = t._manifest(t.current_version())
-        small = [
-            d for d in m["dirs"] if t._dir_bytes(d) < small_dir_max_bytes
-        ]
+        small = _small_dirs(m["dirs"], small_dir_max_bytes)
         if not report["compacted"] and len(small) > max_small_dirs:
             t.compact(small_dir_max_bytes=small_dir_max_bytes)
             report["compacted"] = True

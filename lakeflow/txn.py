@@ -1,7 +1,7 @@
 """Multi-table atomic transactions via a catalog commit log (Nessie model).
 
 A :class:`VersionedTable` commit is atomic *per table* (write-then-link CAS in
-``tables.VersionedTable._publish_manifest``), but the lakehouse's classic gap —
+``tables._link_json``), but the lakehouse's classic gap —
 same as Iceberg pre-catalog-transactions — is ATOMICITY ACROSS TABLES: a gold
 rollup published after its silver base leaves a window where readers join new
 silver against old gold. The reference pipeline has exactly this exposure: its
@@ -12,7 +12,8 @@ nothing tying the layer versions together.
 The fix here is the one Project Nessie / modern Iceberg REST catalogs use:
 versions become visible through a CATALOG COMMIT — one tiny JSON mapping
 ``table name -> snapshot version`` for every table under the ref, published
-with the same write-then-``os.link`` compare-and-swap as a table manifest.
+with the same write-then-``os.link`` compare-and-swap as a table manifest
+(``tables._link_json``).
 Per-table snapshots are written first (durable, but mere objects); the single
 catalog-commit link is the transaction's commit point:
 
@@ -38,12 +39,16 @@ from __future__ import annotations
 import datetime
 import json
 import os
-import uuid
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lakeflow.tables import CommitConflictError, TableCatalog, VersionedTable
+from lakeflow.tables import (
+    CommitConflictError,
+    TableCatalog,
+    VersionedTable,
+    _link_json,
+)
 
 
 class CatalogRef:
@@ -162,21 +167,12 @@ class CatalogRef:
                 datetime.timezone.utc
             ).isoformat(),
         }
-        final = os.path.join(self._log_dir, f"{commit:08d}.json")
-        tmp = os.path.join(
-            self._log_dir, f".{commit:08d}-{uuid.uuid4().hex}.json.tmp"
+        _link_json(  # the atomic commit point
+            os.path.join(self._log_dir, f"{commit:08d}.json"),
+            doc,
+            f"catalog commit {commit} on ref {self.ref!r} was published "
+            "concurrently",
         )
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-        try:
-            os.link(tmp, final)  # atomic commit point, EEXIST on a race
-        except FileExistsError:
-            raise CommitConflictError(
-                f"catalog commit {commit} on ref {self.ref!r} was published "
-                "concurrently"
-            ) from None
-        finally:
-            os.unlink(tmp)
         return commit
 
     # -- warehouse-level branching -----------------------------------------
@@ -204,18 +200,11 @@ class CatalogRef:
                 datetime.timezone.utc
             ).isoformat(),
         }
-        path = os.path.join(child._log_dir, "00000001.json")
-        tmp = path + f".{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            raise CommitConflictError(
-                f"ref {name!r} was created concurrently"
-            ) from None
-        finally:
-            os.unlink(tmp)
+        _link_json(
+            os.path.join(child._log_dir, "00000001.json"),
+            doc,
+            f"ref {name!r} was created concurrently",
+        )
         return child
 
     def fork_point(self) -> dict | None:

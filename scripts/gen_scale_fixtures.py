@@ -30,27 +30,31 @@ NOT oracle-facing and NOT driver-facing: the output feeds
 scripts/q_profile.py / bench.py --queries for the committed 8-vs-32-core
 scaling table only (plans/r14/). The driver's sf dirs are untouched.
 
-Usage: python scripts/gen_scale_fixtures.py [--mult 10] [--out /tmp/lakeflow_sf1]
+Usage: python scripts/gen_scale_fixtures.py --src SF01_DIR [--mult 10]
+[--out /tmp/lakeflow_sf1]. ``--mult`` is at most 27: replica codes run
+``aaa`` .. ``zzz``.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SRC = "/root/testdata/sf0.1"
 KEY_OFF = 10_000_000
 
 
 def main() -> None:
-    mult = 10
-    out = "/tmp/lakeflow_sf1"
-    if "--mult" in sys.argv:
-        mult = int(sys.argv[sys.argv.index("--mult") + 1])
-    if "--out" in sys.argv:
-        out = sys.argv[sys.argv.index("--out") + 1]
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--src", required=True, help="sf0.1 fixture dir to replicate")
+    ap.add_argument("--mult", type=int, default=10)
+    ap.add_argument("--out", default="/tmp/lakeflow_sf1")
+    args = ap.parse_args()
+    if not 1 <= args.mult <= 27:
+        ap.error("--mult must be in 1..27 (replica codes run aaa..zzz)")
+    mult, out = args.mult, args.out
 
     from pyspark.sql import functions as F
 
@@ -66,7 +70,7 @@ def main() -> None:
     os.makedirs(out, exist_ok=True)
 
     def src(t):
-        return spark.read.parquet(f"{SRC}/{t}.parquet")
+        return spark.read.parquet(f"{args.src}/{t}.parquet")
 
     def reps(df):
         """Cross with replica index 0..mult-1 (replica 0 == the original)."""

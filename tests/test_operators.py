@@ -692,6 +692,41 @@ def test_deletion_neighborhood_matches_naive_quadratic(spark):
     assert got == want
 
 
+def test_deletion_neighborhood_null_block_keys_match_naive_join(spark):
+    """Rows with a NULL block key pair with nothing, as in the naive
+    within-block equi-join (NULL = NULL never matches) — including when
+    only one of several block columns is NULL."""
+    from lakeflow.operators.linkage import edit_distance_pairs
+
+    rows = [
+        (0, "Customer#000000001", 1, "x"),
+        (1, "Customer#000000101", 1, "x"),
+        (2, "Customer#000000011", None, "x"),
+        (3, "Customer#000000111", None, "x"),
+        (4, "Customer#000001001", 1, None),
+        (5, "Customer#000001011", 1, None),
+        (6, "Customer#000000002", None, None),
+        (7, "Customer#000000003", None, None),
+    ]
+    df = spark.createDataFrame(rows, "id long, name string, blk int, grp string")
+    got = sorted(
+        tuple(r)
+        for r in edit_distance_pairs(df, "name", "id", ["blk", "grp"], 2).collect()
+    )
+    a = df.selectExpr("id AS id_a", "name AS name_a", "blk", "grp")
+    b = df.selectExpr("id AS id_b", "name AS name_b", "blk", "grp")
+    naive = (
+        a.join(b, ["blk", "grp"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .withColumn("dist", F.levenshtein("name_a", "name_b", 2))
+        .filter(F.col("dist") >= 0)
+        .selectExpr("id_a", "id_b", "CAST(dist AS INT) AS dist")
+    )
+    want = sorted(tuple(r) for r in naive.collect())
+    assert want == [(0, 1, 1)]
+    assert got == want
+
+
 def test_winnow_jvm_matches_udtf(spark):
     """The Catalyst-window winnowing (registered query) must reproduce the
     UDTF form exactly — same fingerprint positions and hashes, including

@@ -3604,3 +3604,31 @@ def test_replace_partitions_tolerates_ghost_index_columns(spark, tmp_path):
     for d in new_dirs:
         assert set(m2["stats"].get(d, {})) == {"v"}   # fresh stats, no ghost
         assert "ghost" not in m2.get("bloom", {}).get(d, {})
+
+
+def test_table_changes_stream_reads_int96_timestamps(spark, tmp_path):
+    """Under Spark's default parquet timestamp encoding (INT96), which
+    pyarrow reads back tz-naive, the table-changes stream still emits the
+    committed instants: its output equals ``t.read()``."""
+    import datetime
+
+    from lakeflow.sources.table_stream import register_table_changes_source
+    from lakeflow.streaming.sinks import run_to_memory
+
+    assert spark.conf.get("spark.sql.parquet.outputTimestampType") == "INT96"
+    register_table_changes_source(spark)
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.commit(
+        spark.createDataFrame(
+            [(1, datetime.datetime(2024, 1, 1, 12, 30, 0, 123456)), (2, None)],
+            "k long, ts timestamp",
+        )
+    )
+    t.commit(spark.sql("SELECT 3L AS k, TIMESTAMP '2024-06-30 23:59:59' AS ts"))
+    stream = (
+        spark.readStream.format("lakeflow_table_changes")
+        .option("path", t.root)
+        .load()
+    )
+    name, _ = run_to_memory(stream)
+    assert sorted(spark.table(name).collect()) == sorted(t.read().collect())
