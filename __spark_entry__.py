@@ -57,10 +57,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for every registered query (239/239 as of r8 —
-    approximate ops emit deterministic tolerance verdicts instead of raw
-    estimates, so even they are hash-checked); a name without an entry
-    would fall back to the driver's rows-only check."""
+    """DuckDB-equivalent SQL for every registered query, in registration
+    order (approximate ops emit deterministic tolerance verdicts instead of
+    raw estimates, so even they are hash-checked)."""
     from lakeflow.queries import ORACLES
 
     return dict(ORACLES)

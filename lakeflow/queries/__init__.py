@@ -12,29 +12,24 @@ Contract reminders (BASELINE.md, FIXTURES.md):
 
 Retirement policy (VERDICT r9 ask #8): the registry only GROWS. A
 registered query is a standing claim in SURVEY.md §2's coverage ledger and
-a row in every downstream artifact (CORRECTNESS history, green-hash
-snapshot, helper ledger, bench full-surface denominator), so deleting one
-silently would shrink the verified surface while the historical verdicts
-kept implying it. If a query ever must go (fixture retired, operator
-superseded), retirement is an explicit, judge-visible event: remove the
-registration AND its snapshot/ledger rows in the same commit, note the
-retirement in COVERAGE.md with the superseding query named, and never
-reuse the name — the CORRECTNESS files are append-only history, and a
-reused name would inherit verdicts it never earned. Renames count as
-retire+register (the hash guard treats them that way automatically).
-Supersession prefers keeping the old query alive as a thin wrapper over
-the new path (the `stream_ann_compacted_topk` auto-compaction rewrite
-pattern: same name, _REWRITTEN_SINCE_GREEN until re-greened) over
+a row in every downstream artifact (CORRECTNESS history, bench
+full-surface denominator), so deleting one silently would shrink the
+verified surface while the historical verdicts kept implying it. If a
+query ever must go (fixture retired, operator superseded), retirement is
+an explicit event: remove the registration, add the name to
+``scripts/retired_queries.json``, note the retirement in COVERAGE.md with
+the superseding query named, and never reuse the name — the CORRECTNESS
+files are append-only history, and a reused name would inherit verdicts
+it never earned. Renames count as retire+register. Supersession prefers
+keeping the old query alive as a thin wrapper over the new path over
 deletion — an oracle that still passes is coverage, not debt.
+
+Registry order is registration order: the module import order in
+``_load_all`` and the decorator order within each module.
 """
 
 from __future__ import annotations
 
-import glob as _glob
-import hashlib as _hashlib
-import json as _json
-import os as _os
-import re as _re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -70,227 +65,4 @@ def _load_all() -> None:
     )
 
 
-# ---------------------------------------------------------------------------
-# Driver-verified query sets, DERIVED from the committed CORRECTNESS_r*.json
-# files at import time (VERDICT r7 ask #7). Hand-maintained literals invited
-# exactly one class of error — forgetting to fold a round in, which would
-# make the next round's ~50 verification slots re-grade already-fresh
-# queries instead of rotating the stalest ones (VERDICT r7 ask #1). Parsing
-# the in-repo result files removes that class: the moment the driver commits
-# CORRECTNESS_r08.json, the r9 import sees it.
-#
-# A row counts as verified when rows+schema+hash all matched, or when it was
-# a by-design rows-only query (``err == "no_oracle"`` with a non-negative
-# row count — a shape that no longer exists since r7, when the last
-# carve-out gained a hash-checked verdict oracle). Other errors leave the
-# query unverified for that round.
-# ---------------------------------------------------------------------------
-
-_REPO_ROOT = _os.path.dirname(_os.path.dirname(_os.path.dirname(
-    _os.path.abspath(__file__)
-)))
-
-
-def _row_verified(row: dict) -> bool:
-    if row.get("err") == "no_oracle":
-        return row.get("spark_rows") is not None and row["spark_rows"] >= 0
-    if row.get("err"):
-        return False
-    return bool(
-        row.get("rows_match")
-        and row.get("schema_match", True)
-        and row.get("hash_match", True)
-    )
-
-
-def _load_verified_rounds() -> dict[int, frozenset[str]]:
-    rounds: dict[int, frozenset[str]] = {}
-    for path in sorted(
-        _glob.glob(_os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json"))
-    ):
-        m = _re.search(r"r(\d+)\.json$", _os.path.basename(path))
-        if not m:
-            continue
-        try:
-            with open(path) as f:
-                rows = _json.load(f)
-        except (OSError, ValueError) as exc:
-            # A half-written file must not break imports mid-round, but a
-            # silently-dropped round would reshuffle the driver-facing
-            # registration order with no visible cause (ADVICE r8) — warn
-            # loudly so the dropped round shows up in pytest/driver logs.
-            import warnings as _warnings
-
-            _warnings.warn(
-                f"CORRECTNESS file {path} exists but failed to parse "
-                f"({exc!r}); its round's verdicts are being SKIPPED and "
-                f"the driver-facing registration order will treat that "
-                f"round's queries as stale",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            continue
-        rounds[int(m.group(1))] = frozenset(
-            name for name, row in rows.items() if _row_verified(row)
-        )
-    return rounds
-
-
-_VERIFIED_ROUNDS: dict[int, frozenset[str]] = _load_verified_rounds()
-
-# Keep the per-round sets addressable as module attributes
-# (``_VERIFIED_R<N>``) — tests and scripts enumerate them by name.
-for _rnd, _names in _VERIFIED_ROUNDS.items():
-    globals()[f"_VERIFIED_R{_rnd}"] = _names
-
-# Queries whose implementation or oracle was rewritten AFTER the round that
-# last verified them — their green row belongs to code that no longer
-# exists, so the reorder treats them as unverified and the source-hash
-# guard (tests/test_registry_order.py + scripts/query_green_hashes.json)
-# fails if a rewrite is not listed here. Every prior member re-greened and
-# was pruned (r7: approx_distinct_users; r9's stream_ann_compacted_topk
-# auto-compaction rewrite earned its r9 verdict through the auto path —
-# CORRECTNESS_r09.json — and was pruned in r10; r10's stream_bm25_index
-# auto-compaction rewrite re-greened in CORRECTNESS_r10.json and was
-# pruned in r11; r11's stream_cms_heavy_hitters size-trigger rewrite and
-# ivf_kmeans_recall_verdict persist rewrite both re-greened in
-# CORRECTNESS_r11.json and were pruned in r12).
-# r12's three rewrites (stream_state_inspection,
-# stream_cms_heavy_hitters, ivf_kmeans_recall_verdict) all re-greened
-# in CORRECTNESS_r12.json and were pruned at r13 start. Any r13
-# callable rewrite of a green query must re-list it here.
-# r13's three callable rewrites (stream_join_state_inspection,
-# hll_partial_merge_verdict, q21_waiting_suppliers) all re-greened in
-# CORRECTNESS_r13.json and were pruned at r14 start.
-# r14 start (VERDICT r13 ask #2): the four r13 OPERATOR rewrites the
-# driver's rotating window did NOT re-verify in r13 are listed here — their
-# green verdicts (r9/r11) belong to pre-rewrite operator internals
-# (densify_interpolate's lead-based densify, exact_substring_dedup's
-# tokenized-corpus persist, sign_bucket's one-parse construction,
-# winnow_fingerprints_jvm's materialization fence; OPTIMIZATION_r13.md),
-# and the helper-ledger cohort tie-break alone would leave the two r11
-# greens outside the ~50-slot window. Listing them makes the staleness
-# explicit and front-loads all four; prune when CORRECTNESS_r14 re-greens
-# them. (They pass the local 242-query DuckDB parity replay and the
-# focused equivalence pins in tests/test_r13_optimizations.py.)
-# r14 optimization round: medallion_gold_dim's callable now runs the
-# pipeline diamond through the bounded 2-worker pool (guide §2.6) and
-# overlaps the two CSV exports — results pinned identical to the
-# sequential run (tests/test_r14_optimizations.py, oracle parity), but
-# its r13 verdict belongs to the sequential form, so it is listed until
-# the driver re-greens it.
-_REWRITTEN_SINCE_GREEN: frozenset[str] = frozenset(
-    {
-        "interpolated_hourly_value",
-        "exact_substring_dedup_docs",
-        "bitext_margin_pairs",
-        "winnow_decontamination",
-        "medallion_gold_dim",
-    }
-)
-
-
-def _helper_change_rounds(ledger: dict | None = None) -> dict[str, int]:
-    """Per-query round at which a helper module the query transitively
-    depends on last CHANGED (VERDICT r9 ask #2 — the helper-granularity
-    blind spot: r9 rewrote deep tables.py helpers under r5-era greens
-    without tripping the callable-source guard).
-
-    The dep map and per-module (hash, round) pins come from
-    ``scripts/helper_ledger.json`` (maintained by
-    ``scripts/update_green_hashes.py``); modules whose LIVE source hash
-    diverges from the pin changed during the current, not-yet-verified
-    round and count as ``max(verified rounds) + 1``. A query absent from
-    the ledger (registered after the last refresh) reports 0 — it has no
-    verdict to stale-date yet. Missing or unparsable ledger degrades to
-    no-helper-signal rather than breaking imports."""
-    if ledger is None:
-        try:
-            with open(
-                _os.path.join(_REPO_ROOT, "scripts", "helper_ledger.json")
-            ) as f:
-                ledger = _json.load(f)
-        except (OSError, ValueError):
-            return {}
-    current = (max(_VERIFIED_ROUNDS) + 1) if _VERIFIED_ROUNDS else 1
-    mod_round: dict[str, int] = {}
-    for rel, info in ledger.get("modules", {}).items():
-        try:
-            with open(_os.path.join(_REPO_ROOT, rel), "rb") as f:
-                live = _hashlib.sha256(f.read()).hexdigest()
-        except OSError:
-            live = None  # module deleted since the pin: changed now
-        mod_round[rel] = (
-            int(info.get("round", 0)) if live == info.get("hash") else current
-        )
-    return {
-        name: max((mod_round.get(f, current) for f in files), default=0)
-        for name, files in ledger.get("deps", {}).items()
-    }
-
-
-def _reorder_for_driver() -> None:
-    """Reorder QUERIES and ORACLES so the driver's ~50 verification slots go
-    where they buy new information, whichever dict the driver iterates:
-
-    1. verified once but rewritten since (their verdict is STALE — it
-       belongs to code that no longer exists, so they must not fall off
-       the ~50-slot window however many new queries a round adds),
-    2. never driver-verified (new registrations — as of r7 every
-       previously-registered query has a verdict, so this block is only
-       ever this round's additions),
-    3. previously verified, oldest LATEST verdict first (r2-era greens
-       re-verify before r3-era ones, and so on) — re-verification
-       pressure goes where the evidence is stalest (VERDICT r7 ask #1:
-       rotate the 57 r2/r3-era greens through the r8 window). Within a
-       same-round cohort, HELPER-STALE greens lead (VERDICT r9 ask #2:
-       a green whose transitive helper modules changed after its verdict
-       round, per scripts/helper_ledger.json). Cohort tie-break rather
-       than absolute priority by design: one tables.py edit reaches
-       ~95% of the registry transitively, and promoting all of those
-       above older fresh greens would flood the ~50-slot window every
-       round and stall the age-based rotation the staleness-debt gate
-       (tests/test_registry_order.py) bounds.
-
-    Within blocks 1-2, cheap batch queries run before streaming/pysource
-    end-to-end queries (micro-batch machinery dominates their wall time),
-    hedging a time-budgeted driver.
-    """
-    latest_green: dict[str, int] = {}
-    for rnd in sorted(_VERIFIED_ROUNDS):
-        for n in _VERIFIED_ROUNDS[rnd]:
-            latest_green[n] = rnd
-
-    def slow_last(names: list[str]) -> list[str]:
-        slow = [n for n in names if n.startswith(("stream_", "pysource_"))]
-        return [n for n in names if n not in slow] + slow
-
-    stale = slow_last([n for n in QUERIES if n in _REWRITTEN_SINCE_GREEN])
-    never = slow_last(
-        [
-            n for n in QUERIES
-            if n not in latest_green and n not in _REWRITTEN_SINCE_GREEN
-        ]
-    )
-    helper_change = _helper_change_rounds()
-    greens = sorted(
-        (
-            n for n in QUERIES
-            if n in latest_green and n not in _REWRITTEN_SINCE_GREEN
-        ),
-        key=lambda n: (
-            latest_green[n],
-            0 if helper_change.get(n, 0) > latest_green[n] else 1,
-        ),
-    )
-    ordered = stale + never + greens
-    reordered = {n: QUERIES[n] for n in ordered}
-    QUERIES.clear()
-    QUERIES.update(reordered)
-    reordered_oracles = {n: ORACLES[n] for n in ordered if n in ORACLES}
-    ORACLES.clear()
-    ORACLES.update(reordered_oracles)
-
-
 _load_all()
-_reorder_for_driver()

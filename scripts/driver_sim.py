@@ -1,9 +1,8 @@
 #!/usr/bin/env python
 """Simulate the external driver's CORRECTNESS pass before it runs.
 
-Replays the first N registry queries (the stale + never-verified front
-window the driver will actually grade) on a VANILLA SparkSession — none of
-lakeflow's session defaults, exactly like the driver — and compares each
+Replays the first N registered queries on a VANILLA SparkSession — none
+of lakeflow's session defaults, exactly like the driver — and compares each
 against its DuckDB oracle at sf0.01 with the driver's order-insensitive
 stringified-row semantics.
 
@@ -46,16 +45,12 @@ def main() -> int:
                 tuple(str(x) for x in r)
                 for r in qs[name](spark, sf_dir).collect()
             )
-            if name in osql:
-                dr = sorted(
-                    tuple(str(x) for x in r)
-                    for r in con.execute(osql[name]).fetchall()
-                )
-                ok = sr == dr
-                status = "MATCH" if ok else f"MISMATCH {len(sr)} vs {len(dr)}"
-            else:
-                ok = len(sr) >= 0
-                status = f"rows-only {len(sr)}"
+            dr = sorted(
+                tuple(str(x) for x in r)
+                for r in con.execute(osql[name]).fetchall()
+            )
+            ok = sr == dr
+            status = "MATCH" if ok else f"MISMATCH {len(sr)} vs {len(dr)}"
             if not ok:
                 bad.append(name)
             print(f"{i:3d} {name}: {status}", flush=True)

@@ -20,8 +20,6 @@ from pyspark.sql import functions as F
 from lakeflow.formats import export_delta, read_delta_log
 from lakeflow.tables import VersionedTable
 
-from .conftest import slow_lane
-
 
 def _rows(df):
     return sorted(tuple(str(x) for x in r) for r in df.collect())
@@ -156,7 +154,6 @@ def test_constraints_export_as_delta_configuration(spark, tmp_path):
     assert metas[-1]["configuration"] == {"delta.constraints.k_nonneg": "k >= 0"}
 
 
-@slow_lane
 def test_delta_log_stream_source_emits_commits_and_resumes(spark, tmp_path):
     """Streaming from the exported _delta_log: an availableNow run emits
     every commit's added files (partition columns recovered); after the

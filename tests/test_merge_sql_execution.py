@@ -28,7 +28,6 @@ import pytest
 from lakeflow.formats import scd1_merge_sql, scd2_expire_sql, scd2_insert_sql
 from lakeflow.operators.merge import scd1_apply, scd2_apply
 
-from .conftest import slow_lane
 
 _MERGE_RE = re.compile(
     r"MERGE INTO (?P<target>\w+) t USING (?P<source>\w+) s ON (?P<on>.+?)"
@@ -198,7 +197,6 @@ def _load_duck(con, table, schema, rows):
 
 @_PROP_SETTINGS
 @given(target_rows=_TARGET, source_rows=_SOURCE)
-@slow_lane
 def test_scd1_merge_translation_matches_twin_on_generated_batches(
     spark, target_rows, source_rows
 ):
@@ -219,7 +217,6 @@ def test_scd1_merge_translation_matches_twin_on_generated_batches(
 
 @_PROP_SETTINGS
 @given(target_rows=_TARGET, source_rows=_SOURCE)
-@slow_lane
 def test_scd2_merge_translation_matches_twin_on_generated_batches(
     spark, target_rows, source_rows
 ):

@@ -26,8 +26,6 @@ from lakeflow.operators.transforms import (
 from lakeflow.plans.runner import Pipeline
 from lakeflow.sources.batch import incremental_read
 
-from .conftest import slow_lane
-
 
 def test_normalize_schema_adds_missing_and_keeps_or_drops_extra(spark):
     df = spark.createDataFrame([("1", "a", "x")], ["k", "v", "extra"])
@@ -486,7 +484,6 @@ def test_zorder_write_tightens_file_envelopes(spark, tmp_path):
     assert cov_z < 0.6  # z-clustered: each file covers a window of each dim
 
 
-@slow_lane
 def test_pysource_stream_replays_exactly(spark, tmp_path):
     """The custom Python stream source must drain deterministically across
     successive runs sharing a checkpoint, and its union of micro-batches must

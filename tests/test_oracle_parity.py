@@ -1,27 +1,12 @@
 """Local mirror of the driver's DuckDB-oracle gate: every registered query
-with an oracle must match row-count + values (order-insensitive, columns
-sorted by name) at sf0.001. Queries without an oracle must at least run and
-return a stable schema.
-
-Two lanes (VERDICT r13 ask #1 — the full 242-query replay grew past the
-driver's verify window; ``VERIFY_r13.json tests_ok: false`` was a pytest
-WALL-TIME expiry with zero failures, not a breakage):
-
-* **fast lane** (default, what ``pytest tests/`` runs): the queries the
-  driver's own ~50-slot rotating verification window will grade this round
-  (the registry's driver-rotation order: rewritten-since-green + never
-  verified + stalest greens first) PLUS the 55 headline bench queries —
-  i.e. everything whose verdict is stale, new, or performance-critical.
-* **full lane** (``LAKEFLOW_FULL_PARITY=1``): all registered queries — the
-  round workflow runs this at least once per round and records it in
-  COVERAGE.md; the skipped names still execute there, so parity coverage
-  is unchanged, only the DRIVER-VISIBLE wall time shrinks.
+has an oracle and must match it on row count and values (order-insensitive,
+columns sorted by name) at sf0.001. One DuckDB connection with the fixture
+views serves the whole module.
 """
 
 from __future__ import annotations
 
 import math
-import os
 
 import duckdb
 import pytest
@@ -31,26 +16,16 @@ from lakeflow.queries import ORACLES, QUERIES
 
 from .conftest import SF_DIR
 
-_FULL = (
-    os.environ.get("LAKEFLOW_FULL_PARITY") == "1"
-    or os.environ.get("LAKEFLOW_FULL_SUITE") == "1"
-)
-_WINDOW = 55  # mirror of the driver's ~50-slot verification window + slack
 
-
-def _fast_lane() -> frozenset[str]:
-    from bench import BENCH_QUERIES
-
-    return frozenset(list(QUERIES)[:_WINDOW]) | frozenset(BENCH_QUERIES)
-
-
-def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
+@pytest.fixture(scope="module")
+def duck():
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(SF_DIR, t)}')"
         )
-    return con
+    yield con
+    con.close()
 
 
 def _norm_cell(v):
@@ -71,23 +46,20 @@ def _norm_rows(cols, rows):
     return sorted(cols), sorted(out, key=repr)
 
 
+def test_every_query_has_an_oracle():
+    """Every registered query carries oracle SQL, and ORACLES iterates in
+    registration order, so queries() and oracle_sql() list the same names
+    in the same order."""
+    assert list(ORACLES) == list(QUERIES)
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(spark, name):
-    if not _FULL and name not in _fast_lane():
-        pytest.skip("slow lane: set LAKEFLOW_FULL_PARITY=1 for the full replay")
+def test_query_matches_oracle(spark, duck, name):
     df = QUERIES[name](spark, SF_DIR)
     spark_cols = df.columns
     spark_rows = [tuple(r) for r in df.collect()]
 
-    if name not in ORACLES:
-        # rows-only contract: runs, stable schema, deterministic row count
-        assert len(spark_cols) > 0
-        df2 = QUERIES[name](spark, SF_DIR)
-        assert len(df2.collect()) == len(spark_rows)
-        return
-
-    con = _duck(SF_DIR)
-    res = con.execute(ORACLES[name])
+    res = duck.execute(ORACLES[name])
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()
 

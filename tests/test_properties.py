@@ -13,20 +13,8 @@ from hypothesis import strategies as st
 from lakeflow.operators.merge import scd1_apply
 from lakeflow.operators.transforms import dedup_latest
 
-from .conftest import FULL_SUITE, slow_lane
-
-# Two-lane example budget (r14 suite-wall-time work, VERDICT ask #1): the
-# fast lane runs each property on 4 generated cases — enough to catch the
-# structural regressions these pins exist for — while LAKEFLOW_FULL_SUITE=1
-# restores the historical 10-example budget (run once per round, recorded
-# in COVERAGE.md).
-def _ex(n: int) -> int:
-    """Per-test example budget: full lane keeps the historical count."""
-    return n if FULL_SUITE else max(2, n // 3)
-
-
 _SETTINGS = dict(
-    max_examples=_ex(10),
+    max_examples=10,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
@@ -246,7 +234,6 @@ def test_symmetric_delete_pairs_match_naive(spark, names):
         max_size=4,
     )
 )
-@slow_lane
 def test_partition_scoped_commits_fold_like_scd1(spark, tmp_path_factory, batches):
     """Folding arbitrary key/value batches through bucket-scoped
     replace-partitions commits must equal folding them through plain SCD1
@@ -383,9 +370,8 @@ def test_boilerplate_strip_identity_when_threshold_never_hit(spark):
     ),
     refresh_points=st.sets(st.integers(0, 5), max_size=3),
 )
-@settings(max_examples=_ex(8), deadline=None,
+@settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@slow_lane
 def test_mv_incremental_equals_rebuild_property(spark, tmp_path_factory, ops, refresh_points):
     """Under ANY interleaving of appends, copy-on-write deletes, and refresh
     timings, the incrementally-maintained view lands bit-identical to a
@@ -486,7 +472,7 @@ ops = st.lists(
 
 
 @given(sequence=ops)
-@settings(max_examples=_ex(6), deadline=None,
+@settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_mor_dml_equivalent_to_copy_on_write(spark, tmp_path_factory, sequence):
     """Merge-on-read DML must be observationally identical to copy-on-write:
@@ -540,7 +526,7 @@ def test_mor_dml_equivalent_to_copy_on_write(spark, tmp_path_factory, sequence):
     span_len=st.integers(1, 4),
     pct=st.sampled_from([0, 30, 60, 100]),
 )
-@settings(max_examples=_ex(12), deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_span_corruption_reconstruction_invariant(
     spark, texts, window, span_len, pct
 ):
@@ -603,7 +589,7 @@ _mv_ops = st.one_of(
 
 
 @given(sequence=st.lists(_mv_ops, min_size=1, max_size=5))
-@settings(max_examples=_ex(6), deadline=None,
+@settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_incremental_mv_tracks_arbitrary_mor_dml(
     spark, tmp_path_factory, sequence
@@ -663,7 +649,7 @@ def test_incremental_mv_tracks_arbitrary_mor_dml(
 
 
 @given(sequence=st.lists(_mv_ops, min_size=1, max_size=4))
-@settings(max_examples=_ex(5), deadline=None,
+@settings(max_examples=5, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_dirty_group_mv_tracks_arbitrary_mor_dml(
     spark, tmp_path_factory, sequence
@@ -743,7 +729,7 @@ def test_dirty_group_mv_tracks_arbitrary_mor_dml(
         max_size=8,
     ),
 )
-@settings(max_examples=_ex(8), deadline=None,
+@settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_rename_amid_dml_matches_model(spark, tmp_path_factory, ops):
     """Metadata-only RENAME interleaved with appends, copy-on-write and
@@ -813,7 +799,7 @@ def test_rename_amid_dml_matches_model(spark, tmp_path_factory, ops):
         max_size=6,
     ),
 )
-@settings(max_examples=_ex(8), deadline=None,
+@settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_delta_export_round_trips_arbitrary_histories(
     spark, tmp_path_factory, ops
@@ -910,7 +896,7 @@ _hp_rows = st.lists(
     span=st.integers(0, 60),
     del_key=st.integers(0, 40),
 )
-@settings(max_examples=_ex(6), deadline=None,
+@settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_scan_transformed_matches_plain_filter(
     spark, tmp_path_factory, rows, point, lo, span, del_key
@@ -979,7 +965,7 @@ _jv_ops = st.one_of(
 
 
 @given(sequence=st.lists(_jv_ops, min_size=2, max_size=5))
-@settings(max_examples=_ex(5), deadline=None,
+@settings(max_examples=5, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_join_view_tracks_arbitrary_two_sided_dml(
     spark, tmp_path_factory, sequence
@@ -1027,7 +1013,7 @@ def test_join_view_tracks_arbitrary_two_sided_dml(
 
 
 @given(sequence=st.lists(_jv_ops, min_size=2, max_size=5))
-@settings(max_examples=_ex(5), deadline=None,
+@settings(max_examples=5, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_left_join_view_tracks_arbitrary_two_sided_dml(
     spark, tmp_path_factory, sequence
@@ -1081,7 +1067,6 @@ _thresh = st.sampled_from([0.2, 0.3, 0.5, 0.7])
 
 @given(corpus=_corpus, t=_thresh)
 @settings(**_SETTINGS)
-@slow_lane
 def test_prefix_filtering_loses_no_pairs(spark, corpus, t):
     """All-Pairs prefix filtering is complete: verified pairs from the
     prefix-filtered candidate set equal the exhaustive-join ground truth at
@@ -1125,7 +1110,7 @@ def test_prefix_filtering_loses_no_pairs(spark, corpus, t):
     cuts=st.lists(st.integers(0, 29), min_size=0, max_size=3),
     keep_last=st.integers(0, 2),
 )
-@settings(max_examples=_ex(6), deadline=None,
+@settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_shard_fold_preserves_kmv_probe(
     spark, tmp_path_factory, items, cuts, keep_last
@@ -1265,7 +1250,6 @@ asof_right_rows = st.lists(
     how=st.sampled_from(["left", "inner"]),
 )
 @settings(**_SETTINGS)
-@slow_lane
 def test_asof_time_bucket_salt_is_output_invariant(
     spark, lrows, rrows, direction, tol, how
 ):

@@ -14,12 +14,10 @@ import os
 import subprocess
 import sys
 
-from .conftest import slow_lane
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-@slow_lane
 def test_sweep_leg_runs_and_reports_clean():
     proc = subprocess.run(
         [

@@ -7,8 +7,6 @@ import pytest
 from lakeflow.sqlx import LakehouseSQL
 from lakeflow.tables import TableCatalog
 
-from .conftest import slow_lane
-
 
 @pytest.fixture()
 def lh(spark, tmp_path):
@@ -393,7 +391,6 @@ def test_branch_sql_routes(lh):
         lh.execute("SELECT count(*) AS n FROM t FOR VERSION AS OF 'stage'")
 
 
-@slow_lane
 def test_incremental_join_view_statements(lh):
     """CREATE INCREMENTAL JOIN VIEW materializes l JOIN r as a Z-set and
     REFRESH INCREMENTAL VIEW folds DML on either base through the
@@ -439,7 +436,6 @@ def test_seal_and_verify_statements(lh):
     assert len(rep) == 1 and all(row.ok for row in rep)
 
 
-@slow_lane
 def test_incremental_left_join_view_statement(lh):
     """CREATE INCREMENTAL LEFT JOIN VIEW: unmatched left keys appear
     null-extended and a right-side DELETE re-emits a null extension on
@@ -529,7 +525,6 @@ def test_sql_transaction_guards(lh):
     assert lh.execute("ROLLBACK TABLE t TO VERSION 1")["new_version"] == 3
 
 
-@slow_lane
 def test_purge_subjects_statement(lh):
     lh.execute("CREATE VERSIONED TABLE users AS SELECT id, id * 10 AS v FROM range(5)")
     lh.execute(

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .conftest import slow_lane
-
 
 def _run_counts(spark, feed, ckpt, name):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -74,7 +72,6 @@ def test_aggregation_state_matches_batch_truth_and_time_travels(
     assert at0 == {("a", 2), ("b", 1)}
 
 
-@slow_lane
 def test_join_state_store_selection(spark, tmp_path):
     """A watermarked stream-stream join keeps FOUR stores per side-pair;
     store_name selects each (the 'which side is holding the stuck rows'

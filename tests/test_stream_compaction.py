@@ -25,7 +25,7 @@ from lakeflow.streaming.compaction import (
     compact_weighted_sample,
 )
 
-from .conftest import SF_DIR, slow_lane
+from .conftest import SF_DIR
 
 
 def _rows(df):
@@ -67,7 +67,6 @@ def _land_ann_batches(spark, cells_dir: str, n_batches: int = 4):
     return raw, cents
 
 
-@slow_lane
 def test_compact_ann_cells_probe_identical(spark, tmp_path):
     from lakeflow.operators.similarity import ivf_probe_cells
 
@@ -326,7 +325,6 @@ def _make_feed(spark, tmp_path, frames, schema):
     return feed
 
 
-@slow_lane
 def test_auto_compaction_ann_bounds_shards_probe_identical(spark, tmp_path):
     """VERDICT r8 ask #3: compact_every_n_batches folds from INSIDE
     foreachBatch — a 4-batch ingest with every_n=2 ends at exactly 2

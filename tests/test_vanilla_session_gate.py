@@ -2,12 +2,11 @@
 lakeflow's session defaults (nanosAsLong, AQE tuning, shuffle partitions).
 A query that silently depends on a lakeflow default passes every in-process
 test here and then fails the driver. This gate subprocess-runs the real
-driver simulator over the front of the registration window (the queries the
-driver grades first), so the dependency class is caught in CI, not in the
-round verdict.
+driver simulator over the first N registered queries, so the dependency
+class is caught in CI, not in the round verdict.
 
-Kept small (front 6) to bound suite time; `python scripts/driver_sim.py 52`
-is the full pre-round sweep (output committed to COVERAGE.md).
+Kept small (first 6 registered queries) to bound suite time;
+`python scripts/driver_sim.py 242` sweeps the whole registry.
 """
 
 from __future__ import annotations

@@ -9,8 +9,6 @@ import pytest
 from lakeflow.tables import VersionedTable
 from lakeflow.views import IncrementalAggView
 
-from .conftest import slow_lane
-
 
 def _mk(spark, tmp_path, rows, name="base"):
     t = VersionedTable(spark, str(tmp_path / name))
@@ -545,7 +543,6 @@ def test_join_view_rejects_colliding_payload_columns(spark, tmp_path):
         view.refresh()
 
 
-@slow_lane
 def test_dirty_group_count_distinct_tracks_dml(spark, tmp_path):
     """Exact COUNT(DISTINCT) in the recompute tier: appends that add a new
     value vs a duplicate value, and a delete that removes the LAST copy of
@@ -620,7 +617,6 @@ def _full_left_join_state(l, r):
     return out
 
 
-@slow_lane
 def test_left_join_view_matched_status_flips(spark, tmp_path):
     """The hard outer-join cases: a right insert must retract a previously
     null-extended row; deleting a key's LAST right row must re-emit one."""
@@ -656,7 +652,6 @@ def test_left_join_view_matched_status_flips(spark, tmp_path):
     assert (1, "x", None) in st
 
 
-@slow_lane
 def test_left_join_view_left_side_dml(spark, tmp_path):
     l, r = _mk_join_bases(spark, tmp_path)
     v = _ljview(spark, l, r, tmp_path)
@@ -669,7 +664,6 @@ def test_left_join_view_left_side_dml(spark, tmp_path):
     assert (3, "z", None) not in st and (4, "w", None) in st
 
 
-@slow_lane
 def test_left_join_view_incremental_equals_rebuild(spark, tmp_path):
     l, r = _mk_join_bases(spark, tmp_path)
     v = _ljview(spark, l, r, tmp_path, "lj_inc")
