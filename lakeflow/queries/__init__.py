@@ -1,7 +1,7 @@
 """Driver-facing query registry.
 
-Each registered query is a ``(spark, sf_dir) -> DataFrame`` callable plus (when
-SQL-expressible) a DuckDB oracle SQL string over the same fixture tables.
+Each registered query is a ``(spark, sf_dir) -> DataFrame`` callable plus a
+DuckDB oracle SQL string over the same fixture tables.
 ``__spark_entry__.py`` re-exports these as ``queries()`` / ``oracle_sql()``.
 
 Contract reminders (BASELINE.md, FIXTURES.md):
@@ -40,15 +40,14 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
-def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: add a query (and optional DuckDB oracle SQL) to the registry."""
+def register(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
+    """Decorator: add a query and its DuckDB oracle SQL to the registry."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
+        ORACLES[name] = oracle
         return fn
 
     return deco
