@@ -1,12 +1,23 @@
 #!/usr/bin/env python
-"""Benchmark headline lakeflow queries.
+"""Per-query sweep of the lakeflow query registry.
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}
+local[$SPARK_GRAFT_CPUS] (default: every core, ``os.cpu_count()``). Each
+query executes to a noop sink (full compute, no driver collect), so a time
+reflects the distributed plan, not result transfer.
 
-Each query executes to a noop sink (full compute, no driver collect) so the
-timing reflects the distributed plan, not result transfer.
+The headline set runs three times: a cold pass, then two warm passes, each
+after a cache clear. A headline query's comparator is ``min``, the lower of
+its two warm times. Every other registered query then runs once, in sorted
+order. A run writes one JSON record to ``bench_out/``: per-query times,
+``failed``, the totals and provenance (HEAD, dirty flag, CPU count, master,
+sf). Stdout gets one compact line with the totals. The exit status is 1 if
+any query failed.
+
+Usage: python bench.py [--queries a,b,...]
+
+``--queries`` replaces the headline set with the named queries and skips the
+tail: the way to time a few queries in isolation.
 """
 
 from __future__ import annotations
@@ -16,6 +27,9 @@ import os
 import re
 import sys
 import time
+
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+_OUT_DIR = os.path.join(_ROOT, "bench_out")
 
 BENCH_QUERIES = [
     # relational core
@@ -91,460 +105,214 @@ BENCH_QUERIES = [
 ]
 
 
-def _calibrate(spark, cpus: int) -> dict[str, float]:
-    """Fixed CPU-bound hardware probe: five runs of a modded xxhash64
-    sum over 200M synthetic longs (no IO, no Python, one partial agg; the
-    mod keeps ANSI mode from overflowing the long sum). Emitted in the
-    stdout record so cross-round drift is attributable by MEASUREMENT: a
-    uniform per-query drift that tracks the calib ratio is the environment
-    (r10 observed a 1.16× uniform shift when the round continued on a
-    different sandbox); drift that the calib ratio does not explain is
-    plan cost.
+def _tail() -> list[str]:
+    """Every registered query outside the headline set, in sorted order."""
+    from lakeflow.queries import QUERIES
 
-    Three fields (VERDICT r11 ask #4 — the probe swung 0.214↔0.170 on one
-    HEAD while the warm pass held ±0.5%, so a single number can't be read
-    mechanically): ``calib`` = min of 5 (raw CPU speed, comparable with
-    every prior round's min-of-3), ``calib_med`` = median of 5 (the
-    scheduler-loaded reading), ``calib_disp`` (from r14) =
-    (second-max−min)/median — the probe's own jitter that round, robust
-    to ONE outlier run. BASELINE.md states the decision rule: trust the
-    raw pass-2 pair; consult calib only for ≥1.1× uniform drifts, and
-    only when calib_disp is small enough to make the ratio meaningful.
-
-    r13 post-gate fix, two parts (measured on an idle box, sequential
-    probe times 5.90, 0.75, 0.65, 0.53, 0.52, 0.37, 0.38, … — the C2/JIT
-    ramp spans ~5 executions, not 1): (a) the single untimed warm-up the
-    r12 version ran left the 5 timed runs riding the tail of that ramp,
-    so disp read 0.38–0.67 on an IDLE box and the <0.3 rule threshold
-    misclassified every idle run as loaded — warm up until a run stops
-    improving the running best by >15% (cap 8) so the timed runs measure
-    steady state; (b) max−min dispersion condemns the whole run for one
-    GC/compaction pause — use second-max−min, which still catches
-    sustained contention (a loaded scheduler inflates several of the 5
-    runs, not one). Idle re-measure under the new scheme: disp ≈ 0.20."""
-
-    def probe() -> float:
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, cpus).selectExpr(
-            "sum(xxhash64(id) % 1000000) AS s"
-        ).collect()
-        return time.perf_counter() - t0
-
-    # Converging warm-up: keep running while each run still improves the
-    # best-so-far by >15% (JIT tiering), cap 8. The cap bounds cost on a
-    # box so loaded the probe never converges — the timed runs then read
-    # that load, which is exactly what they are for.
-    best = probe()
-    for _ in range(7):
-        t = probe()
-        if t > best * 0.85:
-            break
-        best = min(best, t)
-    runs = sorted(probe() for _ in range(5))
-    med = runs[2]
-    return {
-        "calib": round(runs[0], 3),
-        "calib_med": round(med, 3),
-        "calib_disp": round((runs[-2] - runs[0]) / med, 3) if med else None,
-    }
+    return sorted(n for n in QUERIES if n not in BENCH_QUERIES)
 
 
-def _next_round() -> int:
-    """Round number = 1 + the newest committed BENCH_r*.json — the same
-    numbering the driver will stamp on this round's record. Reruns within
-    a round overwrite (last run wins, matching the BENCH record the driver
-    keeps)."""
-    import glob
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(root, "BENCH_r*.json"))
-        if (m := re.search(r"r(\d+)\.json$", p))
-    ]
-    return (max(rounds) + 1) if rounds else 1
-
-
-def _provenance(root: str | None = None) -> dict:
-    """Measuring-commit stamp for bench artifacts (VERDICT r12 ask #2:
-    r12's committed artifacts predated final HEAD by two product-code
-    commits and a judge could not confirm the neutrality claim from
-    committed files). ``head_sha`` is the commit the bench ran at;
-    ``tree_dirty`` flags uncommitted changes in tracked files at measure
-    time. The round workflow re-runs the bench at final HEAD, so a
-    committed artifact whose head_sha is not the round's final commit
-    must carry ``note`` (set SPARK_GRAFT_BENCH_NOTE) naming the modules
-    changed since and why they are plan-neutral. ``root`` overrides the
-    repo dir for tests only."""
+def _provenance() -> dict:
+    """The commit the sweep measures: ``head_sha``, and ``tree_dirty`` if
+    tracked files differ from it. Either is None when git cannot tell."""
     import subprocess
 
-    root = root or os.path.dirname(os.path.abspath(__file__))
-    try:
-        rp = subprocess.run(
-            ["git", "rev-parse", "HEAD"], cwd=root, capture_output=True,
-            text=True, timeout=10,
-        )
-        # The bench's own artifact files are OUTPUTS of this run, not
-        # inputs to the measurement: a re-run within a round rewrites the
-        # (by then tracked) pass-2 artifact before the full-sweep stamp is
-        # computed, which made every intra-round re-run stamp
-        # tree_dirty=true even when no source changed. Exclude them; any
-        # OTHER tracked modification still flips the flag.
-        st = subprocess.run(
-            [
-                "git", "status", "--porcelain", "--untracked-files=no",
-                "--", ".",
-                ":(exclude)bench_pass2_r*.json",
-                ":(exclude)bench_full_r*.json",
-            ],
-            cwd=root, capture_output=True, text=True, timeout=10,
-        )
-        sha = rp.stdout.strip() if rp.returncode == 0 else None
-        # A failed status must stamp None ("undetermined" — the contract
-        # test demands a note for it), never a false clean claim.
-        dirty = bool(st.stdout.strip()) if st.returncode == 0 else None
-    except Exception:
-        sha, dirty = None, None
-    out = {"head_sha": sha or None, "tree_dirty": dirty}
-    note = os.environ.get("SPARK_GRAFT_BENCH_NOTE")
-    if note:
-        out["note"] = note
-    return out
+    def git(*args: str) -> str | None:
+        try:
+            p = subprocess.run(
+                ["git", *args], cwd=_ROOT, capture_output=True, text=True,
+                timeout=10,
+            )
+        except (OSError, subprocess.SubprocessError):
+            return None
+        return p.stdout.strip() if p.returncode == 0 else None
 
-
-def _write_pass2_artifact(
-    sf: float | None,
-    calib: dict[str, float],
-    pass1: dict[str, float],
-    pass2: dict[str, float],
-    total: float,
-    total2: float,
-    pass2b: dict[str, float] | None = None,
-) -> None:
-    """Commit-able warm-pass record (VERDICT r10 ask #2): the 1900-byte
-    stdout guard keeps per-query pass-2 detail off the driver-captured
-    line, so it rides a repo-root file instead.
-    ``pass2_per_calib`` is the environment-normalized reading (VERDICT r10
-    ask #7): BASELINE.md defines the expected cross-round band on it.
-    ``queries_pass2_min``/``value_pass2_min`` (r13 post-gate): per-query
-    min over the two independent warm passes — the low-variance
-    round-over-round comparator (see the pass-2b comment in main)."""
-    rnd = _next_round()
-    root = os.path.dirname(os.path.abspath(__file__))
-    path = os.path.join(root, f"bench_pass2_r{rnd:02d}.json")
-    rec = {
-        "round": rnd,
-        "sf": sf,
-        **_provenance(),
-        **calib,
-        "value": total,
-        "value_pass2": total2,
-        "pass2_per_calib": (
-            round(total2 / calib["calib"], 2)
-            if calib["calib"]
-            else None
-        ),
-        "queries_pass1": pass1,
-        "queries_pass2": pass2,
+    sha = git("rev-parse", "HEAD")
+    status = git("status", "--porcelain", "--untracked-files=no")
+    return {
+        "head_sha": sha or None,
+        "tree_dirty": None if status is None else bool(status),
     }
-    if pass2b is not None:
-        p2min = {
-            q: min(pass2[q], pass2b[q]) for q in pass2 if q in pass2b
-        }
-        rec["queries_pass2b"] = pass2b
-        rec["value_pass2b"] = round(sum(pass2b.values()), 3)
-        rec["queries_pass2_min"] = p2min
-        rec["value_pass2_min"] = round(sum(p2min.values()), 3)
-    with open(path, "w") as f:
-        json.dump(rec, f, indent=1, sort_keys=True)
-    print(f"  pass2 artifact -> {path}", file=sys.stderr)
 
 
-def _write_full_artifact(
-    sf: float | None,
-    calib: dict[str, float],
-    headline: dict[str, float],
-    tail: dict[str, float],
-    failed: list[str],
-) -> None:
-    """Commit-able FULL-SWEEP record (VERDICT r11 ask #2): the per-query
-    cost of every registered query, so a cross-round full_total delta is
-    attributable from committed files instead of a stale stderr log.
-    ``queries`` merges the headline pass-1 times with the tail sweep —
-    together they cover the whole registry; ``failed`` names any query
-    that errored mid-sweep (the committed round record must have none)."""
-    rnd = _next_round()
-    root = os.path.dirname(os.path.abspath(__file__))
-    path = os.path.join(root, f"bench_full_r{rnd:02d}.json")
-    queries = {**headline, **tail}
-    with open(path, "w") as f:
-        json.dump(
-            {
-                "round": rnd,
-                "sf": sf,
-                **_provenance(),
-                **calib,
-                "full_total": round(sum(queries.values()), 3),
-                "full_n": len(queries),
-                "failed": sorted(failed),
-                "queries": queries,
-            },
-            f,
-            indent=1,
-            sort_keys=True,
-        )
-    print(f"  full-sweep artifact -> {path}", file=sys.stderr)
+def _read_ticks(spark) -> None:
+    """Touch the Python DataSource worker pool. First touch costs ~3 s, and
+    idle workers are reaped between passes (measured 0.81 s cold vs 4.08 s
+    in a later pass on byte-identical pysource_tick_candles)."""
+    try:
+        spark.read.format("lakeflow_ticks").option("n", "64").load().count()
+    except Exception as exc:
+        print(f"  PYSOURCE-WARMUP FAILED: {exc!r}"[:300], file=sys.stderr)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # --queries a,b,c: restrict the headline set (contract test hook).
-    only: list[str] | None = None
-    if "--queries" in sys.argv:
-        only = sys.argv[sys.argv.index("--queries") + 1].split(",")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
-
-    from lakeflow.queries import QUERIES
-    from lakeflow.scratch import use_process_scratch
-    from lakeflow.session import get_session
-
-    # Every sweep's ephemeral checkpoints/scratch tables land in one
-    # pid-keyed root removed at exit (lakeflow/scratch.py) instead of
-    # accumulating hundreds of /tmp dirs per run.
-    use_process_scratch()
-    spark = get_session(
-        "lakeflow-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm the JVM/session (codegen, parquet reader, Python workers) so the
-    # first timed query doesn't pay one-time startup cost.
-    spark.range(1000).selectExpr("sum(id)").collect()
+def _warm_up(spark, sf_dir: str) -> None:
+    """Pay the one-time costs (codegen, parquet reader, streaming engine,
+    Python workers) before the first timed query."""
     from lakeflow.catalog import load_table
+    from lakeflow.queries import QUERIES
 
+    spark.range(1000).selectExpr("sum(id)").collect()
     for t in ("lineitem", "events", "documents"):
         try:
             load_table(spark, sf_dir, t).groupBy().count().collect()
         except Exception:
             pass
     try:
-        # JIT the streaming engine (micro-batch planner, state store, sink)
-        # on the tiny fixture so the timed streaming query measures the query,
-        # not first-stream machinery warmup.
+        # Micro-batch planner, state store and sink, on the tiny fixture.
         QUERIES["stream_candles_15m"](spark, "/root/testdata/sf0.001").count()
     except Exception as exc:
-        # A failed warmup silently cascades into every timed query (the r3
-        # 1.3-2.4× drift) — make it loud, but keep benching.
+        # A failed warm-up silently inflates every timed query: make it loud.
         print(f"  STREAM-WARMUP FAILED: {exc!r}"[:300], file=sys.stderr)
     try:
-        # Python DataSource machinery (planner, python runner) costs ~3s on
-        # first touch; warm it so pysource_tick_candles times the query.
         from lakeflow.sources.pysource import register_tick_source
 
         register_tick_source(spark)
-        spark.read.format("lakeflow_ticks").option("n", "64").load().count()
     except Exception as exc:
-        print(f"  PYSOURCE-WARMUP FAILED: {exc!r}"[:300], file=sys.stderr)
+        print(f"  PYSOURCE-REGISTER FAILED: {exc!r}"[:300], file=sys.stderr)
+    _read_ticks(spark)
 
-    # The full-sweep artifact's failure record covers the runs whose
-    # timings it carries (pass 1 ∪ tail) — pass-2 failures are a warm-pass
-    # signal, not missing sweep coverage, so they get their own sink
-    # (stderr + the pass-2 artifact consumers see the missing key) rather
-    # than conflating into `failed` and tripping the artifact contract.
+
+def _run_set(
+    spark,
+    sf_dir: str,
+    names: list[str],
+    failed: list[str],
+    drain_every: int | None = None,
+) -> dict[str, float]:
+    """Time each query to the noop sink; a failing query is appended to
+    ``failed`` and the run goes on.
+
+    No cache clear between individual queries: related queries (the
+    minhash/LSH family, the embedding suite) reuse each other's persisted
+    intermediates, as they do in a warm system."""
+    from lakeflow.queries import QUERIES
+
+    timings: dict[str, float] = {}
+    for i, name in enumerate(names):
+        t0 = time.perf_counter()
+        try:
+            QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        except Exception as exc:
+            print(f"  {name}: FAILED {exc!r}"[:300], file=sys.stderr)
+            if name not in failed:
+                failed.append(name)
+            continue
+        timings[name] = round(time.perf_counter() - t0, 3)
+        print(f"  {name}: {timings[name]:.3f}s", file=sys.stderr)
+        if drain_every and (i + 1) % drain_every == 0:
+            # Periodic cache drain, tail only. Adjacent queries of a family
+            # still reuse each other's persisted intermediates, but leaked
+            # persists cannot pile up across the whole tail: undrained, the
+            # 8g heap crossed a GC-pressure cliff late in the sweep
+            # (winsorized_price_stats 11.9 s in-sweep vs 1.4 s isolated).
+            spark.catalog.clearCache()
+    return timings
+
+
+def _sweep(spark, sf_dir: str, headline: list[str], tail: list[str]) -> dict:
+    """Cold pass, two warm passes over ``headline``, then one pass over
+    ``tail``; returns the record's ``queries``, ``failed`` and ``totals``."""
     failed: list[str] = []
+    cold = _run_set(spark, sf_dir, headline, failed)
+    warm = []
+    for label in ("warm", "warm_b"):
+        # Clear first: two undrained passes stack the persisted
+        # intermediates of both and cross the GC-pressure cliff, so each
+        # warm pass rebuilds its own caches as the cold pass did and
+        # differs from it only by first-touch costs.
+        spark.catalog.clearCache()
+        _read_ticks(spark)
+        print(f"  -- headline {label} pass --", file=sys.stderr)
+        warm.append(_run_set(spark, sf_dir, headline, failed))
+    if tail:
+        print(f"  -- tail ({len(tail)} queries) --", file=sys.stderr)
+    rest = _run_set(spark, sf_dir, tail, failed, drain_every=25)
 
-    def run_set(
-        names: list[str],
-        drain_every: int | None = None,
-        fail_sink: list[str] | None = None,
-    ) -> dict[str, float]:
-        sink = failed if fail_sink is None else fail_sink
-        timings: dict[str, float] = {}
-        for i, name in enumerate(names):
-            fn = QUERIES[name]
-            t0 = time.perf_counter()
-            try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-            except Exception as exc:  # one broken query must not sink the run
-                print(f"  {name}: FAILED {exc!r}"[:300], file=sys.stderr)
-                if name not in sink:
-                    sink.append(name)
-                continue
-            timings[name] = round(time.perf_counter() - t0, 3)
-            print(f"  {name}: {timings[name]:.3f}s", file=sys.stderr)
-            if drain_every and (i + 1) % drain_every == 0:
-                # Periodic (not per-query) cache drain — TAIL SWEEP ONLY:
-                # adjacent queries in a family still reuse each other's
-                # persisted intermediates, but leaked persists (iterative
-                # components keep their final labels frame alive by design)
-                # can't accumulate across the whole 230-query sweep.
-                # Without this the 8g heap crossed a GC-pressure cliff as
-                # the registry grew: the identical query set measured 314s
-                # with 223 queries and 527s with 232 — per-query times
-                # 2-15x worse late in the sweep while the same queries ran
-                # at their usual times in isolation. The headline set (56
-                # queries, below the cliff) runs undrained so its value
-                # stays comparable round-over-round.
-                spark.catalog.clearCache()
-        return timings
-        # NOTE: deliberately no clearCache() between INDIVIDUAL queries.
-        # Spark keys the cache on the analyzed plan, so related queries
-        # (the minhash/LSH family, the embedding suite) legitimately reuse
-        # each other's persisted intermediates — the warm-system behavior
-        # every prior round's numbers were measured under (clearing cost
-        # +22% per-query on the
-        # common set). Heap survivability comes from the 8g local driver
-        # default in lakeflow.session, with MEMORY_AND_DISK eviction
-        # handling cache pressure across the 160+-query sweep.
+    queries: dict[str, dict[str, float]] = {}
+    for name in headline:
+        q = {
+            k: t[name]
+            for k, t in zip(("cold", "warm", "warm_b"), (cold, *warm))
+            if name in t
+        }
+        # The two warm passes spike one-sidedly on GC timing (same-code
+        # spreads up to x4 on a few queries); their min is the comparator.
+        warm_ts = [q[k] for k in ("warm", "warm_b") if k in q]
+        if warm_ts:
+            q["min"] = min(warm_ts)
+        if q:
+            queries[name] = q
+    queries.update({name: {"cold": t} for name, t in rest.items()})
 
-    calib = _calibrate(spark, int(cpus))
-    print(
-        f"  calib: {calib['calib']:.3f}s (med {calib['calib_med']:.3f}, "
-        f"disp {calib['calib_disp']:.3f})",
-        file=sys.stderr,
-    )
+    def total(ts) -> float:
+        return round(sum(ts), 3)
 
-    headline = only if only is not None else BENCH_QUERIES
-    timings = run_set(headline)
-    total = round(sum(timings.values()), 3)
-    # Second pass over the IDENTICAL headline set in the same session
-    # (VERDICT r7 ask #2): r6 and r7 both showed uniform drift on
-    # byte-identical queries, consistent with environment/first-touch
-    # variance rather than plan cost. The warm pass isolates that —
-    # pass-2 times carry no codegen/classload/first-scan noise, so a
-    # pass-2 regression is a REAL plan regression, while pass-1-only
-    # drift is environmental. The cache clears FIRST: without it the two
-    # undrained passes stack ~112 queries' persisted intermediates and
-    # the heap nondeterministically crosses the GC-pressure cliff the
-    # tail sweep drains against (observed: the same build measured
-    # pass-2 64 s and 143 s back-to-back, uniformly +2-6 s per query in
-    # the slow run) — so pass 2 rebuilds its own caches exactly like
-    # pass 1 did and differs from it only by the first-touch costs.
-    spark.catalog.clearCache()
-    try:
-        # Re-warm the Python-DataSource worker pool: pass 1 ran seconds
-        # after the pysource warmup, pass 2 runs minutes later when idle
-        # Python workers have been reaped — without this the respawn cost
-        # (~2-3 s over 32 workers, measured: 0.81 s pass-1 vs 4.08 s
-        # pass-2 on byte-identical pysource_tick_candles) shows up as a
-        # phantom warm-pass regression on exactly the query the warm pass
-        # exists to de-noise.
-        spark.read.format("lakeflow_ticks").option("n", "64").load().count()
-    except Exception:
-        pass
-    print("  -- headline pass 2 (warm code, fresh cache) --", file=sys.stderr)
-    pass2_failed: list[str] = []
-    timings2 = run_set(headline, fail_sink=pass2_failed)
-    # Pass-2 PER-QUERY detail goes to STDERR, like the full-surface tail:
-    # r8 proved that carrying a second 56-entry dict on stdout pushes the
-    # line past the driver's ~2000-char capture window and the ENTIRE
-    # record fails to parse (BENCH_r08.json parsed=null — the same failure
-    # VERDICT r5 ask #5 fixed for the full-surface keys). Stdout keeps the
-    # pass-2 HEADLINE (value_pass2, the round-over-round signal) only —
-    # the per-query dict ALSO lands in a committed file artifact
-    # (bench_pass2_r{N}.json, VERDICT r10 ask #2) so round-over-round
-    # regressions are attributable from warm-pass numbers instead of the
-    # environment-dominated pass-1 stderr lines.
-    print("PASS2 " + json.dumps(timings2), file=sys.stderr)
-    total2 = round(sum(timings2.values()), 3)
-    # Second independent warm pass (r13 post-gate). Three same-code full
-    # runs measured per-query pass-2 spreads up to x4 on a handful of
-    # queries (embedding_near_dups 1.98/2.84/8.05 s; candles_15m x2.8;
-    # q3 x2.4) — GC-timing nondeterminism against the undrained-cache
-    # protocol, one-sided (spikes, never savings). A single sample per
-    # query cannot separate that from a plan regression, which is why the
-    # decision rule needed a x1.8 per-query floor. Running the identical
-    # pass twice and taking the per-query MIN cuts the one-sided noise:
-    # min-of-2 is the robust comparator (value_pass2_min), while
-    # value_pass2 keeps its historical first-warm-pass meaning. Cost:
-    # ~+1 min per full bench at sf0.1.
-    spark.catalog.clearCache()
-    try:
-        spark.read.format("lakeflow_ticks").option("n", "64").load().count()
-    except Exception:
-        pass
-    print("  -- headline pass 2b (repeat warm pass) --", file=sys.stderr)
-    pass2b_failed: list[str] = []
-    timings2b = run_set(headline, fail_sink=pass2b_failed)
-    print("PASS2B " + json.dumps(timings2b), file=sys.stderr)
-    record = {
-        "metric": "lakeflow headline queries, end-to-end (noop sink)",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "value_pass2": total2,
-        "sf": sf,
-        # Stdout carries the two fields BASELINE.md's decision rule reads
-        # (calib = min, calib_disp = probe jitter); calib_med rides the
-        # committed artifacts only — the full triple plus per-query detail
-        # would overflow the driver's ~2000-byte capture window.
-        "calib": calib["calib"],
-        "calib_disp": calib["calib_disp"],
+    return {
+        "queries": queries,
+        "failed": sorted(failed),
+        "totals": {
+            "cold": total(cold.values()),
+            "warm": total(warm[0].values()),
+            "warm_b": total(warm[1].values()),
+            "min": total(q["min"] for q in queries.values() if "min" in q),
+            "full": total([*cold.values(), *rest.values()]),
+            "n": len(cold) + len(rest),
+            "failed": len(failed),
+        },
     }
-    # Artifacts are the committed round-over-round record, so only runs at
-    # the driver's canonical scale (sf0.1, the BASELINE.md basis) may write
-    # them — a stray sf0.001 smoke run must not overwrite bench_pass2_r{N}
-    # with numbers the decision rule can't compare.
-    canonical = only is None and sf == 0.1
-    if canonical:
-        _write_pass2_artifact(
-            sf, calib, timings, timings2, total, total2, pass2b=timings2b
-        )
 
-    # Full-surface sweep (VERDICT r4 ask #6): every registered query not in
-    # the headline set, in sorted order so the tail is stable round-over-
-    # round. The per-query full-surface detail goes to STDERR — r5 proved
-    # that folding ~170 per-query keys into the stdout record pushes the
-    # line past the driver's capture window and loses the headline value
-    # (VERDICT r5 ask #5). Stdout stays ONE COMPACT line: headline value +
-    # headline per-query times + full_total.
-    if "--headline-only" not in sys.argv:
-        tail = sorted(n for n in QUERIES if n not in BENCH_QUERIES)
-        print(f"  -- full-surface tail ({len(tail)} queries) --", file=sys.stderr)
-        # drain_every 40 → 25 (r10): the GC-pressure cliff the drain exists
-        # for crept back into the last ~30 queries of the sorted tail as
-        # the registry grew past ~235 (winsorized_price_stats measured
-        # 11.9 s in-sweep vs 1.4 s isolated; zipf_fit_report 7.5 s vs
-        # 0.8 s). Same query set, tighter cadence: the late-tail returns
-        # to its isolated times (re-measured below in this round's full
-        # sweep) at the cost of a few extra cache rebuilds mid-tail.
-        tail_timings = run_set(tail, drain_every=25)
-        print("FULL_SURFACE " + json.dumps(tail_timings), file=sys.stderr)
-        record["full_total"] = round(total + sum(tail_timings.values()), 3)
-        # The denominator, so a registry that GREW between rounds is not
-        # misread as a per-query regression (r5→r6: 169→206 queries).
-        record["full_n"] = len(timings) + len(tail_timings)
-        # VERDICT r9 ask #5: full_n == len(QUERIES) is the sweep's
-        # completeness contract — headline ∪ tail covers the registry by
-        # construction (pinned in test_bench_contract.py), so the only way
-        # full_n can fall short is a query FAILING mid-sweep, which until
-        # now was visible on stderr only. Surface the shortfall in the
-        # driver-captured record itself; the contract test rejects a
-        # committed round record that carries it.
-        n_failed = (len(headline) + len(tail)) - record["full_n"]
-        if n_failed:
-            record["full_failed"] = n_failed
-        if canonical:
-            _write_full_artifact(sf, calib, timings, tail_timings, failed)
 
-    line = json.dumps(record, separators=(",", ":"))
-    if len(line) > 1900:
-        # Last-resort self-truncation so the HEADLINE always survives the
-        # driver's capture window: drop per-query detail from stdout (it
-        # is already on stderr, line-by-line) rather than let the whole
-        # record become unparseable like BENCH_r08.
-        print("QUERIES " + json.dumps(timings), file=sys.stderr)
-        record["queries"] = {}
-        record["queries_on_stderr"] = True
-        line = json.dumps(record, separators=(",", ":"))
-    print(line)
-    spark.stop()
+def _run(
+    spark, sf_dir: str, headline: list[str], tail: list[str], out_dir: str
+) -> int:
+    """Sweep, write the record under ``out_dir`` and print the totals line;
+    returns the exit status (1 if any query failed)."""
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    record = {
+        **_provenance(),
+        "cpu_count": os.cpu_count(),
+        "master": spark.sparkContext.master,
+        "sf": float(m.group(1)) if m else None,
+        "sf_dir": sf_dir,
+    }
+    record.update(_sweep(spark, sf_dir, headline, tail))
+    os.makedirs(out_dir, exist_ok=True)
+    sha = (record["head_sha"] or "nogit")[:7]
+    path = os.path.join(out_dir, f"{time.strftime('%Y%m%dT%H%M%S')}-{sha}.json")
+    with open(path, "w") as f:
+        json.dump(record, f, indent=1, sort_keys=True)
+    print(f"  record -> {path}", file=sys.stderr)
+    print(json.dumps(record["totals"], separators=(",", ":")))
+    return 1 if record["failed"] else 0
+
+
+def main() -> int:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    if "--queries" in sys.argv:
+        headline = sys.argv[sys.argv.index("--queries") + 1].split(",")
+        tail = []
+    else:
+        headline, tail = BENCH_QUERIES, _tail()
+
+    from lakeflow.scratch import use_process_scratch
+    from lakeflow.session import get_session
+
+    # Ephemeral checkpoints and scratch tables land in one pid-keyed root
+    # removed at exit (lakeflow/scratch.py).
+    use_process_scratch()
+    spark = get_session(
+        "lakeflow-bench", master=f"local[{cpus}]", shuffle_partitions=cpus
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        _warm_up(spark, sf_dir)
+        return _run(spark, sf_dir, headline, tail, _OUT_DIR)
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

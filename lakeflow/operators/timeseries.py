@@ -228,7 +228,8 @@ def ewma_trailing(
     two, so ``w * v`` is exact in binary floating point, and the k-term
     numerator/denominator sums are written in fixed order — any engine
     evaluating the same formula produces the identical double, no quantize
-    step needed. Head-of-series rows renormalize over the lags that exist.
+    step needed. Head-of-series rows renormalize over the lags that exist;
+    a row whose value and k-1 lags are all NULL has no weight and gets NULL.
 
     Scale shape: one window (hash partition by key, in-partition sort), k
     ``lag`` reads evaluated incrementally — O(k) per row, no per-row array
@@ -251,7 +252,7 @@ def ewma_trailing(
         F.col(id_col),
         F.col(key_col),
         F.col(value_col),
-        rnd(num / den, round_to).alias("ewma"),
+        rnd(num / F.nullif(den, F.lit(0.0)), round_to).alias("ewma"),
     )
 
 

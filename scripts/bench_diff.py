@@ -1,53 +1,38 @@
 #!/usr/bin/env python
-"""Cross-round full-sweep drift table (VERDICT r12 ask #8).
+"""Per-query drift table between two bench.py records.
 
-Diffs the two newest committed ``bench_full_r*.json`` artifacts per query
-and prints the round-record table: top regressions with ratios, plus the
-names explained by registry growth/retirement — so drift attribution is a
-committed artifact of every round record instead of a judge exercise.
+Compares each query's comparator time: ``min`` (the lower of the two warm
+passes) for the headline set, the single ``cold`` time for the tail. Prints
+the top regressions with ratios, plus the names explained by registry
+growth or retirement. Reads the two records only; it measures nothing.
 
-Reads committed files only; run it idle or loaded, it measures nothing.
-
-Usage: python scripts/bench_diff.py [N]   (default N=5 top regressions)
+Usage: python scripts/bench_diff.py PREV.json CUR.json [N]
+(default N=5 top regressions)
 """
 
 from __future__ import annotations
 
-import glob
 import json
-import os
-import re
 import sys
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+def _times(rec: dict) -> dict[str, float]:
+    # A recorded query has a warm min, a cold time, or both.
+    return {n: q.get("min", q.get("cold")) for n, q in rec["queries"].items()}
 
 
-def latest_two() -> tuple[dict, dict]:
-    # Numeric round sort — lexicographic would order r100 before r99.
-    # Files matching the glob but not the round pattern (scratch copies
-    # like bench_full_r13-retry.json) are ignored, not crashed on.
-    rounds = []
-    for f in glob.glob(os.path.join(_REPO, "bench_full_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", f)
-        if m:
-            rounds.append((int(m.group(1)), f))
-    rounds.sort()
-    if len(rounds) < 2:
-        raise SystemExit("need two committed bench_full_r*.json artifacts")
-
-    def load(path: str) -> dict:
-        with open(path) as fh:
-            return json.load(fh)
-
-    return load(rounds[-2][1]), load(rounds[-1][1])
+def _label(rec: dict) -> str:
+    sha = (rec["head_sha"] or "?")[:7]
+    t = rec["totals"]
+    return f"{sha} {rec['master']} sf{rec['sf']} {t['full']:.1f}s/{t['n']}q"
 
 
 def diff_table(prev: dict, cur: dict, top_n: int = 5) -> str:
-    pq, cq = prev["queries"], cur["queries"]
+    pq, cq = _times(prev), _times(cur)
     shared = set(pq) & set(cq)
     added = sorted(set(cq) - set(pq))
     removed = sorted(set(pq) - set(cq))
-    # Rank by ratio among shared queries costing >=0.2s in either round —
+    # Rank by ratio among shared queries costing >=0.2s in either record —
     # sub-200ms entries flip 2x on scheduler noise alone and would bury
     # the real signal.
     ranked = sorted(
@@ -56,11 +41,7 @@ def diff_table(prev: dict, cur: dict, top_n: int = 5) -> str:
         reverse=True,
     )
     lines = [
-        f"full sweep r{prev['round']} -> r{cur['round']}: "
-        f"{prev['full_total']:.1f}s/{prev['full_n']}q -> "
-        f"{cur['full_total']:.1f}s/{cur['full_n']}q",
-        f"calib (min/disp): {prev.get('calib')}/{prev.get('calib_disp')} -> "
-        f"{cur.get('calib')}/{cur.get('calib_disp')}",
+        f"full sweep {_label(prev)} -> {_label(cur)}",
         f"added ({len(added)}): {', '.join(added) or '-'}",
         f"removed ({len(removed)}): {', '.join(removed) or '-'}",
         f"top {top_n} per-query regressions (shared, >=0.2s):",
@@ -85,6 +66,11 @@ def diff_table(prev: dict, cur: dict, top_n: int = 5) -> str:
 
 
 if __name__ == "__main__":
-    top = int(sys.argv[1]) if len(sys.argv) > 1 else 5
-    prev, cur = latest_two()
-    print(diff_table(prev, cur, top))
+    if len(sys.argv) < 3:
+        raise SystemExit("usage: python scripts/bench_diff.py PREV.json CUR.json [N]")
+    records = []
+    for path in sys.argv[1:3]:
+        with open(path) as fh:
+            records.append(json.load(fh))
+    top = int(sys.argv[3]) if len(sys.argv) > 3 else 5
+    print(diff_table(*records, top))

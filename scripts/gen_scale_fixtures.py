@@ -26,9 +26,9 @@ in-bucket pair counts quadratically and misrepresent the scaling shape):
   (sum of four xxhash64 uniforms), keeping the magnitude profile without
   cross-replica near-duplicate inflation.
 
-NOT oracle-facing and NOT driver-facing: the output feeds
-scripts/q_profile.py / bench.py --queries for the committed 8-vs-32-core
-scaling table only (plans/r14/). The driver's sf dirs are untouched.
+Not oracle-facing: the output feeds `bench.py --queries` for the committed
+8-vs-32-core scaling table only (plans/r14/). The source fixture dir is only
+read.
 
 Usage: python scripts/gen_scale_fixtures.py --src SF01_DIR [--mult 10]
 [--out /tmp/lakeflow_sf1]. ``--mult`` is at most 27: replica codes run
@@ -60,7 +60,7 @@ def main() -> None:
 
     from lakeflow.session import get_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     spark = get_session(
         "lakeflow-gen-fixtures",
         master=f"local[{cpus}]",

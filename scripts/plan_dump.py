@@ -23,7 +23,7 @@ def main() -> None:
     tag, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3].split(",")
     sf_dir = sys.argv[4] if len(sys.argv) > 4 else "/root/testdata/sf0.1"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
 
     from lakeflow.queries import QUERIES
     from lakeflow.scratch import use_process_scratch

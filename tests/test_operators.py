@@ -961,6 +961,34 @@ def test_densify_offgrid_policies(spark):
         densify_interpolate(df, offgrid="nope")
 
 
+def test_ewma_trailing_all_null_window_is_null(spark):
+    """A row whose value and k-1 lags are all NULL has no weight to divide
+    by: its EWMA is NULL (as in the DuckDB oracle, where x/0.0 is NULL),
+    not an ANSI DIVIDE_BY_ZERO error."""
+    import datetime as dt
+
+    import duckdb
+
+    from lakeflow.operators.timeseries import ewma_trailing
+    from lakeflow.queries import ORACLES
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(1, 7, t0, None), (2, 7, t0 + dt.timedelta(minutes=1), 3.0)]
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id long, ts timestamp, value double"
+    )
+    got = sorted(tuple(r) for r in ewma_trailing(df).collect())
+    assert got == [(1, 7, None, None), (2, 7, 3.0, 3.0)]
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE events (event_id BIGINT, user_id BIGINT, ts TIMESTAMP,"
+        " value DOUBLE)"
+    )
+    con.executemany("INSERT INTO events VALUES (?, ?, ?, ?)", rows)
+    assert sorted(con.execute(ORACLES["ewma_user_value"]).fetchall()) == got
+
+
 def test_bucketed_near_dups_recall_at_registered_threshold(spark):
     """Pin recall of the bucketed multi-probe near-dup join at the REGISTERED
     operating point (threshold 0.5, the embedding_near_dups query): the DuckDB
