@@ -125,18 +125,25 @@ def _strip_scheme(path: str) -> str:
     return path
 
 
-def _load_manifest(root: str, version: int | None) -> tuple[dict, int]:
+def _open_table(root: str):
+    """Read handle on the existing table at ``root``. A missing table
+    raises instead of being created, as ``VersionedTable.__init__`` would."""
+    from lakeflow.tables import VersionedTable
+
     root = _strip_scheme(root)
-    snap = os.path.join(root, "_snapshots")
+    if not os.path.isdir(os.path.join(root, "_snapshots")):
+        raise FileNotFoundError(f"no table at {root}")
+    return VersionedTable(None, root)
+
+
+def _load_manifest(root: str, version: int | None) -> tuple[dict, int]:
+    """``(manifest, version)`` of ``version``, or of the latest snapshot."""
+    t = _open_table(root)
     if version is None:
-        versions = sorted(
-            int(f[:-5]) for f in os.listdir(snap) if f.endswith(".json")
-        )
-        if not versions:
-            raise ValueError(f"table {root} has no snapshots")
-        version = versions[-1]
-    with open(os.path.join(snap, f"{version:08d}.json")) as fh:
-        return json.load(fh), version
+        version = t.current_version()
+        if version is None:
+            raise ValueError(f"table {t.root} has no snapshots")
+    return t._manifest(version), version
 
 
 def _stats_admit(stats: dict, col: str, lo, hi) -> bool:
@@ -508,6 +515,37 @@ class _ShardCommit(WriterCommitMessage):
     stats: dict = field(default_factory=dict)
 
 
+def _write_shard(iterator, directory: str) -> _ShardCommit:
+    """One task's Arrow batches as one parquet shard in ``directory``, with
+    the min/max of every int/float/string column for the dir zone maps."""
+    import uuid as _uuid
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    os.makedirs(directory, exist_ok=True)
+    path = os.path.join(directory, f"part-{_uuid.uuid4().hex}.parquet")
+    batches = list(iterator)
+    if not batches:
+        return _ShardCommit(path="", rows=0, stats={})
+    table = pa.Table.from_batches(batches)
+    pq.write_table(table, path)
+    stats: dict = {}
+    for f in table.schema:
+        if (
+            pa.types.is_integer(f.type)
+            or pa.types.is_floating(f.type)
+            or pa.types.is_string(f.type)
+        ):
+            col = table.column(f.name)
+            if col.null_count == len(col):
+                continue
+            mm = pc.min_max(col)
+            stats[f.name] = [mm["min"].as_py(), mm["max"].as_py()]
+    return _ShardCommit(path=path, rows=table.num_rows, stats=stats)
+
+
 class LakeflowTableWriter(DataSourceArrowWriter):
     """Two-phase-commit writer into a :class:`VersionedTable` snapshot.
 
@@ -538,28 +576,7 @@ class LakeflowTableWriter(DataSourceArrowWriter):
         )
 
     def write(self, iterator) -> _ShardCommit:
-        import uuid as _uuid
-
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        os.makedirs(self.staging, exist_ok=True)
-        path = os.path.join(self.staging, f"part-{_uuid.uuid4().hex}.parquet")
-        batches = list(iterator)
-        if not batches:
-            return _ShardCommit(path="", rows=0, stats={})
-        table = pa.Table.from_batches(batches)
-        pq.write_table(table, path)
-        stats: dict = {}
-        for f in table.schema:
-            if pa.types.is_integer(f.type) or pa.types.is_floating(f.type) or pa.types.is_string(f.type):
-                col = table.column(f.name)
-                if col.null_count == len(col):
-                    continue
-                mm = pc.min_max(col)
-                stats[f.name] = [mm["min"].as_py(), mm["max"].as_py()]
-        return _ShardCommit(path=path, rows=table.num_rows, stats=stats)
+        return _write_shard(iterator, self.staging)
 
     def commit(self, messages) -> None:
         shards = [m for m in messages if m and m.rows > 0]
@@ -669,32 +686,7 @@ class LakeflowTableStreamWriter(DataSourceStreamArrowWriter):
         self.tmp = os.path.join(self.root, "data", ".pystream_tmp")
 
     def write(self, iterator) -> _ShardCommit:
-        import uuid as _uuid
-
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        os.makedirs(self.tmp, exist_ok=True)
-        path = os.path.join(self.tmp, f"part-{_uuid.uuid4().hex}.parquet")
-        batches = list(iterator)
-        if not batches:
-            return _ShardCommit(path="", rows=0, stats={})
-        table = pa.Table.from_batches(batches)
-        pq.write_table(table, path)
-        stats: dict = {}
-        for f in table.schema:
-            if (
-                pa.types.is_integer(f.type)
-                or pa.types.is_floating(f.type)
-                or pa.types.is_string(f.type)
-            ):
-                col = table.column(f.name)
-                if col.null_count == len(col):
-                    continue
-                mm = pc.min_max(col)
-                stats[f.name] = [mm["min"].as_py(), mm["max"].as_py()]
-        return _ShardCommit(path=path, rows=table.num_rows, stats=stats)
+        return _write_shard(iterator, self.tmp)
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803 (API name)
         import shutil

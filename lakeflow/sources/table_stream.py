@@ -16,46 +16,32 @@ history, so "what changed" is not derivable from added dirs alone) follow
 Delta's contract: fail the stream by default, or skip with
 ``.option("on_change", "skip")`` (Delta's ``skipChangeCommits``).
 
-The default reader is the partition-planning form
+The reader is the partition-planning form
 (:class:`TableChangesPartitionedReader`): the driver plans one input split
 per added data dir (manifest diff only — JSON, no data IO), and EXECUTORS
 read the parquet via pyarrow — the shape that holds when one commit lands
-terabytes. :class:`TableChangesStreamReader` keeps the simple driver-side
-variant for reference/debugging.
+terabytes. ``.option("mode", "cdf")`` also streams deletion vectors as
+'delete' rows (Delta's change data feed).
 """
 
 from __future__ import annotations
 
 import json
-import os
-from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
-
-def _manifest(root: str, version: int) -> dict:
-    with open(os.path.join(root, "_snapshots", f"{version:08d}.json")) as fh:
-        return json.load(fh)
+from lakeflow.sources.table_source import _load_manifest, _open_table
 
 
-def _versions(root: str) -> list[int]:
-    snap = os.path.join(root, "_snapshots")
-    return sorted(
-        int(f.split(".")[0]) for f in os.listdir(snap) if f.endswith(".json")
-    )
-
-
-def _timestamp_cols(root: str) -> set[str]:
+def _timestamp_cols(manifest: dict) -> set[str]:
     """The table's Spark ``TIMESTAMP`` columns (UTC instants) — from the
     latest manifest's schema, the schema the stream is bound to."""
-    vs = _versions(root)
-    raw = _manifest(root, vs[-1]).get("schema") if vs else None
+    raw = manifest.get("schema")
     fields = json.loads(raw)["fields"] if raw else []
     return {f["name"] for f in fields if f["type"] == "timestamp"}
 
@@ -92,10 +78,7 @@ class TableChangesDataSource(DataSource):
         from pyspark.sql.types import StringType, StructType
 
         root = self.options["path"]
-        vs = _versions(root)
-        if not vs:
-            raise ValueError(f"table {root} has no snapshots")
-        raw = _manifest(root, vs[-1]).get("schema")
+        raw = _load_manifest(root, None)[0].get("schema")
         if raw is None:
             raise ValueError(
                 f"table {root} predates schema tracking; recommit once to "
@@ -161,93 +144,62 @@ class TableChangesPartitionedReader(DataSourceStreamReader):
             raise ValueError(f"on_change must be fail|skip, got {on_change!r}")
         if mode not in ("append", "cdf"):
             raise ValueError(f"mode must be append|cdf, got {mode!r}")
-        self.root = root
+        self.table = _open_table(root)
         self.on_change = on_change
         self.start_version = start_version
         self.columns = columns
         self.mode = mode
-        self.utc = _timestamp_cols(root)
+        v = self.table.current_version()
+        self.utc = _timestamp_cols({} if v is None else self.table._manifest(v))
 
     def initialOffset(self) -> dict:
         return {"version": self.start_version}
 
     def latestOffset(self) -> dict:
-        vs = _versions(self.root)
-        return {"version": max(vs[-1], self.start_version) if vs else self.start_version}
-
-    def _added_dirs(self, start_v: int, end_v: int) -> list[str]:
-        added: list[str] = []
-        prev_dirs: set[str] | None = None
-        prev_dvs: set[str] = set()
-        for v in range(start_v + 1, end_v + 1):
-            m = _manifest(self.root, v)
-            if prev_dirs is None:
-                pm = _manifest(self.root, v - 1) if v > 1 else {}
-                prev_dirs = set(pm.get("dirs", []))
-                prev_dvs = set(pm.get("delete_vectors", []))
-            removed = prev_dirs - set(m["dirs"])
-            # A grown deletion-vector list is ALSO a change commit: a MOR
-            # delete/update removes no dirs yet changes row visibility, and
-            # silently emitting nothing (or, for update-mor, emitting the
-            # rewritten rows as fresh appends) would corrupt downstream
-            # state — same contract as Delta's skipChangeCommits.
-            new_dvs = set(m.get("delete_vectors", [])) - prev_dvs
-            if removed or new_dvs:
-                if self.on_change == "fail":
-                    raise RuntimeError(
-                        f"version {v} of {self.root} rewrites history "
-                        f"({m['operation']}); stream appends only, or set "
-                        "on_change=skip to ignore change commits"
-                    )
-                prev_dirs = set(m["dirs"])
-                prev_dvs = set(m.get("delete_vectors", []))
-                continue
-            added.extend(d for d in m["dirs"] if d not in prev_dirs)
-            prev_dirs = set(m["dirs"])
-            prev_dvs = set(m.get("delete_vectors", []))
-        return added
-
-    def _plan_cdf(self, start_v: int, end_v: int) -> list[InputPartition]:
-        """CDF planning: per version, NEW deletion vectors become delete
-        pre-image splits and added dirs become insert splits — so a MOR
-        delete streams as 'delete' rows and an update-mor commit streams as
-        delete+insert (Delta CDF's pre/post-image pair). Dir REMOVALS
-        (overwrite / replace-partitions / compaction) still follow the
-        fail|skip policy: a history rewrite has no incremental rendering."""
-        parts: list[InputPartition] = []
-        prev_m = _manifest(self.root, start_v) if start_v >= 1 else {}
-        prev_dirs = set(prev_m.get("dirs", []))
-        prev_dvs = set(prev_m.get("delete_vectors", []))
-        for v in range(start_v + 1, end_v + 1):
-            m = _manifest(self.root, v)
-            removed = prev_dirs - set(m["dirs"])
-            if removed:
-                if self.on_change == "fail":
-                    raise RuntimeError(
-                        f"version {v} of {self.root} rewrites history "
-                        f"({m['operation']}); stream appends only, or set "
-                        "on_change=skip to ignore change commits"
-                    )
-                prev_dirs = set(m["dirs"])
-                prev_dvs = set(m.get("delete_vectors", []))
-                continue
-            for dv in m.get("delete_vectors", []):
-                if dv not in prev_dvs:
-                    parts.append(_DvPartition(dv, self.columns))
-            parts.extend(
-                _DirPartition(d, self.columns)
-                for d in m["dirs"]
-                if d not in prev_dirs
-            )
-            prev_dirs = set(m["dirs"])
-            prev_dvs = set(m.get("delete_vectors", []))
-        return parts
+        # The _latest_hint pointer, not a _snapshots/ listing per trigger.
+        v = self.table.current_version()
+        return {"version": max(v or 0, self.start_version)}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        """One manifest walk over versions (start, end]: each version's
+        added dirs become splits. A version that removes dirs (overwrite /
+        replace-partitions / compaction) rewrites history, which has no
+        incremental rendering: it fails the stream or, with
+        on_change=skip, is skipped. NEW deletion vectors depend on the
+        mode. In cdf mode they become delete pre-image splits, so a MOR
+        delete streams as 'delete' rows and an update-mor commit as
+        delete+insert (Delta CDF's pre/post-image pair). In append mode
+        they make the version a change commit too: a MOR delete/update
+        removes no dirs yet changes row visibility, and emitting nothing
+        (or, for update-mor, the rewritten rows as fresh appends) would
+        corrupt downstream state — Delta's skipChangeCommits contract."""
         lo, hi = int(start["version"]), int(end["version"])
-        if self.mode == "cdf":
-            return self._plan_cdf(lo, hi)
-        return [_DirPartition(d, self.columns) for d in self._added_dirs(lo, hi)]
+        if hi <= lo:
+            return []
+        parts: list[InputPartition] = []
+        prev = self.table._manifest(lo) if lo >= 1 else {}
+        for v in range(lo + 1, hi + 1):
+            m = self.table._manifest(v)
+            prev_dirs = set(prev.get("dirs", []))
+            prev_dvs = set(prev.get("delete_vectors", []))
+            new_dvs = [d for d in m.get("delete_vectors", []) if d not in prev_dvs]
+            removed = prev_dirs - set(m["dirs"])
+            if removed or (new_dvs and self.mode == "append"):
+                if self.on_change == "fail":
+                    raise RuntimeError(
+                        f"version {v} of {self.table.root} rewrites history "
+                        f"({m['operation']}); stream appends only, or set "
+                        "on_change=skip to ignore change commits"
+                    )
+            else:
+                parts.extend(_DvPartition(dv, self.columns) for dv in new_dvs)
+                parts.extend(
+                    _DirPartition(d, self.columns)
+                    for d in m["dirs"]
+                    if d not in prev_dirs
+                )
+            prev = m
+        return parts
 
     def read(self, partition):
         # Runs on an executor: local pyarrow read of one split.
@@ -278,59 +230,6 @@ class TableChangesPartitionedReader(DataSourceStreamReader):
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the engine's checkpoint; manifests are immutable
-
-
-class TableChangesStreamReader(SimpleDataSourceStreamReader):
-    """Offset = last snapshot version fully emitted."""
-
-    def __init__(
-        self, root: str, on_change: str, start_version: int, columns: list[str]
-    ) -> None:
-        if on_change not in ("fail", "skip"):
-            raise ValueError(f"on_change must be fail|skip, got {on_change!r}")
-        self.root = root
-        self.on_change = on_change
-        self.start_version = start_version
-        self.columns = columns
-        self.utc = _timestamp_cols(root)
-
-    def initialOffset(self) -> dict:
-        return {"version": self.start_version}
-
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        vs = _versions(self.root)
-        end = {"version": max(vs[-1], int(start["version"])) if vs else 0}
-        return self.readBetweenOffsets(start, end), end
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        import pyarrow.parquet as pq
-
-        rows: list[tuple] = []
-        prev_dirs: set[str] | None = None
-        for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
-            m = _manifest(self.root, v)
-            if prev_dirs is None:
-                prev_dirs = (
-                    set(_manifest(self.root, v - 1)["dirs"]) if v > 1 else set()
-                )
-            added = [d for d in m["dirs"] if d not in prev_dirs]
-            removed = prev_dirs - set(m["dirs"])
-            if removed:
-                if self.on_change == "fail":
-                    raise RuntimeError(
-                        f"version {v} of {self.root} rewrites history "
-                        f"({m['operation']}); stream appends only, or set "
-                        "on_change=skip to ignore change commits"
-                    )
-                prev_dirs = set(m["dirs"])
-                continue
-            for d in added:
-                table = pq.read_table(d)
-                cols = [_pylist(table, c, self.utc) for c in self.columns]
-                rows.extend(zip(*cols) if cols else [])
-            prev_dirs = set(m["dirs"])
-        # List-backed: the engine pickles prefetched batches for replay.
-        return iter(rows)
 
 
 def register_table_changes_source(spark: SparkSession) -> None:

@@ -2,16 +2,17 @@
 
 Every streaming ingest in this package (``stream_ann_ingest``,
 ``stream_cms_ingest``, ``stream_histogram_ingest``, ``stream_kmv_ingest``,
-``stream_weighted_sample_ingest`` — sinks.py) lands one ``batch=<id>``
+``stream_weighted_sample_ingest`` — ``sinks.py::_shard_sink`` — and the
+text index's ``stream_index_ingest``) lands one ``batch=<id>``
 subdirectory per micro-batch: overwrite semantics make the subdir the
 idempotency key, so a replayed micro-batch rewrites identical content
 instead of double-ingesting. The cost of that design is subdirectory
 accumulation — a week of 5-second triggers is ~120k shards, and directory
-LISTING becomes the probe bottleneck long before data volume does
-(VERDICT r7 ask #5). These compactors are the OPTIMIZE-cadence
-counterpart: fold the committed shards into one, leaving probe answers
-bit-identical (pinned by tests), exactly like ``compact_text_index`` does
-for the inverted index and ``VersionedTable.compact`` for tables.
+LISTING becomes the probe bottleneck long before data volume does.
+These compactors are the OPTIMIZE-cadence counterpart: fold the committed
+shards into one, leaving probe answers bit-identical (pinned by tests),
+exactly like ``compact_text_index`` does for the inverted index and
+``VersionedTable.compact`` for tables.
 
 Replay safety: the ``keep_last`` NEWEST shards are left untouched — the
 only batch a restarted stream can replay is the in-flight one (its id is
@@ -20,11 +21,12 @@ land in a subdir it owns. Folded shards are rewritten into the
 highest-folded ``batch=`` id so the layout (and partition-column type
 inference) is unchanged for readers. Like the other compactors, the swap
 is rmtree+rename — run it at OPTIMIZE cadence against a quiesced index,
-not concurrently with a probe of the same directory. Since r9 the
-ingest sinks can also invoke these folds themselves at cadence
-(``compact_every_n_batches``, sinks.py::_autocompact) — safe because
-``foreachBatch`` serializes the fold with the writes and keep_last=1
-protects the replayable in-flight shard (VERDICT r8 ask #3).
+not concurrently with a probe of the same directory. The ingest sinks
+also invoke these folds themselves at cadence
+(``compact_every_n_batches`` / ``compact_max_shard_bytes``,
+``sinks.py::_autocompact``) — safe because ``foreachBatch`` serializes
+the fold with the writes and keep_last=1 protects the replayable
+in-flight shard.
 
 At 100 TB: each fold reads only the shards it folds (never the
 ``keep_last`` tail it skips), the sketch folds produce bounded output

@@ -47,10 +47,70 @@ _STATE_SCHEMA = StructType(
         StructField("end_ms", LongType()),
         StructField("n_events", LongType()),
         # Exact integer micro-units of the session value sum (see
-        # _make_sessionizer); emitted as double micro/1e6.
+        # _fold_rows); NULL while every value so far is NULL.
         StructField("total_micro", LongType()),
     ]
 )
+
+
+def _gap_ms(gap: str) -> int:
+    n, unit = gap.split()
+    return int(n) * {"minutes": 60_000, "seconds": 1_000, "hours": 3_600_000}[unit]
+
+
+def _fold_rows(cur, chunks: Iterable[pd.DataFrame], gap_ms: int):
+    """Fold one key's micro-batch rows into its open session ``cur``
+    ([start_ms, end_ms, n_events, total_micro] or None). Returns the
+    sessions a successor event closed, and the open session.
+
+    Like SQL's ``count(*)`` and ``sum``, a NULL value counts as an event
+    but adds nothing to the total, and a session of only NULL values has a
+    NULL total."""
+    closed: list[list] = []
+    # Concat BEFORE the sort: a key whose micro-batch rows span several
+    # Arrow chunks (>~10k rows/key/batch) gets them in shuffle order, so
+    # per-chunk sorting still interleaves time across chunks — an
+    # out-of-order chunk would regress the session end (cur[1] = t) and
+    # split/merge sessions wrongly.
+    chunks = [p for p in chunks if len(p)]
+    if not chunks:
+        return closed, cur
+    pdf = pd.concat(chunks, ignore_index=True).sort_values("ts")
+    ts_ms = (pdf["ts"].astype("int64") // 1_000_000).tolist()
+    # Exact integer micro-units: accumulation is order-free, so the session
+    # total cannot drift an ulp between a replay, a repartition, and the
+    # DuckDB oracle's own summation order (the repo-wide rnd() pattern).
+    # NULL arrives as NaN, which must not reach the int64 cast.
+    value = pdf["value"].to_numpy(dtype="float64", na_value=np.nan)
+    micro = np.floor(value * 1e6 + 0.5)
+    null = np.isnan(micro)
+    vals = np.where(null, 0, micro).astype("int64").tolist()
+    for t, v, is_null in zip(ts_ms, vals, null.tolist()):
+        if cur is None:
+            cur = [t, t, 0, None]
+        elif t - cur[1] > gap_ms:
+            closed.append(cur)
+            cur = [t, t, 0, None]
+        cur[1] = t
+        cur[2] += 1
+        if not is_null:
+            cur[3] = v if cur[3] is None else cur[3] + v
+    return closed, cur
+
+
+def _sessions_frame(user_id, sessions: list) -> pd.DataFrame:
+    """SESSION_SCHEMA rows of ``sessions`` (state tuples) for one key."""
+    return pd.DataFrame(
+        {
+            "user_id": [user_id] * len(sessions),
+            "session_start": pd.to_datetime([s[0] for s in sessions], unit="ms"),
+            "session_end": pd.to_datetime([s[1] for s in sessions], unit="ms"),
+            "n_events": [s[2] for s in sessions],
+            "total_value": [
+                np.nan if s[3] is None else s[3] / 1e6 for s in sessions
+            ],
+        }
+    )
 
 
 def _make_sessionizer(gap_ms: int):
@@ -58,62 +118,19 @@ def _make_sessionizer(gap_ms: int):
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
         (user_id,) = key
-        closed: list[tuple] = []
-
         if state.hasTimedOut:
+            closed = [list(state.get)] if state.exists else []
             if state.exists:
-                s, e, n, v = state.get
-                closed.append((user_id, s, e, n, v))
                 state.remove()
         else:
             cur = list(state.get) if state.exists else None
-            # Concat BEFORE the sort: a key whose micro-batch rows span
-            # several Arrow chunks (>~10k rows/key/batch) gets them in
-            # shuffle order, so per-chunk sorting still interleaves time
-            # across chunks — an out-of-order chunk would regress the
-            # session end (cur[1] = t) and split/merge sessions wrongly.
-            # One global sort of the key's batch rows restores the
-            # single-sequence semantics; the rows are already in memory
-            # as chunks, so this adds no asymptotic cost.
-            chunks = [p for p in pdfs if len(p)]
-            pdf = (
-                pd.concat(chunks, ignore_index=True).sort_values("ts")
-                if chunks
-                else None
-            )
-            if pdf is not None:
-                ts_ms = (pdf["ts"].astype("int64") // 1_000_000).tolist()
-                # Exact integer micro-units: accumulation is order-free, so
-                # the session total cannot drift an ulp between a replay, a
-                # repartition, and the DuckDB oracle's own summation order
-                # (the repo-wide rnd() determinism pattern).
-                vals = (
-                    np.floor(pdf["value"].to_numpy() * 1e6 + 0.5)
-                    .astype("int64")
-                    .tolist()
-                )
-                for t, v in zip(ts_ms, vals):
-                    if cur is None:
-                        cur = [t, t, 0, 0]
-                    elif t - cur[1] > gap_ms:
-                        closed.append((user_id, cur[0], cur[1], cur[2], cur[3]))
-                        cur = [t, t, 0, 0]
-                    cur[1] = t
-                    cur[2] += 1
-                    cur[3] += v
+            closed, cur = _fold_rows(cur, pdfs, gap_ms)
             if cur is not None:
                 state.update(tuple(cur))
                 # Close the open session once the event-time watermark passes
                 # session_end + gap.
                 state.setTimeoutTimestamp(cur[1] + gap_ms)
-
-        if closed:
-            out = pd.DataFrame(closed, columns=[f.name for f in SESSION_SCHEMA])
-            out["session_start"] = pd.to_datetime(out["session_start"], unit="ms")
-            out["session_end"] = pd.to_datetime(out["session_end"], unit="ms")
-            out["total_value"] = out["total_value"].astype("int64") / 1e6
-            return iter([out])
-        return iter([])
+        return iter([_sessions_frame(user_id, closed)] if closed else [])
 
     return sessionize
 
@@ -129,14 +146,11 @@ def sessionize_stream(
     or (b) the event-time timeout fires after the watermark passes
     session_end + gap. Output columns: SESSION_SCHEMA.
     """
-    n, unit = gap.split()
-    unit_ms = {"minutes": 60_000, "seconds": 1_000, "hours": 3_600_000}[unit]
-    gap_ms = int(n) * unit_ms
     return (
         stream.withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
-            _make_sessionizer(gap_ms),
+            _make_sessionizer(_gap_ms(gap)),
             outputStructType=SESSION_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
@@ -153,8 +167,8 @@ def sessionize_stream_tws(
     """Gap sessionization on Spark 4's ``transformWithStateInPandas`` — the
     successor arbitrary-state API (StatefulProcessor: named value state +
     explicit event-time timers, RocksDB-only). Semantics mirror
-    :func:`sessionize_stream` exactly (same SESSION_SCHEMA, same micro-unit
-    value accumulation, same close-on-successor / close-on-timer rules), so
+    :func:`sessionize_stream` exactly (same SESSION_SCHEMA, the same fold
+    loop ``_fold_rows``, same close-on-successor / close-on-timer rules), so
     the same DuckDB oracle applies.
 
     Environment gate: the TWS Python driver worker imports
@@ -176,51 +190,20 @@ def sessionize_stream_tws(
 
     from pyspark.sql.streaming import StatefulProcessor
 
-    n, unit = gap.split()
-    unit_ms = {"minutes": 60_000, "seconds": 1_000, "hours": 3_600_000}[unit]
-    gap_ms = int(n) * unit_ms
+    gap_ms = _gap_ms(gap)
 
     class SessionProcessor(StatefulProcessor):
         def init(self, handle) -> None:
             self._state = handle.getValueState("session", _STATE_SCHEMA)
             self._handle = handle
 
-        def _emit(self, user_id, cur):
-            out = pd.DataFrame(
-                [(user_id, cur[0], cur[1], cur[2], cur[3])],
-                columns=[f.name for f in SESSION_SCHEMA],
-            )
-            out["session_start"] = pd.to_datetime(out["session_start"], unit="ms")
-            out["session_end"] = pd.to_datetime(out["session_end"], unit="ms")
-            out["total_value"] = out["total_value"].astype("int64") / 1e6
-            return out
-
         def handleInputRows(self, key, rows, timer_values):
             (user_id,) = key
             cur = list(self._state.get()) if self._state.exists() else None
             prev_timer = cur[1] + gap_ms if cur is not None else None
-            # Same cross-chunk discipline as _make_sessionizer: concat the
-            # key's Arrow chunks BEFORE sorting, or out-of-order chunks
-            # regress the session end and mis-sessionize past ~10k
-            # rows/key/batch.
-            chunks = [p for p in rows if len(p)]
-            if chunks:
-                pdf = pd.concat(chunks, ignore_index=True).sort_values("ts")
-                ts_ms = (pdf["ts"].astype("int64") // 1_000_000).tolist()
-                vals = (
-                    np.floor(pdf["value"].to_numpy() * 1e6 + 0.5)
-                    .astype("int64")
-                    .tolist()
-                )
-                for t, v in zip(ts_ms, vals):
-                    if cur is None:
-                        cur = [t, t, 0, 0]
-                    elif t - cur[1] > gap_ms:
-                        yield self._emit(user_id, cur)
-                        cur = [t, t, 0, 0]
-                    cur[1] = t
-                    cur[2] += 1
-                    cur[3] += v
+            closed, cur = _fold_rows(cur, rows, gap_ms)
+            for s in closed:
+                yield _sessions_frame(user_id, [s])
             if cur is not None:
                 self._state.update(tuple(cur))
                 if prev_timer is not None and prev_timer != cur[1] + gap_ms:
@@ -230,7 +213,7 @@ def sessionize_stream_tws(
         def handleExpiredTimer(self, key, timer_values, expired_timer_info):
             (user_id,) = key
             if self._state.exists():
-                yield self._emit(user_id, list(self._state.get()))
+                yield _sessions_frame(user_id, [list(self._state.get())])
                 self._state.clear()
 
         def close(self) -> None:

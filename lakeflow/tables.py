@@ -2000,16 +2000,14 @@ class VersionedTable:
         )
 
     def n_data_dirs(self, version: int | None = None) -> int:
-        """Manifest-only data-dir count — zero data IO (one JSON read), so
-        streaming sinks can consult it per micro-batch as the trigger for
-        incremental small-file compaction at cadence (the table twin of
-        the streamed-index ``_autocompact`` policy)."""
+        """Manifest-only data-dir count — zero data IO (one JSON read)."""
         return len(self.data_dirs(version))
 
     def data_dirs(self, version: int | None = None) -> list[str]:
         """Manifest-only list of the snapshot's data dirs (one JSON read).
-        The size-triggered auto-compaction policy stats these to size the
-        small-file tail without reading any data."""
+        The in-stream auto-compaction (``sinks.py::_autocompact_tables``)
+        counts these per micro-batch and stats them to size the small-file
+        tail without reading any data."""
         v = self.current_version() if version is None else version
         if v is None:
             return []

@@ -246,6 +246,72 @@ def test_stateful_sessionizer_survives_cross_chunk_disorder(spark, tmp_path):
     assert got == [("2024-01-01T00:00:00", n, float(n))], got
 
 
+def test_gap_sessions_null_values_match_oracle(spark, tmp_path):
+    """stream_gap_sessions against its registered oracle SQL (run unchanged
+    in DuckDB) on events with NULL values: a NULL counts as an event but
+    adds nothing to total_value, and an all-NULL session's total is NULL —
+    never the int64 cast of NaN (-9,223,372,036,854.775)."""
+    from datetime import datetime, timedelta
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakeflow.queries import ORACLES, QUERIES
+
+    base = datetime(2024, 1, 1)
+    events = [  # (minute, user_id, value)
+        (0, 1, None), (10, 1, 2.5),    # mixed session: total 2.5
+        (55, 1, None), (60, 1, None),  # all-NULL session: total NULL
+        (200, 1, 1.0),
+        (0, 2, None), (5, 2, None),    # all-NULL session
+        (120, 2, 3.0),
+        (1000, 3, 4.0),                # advances the watermark past the rest
+    ]
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    path = str(sf_dir / "events.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(events)), pa.int64()),
+                "ts": pa.array(
+                    [base + timedelta(minutes=m) for m, _, _ in events],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([u for _, u, _ in events], pa.int64()),
+                "event_type": pa.array(["view"] * len(events), pa.string()),
+                "value": pa.array([v for _, _, v in events], pa.float64()),
+                "props": pa.array(["{}"] * len(events), pa.string()),
+            }
+        ),
+        path,
+    )
+
+    def norm(rows):
+        return sorted(
+            (u, s, e, n, None if v is None else float(v)) for u, s, e, n, v in rows
+        )
+
+    df = QUERIES["stream_gap_sessions"](spark, str(sf_dir))
+    got = norm(
+        tuple(r) for r in df.select(
+            "user_id", "session_start_us", "session_end_us", "n_events", "total_value"
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    want = norm(
+        con.execute(
+            "SELECT user_id, session_start_us, session_end_us, n_events, "
+            f"total_value FROM ({ORACLES['stream_gap_sessions']})"
+        ).fetchall()
+    )
+    con.close()
+    assert got == want
+    assert [r[4] for r in want] == [2.5, None, 1.0, None, 3.0]
+
+
 def test_salted_join_matches_plain_join(spark):
     from lakeflow.operators.joins import salted_join
 
