@@ -10,7 +10,8 @@ The headline set runs three times: a cold pass, then two warm passes, each
 after a cache clear. A headline query's comparator is ``min``, the lower of
 its two warm times. Every other registered query then runs once, in sorted
 order. A run writes one JSON record to ``bench_out/``: per-query times,
-``failed``, the totals and provenance (HEAD, dirty flag, CPU count, master,
+``failed``, the totals, the classes compiled in each pass
+(``codegen_compiles``) and provenance (HEAD, dirty flag, CPU count, master,
 sf). Stdout gets one compact line with the totals. The exit status is 1 if
 any query failed.
 
@@ -211,11 +212,27 @@ def _run_set(
     return timings
 
 
+def _compiles(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _sweep(spark, sf_dir: str, headline: list[str], tail: list[str]) -> dict:
     """Cold pass, two warm passes over ``headline``, then one pass over
-    ``tail``; returns the record's ``queries``, ``failed`` and ``totals``."""
+    ``tail``; returns the record's ``queries``, ``failed``, ``totals`` and
+    ``codegen_compiles`` (classes compiled in each pass: a warm pass that
+    recompiles is timing the codegen cache, not the queries)."""
     failed: list[str] = []
-    cold = _run_set(spark, sf_dir, headline, failed)
+    compiles: dict[str, int] = {}
+
+    def run(label: str, names: list[str], **kw) -> dict[str, float]:
+        c0 = _compiles(spark)
+        timings = _run_set(spark, sf_dir, names, failed, **kw)
+        compiles[label] = _compiles(spark) - c0
+        return timings
+
+    cold = run("cold", headline)
     warm = []
     for label in ("warm", "warm_b"):
         # Clear first: two undrained passes stack the persisted
@@ -225,10 +242,10 @@ def _sweep(spark, sf_dir: str, headline: list[str], tail: list[str]) -> dict:
         spark.catalog.clearCache()
         _read_ticks(spark)
         print(f"  -- headline {label} pass --", file=sys.stderr)
-        warm.append(_run_set(spark, sf_dir, headline, failed))
+        warm.append(run(label, headline))
     if tail:
         print(f"  -- tail ({len(tail)} queries) --", file=sys.stderr)
-    rest = _run_set(spark, sf_dir, tail, failed, drain_every=25)
+    rest = run("tail", tail, drain_every=25)
 
     queries: dict[str, dict[str, float]] = {}
     for name in headline:
@@ -252,6 +269,7 @@ def _sweep(spark, sf_dir: str, headline: list[str], tail: list[str]) -> dict:
     return {
         "queries": queries,
         "failed": sorted(failed),
+        "codegen_compiles": compiles,
         "totals": {
             "cold": total(cold.values()),
             "warm": total(warm[0].values()),

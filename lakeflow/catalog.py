@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakeflow.sources.batch import read_parquet
+
 TABLES: tuple[str, ...] = (
     "region",
     "nation",
@@ -80,16 +82,27 @@ def convert_nanos_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table as a DataFrame (lazy parquet scan)."""
+    """Load one fixture table as a DataFrame (lazy parquet scan).
+
+    The read goes through ``sources.batch.read_parquet``, which remembers
+    the schema Spark inferred for the file. The memo keys on the file's
+    fingerprint (each data file's relative name, size and mtime_ns) and on
+    the session confs that change inference (nanosAsLong,
+    inferTimestampNTZ, binaryAsString, int96AsTimestamp, mergeSchema), so a
+    second load of an unchanged table runs no footer-inference job and a
+    rewritten one is inferred again. It holds the schema, not the
+    DataFrame: every call builds a fresh relation with fresh attribute ids,
+    so two loads of one table can be self-joined.
+    """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
         _enable_nanos_as_long(spark)
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = read_parquet(spark, table_path(sf_dir, name))
         if dict(df.dtypes).get("ts") == "bigint":
             df = convert_nanos_ts(df)
         return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:

@@ -33,7 +33,7 @@ from lakeflow.operators.transforms import (
 )
 from lakeflow.operators.joins import star_flatten
 from lakeflow.plans.runner import Pipeline
-from lakeflow.sources.batch import read_csv_raw
+from lakeflow.sources.batch import read_csv_raw, read_parquet, remember_parquet_schema
 
 
 def write_table(
@@ -50,6 +50,9 @@ def write_table(
     parquet row-group min/max statistics become selective on those columns —
     at 100 TB this is what makes point/range reads skip row groups inside the
     surviving partitions (SCALE.md §1 layout guidance).
+
+    An overwrite tells ``read_parquet`` the written schema, so the dependent
+    task's read runs no inference job.
     """
     if sort_by:
         df = df.sortWithinPartitions(*sort_by)
@@ -57,6 +60,7 @@ def write_table(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(path)
+    remember_parquet_schema(df, path, mode, partition_by)
     return path
 
 
@@ -106,7 +110,7 @@ def build_medallion_pipeline(
 
     @pipe.task("silver_customer", deps=["bronze_customer"])
     def silver_customer(results: dict) -> str:
-        df = spark.read.parquet(results["bronze_customer"])
+        df = read_parquet(spark, results["bronze_customer"])
         df = normalize_schema(df, SILVER_CUSTOMER_SCHEMA, keep_extra=False)
         df = trim_strings(df)
         df = nullify_nonpositive(df, ["c_acctbal"])
@@ -117,7 +121,7 @@ def build_medallion_pipeline(
 
     @pipe.task("silver_nation", deps=["bronze_nation"])
     def silver_nation(results: dict) -> str:
-        df = spark.read.parquet(results["bronze_nation"])
+        df = read_parquet(spark, results["bronze_nation"])
         df = df.select(
             F.col("n_nationkey").cast("int").alias("n_nationkey"),
             F.trim("n_name").alias("n_name"),
@@ -134,14 +138,14 @@ def build_medallion_pipeline(
         # correctly on remote warehouse URIs too (ADVICE r10: a bare
         # os.path.isdir is always False on s3a://, skipping the upsert).
         if path_exists(spark, path):
-            prev = spark.read.parquet(path)
+            prev = read_parquet(spark, path)
             df = scd1_apply(prev, df, keys=["n_nationkey"])
         return write_table(df, path + "_next", mode="overwrite")
 
     @pipe.task("gold_dim_customer", deps=["silver_customer", "silver_nation"])
     def gold_dim_customer(results: dict) -> str:
-        cust = spark.read.parquet(results["silver_customer"])
-        nat = spark.read.parquet(results["silver_nation"])
+        cust = read_parquet(spark, results["silver_customer"])
+        nat = read_parquet(spark, results["silver_nation"])
         dim = star_flatten(cust, [(nat, "c_nationkey", "n_nationkey")]).select(
             "c_custkey", "c_name", "c_acctbal", "c_mktsegment",
             F.col("n_name").alias("nation_name"),

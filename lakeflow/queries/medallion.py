@@ -22,6 +22,7 @@ from lakeflow.functions.rounding import rnd
 from lakeflow.catalog import load_table
 from lakeflow.operators.merge import scd1_apply, scd2_apply
 from lakeflow.queries import register
+from lakeflow.sources.batch import read_parquet
 
 T0 = "2026-01-01 00:00:00"
 T1 = "2026-02-01 00:00:00"
@@ -345,7 +346,7 @@ def medallion_gold_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # report statuses are identical to the sequential run (pinned in
     # tests/test_medallion_pipeline.py).
     results = pipe.run(max_workers=2)
-    return spark.read.parquet(results["gold_dim_customer"])
+    return read_parquet(spark, results["gold_dim_customer"])
 
 
 @register(
@@ -1846,10 +1847,9 @@ def mor_delete_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-side anti-join."""
     import tempfile
 
-    from lakeflow.catalog import table_path
     from lakeflow.tables import VersionedTable
 
-    orders = spark.read.parquet(table_path(sf_dir, "orders")).select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     t = VersionedTable(spark, tempfile.mkdtemp(prefix="lakeflow_mor_"))
@@ -1896,11 +1896,10 @@ def mor_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash."""
     import tempfile
 
-    from lakeflow.catalog import table_path
     from lakeflow.functions.rounding import rnd
     from lakeflow.tables import VersionedTable
 
-    cust = spark.read.parquet(table_path(sf_dir, "customer")).select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", rnd("c_acctbal", 2).alias("c_acctbal")
     )
     t = VersionedTable(spark, tempfile.mkdtemp(prefix="lakeflow_morup_"))
@@ -2240,10 +2239,9 @@ def snapshot_expiry_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from lakeflow.catalog import table_path
     from lakeflow.tables import VersionedTable
 
-    orders = spark.read.parquet(table_path(sf_dir, "orders")).select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     t = VersionedTable(spark, tempfile.mkdtemp(prefix="lakeflow_expire_"))

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lakeflow.catalog import table_path
+from lakeflow.catalog import load_table
 from lakeflow.queries import register
 from lakeflow.queries.northstar import _BM25_ORACLE as _BM25_STREAM_ORACLE
 from lakeflow.queries.relational import _CMS_HH_ORACLE as _CMS_HH_STREAM_ORACLE
@@ -68,7 +68,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     stream = events_stream(spark, sf_dir)
-    dim = spark.read.parquet(table_path(sf_dir, "customer")).select(
+    dim = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
     joined = stream.join(
@@ -447,7 +447,7 @@ def stream_table_appends(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeflow.tables import VersionedTable
 
     register_table_changes_source(spark)
-    cust = spark.read.parquet(table_path(sf_dir, "customer")).select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal"
     )
     t = VersionedTable(spark, tempfile.mkdtemp(prefix="lakeflow_tstream_"))
@@ -531,7 +531,7 @@ def stream_txn_append_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeflow.streaming.sinks import stream_append
     from lakeflow.tables import VersionedTable
 
-    orders = spark.read.parquet(table_path(sf_dir, "orders")).select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     slice_df = orders.filter(F.col("o_orderkey") <= 3000)
@@ -679,7 +679,7 @@ def stream_cdf_mor_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeflow.tables import VersionedTable
 
     register_table_changes_source(spark)
-    cust = spark.read.parquet(table_path(sf_dir, "customer")).select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", rnd("c_acctbal", 2).alias("c_acctbal")
     )
     t = VersionedTable(spark, tempfile.mkdtemp(prefix="lakeflow_cdfmor_"))
@@ -734,10 +734,10 @@ def stream_erasure_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref = CatalogRef(
         spark, TableCatalog(spark, tempfile.mkdtemp(prefix="lakeflow_ets_"))
     )
-    cust = spark.read.parquet(table_path(sf_dir, "customer")).select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name"
     )
-    orders = spark.read.parquet(table_path(sf_dir, "orders")).select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
     with ref.transaction("ingest") as txn:
@@ -823,7 +823,7 @@ def stream_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeflow.streaming.sinks import stream_dedup_ingest
     from lakeflow.tables import VersionedTable
 
-    raw = spark.read.parquet(table_path(sf_dir, "documents")).select(
+    raw = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     n = raw.agg(F.max("doc_id")).first()[0]
@@ -895,7 +895,7 @@ def stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeflow.sources.streams import file_stream
     from lakeflow.streaming.sinks import stream_index_ingest
 
-    raw = spark.read.parquet(table_path(sf_dir, "documents")).select(
+    raw = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     n = raw.agg(F.max("doc_id")).first()[0]
@@ -952,7 +952,6 @@ def stream_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from lakeflow.catalog import load_table
     from lakeflow.operators.aggregates import cms_point_estimate, read_cms_cells
     from lakeflow.sources.streams import file_stream
     from lakeflow.streaming.sinks import stream_cms_ingest
@@ -1052,7 +1051,6 @@ def stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from lakeflow.catalog import load_table
     from lakeflow.operators.aggregates import (
         histogram_partials,
         histogram_quantiles,
@@ -1390,7 +1388,6 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    from lakeflow.catalog import load_table
     from lakeflow.operators.aggregates import (
         kmv_estimate,
         kmv_minima,
@@ -1465,7 +1462,7 @@ def stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakeflow.sources.streams import file_stream
     from lakeflow.streaming.sinks import stream_weighted_sample_ingest
 
-    raw = spark.read.parquet(table_path(sf_dir, "documents")).select(
+    raw = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
     n = raw.agg(F.max("doc_id")).first()[0]
@@ -1531,7 +1528,7 @@ def _register_stream_ann() -> None:
         from lakeflow.sources.streams import file_stream
         from lakeflow.streaming.sinks import stream_ann_ingest
 
-        raw = spark.read.parquet(table_path(sf_dir, "embeddings")).select(
+        raw = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
         n = raw.agg(F.max("vec_id")).first()[0]
@@ -1594,7 +1591,7 @@ def _register_stream_ann() -> None:
         from lakeflow.sources.streams import file_stream
         from lakeflow.streaming.sinks import stream_ann_ingest
 
-        raw = spark.read.parquet(table_path(sf_dir, "embeddings")).select(
+        raw = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
         n = raw.agg(F.max("vec_id")).first()[0]
@@ -1659,7 +1656,7 @@ def _register_stream_ann() -> None:
         from lakeflow.sources.streams import file_stream
         from lakeflow.streaming.sinks import stream_ann_ingest
 
-        raw = spark.read.parquet(table_path(sf_dir, "embeddings")).select(
+        raw = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
         n = raw.agg(F.max("vec_id")).first()[0]

@@ -15,6 +15,19 @@ a real cluster rather than a 1-core demo:
 * ``shuffle_partitions`` is an explicit knob: rule of thumb is
   max(2 × total-cores, input-bytes / 128 MiB) — on a 1000-executor cluster
   reading 100 TB that is O(100k) partitions; AQE coalesces the small ones back.
+* The codegen cache holds the session's working set. Whole-stage codegen
+  pays off only when a compiled class is reused, and Spark keeps 100 classes
+  by default (``spark.sql.codegen.cache.maxEntries``). One lakeflow session
+  runs many queries: at 100 entries every pass over a set larger than that
+  recompiles it (Janino, then the JIT again). Distinct classes measured at
+  sf0.01 on local[4]: lakebench's ``batch_elt`` ops 99 (a second pass
+  recompiled 48 of them), ``llm_curation`` 86, bench.py's 55 headline
+  queries 805 (a second pass recompiled 949 classes), the whole 242-query
+  registry 3,106 (~20 MB of bytecode). 4,096 entries hold the whole
+  registry; after one sweep of it that kept 22 MB more metaspace and 22 MB
+  more JIT code than the default (248 and 149 MB), within the JVM RSS's
+  run-to-run spread (2.5 GB either way). It is a static conf: it takes
+  effect when the JVM's first session starts; ``extra_conf`` overrides it.
 """
 
 from __future__ import annotations
@@ -47,6 +60,8 @@ SCALE_DEFAULTS: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # Quieter local runs; harmless on clusters.
     "spark.ui.showConsoleProgress": "false",
+    # --- codegen: room for every registered query's classes (module doc) ---
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 

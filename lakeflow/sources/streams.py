@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from lakeflow.sources.batch import read_parquet
+
 
 def kafka_stream(
     spark: SparkSession,
@@ -85,7 +87,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _enable_nanos_as_long(spark)
     ev_path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(ev_path).schema
+    schema = read_parquet(spark, ev_path).schema
     return convert_nanos_ts(
         file_stream(spark, sf_dir, schema, glob_filter="events.parquet")
     )
