@@ -9,12 +9,12 @@ snapshot version number, so checkpoint recovery resumes exactly at the next
 unread commit and replay is snapshot-identical (manifests are immutable).
 
 Scale shape: the offset is one integer; per micro-batch the reader opens
-ONLY the data dirs the new manifest added (manifest diff — set difference of
-two dir lists, driver-side JSON), never rescans the table, and never lists
-the filesystem. Non-append commits (overwrite / replace-partitions rewrite
-history, so "what changed" is not derivable from added dirs alone) follow
-Delta's contract: fail the stream by default, or skip with
-``.option("on_change", "skip")`` (Delta's ``skipChangeCommits``).
+ONLY the data dirs the new manifest added (``VersionedTable.manifest_diff``
+of adjacent manifests — driver-side JSON), never rescans the table, and
+never lists the filesystem. Non-append commits (overwrite /
+replace-partitions rewrite history, so "what changed" is not derivable from
+added dirs alone) follow Delta's contract: fail the stream by default, or
+skip with ``.option("on_change", "skip")`` (Delta's ``skipChangeCommits``).
 
 The reader is the partition-planning form
 (:class:`TableChangesPartitionedReader`): the driver plans one input split
@@ -162,17 +162,20 @@ class TableChangesPartitionedReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         """One manifest walk over versions (start, end]: each version's
-        added dirs become splits. A version that removes dirs (overwrite /
-        replace-partitions / compaction) rewrites history, which has no
-        incremental rendering: it fails the stream or, with
-        on_change=skip, is skipped. NEW deletion vectors depend on the
-        mode. In cdf mode they become delete pre-image splits, so a MOR
-        delete streams as 'delete' rows and an update-mor commit as
-        delete+insert (Delta CDF's pre/post-image pair). In append mode
-        they make the version a change commit too: a MOR delete/update
-        removes no dirs yet changes row visibility, and emitting nothing
-        (or, for update-mor, the rewritten rows as fresh appends) would
-        corrupt downstream state — Delta's skipChangeCommits contract."""
+        :meth:`~lakeflow.tables.VersionedTable.manifest_diff` against its
+        predecessor plans the splits, one per added dir. A version that
+        removes dirs (overwrite / replace-partitions / compaction) or drops
+        deletion vectors (RESTORE past a MOR delete resurfaces rows in
+        place) rewrites history, which has no incremental rendering: it
+        fails the stream or, with on_change=skip, is skipped. NEW deletion
+        vectors depend on the mode. In cdf mode they become delete
+        pre-image splits, so a MOR delete streams as 'delete' rows and an
+        update-mor commit as delete+insert (Delta CDF's pre/post-image
+        pair). In append mode they make the version a change commit too: a
+        MOR delete/update removes no dirs yet changes row visibility, and
+        emitting nothing (or, for update-mor, the rewritten rows as fresh
+        appends) would corrupt downstream state — Delta's skipChangeCommits
+        contract."""
         lo, hi = int(start["version"]), int(end["version"])
         if hi <= lo:
             return []
@@ -180,11 +183,12 @@ class TableChangesPartitionedReader(DataSourceStreamReader):
         prev = self.table._manifest(lo) if lo >= 1 else {}
         for v in range(lo + 1, hi + 1):
             m = self.table._manifest(v)
-            prev_dirs = set(prev.get("dirs", []))
-            prev_dvs = set(prev.get("delete_vectors", []))
-            new_dvs = [d for d in m.get("delete_vectors", []) if d not in prev_dvs]
-            removed = prev_dirs - set(m["dirs"])
-            if removed or (new_dvs and self.mode == "append"):
+            diff = self.table.manifest_diff(prev, m)
+            if (
+                diff.removed
+                or diff.vanished_dvs
+                or (diff.new_dvs and self.mode == "append")
+            ):
                 if self.on_change == "fail":
                     raise RuntimeError(
                         f"version {v} of {self.table.root} rewrites history "
@@ -192,12 +196,10 @@ class TableChangesPartitionedReader(DataSourceStreamReader):
                         "on_change=skip to ignore change commits"
                     )
             else:
-                parts.extend(_DvPartition(dv, self.columns) for dv in new_dvs)
                 parts.extend(
-                    _DirPartition(d, self.columns)
-                    for d in m["dirs"]
-                    if d not in prev_dirs
+                    _DvPartition(p, self.columns) for p in diff.new_dvs
                 )
+                parts.extend(_DirPartition(d, self.columns) for d in diff.added)
             prev = m
         return parts
 

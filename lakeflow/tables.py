@@ -40,6 +40,7 @@ import re
 import shutil
 import uuid
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
@@ -54,6 +55,16 @@ class ConstraintViolationError(RuntimeError):
 class CommitConflictError(RuntimeError):
     """Another writer published the same snapshot version first (optimistic
     concurrency): re-read the current version and retry the commit."""
+
+
+class ManifestDiff(NamedTuple):
+    """What one snapshot changed relative to another (see
+    :meth:`VersionedTable.manifest_diff`); each list keeps manifest order."""
+
+    added: list[str]
+    removed: list[str]
+    new_dvs: list[str]
+    vanished_dvs: list[str]
 
 
 _HIVE_ESCAPE_RE = re.compile("%([0-9A-Fa-f]{2})")
@@ -275,6 +286,25 @@ class VersionedTable:
     def _manifest(self, version: int) -> dict:
         with open(os.path.join(self._snap_dir, f"{version:08d}.json")) as fh:
             return json.load(fh)
+
+    @staticmethod
+    def manifest_diff(old: dict, new: dict) -> ManifestDiff:
+        """The change from manifest ``old`` (``{}`` is the empty table) to
+        ``new``: data dirs added and removed, deletion vectors that appeared
+        and vanished. Every incremental reader of table history (the
+        materialized views, the table-changes stream) takes its changes
+        from here; what a change MEANS to each reader stays its own call."""
+
+        def only_in(a: dict, b: dict, key: str) -> list[str]:
+            seen = set(b.get(key, []))
+            return [x for x in a.get(key, []) if x not in seen]
+
+        return ManifestDiff(
+            added=only_in(new, old, "dirs"),
+            removed=only_in(old, new, "dirs"),
+            new_dvs=only_in(new, old, "delete_vectors"),
+            vanished_dvs=only_in(old, new, "delete_vectors"),
+        )
 
     def _has_version(self, version: int) -> bool:
         return os.path.exists(

@@ -1,51 +1,50 @@
-"""Incrementally-maintained aggregate materialized views.
+"""Incrementally-maintained materialized views over VersionedTable history.
 
-The reference's gold layer recomputes its aggregates from silver on every run
-(/root/reference/src/gold/load_to_gold.py — a full groupBy per trigger);
-Databricks DLT materialized views and Materialize/DBSP keep them fresh by
-processing only the CHANGE since last refresh. This module re-creates that
-contract on :class:`lakeflow.tables.VersionedTable` metadata alone:
+The reference's gold layer recomputes its aggregates from silver on every
+run (a full groupBy per trigger); Databricks DLT materialized views and
+Materialize/DBSP keep them fresh by processing only the CHANGE since the last
+refresh. This module re-creates that contract on
+:class:`lakeflow.tables.VersionedTable` metadata alone.
 
-- The base table's manifests say exactly which data directories a version
-  added and removed. A refresh reads ONLY those dirs — removed rows enter
-  the aggregation with sign −1, added rows with +1 — and folds the signed
-  partial into the stored view state. Refresh IO is proportional to the
-  churn between versions, never to the base table (100 TB base, MB-scale
-  refresh for an append-mostly table).
-- Aggregates are restricted to the self-inverting (abelian-group) kind —
-  COUNT(*) and fixed-point SUM — because those are the ones where
-  "subtract the removed rows" is exact. Per-row values are quantized to
-  integer units (``floor(x * scale + 0.5)``) BEFORE summation, so the
-  running totals are addition-order-free: an incremental refresh and a
-  from-scratch rebuild produce bit-identical state, which is what makes
-  the view oracle-checkable. AVG derives as sum/count at read time.
-- MIN/MAX are not group-invertible; :class:`DirtyGroupAggView` is their
-  tier — it uses the manifest diff only to find the DIRTY group keys and
-  re-aggregates exactly those groups from the current base, pruned by the
-  per-dir key stats (the same incremental/recompute line DLT draws, with
-  the recompute scoped to touched groups instead of the whole view).
-- JOINs are bilinear, not invertible-per-row; :class:`IncrementalJoinView`
-  is their tier — Z-set state (distinct joined tuple + multiplicity) folded
-  by the delta-join identity Δ(L⋈R) = ΔL⋈R_new ∪ L_old⋈ΔR, with each
-  term's static side stat-pruned to the delta's key envelope.
-  :class:`IncrementalLeftJoinView` extends it to LEFT OUTER with a
-  three-part signed state (inner / left / right-key counts) and read-time
-  null extension, so matched-status flips never generate retractions.
+Every view takes its changes from one place, :func:`_signed_side_delta`.
+``VersionedTable.manifest_diff`` of the snapshot the view last reflected and
+the current one names the data dirs added and removed and the deletion
+vectors that appeared. Added rows enter with sign +1, removed rows with −1,
+and rows hidden by a new merge-on-read vector with −1 (``_dv_preimages``).
+Refresh IO is proportional to the churn between versions, never to the base
+table. Copy-on-write DML composes for free: untouched dirs carry over
+(absent from the diff) and a rewritten dir prices as old dir −1, new dir +1;
+an overwrite degenerates to remove-all + add-all — correct, just not cheap.
 
-Copy-on-write DML composes for free: ``delete_where``/``update_where``
-carry untouched dirs over (absent from the diff) and rewrite only candidate
-dirs (old dir → −1, rewritten dir → +1), so the refresh prices the DML's
-actual churn. An overwrite commit degenerates to remove-all + add-all —
-correct, just no longer cheap.
+A REBUILD is the same delta taken from the empty table: every dir of the
+current snapshot at +1, folded onto no state. It covers the first build, a
+last-seen snapshot expired since, deletion vectors that VANISHED (RESTORE
+past a MOR delete resurfaces rows in place, which has no signed rendering)
+and a missing state table; no view has a separate rebuild path.
 
-Merge-on-read DML changes visibility through DELETION VECTORS, not dirs, so
-the refresh also diffs the manifests' vector lists: rows hidden by vectors
-added since the last refresh fold in with sign −1 (``_dv_preimages`` — the
-invertible tier) or mark their groups dirty (the recompute tier). Vectors
-that DISAPPEAR with dirs intact (RESTORE past a MOR delete) resurface rows
-in place and have no incremental rendering — that forces a rebuild, as does
-compaction (whose dir diff is full-churn anyway, so the rebuild costs the
-same scan the fold would).
+The four tiers:
+
+- :class:`IncrementalAggView` — COUNT(*) and fixed-point SUM, the
+  self-inverting (abelian-group) aggregates where "subtract the removed
+  rows" is exact. Values are quantized to integer units
+  (``floor(x * scale + 0.5)``) BEFORE summation, so the state is
+  addition-order-free: an incremental refresh and a rebuild are
+  bit-identical, which is what makes the view oracle-checkable. AVG derives
+  as sum/count at read time.
+- :class:`DirtyGroupAggView` — MIN/MAX and exact COUNT(DISTINCT), which are
+  not group-invertible: the delta only names the DIRTY group keys, and those
+  groups are re-aggregated from the current base, pruned by per-dir key
+  stats (the incremental/recompute line DLT draws, with the recompute scoped
+  to touched groups instead of the whole view).
+- :class:`IncrementalJoinView` — INNER equi-joins, which are bilinear rather
+  than invertible per row: Z-set state (distinct joined tuple +
+  multiplicity) folded by Δ(L⋈R) = ΔL⋈R_new ∪ L_old⋈ΔR.
+- :class:`IncrementalLeftJoinView` — LEFT OUTER, as a three-part signed
+  state with null extension at read time, so matched-status flips never
+  generate retractions.
+
+Each state commit carries the base version(s) it reflects as transactional
+watermarks, so state and watermark publish atomically (:class:`_View`).
 """
 
 from __future__ import annotations
@@ -53,140 +52,125 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Mapping, Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakeflow.tables import VersionedTable
 
-# App id under which view state commits record the reflected base version
-# as a transactional watermark (see ``IncrementalAggView.refreshed_version``).
+# App ids under which state commits record the reflected base versions as
+# transactional watermarks: one for a one-base view, one per side of a join
+# (both ride in ONE state commit, so a crash can never leave one side's
+# watermark behind the state).
 _MV_TXN_APP = "mv"
-
-# Per-side watermark apps for the two-base join view: both reflected
-# versions ride in ONE state commit (tables.py commit(txn=[...])) so a
-# crash can never leave one side's watermark behind the state.
 _MVJ_TXN_LEFT = "mvj_left"
 _MVJ_TXN_RIGHT = "mvj_right"
+
+
+def _signed(df: DataFrame, sign: int) -> DataFrame:
+    return df.withColumn("__sign", F.lit(sign).cast("bigint"))
 
 
 def _signed_side_delta(
     base: VersionedTable,
     v_from: int | None,
     v_to: int,
-    key_cols: Sequence[str],
+    key_cols: Sequence[str] = (),
 ) -> dict:
-    """One base table's signed row delta between two snapshots, plus the
-    metadata a delta-join prunes with.
+    """One base table's signed row delta from snapshot ``v_from`` to
+    ``v_to``, plus the metadata a delta-join prunes with.
 
-    Returns ``{"rebuild", "delta", "dirs_read", "bounds"}``:
+    Returns ``{"from_version", "delta", "dirs_read", "bounds"}``:
 
-    - ``rebuild`` — no incremental rendering exists (first build, expired
-      ``v_from`` snapshot, or deletion vectors DISAPPEARED via RESTORE /
-      compaction); the other fields are then meaningless.
-    - ``delta`` — DataFrame of base rows tagged ``__sign`` (+1 added /
-      −1 removed, incl. merge-on-read DV pre-images), or None when empty.
-    - ``dirs_read`` — dirs the delta scan actually opened.
+    - ``from_version`` — ``v_from``, or None when the window has no
+      incremental rendering (no ``v_from``, its snapshot expired, or
+      deletion vectors vanished since) and the delta is taken from the
+      empty table instead: every dir of ``v_to`` at +1, to be folded onto
+      no state.
+    - ``delta`` — DataFrame of base rows tagged ``__sign`` (+1 added, −1
+      removed or hidden by a new deletion vector), or None when empty.
+    - ``dirs_read`` — dirs the delta scan opens.
     - ``bounds`` — ``{key: (lo, hi)}`` manifest-stat envelope of the
       touched dirs on ``key_cols``; a key any touched dir lacks stats for
       is omitted (the static side then reads unpruned on it — correct,
       just not cheap). Conservative by construction: dir stats bound every
       row in the dir, hence every delta row.
     """
-    if v_from is None:
-        return {"rebuild": True, "delta": None, "dirs_read": 0, "bounds": {}}
-    try:
-        old_m = base._manifest(v_from)
-    except FileNotFoundError:
-        return {"rebuild": True, "delta": None, "dirs_read": 0, "bounds": {}}
     m_to = base._manifest(v_to)
-    if any(
-        p not in set(m_to.get("delete_vectors", []))
-        for p in old_m.get("delete_vectors", [])
-    ):
-        return {"rebuild": True, "delta": None, "dirs_read": 0, "bounds": {}}
-
-    old_set, new_set = set(old_m["dirs"]), set(m_to["dirs"])
-    added = [d for d in m_to["dirs"] if d not in old_set]
-    removed = [d for d in old_m["dirs"] if d not in new_set]
-    dv_delta, dv_ref = _dv_preimages(base, old_m, m_to, v_to)
-
+    m_from: dict = {}
+    if v_from is not None:
+        try:
+            m_from = base._manifest(v_from)
+        except FileNotFoundError:
+            pass  # expired between refreshes: the diff is gone
+    diff = base.manifest_diff(m_from, m_to)
+    if diff.vanished_dvs:
+        m_from, diff = {}, base.manifest_diff({}, m_to)
+    v_from = v_from if m_from else None
+    added = set(diff.added)
+    hidden, dv_ref = _dv_preimages(
+        base, diff.new_dvs, [d for d in m_to["dirs"] if d not in added], v_to
+    )
     parts = []
-    if added:
-        parts.append(
-            base._read_dirs(added, v_to).withColumn(
-                "__sign", F.lit(1).cast("bigint")
-            )
-        )
-    if removed:
-        parts.append(
-            base._read_dirs(removed, v_from).withColumn(
-                "__sign", F.lit(-1).cast("bigint")
-            )
-        )
-    if dv_delta is not None:
-        parts.append(dv_delta.withColumn("__sign", F.lit(-1).cast("bigint")))
-    if not parts:
-        return {"rebuild": False, "delta": None, "dirs_read": 0, "bounds": {}}
-    delta = parts[0]
-    for p in parts[1:]:
-        delta = delta.unionByName(p)
+    if diff.added:
+        parts.append(_signed(base._read_dirs(diff.added, v_to), 1))
+    if diff.removed:
+        parts.append(_signed(base._read_dirs(diff.removed, v_from), -1))
+    if hidden is not None:
+        parts.append(_signed(hidden, -1))
 
     touched = [
-        *((d, m_to) for d in added),
-        *((d, old_m) for d in removed),
+        *((d, m_to) for d in diff.added),
+        *((d, m_from) for d in diff.removed),
         *((d, m_to) for d in dv_ref),
     ]
     bounds: dict[str, tuple] = {}
     for k in key_cols:
         mms = [m.get("stats", {}).get(d, {}).get(k) for d, m in touched]
-        if all(
+        if mms and all(
             mm is not None and mm[0] is not None and mm[1] is not None
             for mm in mms
         ):
             bounds[k] = (min(mm[0] for mm in mms), max(mm[1] for mm in mms))
     return {
-        "rebuild": False,
-        "delta": delta,
-        "dirs_read": len(added) + len(removed) + len(dv_ref),
+        "from_version": v_from,
+        "delta": reduce(DataFrame.unionByName, parts) if parts else None,
+        "dirs_read": len(touched),
         "bounds": bounds,
     }
 
 
 def _dv_preimages(
     base: VersionedTable,
-    old_m: dict,
-    new_m: dict,
+    new_dvs: Sequence[str],
+    dirs: Sequence[str],
     v_to: int,
 ) -> tuple[DataFrame | None, list[str]]:
-    """Pre-image rows hidden by deletion vectors added between two snapshots.
+    """Pre-image rows that the deletion vectors ``new_dvs`` hide in
+    ``dirs``.
 
     Merge-on-read DML changes row visibility WITHOUT touching the dir list,
-    so a dirs-only manifest diff misses it entirely (a ``delete_where_mor``
-    would leave the deleted rows' contributions in the view forever). This
+    so a dirs-only diff misses it entirely (a ``delete_where_mor`` would
+    leave the deleted rows' contributions in the view forever). This
     recovers the rows the new vectors hid — the refresh folds them with
     sign −1 — by raw-reading ONLY the referenced dirs (no DV masking) and
     broadcast-semi-joining the new vectors' positions, the same split shape
     as the CDF reader's delete pre-image partitions
     (``sources/table_stream.py``).
 
-    Restricted to dirs present in BOTH snapshots: positions in dirs added
+    ``dirs`` are those present in BOTH snapshots: positions in dirs added
     within the window are already excluded by the added-dir read (which
     anti-joins the target version's vectors), and positions in removed dirs
     are subtracted wholesale by the removed-dir read.
 
     Returns ``(pre_image_rows_or_None, dirs_read)`` — the dirs raw-read to
     recover the pre-images, so callers can both count refresh IO and look
-    up those dirs' manifest key stats (the join view prunes its static-side
-    read by the delta's key envelope).
+    up those dirs' manifest key stats.
     """
-    dvs_from = old_m.get("delete_vectors", [])
-    dvs_to = new_m.get("delete_vectors", [])
-    new_dvs = [p for p in dvs_to if p not in set(dvs_from)]
-    if not new_dvs:
+    if not new_dvs or not dirs:
         return None, []
     dv = base.spark.read.parquet(*new_dvs).select("file_path", "row_index")
-    common = set(old_m["dirs"]) & set(new_m["dirs"])
     # Distinct referenced FILES are bounded by the table's file count (the
     # same metadata scale Delta's log tracks), so mapping them to owning
     # dirs is a driver-side loop over metadata, never data.
@@ -195,9 +179,7 @@ def _dv_preimages(
     # dirs lack, and a dir must not capture a sibling it is a prefix of.
     files = [r[0] for r in dv.select("file_path").distinct().collect()]
     ref = sorted(
-        d
-        for d in common
-        if any(d.rstrip("/") + "/" in f for f in files)
+        d for d in dirs if any(d.rstrip("/") + "/" in f for f in files)
     )
     if not ref:
         return None, []
@@ -214,17 +196,118 @@ def _dv_preimages(
     return hidden.select(*payload), ref
 
 
-class IncrementalAggView:
+class _View:
+    """A view's state table and the base versions it reflects.
+
+    ``_WATERMARKS`` maps each base's txn app to its key in the sidecar
+    marker. Authoritative source: the txn watermarks recorded INSIDE the
+    state commit — watermark and state land in one atomic manifest publish,
+    so a crash between them cannot leave state at ``v_to`` with the
+    watermark at ``v_from`` (which would re-fold the same delta and
+    double-count on the next refresh). The sidecar marker survives only as
+    the empty-delta fast path (nothing to commit, so no manifest to carry
+    the txn); taking the max of the two is safe because the sidecar never
+    names a version the state does not reflect.
+    """
+
+    _MARKER = "_mv_state.json"
+    _WATERMARKS = {_MV_TXN_APP: "base_version"}
+
+    def __init__(self, spark: SparkSession, path: str) -> None:
+        self.spark = spark
+        self.result = VersionedTable(spark, path)
+        self._marker_path = os.path.join(path, self._MARKER)
+
+    def _watermarks(self) -> list[int | None]:
+        seen: dict[str, list[int]] = {app: [] for app in self._WATERMARKS}
+        cur = self.result.current_version()
+        if cur is not None:
+            txns = self.result._manifest(cur).get("txns", {})
+            for app, vals in seen.items():
+                if app in txns:
+                    vals.append(int(txns[app]))
+        if os.path.exists(self._marker_path):
+            with open(self._marker_path) as fh:
+                marker = json.load(fh)
+            for app, key in self._WATERMARKS.items():
+                seen[app].append(int(marker[key]))
+        return [max(vals) if vals else None for vals in seen.values()]
+
+    def _publish(
+        self, versions: Sequence[int], state: DataFrame | None, operation: str
+    ) -> None:
+        """Replace the state (when there is one) in ONE atomic commit that
+        carries the watermarks — never a reset-then-fold pair, whose crash
+        window would leave an empty state behind a still-valid watermark;
+        a replay of the same refresh (txn version <= recorded) is skipped.
+        Then record the versions in the sidecar marker."""
+        if state is not None:
+            self.result.commit(
+                state,
+                mode="overwrite",
+                _operation=operation,
+                txn=list(zip(self._WATERMARKS, versions)),
+            )
+        tmp = self._marker_path + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(dict(zip(self._WATERMARKS.values(), versions)), fh)
+        os.replace(tmp, self._marker_path)
+
+    def read(self) -> DataFrame:
+        """Current view state."""
+        return self.result.read()
+
+
+class _OneBaseView(_View):
+    """Refresh skeleton of the views over one base table; subclasses supply
+    ``_fold``."""
+
+    base: VersionedTable
+
+    def refreshed_version(self) -> int | None:
+        """Base-table version the view state currently reflects."""
+        return self._watermarks()[0]
+
+    def refresh(self) -> dict:
+        """Fold base-table changes since the last refresh into the view.
+
+        Returns {"from_version", "to_version", "dirs_read", "dirs_total"} —
+        callers (and tests) can assert the incremental contract:
+        ``dirs_read`` counts only the dirs the refresh opened, and
+        ``from_version`` is None when the refresh rebuilt the view.
+        """
+        v_to = self.base.current_version()
+        if v_to is None:
+            raise ValueError("base table has no snapshots")
+        v_from = self.refreshed_version()
+        out = {
+            "from_version": v_from,
+            "to_version": v_to,
+            "dirs_read": 0,
+            "dirs_total": len(self.base._manifest(v_to)["dirs"]),
+        }
+        if v_from == v_to:
+            return out
+        has_state = self.result.current_version() is not None
+        d = _signed_side_delta(self.base, v_from if has_state else None, v_to)
+        out["from_version"] = d["from_version"]
+        state, operation = None, ""
+        if d["delta"] is not None:
+            prior = None if d["from_version"] is None else self.result.read()
+            state, operation, info = self._fold(d, v_to, prior)
+            out.update(info)
+        self._publish([v_to], state, operation)
+        return out
+
+
+class IncrementalAggView(_OneBaseView):
     """A keyed COUNT/SUM aggregate over a base :class:`VersionedTable`,
     refreshed from manifest diffs.
 
     ``sums`` maps output column → (source column, scale): each row
     contributes ``floor(src * scale + 0.5)`` as a BIGINT, summed per key.
     ``count_col`` is the per-key COUNT(*). State lives in its own
-    VersionedTable (itself time-travelable); the high-watermark base
-    version rides inside each state commit as a ``("mv", version)`` txn
-    watermark (atomic with the state), with a sidecar marker only as the
-    empty-delta fast path.
+    VersionedTable (itself time-travelable).
     """
 
     def __init__(
@@ -236,222 +319,59 @@ class IncrementalAggView:
         path: str,
         count_col: str = "n_rows",
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, path)
         self.base = base
         self.keys = list(keys)
         self.sums = dict(sums)
         self.count_col = count_col
-        self.result = VersionedTable(spark, path)
-        self._marker_path = os.path.join(path, "_mv_state.json")
 
-    # -- watermark ---------------------------------------------------------
-    def refreshed_version(self) -> int | None:
-        """Base-table version the view state currently reflects.
-
-        Authoritative source: the ``("mv", version)`` transactional
-        watermark recorded INSIDE the state commit — watermark and state
-        land in one atomic manifest publish, so a crash between them cannot
-        leave state at ``v_to`` with the watermark at ``v_from`` (which
-        would re-fold the same delta and double-count on the next refresh).
-        The sidecar marker survives only as the empty-delta fast path
-        (nothing to commit, so no manifest to carry the txn); taking the
-        max of the two is safe because the sidecar is written only for
-        versions whose delta was empty.
-        """
-        vals = []
-        rv = self.result.current_version()
-        if rv is not None:
-            t = self.result._manifest(rv).get("txns", {}).get(_MV_TXN_APP)
-            if t is not None:
-                vals.append(int(t))
-        if os.path.exists(self._marker_path):
-            with open(self._marker_path) as fh:
-                vals.append(int(json.load(fh)["base_version"]))
-        return max(vals) if vals else None
-
-    def _write_marker(self, base_version: int) -> None:
-        tmp = self._marker_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"base_version": base_version}, fh)
-        os.replace(tmp, self._marker_path)
-
-    # -- refresh -----------------------------------------------------------
-    def _signed_partial(self, delta: DataFrame) -> DataFrame:
-        aggs = [F.sum("__sign").cast("bigint").alias(self.count_col)]
-        for out, (src, scale) in self.sums.items():
-            unit = F.floor(F.col(src) * scale + F.lit(0.5)).cast("bigint")
-            aggs.append(F.sum(unit * F.col("__sign")).cast("bigint").alias(out))
-        return delta.groupBy(*self.keys).agg(*aggs)
-
-    def refresh(self) -> dict:
-        """Fold base-table changes since the last refresh into the view.
-
-        Returns {"from_version", "to_version", "dirs_read", "dirs_total"} —
-        callers (and tests) can assert the incremental contract:
-        ``dirs_read`` counts only the dirs the base diff touched.
-        """
-        v_to = self.base.current_version()
-        if v_to is None:
-            raise ValueError("base table has no snapshots")
-        v_from = self.refreshed_version()
-        m_to = self.base._manifest(v_to)
-        dirs_total = len(m_to["dirs"])
-        if v_from == v_to:
-            return {
-                "from_version": v_from,
-                "to_version": v_to,
-                "dirs_read": 0,
-                "dirs_total": dirs_total,
-            }
-
-        old_m: dict | None = None
-        if v_from is not None:
-            try:
-                old_m = self.base._manifest(v_from)
-            except FileNotFoundError:
-                # The snapshot this view last saw has been expired out from
-                # under us (expire_snapshots ran between refreshes). The
-                # diff is unrecoverable — fall back to a full rebuild, the
-                # same answer Delta gives a stale streaming reader.
-                v_from = None
-        if old_m is not None and any(
-            p not in set(m_to.get("delete_vectors", []))
-            for p in old_m.get("delete_vectors", [])
-        ):
-            # Deletion vectors DISAPPEARED since the last refresh (RESTORE
-            # past a MOR delete resurfaces hidden rows in place; compaction
-            # purges vectors while replacing every dir). There is no cheaper
-            # incremental rendering than re-aggregating — and for compaction
-            # the dir diff is full-churn anyway, so the rebuild costs the
-            # same scan the fold would.
-            v_from, old_m = None, None
-
-        dv_delta: DataFrame | None = None
-        dv_dirs_read = 0
-        if v_from is None:
-            added = m_to["dirs"]
-            removed: list[str] = []
-        else:
-            new_dirs = m_to["dirs"]
-            old_set, new_set = set(old_m["dirs"]), set(new_dirs)
-            added = [d for d in new_dirs if d not in old_set]
-            removed = [d for d in old_m["dirs"] if d not in new_set]
-            dv_delta, dv_ref = _dv_preimages(self.base, old_m, m_to, v_to)
-            dv_dirs_read = len(dv_ref)
-
-        parts = []
-        if added:
-            parts.append(
-                self.base._read_dirs(added, v_to).withColumn(
-                    "__sign", F.lit(1).cast("bigint")
-                )
-            )
-        if removed:
-            parts.append(
-                self.base._read_dirs(removed, v_from).withColumn(
-                    "__sign", F.lit(-1).cast("bigint")
-                )
-            )
-        if dv_delta is not None:
-            parts.append(
-                dv_delta.withColumn("__sign", F.lit(-1).cast("bigint"))
-            )
-        if not parts:
-            self._write_marker(v_to)
-            return {
-                "from_version": v_from,
-                "to_version": v_to,
-                "dirs_read": 0,
-                "dirs_total": dirs_total,
-            }
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
-        partial = self._signed_partial(delta)
-
-        if v_from is None or self.result.current_version() is None:
-            # Rebuild (or first build) REPLACES state in one atomic commit —
-            # never a reset-then-fold pair, whose crash window would leave
-            # an empty state behind a still-valid watermark.
-            merged = partial
-        else:
-            state = self.result.read()
-            val_cols = [self.count_col, *self.sums.keys()]
-            if self.keys:
-                s = state.select(
-                    *self.keys, *[F.col(c).alias(f"__s_{c}") for c in val_cols]
-                )
-                p = partial.select(
-                    *self.keys, *[F.col(c).alias(f"__p_{c}") for c in val_cols]
-                )
-                merged = s.join(p, on=self.keys, how="full_outer").select(
-                    *self.keys,
-                    *[
-                        (
-                            F.coalesce(F.col(f"__s_{c}"), F.lit(0))
-                            + F.coalesce(F.col(f"__p_{c}"), F.lit(0))
-                        )
-                        .cast("bigint")
-                        .alias(c)
-                        for c in val_cols
-                    ],
-                )
-            else:
-                # Keyless (global) view: integer sums fold by union+re-sum.
-                merged = (
-                    state.select(*val_cols)
-                    .unionByName(partial.select(*val_cols))
-                    .agg(
-                        *[
-                            F.sum(c).cast("bigint").alias(c)
-                            for c in val_cols
-                        ]
-                    )
-                )
-        # Groups whose every row was deleted leave the view entirely.
-        merged = merged.filter(F.col(self.count_col) > 0)
-        # The reflected base version rides INSIDE the commit as a txn
-        # watermark — state and watermark publish atomically, and a replay
-        # of the same refresh (txn_version <= recorded) is skipped.
-        self.result.commit(
-            merged,
-            mode="overwrite",
-            _operation="mv_refresh" if v_from is not None else "mv_build",
-            txn=(_MV_TXN_APP, v_to),
+    def _fold(
+        self, d: dict, v_to: int, prior: DataFrame | None
+    ) -> tuple[DataFrame, str, dict]:
+        """State ∪ signed delta rows, regrouped on the keys: groupBy equates
+        NULL keys (a join merge would split a NULL group in two), and the
+        same expression serves keyless views."""
+        vals = [self.count_col, *self.sums]
+        rows = d["delta"].select(
+            *self.keys,
+            F.col("__sign").alias(self.count_col),
+            *[
+                (
+                    F.floor(F.col(src) * scale + F.lit(0.5)).cast("bigint")
+                    * F.col("__sign")
+                ).alias(out)
+                for out, (src, scale) in self.sums.items()
+            ],
         )
-        self._write_marker(v_to)
-        return {
-            "from_version": v_from,
-            "to_version": v_to,
-            "dirs_read": len(added) + len(removed) + dv_dirs_read,
-            "dirs_total": dirs_total,
-        }
+        if prior is not None:
+            rows = prior.select(*self.keys, *vals).unionByName(rows)
+        state = (
+            rows.groupBy(*self.keys)
+            .agg(*[F.sum(c).cast("bigint").alias(c) for c in vals])
+            # Groups whose every row was deleted leave the view entirely.
+            .filter(F.col(self.count_col) > 0)
+        )
+        operation = "mv_build" if prior is None else "mv_refresh"
+        return state, operation, {"dirs_read": d["dirs_read"]}
 
-    def read(self) -> DataFrame:
-        """Current view state (keys, count, fixed-point sums)."""
-        return self.result.read()
 
-
-class DirtyGroupAggView:
+class DirtyGroupAggView(_OneBaseView):
     """The recompute-on-change materialized-view tier for NON-invertible
     aggregates (MIN/MAX — a delete of the group's extremum cannot be
     "subtracted" the way :class:`IncrementalAggView` folds COUNT/SUM —
     and exact COUNT(DISTINCT), where a delete may or may not remove the
     last copy of a value).
 
-    A refresh diffs the base manifests exactly like the invertible tier,
-    but uses the delta only to find the DIRTY group keys; those groups are
-    then re-aggregated from the current base and spliced over the stored
-    state (untouched groups carry over verbatim). The re-read prunes with
-    the manifest's per-dir min/max stats on the group key: only dirs whose
-    key range admits a dirty key are opened, so a base committed in
-    key-banded dirs re-reads one band per dirty band, not the table — the
-    same file-skipping the row-level DML path uses. Without key stats it
-    degrades to one filtered scan of the base, still only once per refresh.
-
-    This is precisely the incremental/recompute line DLT draws: COUNT/SUM
-    views fold deltas, MIN/MAX views recompute — but scoped to the groups
-    the delta actually touched.
+    A refresh takes the same signed delta as the invertible tier but uses
+    it only to find the DIRTY group keys; those groups are then
+    re-aggregated from the current base and spliced over the stored state
+    (untouched groups carry over verbatim). The re-read prunes with the
+    manifest's per-dir min/max stats on the group key: only dirs whose key
+    range admits a dirty key are opened, so a base committed in key-banded
+    dirs re-reads one band per dirty band, not the table — the same
+    file-skipping the row-level DML path uses. Without key stats (or with a
+    dirty NULL key, which no range admits or excludes) it degrades to one
+    filtered scan of the base, still only once per refresh.
 
     ``sums``/``mins``/``maxs`` map output column → (source column, scale);
     all values land as fixed-point BIGINTs so state is engine-replayable.
@@ -470,7 +390,7 @@ class DirtyGroupAggView:
         distincts: Mapping[str, str] | None = None,
         max_dirty_collect: int = 100_000,
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, path)
         self.base = base
         self.key = key
         self.sums = dict(sums or {})
@@ -479,14 +399,8 @@ class DirtyGroupAggView:
         self.distincts = dict(distincts or {})
         self.count_col = count_col
         self.max_dirty_collect = max_dirty_collect
-        self.result = VersionedTable(spark, path)
-        self._marker_path = os.path.join(path, "_mv_state.json")
 
-    refreshed_version = IncrementalAggView.refreshed_version
-    _write_marker = IncrementalAggView._write_marker
-    read = IncrementalAggView.read
-
-    def _aggs(self):
+    def _agg(self, rows: DataFrame) -> DataFrame:
         def unit(src: str, scale: int):
             return F.floor(F.col(src) * scale + F.lit(0.5)).cast("bigint")
 
@@ -497,132 +411,75 @@ class DirtyGroupAggView:
             aggs.append(F.min(unit(src, scale)).cast("bigint").alias(out))
         for out, (src, scale) in self.maxs.items():
             aggs.append(F.max(unit(src, scale)).cast("bigint").alias(out))
-        # Exact COUNT(DISTINCT): not group-invertible (a delete may or may
-        # not remove the last copy of a value), which is exactly why it
-        # lives in this recompute tier and not IncrementalAggView.
         for out, src in self.distincts.items():
             aggs.append(F.countDistinct(src).cast("bigint").alias(out))
-        return aggs
+        return rows.groupBy(self.key).agg(*aggs)
 
-    def refresh(self) -> dict:
-        v_to = self.base.current_version()
-        if v_to is None:
-            raise ValueError("base table has no snapshots")
-        v_from = self.refreshed_version()
-        m_to = self.base._manifest(v_to)
-        dirs_total = len(m_to["dirs"])
-        if v_from == v_to:
-            return {"from_version": v_from, "to_version": v_to,
-                    "dirs_read": 0, "dirs_total": dirs_total}
-
-        old_m: dict | None = None
-        if v_from is not None:
-            try:
-                old_m = self.base._manifest(v_from)
-            except FileNotFoundError:
-                # Last-seen snapshot expired between refreshes: the dirty
-                # set is unrecoverable, rebuild from the current base.
-                v_from = None
-        if old_m is not None and any(
-            p not in set(m_to.get("delete_vectors", []))
-            for p in old_m.get("delete_vectors", [])
-        ):
-            # Vectors disappeared (RESTORE / compaction): hidden rows
-            # resurface in place — no incremental dirty set exists.
-            v_from, old_m = None, None
-        if v_from is None:
-            # First build (or post-expiry/post-restore rebuild): full
-            # aggregate in ONE atomic commit carrying the watermark.
-            state = self.base.read().groupBy(self.key).agg(*self._aggs())
-            self.result.commit(
-                state, mode="overwrite", _operation="mv_build",
-                txn=(_MV_TXN_APP, v_to),
-            )
-            self._write_marker(v_to)
-            return {"from_version": None, "to_version": v_to,
-                    "dirs_read": dirs_total, "dirs_total": dirs_total}
-
-        old_dirs = old_m["dirs"]
-        new_dirs = m_to["dirs"]
-        old_set, new_set = set(old_dirs), set(new_dirs)
-        added = [d for d in new_dirs if d not in old_set]
-        removed = [d for d in old_dirs if d not in new_set]
-        # Merge-on-read DML adds deletion vectors without touching dirs —
-        # the rows they hid are dirty too (their group's extremum may have
-        # been the deleted row).
-        dv_delta, dv_ref = _dv_preimages(self.base, old_m, m_to, v_to)
-        dv_dirs_read = len(dv_ref)
-        if not added and not removed and dv_delta is None:
-            self._write_marker(v_to)
-            return {"from_version": v_from, "to_version": v_to,
-                    "dirs_read": 0, "dirs_total": dirs_total}
-
-        parts = []
-        if added:
-            parts.append(self.base._read_dirs(added, v_to).select(self.key))
-        if removed:
-            parts.append(self.base._read_dirs(removed, v_from).select(self.key))
-        if dv_delta is not None:
-            parts.append(dv_delta.select(self.key))
-        delta_keys = parts[0]
-        for p in parts[1:]:
-            delta_keys = delta_keys.unionByName(p)
+    def _fold(
+        self, d: dict, v_to: int, prior: DataFrame | None
+    ) -> tuple[DataFrame, str, dict]:
+        if prior is None:
+            # A rebuild's delta is the whole base at v_to, every row +1.
+            info = {"dirs_read": d["dirs_read"]}
+            return self._agg(d["delta"]), "mv_build", info
         dirty = [
             r[0]
-            for r in delta_keys.distinct().limit(self.max_dirty_collect + 1).collect()
+            for r in d["delta"]
+            .select(self.key)
+            .distinct()
+            .limit(self.max_dirty_collect + 1)
+            .collect()
         ]
         if len(dirty) > self.max_dirty_collect:
-            # Churn touched more groups than worth enumerating: rebuild.
-            state = self.base.read().groupBy(self.key).agg(*self._aggs())
-            self.result.commit(
-                state, mode="overwrite", _operation="mv_rebuild",
-                txn=(_MV_TXN_APP, v_to),
+            # Churn touched more groups than worth enumerating: recompute
+            # every group from the delta of the whole base.
+            full = _signed_side_delta(self.base, None, v_to)
+            return (
+                self._agg(full["delta"]),
+                "mv_rebuild",
+                {"dirs_read": full["dirs_read"]},
             )
-            self._write_marker(v_to)
-            return {"from_version": v_from, "to_version": v_to,
-                    "dirs_read": dirs_total, "dirs_total": dirs_total}
 
-        # Stats-pruned re-read: open only dirs whose key range admits a
-        # dirty key (dirs without stats always qualify — no false skips).
-        stats = m_to.get("stats", {})
-        if any(self.key in s for s in stats.values()):
+        m_to = self.base._manifest(v_to)
+        known = [v for v in dirty if v is not None]
+        null_dirty = len(known) < len(dirty)
+        # Null-safe membership: NOT IN over a NULL key is NULL, which would
+        # drop an untouched NULL group — or every group once NULL is dirty.
+        is_dirty = F.coalesce(F.col(self.key).isin(known), F.lit(False))
+        if null_dirty:
+            is_dirty = is_dirty | F.col(self.key).isNull()
+        if null_dirty or not any(
+            self.key in s for s in m_to.get("stats", {}).values()
+        ):
+            # No key stats prune nothing, and no range excludes a NULL key.
+            kept = list(m_to["dirs"])
+        else:
             kept = sorted(
                 {
-                    d
-                    for v in dirty
-                    for d in self.base._kept_dirs(m_to, {self.key: (v, v)})
+                    dd
+                    for v in known
+                    for dd in self.base._kept_dirs(m_to, {self.key: (v, v)})
                 }
             )
-        else:
-            kept = list(m_to["dirs"])
-        recomputed = (
-            self.base._read_dirs(kept, v_to)
-            .filter(F.col(self.key).isin(dirty))
-            .groupBy(self.key)
-            .agg(*self._aggs())
+        recomputed = self._agg(
+            self.base._read_dirs(kept, v_to).filter(is_dirty)
         )
-        carried = self.result.read().filter(~F.col(self.key).isin(dirty))
-        state = carried.unionByName(recomputed)
-        self.result.commit(
-            state, mode="overwrite", _operation="mv_refresh",
-            txn=(_MV_TXN_APP, v_to),
+        state = prior.filter(~is_dirty).unionByName(recomputed)
+        return (
+            state,
+            "mv_refresh",
+            {
+                "dirs_read": d["dirs_read"] + len(kept),
+                "dirty_groups": len(dirty),
+            },
         )
-        self._write_marker(v_to)
-        return {
-            "from_version": v_from,
-            "to_version": v_to,
-            "dirs_read": len(added) + len(removed) + len(kept) + dv_dirs_read,
-            "dirs_total": dirs_total,
-            "dirty_groups": len(dirty),
-        }
 
 
-class IncrementalJoinView:
+class IncrementalJoinView(_View):
     """Incrementally-maintained INNER equi-join view over two
     :class:`VersionedTable` bases — the delta-join of DBSP / Materialize
     (and Delta Live Tables' join-backed materialized views, which the
-    reference's gold layer recomputes from scratch per run,
-    /root/reference/src/gold/load_to_gold.py).
+    reference's gold layer recomputes from scratch per run).
 
     State is the join result as a Z-set: one row per DISTINCT joined tuple
     plus a BIGINT multiplicity ``n`` (bag semantics without storing
@@ -632,26 +489,26 @@ class IncrementalJoinView:
 
     — the ΔL⋈ΔR cross term lands exactly once because the first term joins
     against the NEW right and the second against the OLD left (which time
-    travel provides for free). Each side's signed delta comes from the same
-    manifest machinery as :class:`IncrementalAggView` (added dirs +1,
-    removed dirs −1, merge-on-read DV pre-images −1), and signs multiply
-    through the join, so copy-on-write and merge-on-read DML on EITHER base
-    fold exactly; rows whose multiplicity reaches 0 leave the view.
+    travel provides for free). Each side's signed delta comes from
+    :func:`_signed_side_delta`, and signs multiply through the join, so
+    copy-on-write and merge-on-read DML on EITHER base fold exactly; rows
+    whose multiplicity reaches 0 leave the view. A rebuild takes both
+    sides' deltas from the empty table: L_old is then empty and R_new is
+    ΔR itself, so the same identity yields L ⋈ R.
 
     The static side of each term is NOT a full scan: its read is pruned by
     the manifest's per-dir min/max stats on the join keys, bounded by the
     delta dirs' own key envelope (driver-side metadata, no data read). For
     key-banded bases an appended band therefore joins against the matching
     band of the other table — refresh IO ∝ delta × join selectivity, never
-    |L ⋈ R|. At 100 TB that is the difference between a view you refresh
-    per commit and one you rebuild nightly.
-
-    Both reflected base versions ride INSIDE each state commit as
-    transactional watermarks (``txn=[("mvj_left", vl), ("mvj_right",
-    vr)]``) — state and watermarks publish atomically, so a crash cannot
-    re-fold one side's delta. Rebuild (expired snapshot, RESTORE past a
-    MOR delete, first build) replaces state in ONE atomic commit.
+    |L ⋈ R|.
     """
+
+    _MARKER = "_mvj_state.json"
+    _WATERMARKS = {
+        _MVJ_TXN_LEFT: "left_version",
+        _MVJ_TXN_RIGHT: "right_version",
+    }
 
     def __init__(
         self,
@@ -662,41 +519,16 @@ class IncrementalJoinView:
         path: str,
         count_col: str = "n",
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, path)
         self.left = left
         self.right = right
         self.on = list(on)
         self.count_col = count_col
-        self.result = VersionedTable(spark, path)
-        self._marker_path = os.path.join(path, "_mvj_state.json")
 
-    # -- watermarks ----------------------------------------------------------
     def refreshed_versions(self) -> tuple[int | None, int | None]:
-        """(left, right) base versions the state reflects — from the txn
-        watermarks inside the state commit, with the sidecar marker (written
-        only for empty-delta refreshes, where there is no commit to carry
-        the txns) folded in by max."""
-        lv: list[int] = []
-        rv: list[int] = []
-        cur = self.result.current_version()
-        if cur is not None:
-            txns = self.result._manifest(cur).get("txns", {})
-            if _MVJ_TXN_LEFT in txns:
-                lv.append(int(txns[_MVJ_TXN_LEFT]))
-            if _MVJ_TXN_RIGHT in txns:
-                rv.append(int(txns[_MVJ_TXN_RIGHT]))
-        if os.path.exists(self._marker_path):
-            with open(self._marker_path) as fh:
-                mk = json.load(fh)
-            lv.append(int(mk["left_version"]))
-            rv.append(int(mk["right_version"]))
-        return (max(lv) if lv else None, max(rv) if rv else None)
-
-    def _write_marker(self, v_l: int, v_r: int) -> None:
-        tmp = self._marker_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"left_version": v_l, "right_version": v_r}, fh)
-        os.replace(tmp, self._marker_path)
+        """(left, right) base versions the state reflects."""
+        v_l, v_r = self._watermarks()
+        return v_l, v_r
 
     # -- internals -----------------------------------------------------------
     def _out_cols(self) -> list[str]:
@@ -725,8 +557,6 @@ class IncrementalJoinView:
         stats overlap ``bounds`` (dirs without stats always open — no false
         skips). Returns (frame, dirs_opened)."""
         m = base._manifest(version)
-        if not m["dirs"]:
-            return base.read(version=version), 0
         dirs = (
             VersionedTable._kept_dirs(m, dict(bounds)) if bounds else m["dirs"]
         )
@@ -734,10 +564,17 @@ class IncrementalJoinView:
             return base._read_dirs(m["dirs"], version).limit(0), 0
         return base._read_dirs(dirs, version), len(dirs)
 
-    def _grouped(self, joined: DataFrame, out_cols: list[str]) -> DataFrame:
-        return joined.groupBy(*out_cols).agg(
-            F.sum("__sign").cast("bigint").alias(self.count_col)
-        )
+    def _state_cols(self, out_cols: list[str]) -> list[str]:
+        return [*out_cols, self.count_col]
+
+    def _signed_rows(
+        self, joined: DataFrame | None, dl: dict, dr: dict, out_cols: list[str]
+    ) -> list[DataFrame]:
+        """The refresh's signed state rows (multiplicity column = sign): the
+        join delta itself."""
+        if joined is None:
+            return []
+        return [joined.select(*out_cols, F.col("__sign").alias(self.count_col))]
 
     # -- refresh ---------------------------------------------------------
     def refresh(self) -> dict:
@@ -752,80 +589,66 @@ class IncrementalJoinView:
         if v_lt is None or v_rt is None:
             raise ValueError("a base table has no snapshots")
         v_lf, v_rf = self.refreshed_versions()
-        dirs_total = len(self.left._manifest(v_lt)["dirs"]) + len(
-            self.right._manifest(v_rt)["dirs"]
-        )
         out = {
             "from_versions": (v_lf, v_rf),
             "to_versions": (v_lt, v_rt),
-            "dirs_total": dirs_total,
+            "dirs_read": 0,
+            "dirs_total": len(self.left._manifest(v_lt)["dirs"])
+            + len(self.right._manifest(v_rt)["dirs"]),
         }
-        if v_lf == v_lt and v_rf == v_rt:
-            return {**out, "dirs_read": 0}
+        if (v_lf, v_rf) == (v_lt, v_rt):
+            return out
         out_cols = self._out_cols()
 
-        dl = _signed_side_delta(self.left, v_lf, v_lt, self.on)
-        dr = _signed_side_delta(self.right, v_rf, v_rt, self.on)
-        if (
-            dl["rebuild"]
-            or dr["rebuild"]
-            or self.result.current_version() is None
-        ):
-            # One atomic replace — never a reset-then-fold pair.
-            full = (
-                self.left.read(version=v_lt)
-                .join(self.right.read(version=v_rt), on=self.on)
-                .withColumn("__sign", F.lit(1).cast("bigint"))
-            )
-            self.result.commit(
-                self._grouped(full, out_cols),
-                mode="overwrite",
-                _operation="mvj_build",
-                txn=[(_MVJ_TXN_LEFT, v_lt), (_MVJ_TXN_RIGHT, v_rt)],
-            )
-            self._write_marker(v_lt, v_rt)
-            return {**out, "dirs_read": dirs_total}
-
-        parts = []
+        fresh = self.result.current_version() is None
+        dl = _signed_side_delta(
+            self.left, None if fresh else v_lf, v_lt, self.on
+        )
+        dr = _signed_side_delta(
+            self.right, None if fresh else v_rf, v_rt, self.on
+        )
+        rebuild = dl["from_version"] is None or dr["from_version"] is None
+        if rebuild:
+            # A side without an incremental rendering rebuilds both sides.
+            dl = _signed_side_delta(self.left, None, v_lt, self.on)
+            dr = _signed_side_delta(self.right, None, v_rt, self.on)
         dirs_read = dl["dirs_read"] + dr["dirs_read"]
+        terms = []
         if dl["delta"] is not None:
-            r_new, opened = self._pruned_read(self.right, v_rt, dl["bounds"])
-            dirs_read += opened
-            parts.append(dl["delta"].join(r_new, on=self.on))
-        if dr["delta"] is not None:
+            if rebuild:
+                r_new = dr["delta"].drop("__sign")
+            else:
+                r_new, opened = self._pruned_read(
+                    self.right, v_rt, dl["bounds"]
+                )
+                dirs_read += opened
+            terms.append(dl["delta"].join(r_new, on=self.on))
+        if dr["delta"] is not None and not rebuild:
             l_old, opened = self._pruned_read(self.left, v_lf, dr["bounds"])
             dirs_read += opened
-            parts.append(l_old.join(dr["delta"], on=self.on))
+            terms.append(l_old.join(dr["delta"], on=self.on))
+        joined = reduce(DataFrame.unionByName, terms) if terms else None
+        parts = self._signed_rows(joined, dl, dr, out_cols)
         if not parts:
-            self._write_marker(v_lt, v_rt)
-            return {**out, "dirs_read": 0}
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
-        partial = self._grouped(delta, out_cols)
-        # Merge by union + re-group (not full_outer join): groupBy equates
-        # NULL payload values, so a NULL-bearing tuple cannot split into
-        # two state rows the way a non-null-safe join merge would.
-        merged = (
-            self.result.read()
-            .select(*out_cols, self.count_col)
-            .unionByName(partial)
-            .groupBy(*out_cols)
+            self._publish([v_lt, v_rt], None, "")
+            return out
+
+        cols = self._state_cols(out_cols)
+        rows = reduce(DataFrame.unionByName, parts)
+        if not rebuild:
+            rows = self.result.read().select(*cols).unionByName(rows)
+        # Merge by union + re-group (not a join): groupBy equates NULL
+        # payload values, so a NULL-bearing tuple cannot split in two.
+        state = (
+            rows.groupBy(*[c for c in cols if c != self.count_col])
             .agg(F.sum(self.count_col).cast("bigint").alias(self.count_col))
             .filter(F.col(self.count_col) > 0)
+            .select(*cols)
         )
-        self.result.commit(
-            merged,
-            mode="overwrite",
-            _operation="mvj_refresh",
-            txn=[(_MVJ_TXN_LEFT, v_lt), (_MVJ_TXN_RIGHT, v_rt)],
+        self._publish(
+            [v_lt, v_rt], state, "mvj_build" if rebuild else "mvj_refresh"
         )
-        self._write_marker(v_lt, v_rt)
         return {**out, "dirs_read": dirs_read}
-
-    def read(self) -> DataFrame:
-        """Current state: joined tuples + multiplicity ``n``."""
-        return self.result.read()
 
     def read_rows(self) -> DataFrame:
         """State re-expanded to bag semantics (each tuple repeated ``n``
@@ -861,139 +684,30 @@ class IncrementalLeftJoinView(IncrementalJoinView):
 
     _PART = "__part"
 
-    def _full_schema_cols(self, out_cols: list[str]) -> list[str]:
+    def _state_cols(self, out_cols: list[str]) -> list[str]:
         return [*out_cols, self.count_col, self._PART]
 
-    def _left_cols(self) -> list[str]:
-        return [f.name for f in self.left.schema().fields]
-
-    def _as_part(
-        self, df: DataFrame, out_cols: list[str], part: str
-    ) -> DataFrame:
-        """Project a partial (missing columns NULL-filled) into the unified
-        state schema, typed off the joined frame's column set."""
-        sel = []
-        for c in out_cols:
-            sel.append(F.col(c) if c in df.columns else F.lit(None).alias(c))
-        return df.select(
-            *sel, F.col(self.count_col), F.lit(part).alias(self._PART)
-        )
-
-    def refresh(self) -> dict:
-        v_lt = self.left.current_version()
-        v_rt = self.right.current_version()
-        if v_lt is None or v_rt is None:
-            raise ValueError("a base table has no snapshots")
-        v_lf, v_rf = self.refreshed_versions()
-        dirs_total = len(self.left._manifest(v_lt)["dirs"]) + len(
-            self.right._manifest(v_rt)["dirs"]
-        )
-        out = {
-            "from_versions": (v_lf, v_rf),
-            "to_versions": (v_lt, v_rt),
-            "dirs_total": dirs_total,
-        }
-        if v_lf == v_lt and v_rf == v_rt:
-            return {**out, "dirs_read": 0}
-        out_cols = self._out_cols()
-
-        dl = _signed_side_delta(self.left, v_lf, v_lt, self.on)
-        dr = _signed_side_delta(self.right, v_rf, v_rt, self.on)
-        if (
-            dl["rebuild"]
-            or dr["rebuild"]
-            or self.result.current_version() is None
-        ):
-            lt = self.left.read(version=v_lt).withColumn(
-                "__sign", F.lit(1).cast("bigint")
+    def _signed_rows(
+        self, joined: DataFrame | None, dl: dict, dr: dict, out_cols: list[str]
+    ) -> list[DataFrame]:
+        """The three parts' signed rows, each projected (missing columns
+        NULL-filled) into the unified state schema."""
+        rkeys = dr["delta"]
+        if rkeys is not None:
+            rkeys = rkeys.select(*self.on, "__sign")
+        parts = [(joined, "inner"), (dl["delta"], "left"), (rkeys, "rcount")]
+        return [
+            df.select(
+                *[
+                    F.col(c) if c in df.columns else F.lit(None).alias(c)
+                    for c in out_cols
+                ],
+                F.col("__sign").alias(self.count_col),
+                F.lit(part).alias(self._PART),
             )
-            rt = self.right.read(version=v_rt).withColumn(
-                "__sign", F.lit(1).cast("bigint")
-            )
-            inner = self._grouped(lt.drop("__sign").join(rt, on=self.on), out_cols)
-            left = lt.groupBy(*self._left_cols()).agg(
-                F.sum("__sign").cast("bigint").alias(self.count_col)
-            )
-            rcount = rt.groupBy(*self.on).agg(
-                F.sum("__sign").cast("bigint").alias(self.count_col)
-            )
-            state = (
-                self._as_part(inner, out_cols, "inner")
-                .unionByName(self._as_part(left, out_cols, "left"))
-                .unionByName(self._as_part(rcount, out_cols, "rcount"))
-            )
-            self.result.commit(
-                state,
-                mode="overwrite",
-                _operation="mvj_build",
-                txn=[(_MVJ_TXN_LEFT, v_lt), (_MVJ_TXN_RIGHT, v_rt)],
-            )
-            self._write_marker(v_lt, v_rt)
-            return {**out, "dirs_read": dirs_total}
-
-        parts = []
-        dirs_read = dl["dirs_read"] + dr["dirs_read"]
-        if dl["delta"] is not None:
-            r_new, opened = self._pruned_read(self.right, v_rt, dl["bounds"])
-            dirs_read += opened
-            parts.append(
-                self._as_part(
-                    self._grouped(dl["delta"].join(r_new, on=self.on), out_cols),
-                    out_cols,
-                    "inner",
-                )
-            )
-            parts.append(
-                self._as_part(
-                    dl["delta"]
-                    .groupBy(*self._left_cols())
-                    .agg(F.sum("__sign").cast("bigint").alias(self.count_col)),
-                    out_cols,
-                    "left",
-                )
-            )
-        if dr["delta"] is not None:
-            l_old, opened = self._pruned_read(self.left, v_lf, dr["bounds"])
-            dirs_read += opened
-            parts.append(
-                self._as_part(
-                    self._grouped(l_old.join(dr["delta"], on=self.on), out_cols),
-                    out_cols,
-                    "inner",
-                )
-            )
-            parts.append(
-                self._as_part(
-                    dr["delta"]
-                    .groupBy(*self.on)
-                    .agg(F.sum("__sign").cast("bigint").alias(self.count_col)),
-                    out_cols,
-                    "rcount",
-                )
-            )
-        if not parts:
-            self._write_marker(v_lt, v_rt)
-            return {**out, "dirs_read": 0}
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
-        merged = (
-            self.result.read()
-            .select(*self._full_schema_cols(out_cols))
-            .unionByName(delta)
-            .groupBy(*out_cols, self._PART)
-            .agg(F.sum(self.count_col).cast("bigint").alias(self.count_col))
-            .filter(F.col(self.count_col) != 0)
-            .select(*self._full_schema_cols(out_cols))
-        )
-        self.result.commit(
-            merged,
-            mode="overwrite",
-            _operation="mvj_refresh",
-            txn=[(_MVJ_TXN_LEFT, v_lt), (_MVJ_TXN_RIGHT, v_rt)],
-        )
-        self._write_marker(v_lt, v_rt)
-        return {**out, "dirs_read": dirs_read}
+            for df, part in parts
+            if df is not None
+        ]
 
     def read(self) -> DataFrame:
         """The LEFT OUTER join result as (tuple, multiplicity): inner part

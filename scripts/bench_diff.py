@@ -3,16 +3,19 @@
 
 Compares each query's comparator time: ``min`` (the lower of the two warm
 passes) for the headline set, the single ``cold`` time for the tail. Prints
-the top regressions with ratios, plus the names explained by registry
-growth or retirement. Reads the two records only; it measures nothing.
+the top regressions and the top improvements with ratios, the median
+``min`` ratio over the headline queries both records share, plus the names
+explained by registry growth or retirement. Reads the two records only; it
+measures nothing.
 
 Usage: python scripts/bench_diff.py PREV.json CUR.json [N]
-(default N=5 top regressions)
+(default N=5 top regressions and improvements)
 """
 
 from __future__ import annotations
 
 import json
+import statistics
 import sys
 
 
@@ -51,10 +54,24 @@ def diff_table(prev: dict, cur: dict, top_n: int = 5) -> str:
         # the inf guard above, printed as inf rather than crashing.
         return f"{cq[n] / pq[n]:.2f}" if pq[n] else "inf"
 
-    lines += [
-        f"  {n:40s} {pq[n]:7.3f} -> {cq[n]:7.3f}  x{ratio(n)}"
-        for n in ranked[:top_n]
+    def row(n: str) -> str:
+        return f"  {n:40s} {pq[n]:7.3f} -> {cq[n]:7.3f}  x{ratio(n)}"
+
+    lines += [row(n) for n in ranked[:top_n]]
+    faster = [n for n in reversed(ranked) if cq[n] < pq[n]]
+    lines.append(f"top {top_n} per-query improvements (shared, >=0.2s):")
+    lines += [row(n) for n in faster[:top_n]] or ["  none"]
+    # A speedup spread thin over the headline set shows in no top-N row;
+    # its median min ratio says how the set moved as a whole.
+    heads = [
+        cur["queries"][n]["min"] / prev["queries"][n]["min"]
+        for n in sorted(shared)
+        if prev["queries"][n].get("min") and "min" in cur["queries"][n]
     ]
+    lines.append(
+        f"headline min ratio, median over {len(heads)} shared: "
+        + (f"x{statistics.median(heads):.2f}" if heads else "-")
+    )
     # BASELINE.md §r13 sampling floor: single-sample ratios below x1.8 are
     # within the observed same-code spread; flag only what clears it.
     hot = [n for n in ranked if not pq[n] or cq[n] / pq[n] >= 1.8]

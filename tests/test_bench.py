@@ -93,3 +93,46 @@ def test_bench_diff_full_sweep_table():
     assert any(l.strip().startswith("a ") and "x1.10" in l for l in lines)
     # x1.8 floor: only b clears it.
     assert "above the x1.8 single-sample significance floor: b" in out
+    # Nothing got faster here; a's warm min is the one shared headline.
+    assert "improvements (shared, >=0.2s):\n  none" in out
+    assert "headline min ratio, median over 1 shared: x1.10" in out
+
+    # A change that speeds the headline set up shows as improvements (the
+    # largest cut first) and as a median min ratio below 1, while an
+    # untouched tail query still tops the regressions.
+    fast = rec("ccccccc", {
+        "h1": {"cold": 2.0, "warm": 1.0, "warm_b": 0.9, "min": 0.9},
+        "h2": {"cold": 4.0, "warm": 2.0, "warm_b": 2.2, "min": 2.0},
+        "h3": {"cold": 1.0, "warm": 0.5, "warm_b": 0.6, "min": 0.5},
+        "t": {"cold": 1.0},
+    })
+    faster = rec("ddddddd", {
+        "h1": {"cold": 1.2, "warm": 0.5, "warm_b": 0.45, "min": 0.45},
+        "h2": {"cold": 2.0, "warm": 0.5, "warm_b": 0.6, "min": 0.5},
+        "h3": {"cold": 0.8, "warm": 0.4, "warm_b": 0.4, "min": 0.4},
+        "t": {"cold": 1.3},
+    })
+    out = bench_diff.diff_table(fast, faster, top_n=2)
+    lines = out.splitlines()
+    at = lines.index("top 2 per-query improvements (shared, >=0.2s):")
+    assert lines[at + 1].split()[0] == "h2" and "x0.25" in lines[at + 1]
+    assert lines[at + 2].split()[0] == "h1" and "x0.50" in lines[at + 2]
+    assert lines[at + 3].startswith("headline min ratio")
+    assert "headline min ratio, median over 3 shared: x0.50" in out
+    regressions = lines.index("top 2 per-query regressions (shared, >=0.2s):")
+    assert lines[regressions + 1].split()[0] == "t"
+
+
+def test_gen_scale_fixtures_rejects_mult_past_z():
+    """Replica codes run aaa..zzz, so --mult stops at 27: a larger value
+    is an argparse error before any fixture is read or written."""
+    import subprocess
+
+    script = os.path.join(_REPO, "scripts", "gen_scale_fixtures.py")
+    for mult in ("0", "28"):
+        proc = subprocess.run(
+            [sys.executable, script, "--src", "unused", "--mult", mult],
+            capture_output=True, text=True, timeout=60,
+        )
+        assert proc.returncode == 2, proc.stderr
+        assert "--mult must be in 1..27" in proc.stderr

@@ -3632,3 +3632,90 @@ def test_table_changes_stream_reads_int96_timestamps(spark, tmp_path):
     )
     name, _ = run_to_memory(stream)
     assert sorted(spark.table(name).collect()) == sorted(t.read().collect())
+
+
+def test_manifest_diff_names_each_commits_change(spark, tmp_path):
+    """The one manifest diff every incremental reader shares: added and
+    removed dirs, new and vanished deletion vectors, for each kind of
+    commit."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "k long, v string")
+
+    def diff(a, b):
+        return t.manifest_diff(t._manifest(a) if a else {}, t._manifest(b))
+
+    def dirs(v):
+        return t._manifest(v)["dirs"]
+
+    def dvs(v):
+        return t._manifest(v).get("delete_vectors", [])
+
+    v1 = t.commit(frame([(1, "a"), (2, "b")]))
+    assert diff(None, v1) == (dirs(v1), [], [], [])
+    v2 = t.commit(frame([(3, "c")]))
+    assert diff(v1, v2) == (dirs(v2)[1:], [], [], [])
+    assert len(dirs(v2)) == 2
+    v3 = t.delete_where_mor("k = 1")
+    assert diff(v2, v3) == ([], [], dvs(v3), [])
+    assert len(dvs(v3)) == 1
+    v4 = t.update_where_mor("k = 2", {"v": "'B'"})
+    assert diff(v3, v4) == (dirs(v4)[2:], [], dvs(v4)[1:], [])
+    assert len(dirs(v4)) == 3 and len(dvs(v4)) == 2
+    v5 = t.rollback(v2)
+    assert diff(v4, v5) == ([], dirs(v4)[2:], [], dvs(v4))
+    assert diff(v2, v5) == ([], [], [], [])
+    v6 = t.delete_where_mor("k = 3")
+    v7 = t.compact()
+    assert diff(v6, v7) == (dirs(v7), dirs(v6), [], dvs(v6))
+    assert len(dirs(v7)) == 1 and dvs(v7) == []
+    v8 = t.commit(frame([(9, "z")]), mode="overwrite")
+    assert diff(v7, v8) == (dirs(v8), dirs(v7), [], [])
+    assert diff(v8, v8) == ([], [], [], [])
+
+
+def test_table_changes_stream_treats_vanished_vectors_as_change(
+    spark, tmp_path
+):
+    """RESTORE past a MOR delete drops a deletion vector and resurfaces its
+    rows in place; no added dir carries them, so neither mode can render
+    the commit. It fails the stream by default and is skipped under
+    on_change=skip, like any other change commit."""
+    import tempfile
+
+    import pytest
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from lakeflow.sources.table_stream import register_table_changes_source
+
+    register_table_changes_source(spark)
+    t = VersionedTable(spark, str(tmp_path / "tbl"))
+    schema = "k long, v string"
+    v1 = t.commit(spark.createDataFrame([(1, "a"), (2, "b")], schema))
+    v2 = t.delete_where_mor("k = 1")
+    t.rollback(v1)
+    t.commit(spark.createDataFrame([(3, "c")], schema))
+
+    def run(on_change: str, name: str):
+        return (
+            spark.readStream.format("lakeflow_table_changes")
+            .option("path", t.root)
+            .option("mode", "cdf")
+            .option("start_version", str(v2))
+            .option("on_change", on_change)
+            .load()
+            .writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", tempfile.mkdtemp())
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    q = run("fail", "vanished_fail")
+    with pytest.raises(StreamingQueryException, match="rewrites history"):
+        q.awaitTermination(120)
+    q = run("skip", "vanished_skip")
+    q.awaitTermination(120)
+    got = spark.table("vanished_skip").collect()
+    assert {(r.k, r.v, r._change_type) for r in got} == {(3, "c", "insert")}

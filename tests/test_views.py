@@ -676,3 +676,112 @@ def test_left_join_view_incremental_equals_rebuild(spark, tmp_path):
     fresh = _ljview(spark, l, r, tmp_path, "lj_full")
     fresh.refresh()
     assert _ljstate(v) == _ljstate(fresh) == _full_left_join_state(l, r)
+
+
+# ---------------------------------------------------------------------------
+# NULL group keys and the rebuild paths of the join views
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("key_stats", [False, True])
+def test_null_group_keys_incremental_equals_rebuild(spark, tmp_path, key_stats):
+    """A NULL group key is one group in SQL. Both aggregate tiers must keep
+    it as one group through refreshes that leave it untouched, add to it and
+    delete from it, with and without per-dir stats on the key, and land on
+    the state a fresh build of the same base version holds."""
+    from lakeflow.views import DirtyGroupAggView
+
+    schema = "k string, v double"
+    stats = {"stats_cols": ["k"]} if key_stats else {}
+    t = VersionedTable(spark, str(tmp_path / "base"))
+    t.commit(spark.createDataFrame([(None, 2.0), ("a", 1.0)], schema), **stats)
+    t.commit(spark.createDataFrame([("b", 4.0)], schema), **stats)
+
+    def views(tag):
+        return [
+            IncrementalAggView(
+                spark, t, keys=["k"], sums={"s": ("v", 100)},
+                path=str(tmp_path / f"agg_{tag}"), count_col="n",
+            ),
+            DirtyGroupAggView(
+                spark, t, key="k", path=str(tmp_path / f"dirty_{tag}"),
+                count_col="n", sums={"s": ("v", 100)},
+                maxs={"mx": ("v", 100)},
+            ),
+        ]
+
+    def rows(view):
+        return sorted((tuple(r) for r in view.read().collect()), key=repr)
+
+    inc = views("inc")
+    steps = [
+        lambda: t.commit(spark.createDataFrame([("a", 5.0)], schema), **stats),
+        lambda: t.commit(spark.createDataFrame([(None, 3.0)], schema), **stats),
+        lambda: t.delete_where("k IS NULL AND v > 2.5"),
+    ]
+    for step, change in enumerate([lambda: None, *steps]):
+        change()
+        for view in inc:
+            view.refresh()
+        fresh = views(f"fresh{step}")
+        for view, rebuilt in zip(inc, fresh):
+            rebuilt.refresh()
+            assert rows(view) == rows(rebuilt), (step, type(view).__name__)
+            assert sum(r[0] is None for r in rows(view)) == 1, step
+    agg, dirty = inc
+    assert [r for r in rows(agg) if r[0] is None] == [(None, 1, 200)]
+    assert [r for r in rows(dirty) if r[0] is None] == [(None, 1, 200, 200)]
+
+
+_JOIN_KINDS = pytest.mark.parametrize(
+    "make, state, full",
+    [(_jview, _jstate, _full_join_state),
+     (_ljview, _ljstate, _full_left_join_state)],
+    ids=["inner", "left"],
+)
+
+
+@_JOIN_KINDS
+def test_join_views_rebuild_after_base_snapshot_expiry(
+    spark, tmp_path, make, state, full
+):
+    """Expiring the right-side snapshot a join view last saw leaves no diff
+    to fold: the refresh rebuilds as the delta from the empty table, reading
+    every dir once, and the next refresh folds incrementally again."""
+    l, r = _mk_join_bases(spark, tmp_path)
+    v = make(spark, l, r, tmp_path)
+    v.refresh()
+    r.commit(spark.createDataFrame([(3, 30.0)], "k bigint, rv double"))
+    l.commit(spark.createDataFrame([(5, "q")], "k bigint, lv string"))
+    r.commit(spark.createDataFrame([(2, 22.0)], "k bigint, rv double"))
+    r.expire_snapshots(keep_last=1)
+    info = v.refresh()
+    assert info["dirs_read"] == info["dirs_total"] == 5
+    assert state(v) == full(l, r)
+
+    l.commit(spark.createDataFrame([(2, "y2")], "k bigint, lv string"))
+    info = v.refresh()
+    assert info["dirs_read"] < info["dirs_total"]
+    assert state(v) == full(l, r)
+
+
+@_JOIN_KINDS
+def test_join_views_restore_past_mor_delete_reads_every_dir(
+    spark, tmp_path, make, state, full
+):
+    """RESTORE past a MOR delete drops deletion vectors while the dirs stay:
+    the resurfaced right row flips k=2 back to matched, and the rebuild
+    reads each base dir exactly once."""
+    l, r = _mk_join_bases(spark, tmp_path)
+    v = make(spark, l, r, tmp_path)
+    v.refresh()
+    kept = r.current_version()
+    r.delete_where_mor("rv = 20.0")
+    v.refresh()
+    assert state(v) == full(l, r)
+    assert (2, "y", 20.0) not in state(v)
+    r.rollback(kept)
+    info = v.refresh()
+    assert info["dirs_read"] == info["dirs_total"] == 2
+    assert state(v) == full(l, r)
+    assert (2, "y", 20.0) in state(v)
