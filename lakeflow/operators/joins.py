@@ -442,20 +442,13 @@ def salted_join(
 
 def _pruned_bytes(table, between: Mapping[str, tuple] | None) -> int:
     """Data bytes of the dirs that survive zone-map pruning for ``between``
-    — a driver-side manifest walk + file-size glob, no data IO. This is the
+    — the scan planner plus file sizes, no data IO. This is the
     size that actually reaches the join, which is what a broadcast decision
     must be made on (a 10 TB table pruned to one partition broadcasts
     fine; Spark's static planner only sees the unpruned relation size)."""
-    import glob as _glob
-    import os as _os
+    from lakeflow.tables import _dir_bytes, plan_dirs
 
-    m = table._manifest(table.current_version())
-    dirs = table._kept_dirs(m, dict(between or {}))
-    return sum(
-        _os.path.getsize(f)
-        for d in dirs
-        for f in _glob.glob(_os.path.join(d, "**", "*.parquet"), recursive=True)
-    )
+    return sum(_dir_bytes(d) for d in plan_dirs(table._snapshot(), between=between))
 
 
 def _broadcast_side(

@@ -105,27 +105,30 @@ class Pipeline:
         tasks that thread DataFrames are fine as long as their consumers
         rerun with them (a consumer of a skipped task re-reads the table).
 
-        ``max_workers`` > 1 runs INDEPENDENT ready tasks concurrently from
-        a bounded thread pool (guide §2.6: Spark happily schedules several
-        jobs at once inside one application — actions are only sequential
-        because driver code calls them sequentially, and FIFO scheduling
+        One scheduler runs every task on a bounded thread pool: it keeps
+        at most ``max_workers`` tasks in flight and submits ready tasks
+        (every dep SUCCEEDED) in topological order, so ``max_workers=1``
+        is the strictly sequential run, and above it INDEPENDENT tasks
+        overlap (guide §2.6: Spark happily schedules several jobs at once
+        inside one application — actions are only sequential because
+        driver code calls them sequentially, and FIFO scheduling
         back-fills executors freed by one job's straggler tail with the
-        next job's tasks). Semantics preserved exactly: the dependency
-        order (a task starts only after every dep SUCCEEDED), per-task
-        ``retries``, ``resume_from`` skipping, and ``skip_downstream``
-        propagation are identical to the sequential path; ``results`` and
-        every terminal ``report`` status are the same as a
-        ``max_workers=1`` run. Two deliberate deltas, both pinned by
-        tests: (a) each concurrent task receives a SNAPSHOT of the results
-        available at its submit time (its transitive deps are always in
-        it; a live dict could change size under a task that iterates it),
-        and (b) with ``on_error="raise"`` tasks already in flight when
-        another task fails run to completion (their report rows say what
-        really executed) and the raised failure is the earliest-failed
-        task in topological order, so the error is deterministic however
-        the threads interleave. ``max_workers=1`` takes the original
-        strictly-sequential loop.
+        next job's tasks). Per-task ``retries``, ``resume_from`` skipping
+        and ``skip_downstream`` propagation hold at every width, and
+        ``results`` and every terminal ``report`` status are the same.
+        Each task's target inherits the caller's Spark local properties
+        and tags (``inheritable_thread_target``), so a job group or tag set
+        before ``run`` covers every task's jobs. Each task receives a
+        SNAPSHOT of the results available at its submit time (its
+        transitive deps are always in it; a live dict could change size
+        under a task that iterates it). With ``on_error="raise"`` nothing
+        starts after a failure; tasks already in flight run to completion
+        (their report rows say what really executed), and the raised
+        failure is the earliest-failed task in topological order, so the
+        error is deterministic however the threads interleave.
         """
+        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+
         if on_error not in ("raise", "skip_downstream"):
             raise ValueError(
                 f"on_error must be raise|skip_downstream, got {on_error!r}"
@@ -140,128 +143,51 @@ class Pipeline:
         ctx = dict(context or {})
         results: dict[str, Any] = {}
         self.report: dict[str, dict[str, Any]] = {}
-        if max_workers > 1:
-            return self._run_parallel(
-                ctx, results, done_before, on_error, max_workers
-            )
-        dead: set[str] = set()
-        for name in self.topo_order():
-            task = self._tasks[name]
-            if any(d in dead for d in task.deps):
-                self.report[name] = {"status": "upstream_failed", "attempts": 0}
-                dead.add(name)
-                continue
-            if name in done_before:
-                self.report[name] = {"status": "skipped_done", "attempts": 0}
-                continue
-            attempts = 0
-            while True:
-                attempts += 1
-                try:
-                    results[name] = task.fn(results, **ctx)
-                    self.report[name] = {
-                        "status": "success",
-                        "attempts": attempts,
-                    }
-                    break
-                except Exception as exc:
-                    if attempts <= task.retries:
-                        continue
-                    self.report[name] = {
-                        "status": "failed",
-                        "attempts": attempts,
-                    }
-                    if on_error == "raise":
-                        raise TaskFailureError(name, attempts, exc) from exc
-                    dead.add(name)
-                    break
-        return results
-
-    def _run_parallel(
-        self,
-        ctx: dict[str, Any],
-        results: dict[str, Any],
-        done_before: set[str],
-        on_error: str,
-        max_workers: int,
-    ) -> dict[str, Any]:
-        """Bounded-pool execution of :meth:`run` (``max_workers`` > 1).
-
-        Scheduling is event-driven: every task whose deps have all
-        succeeded is submitted (in topological order, so FIFO job
-        scheduling back-fills deterministically); each completion may
-        unlock more. Retries stay inside the worker so a flaky task never
-        blocks an independent branch. All bookkeeping (report rows,
-        ``results`` inserts, upstream_failed propagation) happens on the
-        calling thread — workers only run ``task.fn`` on a results
-        SNAPSHOT taken at submit time.
-        """
-        from concurrent.futures import (
-            FIRST_COMPLETED,
-            Future,
-            ThreadPoolExecutor,
-            wait,
-        )
-
         order = self.topo_order()
-        rank = {n: i for i, n in enumerate(order)}
         satisfied: set[str] = set()  # success or skipped_done
         dead: set[str] = set()
-        scheduled: set[str] = set()
         failures: dict[str, tuple[int, Exception]] = {}
-        halt = False  # raise mode: stop submitting after the first failure
 
-        def attempt(
-            task: Task, snapshot: dict[str, Any]
-        ) -> tuple[str, int, Any, Exception | None]:
+        def attempt(task: Task, snapshot: dict[str, Any]) -> tuple:
             attempts = 0
             while True:
                 attempts += 1
                 try:
-                    return ("success", attempts, task.fn(snapshot, **ctx), None)
+                    return "success", attempts, task.fn(snapshot, **ctx), None
                 except Exception as exc:
                     if attempts <= task.retries:
                         continue
-                    return ("failed", attempts, None, exc)
+                    return "failed", attempts, None, exc
 
-        in_flight: dict[Future, str] = {}
+        in_flight: dict = {}
         with ThreadPoolExecutor(max_workers=max_workers) as pool:
             while True:
-                if not halt:
-                    progressed = True
-                    while progressed:
-                        progressed = False
-                        for name in order:
-                            if name in self.report or name in scheduled:
-                                continue
-                            task = self._tasks[name]
-                            if any(d in dead for d in task.deps):
-                                self.report[name] = {
-                                    "status": "upstream_failed",
-                                    "attempts": 0,
-                                }
-                                dead.add(name)
-                                progressed = True
-                            elif all(d in satisfied for d in task.deps):
-                                if name in done_before:
-                                    self.report[name] = {
-                                        "status": "skipped_done",
-                                        "attempts": 0,
-                                    }
-                                    satisfied.add(name)
-                                    progressed = True
-                                else:
-                                    # Snapshot on THIS thread: a live dict
-                                    # could change size under a worker.
-                                    fut = pool.submit(
-                                        attempt, task, dict(results)
-                                    )
-                                    in_flight[fut] = name
-                                    scheduled.add(name)
+                # Walk the order, stopping at a full pool, so at width 1 no
+                # later task is reported before an earlier one has run.
+                for name in order:
+                    halted = failures and on_error == "raise"
+                    if halted or len(in_flight) == max_workers:
+                        break
+                    task = self._tasks[name]
+                    if name in self.report or name in in_flight.values():
+                        continue
+                    if any(d in dead for d in task.deps):
+                        self.report[name] = {"status": "upstream_failed", "attempts": 0}
+                        dead.add(name)
+                    elif not all(d in satisfied for d in task.deps):
+                        continue
+                    elif name in done_before:
+                        self.report[name] = {"status": "skipped_done", "attempts": 0}
+                        satisfied.add(name)
+                    else:
+                        # Snapshot on THIS thread: a live dict could change
+                        # size under a worker.
+                        fut = pool.submit(_inheriting(attempt), task, dict(results))
+                        in_flight[fut] = name
                 if not in_flight:
                     break
-                done_futs, _ = wait(in_flight, return_when=FIRST_COMPLETED)
-                for fut in done_futs:
+                finished, _ = wait(in_flight, return_when=FIRST_COMPLETED)
+                for fut in finished:
                     name = in_flight.pop(fut)
                     status, attempts, value, exc = fut.result()
                     self.report[name] = {"status": status, "attempts": attempts}
@@ -271,12 +197,25 @@ class Pipeline:
                     else:
                         failures[name] = (attempts, exc)
                         dead.add(name)
-                        if on_error == "raise":
-                            halt = True
         # Deterministic report key order however completions interleaved.
         self.report = {n: self.report[n] for n in order if n in self.report}
         if failures and on_error == "raise":
-            first = min(failures, key=lambda n: rank[n])
+            first = min(failures, key=order.index)
             attempts, exc = failures[first]
             raise TaskFailureError(first, attempts, exc) from exc
         return results
+
+
+def _inheriting(fn: Callable[..., Any]) -> Callable[..., Any]:
+    """``fn`` wrapped to run with the calling thread's Spark local
+    properties and session tags (job group, scheduler pool, job tags); ``fn``
+    itself when no Spark session is active."""
+    from py4j.clientserver import ClientServer
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+    from pyspark.util import inheritable_thread_target
+
+    session = SparkSession.getActiveSession() or SparkSession._instantiatedSession
+    if session is None or not isinstance(SparkContext._gateway, ClientServer):
+        return fn  # no session, or threads not pinned: nothing to inherit
+    return inheritable_thread_target(session)(fn)

@@ -136,32 +136,6 @@ def _open_table(root: str):
     return VersionedTable(None, root)
 
 
-def _load_manifest(root: str, version: int | None) -> tuple[dict, int]:
-    """``(manifest, version)`` of ``version``, or of the latest snapshot."""
-    t = _open_table(root)
-    if version is None:
-        version = t.current_version()
-        if version is None:
-            raise ValueError(f"table {t.root} has no snapshots")
-    return t._manifest(version), version
-
-
-def _stats_admit(stats: dict, col: str, lo, hi) -> bool:
-    """Does a dir's zone map admit any value in [lo, hi]? (None = open end;
-    incomparable types or missing stats keep the dir — never over-prune.)"""
-    mm = stats.get(col)
-    if mm is None or mm[0] is None or mm[1] is None:
-        return True
-    try:
-        if lo is not None and mm[1] < lo:
-            return False
-        if hi is not None and mm[0] > hi:
-            return False
-    except TypeError:
-        return True
-    return True
-
-
 def _ordered_transform_bounds(fn: str, n: int | None, lo, hi):
     """Transformed [lo, hi] for the ordered transforms, widened one DAY each
     side before transforming (timestamp literals may sit in a different
@@ -236,12 +210,13 @@ def plan_files(
     """Manifest-pruned file plan: [{"path", "inject", "dir"}], manifest.
 
     ``eq``: {col: value} equality predicates; ``ranges``: {col: [lo, hi]}
-    with None for open ends. Pruning tiers: dir zone maps → dir blooms →
-    per-file partition-segment checks (identity values, ordered transforms,
-    bucket twin)."""
-    from lakeflow.tables import VersionedTable, _parse_partition_spec
+    with None for open ends. Pruning tiers: the table's scan planner
+    (``tables.plan_dirs``: dir zone maps and Bloom bits) → per-file
+    partition-segment checks (identity values, ordered transforms, bucket
+    twin)."""
+    from lakeflow.tables import _parse_partition_spec, plan_dirs
 
-    m, version = _load_manifest(root, version)
+    m = _open_table(root)._snapshot(version)
     bounds: dict[str, list] = {}
     for c, v in eq.items():
         bounds[c] = [v, v]
@@ -252,23 +227,7 @@ def plan_files(
         if hi is not None and (b[1] is None or hi < b[1]):
             b[1] = hi
 
-    stats = m.get("stats", {})
-    dirs = [
-        d
-        for d in m["dirs"]
-        if all(_stats_admit(stats.get(d, {}), c, lo, hi) for c, (lo, hi) in bounds.items())
-    ]
-    bloom, bits = m.get("bloom", {}), m.get("bloom_bits")
-    if bloom and bits:
-        for c, v in eq.items():
-            h1, h2 = VersionedTable._bloom_positions(v, bits)
-            dirs = [
-                d
-                for d in dirs
-                if (pos := bloom.get(d, {}).get(c)) is None
-                or (h1 in set(pos) and h2 in set(pos))
-            ]
-
+    dirs = plan_dirs(m, between=ranges, points={c: [v] for c, v in eq.items()})
     hidden_specs = m.get("hidden_specs", {})
     files: list[dict] = []
     for d in dirs:
@@ -354,17 +313,17 @@ class LakeflowTableDataSource(DataSource):
     def name(cls) -> str:
         return "lakeflow_table"
 
-    def _manifest(self) -> tuple[dict, int]:
+    def _manifest(self) -> dict:
         root = self.options.get("path")
         if not root:
             raise ValueError("option 'path' (table root) is required")
         v = self.options.get("version")
-        return _load_manifest(root, int(v) if v is not None else None)
+        return _open_table(root)._snapshot(int(v) if v is not None else None)
 
     def schema(self):
         from pyspark.sql.types import StructType
 
-        m, _v = self._manifest()
+        m = self._manifest()
         raw = m.get("schema")
         if raw is None:
             raise ValueError("table has no recorded schema")
@@ -616,8 +575,7 @@ def _publish_shards(
     from lakeflow.tables import VersionedTable
 
     t = VersionedTable(None, root)
-    prev = t.current_version()
-    prev_m = t._manifest(prev) if prev is not None else {}
+    prev_m = t._current()
     if txn is not None:
         recorded = prev_m.get("txns", {}).get(txn[0])
         if recorded is not None and txn[1] <= recorded:

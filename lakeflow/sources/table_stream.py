@@ -35,7 +35,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from lakeflow.sources.table_source import _load_manifest, _open_table
+from lakeflow.sources.table_source import _open_table
 
 
 def _timestamp_cols(manifest: dict) -> set[str]:
@@ -78,7 +78,7 @@ class TableChangesDataSource(DataSource):
         from pyspark.sql.types import StringType, StructType
 
         root = self.options["path"]
-        raw = _load_manifest(root, None)[0].get("schema")
+        raw = _open_table(root)._snapshot().get("schema")
         if raw is None:
             raise ValueError(
                 f"table {root} predates schema tracking; recommit once to "

@@ -39,7 +39,7 @@ import os
 import re
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -136,10 +136,11 @@ def _link_json(path: str, doc: dict, conflict: str) -> None:
     gets :class:`CommitConflictError` (message ``conflict``). A plain
     ``os.replace`` would let the second writer silently overwrite the first.
     """
+    text = json.dumps(doc)  # an unserializable doc fails before any file exists
     head, name = os.path.split(path)
     tmp = os.path.join(head, f".{name}-{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as fh:
-        json.dump(doc, fh)
+        fh.write(text)
     try:
         os.link(tmp, path)
     except FileExistsError:
@@ -169,6 +170,107 @@ def _small_dirs(paths: Sequence[str], max_bytes: int) -> dict[str, int]:
     size trigger and the streamed-index dust folds."""
     sizes = {p: _dir_bytes(p) for p in paths}
     return {p: b for p, b in sizes.items() if b < max_bytes}
+
+
+def _bloom_positions(value, bloom_bits: int) -> tuple[int, int]:
+    """Python twin of the commit-side hash: two md5-derived bucket
+    positions of Spark's string rendering of the value (exact for an int
+    on an integral column and a str on a string column — the
+    :data:`_BLOOM_EXACT` cases)."""
+    import hashlib
+
+    h = hashlib.md5(str(value).encode()).hexdigest()
+    return int(h[:8], 16) % bloom_bits, int(h[8:16], 16) % bloom_bits
+
+
+# Manifest-schema column type → the Python value type whose ``str`` equals
+# Spark's string cast, so ``_bloom_positions`` probes the bits the commit
+# set. Other pairs (a bool, a decimal, a date) render differently and
+# could prune a dir that holds the value.
+_BLOOM_EXACT = {
+    "byte": int, "short": int, "integer": int, "long": int, "string": str
+}
+
+
+def plan_dirs(
+    manifest: dict,
+    between: Mapping[str, Sequence] | None = None,
+    points: Mapping[str, Sequence] | None = None,
+    partitions: Sequence | None = None,
+) -> list[str]:
+    """The scan planner: the dirs of ``manifest`` that may hold a row
+    matching every predicate given, in manifest order. Metadata only (no
+    Spark), and it can only over-keep, never over-prune — every reader
+    applies its residual predicate to the rows of the kept dirs.
+
+    - ``between`` ``{col: (lo, hi)}`` (``None`` = open end): a dir whose
+      zone map misses the range goes. Missing stats, a NULL min/max or
+      incomparable types keep it.
+    - ``points`` ``{col: values}``: a dir stays if any value may be in it,
+      by its zone map and by its Bloom bits. The Bloom test applies only
+      in the :data:`_BLOOM_EXACT` cases, by the manifest schema's column
+      type; a ``None`` value keeps every dir.
+    - ``partitions``: partition values (``None`` = the NULL partition); a
+      dir whose ``dir_parts`` coverage holds none of them goes, a dir with
+      unknown coverage stays."""
+    stats = manifest.get("stats", {})
+    bloom, bits = manifest.get("bloom", {}), manifest.get("bloom_bits")
+    fields = json.loads(manifest.get("schema") or '{"fields": []}')["fields"]
+    exact = {f["name"]: _BLOOM_EXACT.get(str(f["type"])) for f in fields}
+    # Per point value: its two Bloom positions, or None where bits can't
+    # rule it out.
+    probes = {
+        c: [
+            (v, _bloom_positions(v, bits) if bits and type(v) is exact.get(c) else None)
+            for v in vs
+        ]
+        for c, vs in (points or {}).items()
+    }
+    tokens = {_partition_value_token(v) for v in partitions or ()}
+    dir_parts = manifest.get("dir_parts", {})
+    ranges = list((between or {}).items())
+
+    def overlaps(mm, lo, hi) -> bool:
+        if mm is None or mm[0] is None or mm[1] is None:
+            return True
+        try:
+            return not (
+                lo is not None and mm[1] < lo or hi is not None and mm[0] > hi
+            )
+        except TypeError:
+            return True
+
+    def may_hold(d: str, c: str) -> bool:
+        mm, pos = stats.get(d, {}).get(c), bloom.get(d, {}).get(c)
+        bitset = set(pos or ())
+        return any(
+            v is None
+            or overlaps(mm, v, v) and (h is None or pos is None or {*h} <= bitset)
+            for v, h in probes[c]
+        )
+
+    def keep(d: str) -> bool:
+        parts = dir_parts.get(d)
+        return (
+            all(overlaps(stats.get(d, {}).get(c), *b) for c, b in ranges)
+            and all(may_hold(d, c) for c in probes)
+            and (partitions is None or parts is None or not tokens.isdisjoint(parts))
+        )
+
+    return [d for d in manifest["dirs"] if keep(d)]
+
+
+def _check_stats_cols(schema, cols) -> None:
+    """Zone maps record a JSON min/max, exact only for integral, floating
+    and string columns (the ones the pushdown writer records too); any
+    other type is refused before a byte is written."""
+    from pyspark.sql.types import DoubleType, FloatType, IntegralType, StringType
+
+    ok = (IntegralType, FloatType, DoubleType, StringType)
+    types = {f.name: f.dataType for f in getattr(schema, "fields", ())}
+    bad = [c for c in cols or () if c in types and not isinstance(types[c], ok)]
+    if bad:
+        raise ValueError(f"zone-map stats take numeric or string columns, not {bad}")
 
 
 def _partition_token(partition_col: str):
@@ -225,6 +327,18 @@ def _parse_partition_spec(spec: str) -> dict | None:
             raise ValueError(f"{fn}() takes one column only: {spec!r}")
         hidden = f"_p_{fn}_{col}"
     return {"fn": fn, "col": col, "n": n, "hidden": hidden, "spec": spec.strip()}
+
+
+def _in_range(col, lo, hi):
+    """``lo <= col <= hi`` as a Column; a ``None`` bound is an open end."""
+    from pyspark.sql import functions as F
+
+    cond = F.lit(True)
+    if lo is not None:
+        cond = cond & (col >= lo)
+    if hi is not None:
+        cond = cond & (col <= hi)
+    return cond
 
 
 def _transform_expr(fn: str, source, n: int | None):
@@ -418,11 +532,8 @@ class VersionedTable:
         for manifests written before schema tracking."""
         from pyspark.sql.types import StructType
 
-        if version is None:
-            version = self.current_version()
-        if version is None:
-            return None
-        raw = self._manifest(version).get("schema")
+        m = self._current() if version is None else self._manifest(version)
+        raw = m.get("schema")
         return StructType.fromJson(json.loads(raw)) if raw else None
 
     @staticmethod
@@ -466,12 +577,19 @@ class VersionedTable:
         return StructType(list(current.fields) + added)
 
     # -- write path --------------------------------------------------------
-    def _head(self) -> dict:
-        """The current snapshot's manifest; raises on a table without one."""
+    def _current(self) -> dict:
+        """The current snapshot's manifest; ``{}`` (the empty table) for a
+        table without one."""
         version = self.current_version()
-        if version is None:
+        return {} if version is None else self._manifest(version)
+
+    def _snapshot(self, version: int | None = None) -> dict:
+        """The manifest of ``version`` (None = the current snapshot): the
+        one snapshot resolver, which raises on a table without snapshots."""
+        m = self._current() if version is None else self._manifest(version)
+        if not m:
             raise ValueError(f"table {self.root} has no snapshots")
-        return self._manifest(version)
+        return m
 
     def _new_dir(self, kind: str = "data") -> str:
         return os.path.join(self.root, kind, uuid.uuid4().hex)
@@ -533,19 +651,19 @@ class VersionedTable:
 
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
+        _check_stats_cols(df.schema, stats_cols)
         txn_list: list[tuple[str, int]] | None = None
         if txn is not None:
             txn_list = [txn] if isinstance(txn[0], str) else [
                 (a, v) for a, v in txn
             ]
-            cur = self.current_version()
-            if cur is not None:
-                recorded = self._manifest(cur).get("txns", {})
-                if all(
-                    recorded.get(a) is not None and v <= recorded[a]
-                    for a, v in txn_list
-                ):
-                    return cur  # replayed batch: already folded, skip
+            head = self._current()
+            recorded = head.get("txns", {})
+            if head and all(
+                recorded.get(a) is not None and v <= recorded[a]
+                for a, v in txn_list
+            ):
+                return head["version"]  # replayed batch: already folded, skip
         # Generated columns derive (batch omits them) or validate (batch
         # supplies them) BEFORE constraints, so a constraint may reference
         # a generated column. The WAP path validates the staged files
@@ -621,8 +739,7 @@ class VersionedTable:
                 writer = writer.partitionBy(*phys_partition_by)
             writer.save(data_dir)
 
-        prev = self.current_version()
-        parent = self._manifest(prev) if prev is not None else {}
+        parent = self._current()
         append = mode == "append"
         next_schema = df.schema
         if append and parent.get("schema"):
@@ -905,8 +1022,8 @@ class VersionedTable:
         not cover."""
         from pyspark.sql import functions as F
 
-        m = self._head()
-        touched = set(self._kept_dirs(m, prune_between or {}))
+        m = self._snapshot()
+        touched = set(plan_dirs(m, between=prune_between))
         keep = [d for d in m["dirs"] if d not in touched]
         touch = sorted(touched)
         add = []
@@ -936,7 +1053,7 @@ class VersionedTable:
         # head: RESTORE rewinds data, not table policy.
         target = self._manifest(to_version)  # raises if it never existed
         return self._commit(
-            self._head(), f"rollback_to_{to_version}", **self._restore(target)
+            self._snapshot(), f"rollback_to_{to_version}", **self._restore(target)
         )
 
     def clone_to(
@@ -957,7 +1074,7 @@ class VersionedTable:
         risky backfill/experiment against the clone, diff, then promote or
         drop — all without duplicating the base data.
         """
-        m = self._head() if version is None else self._manifest(version)
+        m = self._snapshot(version)
         clone = VersionedTable(self.spark, dest_root)
         if clone.current_version() is not None:
             raise ValueError(f"clone destination {dest_root} is not empty")
@@ -1074,9 +1191,9 @@ class VersionedTable:
         # is bounded by the touched partitions, so the one-agg check stays
         # O(batch state), never O(table).
         self._check_constraints(df, self.constraints())
+        _check_stats_cols(df.schema, stats_cols)
         shadow = f"{partition_col}__p"
-        prev = self.current_version()
-        parent = self._manifest(prev) if prev is not None else {}
+        parent = self._current()
 
         # Per-dir index maintenance (stats + bloom): a replace-managed
         # table's indexes must not decay as dirs get rewritten. Every NEW
@@ -1193,24 +1310,11 @@ class VersionedTable:
         the NULL partition. The streaming-merge read path: a micro-batch
         touching 3 of 1024 buckets reads ~3/1024 of the table.
         """
-        from pyspark.sql import functions as F
-
-        if version is None:
-            version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
-        dir_parts = m.get("dir_parts", {})
-        vals = {_partition_value_token(v) for v in values}
-        dirs = [
-            d
-            for d in m["dirs"]
-            if dir_parts.get(d) is None or (set(dir_parts[d]) & vals)
-        ]
-        if not dirs:
-            return self.read(version).filter(F.lit(False))
-        return self._read_dirs(dirs, version).filter(
-            _partition_token(partition_col).isin(list(vals))
+        m = self._snapshot(version)
+        dirs = plan_dirs(m, partitions=values)
+        tokens = [_partition_value_token(v) for v in values]
+        return self._read_dirs(dirs, m["version"]).filter(
+            _partition_token(partition_col).isin(tokens)
         )
 
     POS_FILE = "_pos_file"
@@ -1244,10 +1348,15 @@ class VersionedTable:
         Hidden partition columns (``_p_*``, from partition transforms) are
         dropped from every result unless ``keep_hidden`` — they are layout,
         not data; ``scan_transformed`` keeps them just long enough to apply
-        rewritten partition predicates."""
+        rewritten partition predicates. No ``dirs`` is an empty frame under
+        the snapshot schema."""
         from pyspark.sql import functions as F
+        from pyspark.sql.types import StructType
 
         st = self.schema(version)
+        if not dirs:
+            # limit(0) folds to an empty LocalRelation: actions run no tasks.
+            return self.spark.createDataFrame([], st or StructType([])).limit(0)
         part = self._manifest(version).get("partitioning", {})
         groups: dict[tuple, list[str]] = {}
         for d in dirs:
@@ -1390,12 +1499,8 @@ class VersionedTable:
             if version not in tags:
                 raise ValueError(f"no such tag {version!r}")
             version = tags[version]
-        if version is None:
-            version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        dirs = self._manifest(version)["dirs"]
-        return self._read_dirs(dirs, version)
+        m = self._snapshot(version)
+        return self._read_dirs(m["dirs"], m["version"])
 
     def scan(
         self,
@@ -1406,22 +1511,14 @@ class VersionedTable:
         every ``between`` column overlaps the requested [lo, hi]. Dirs without
         stats for a column are conservatively kept. The residual predicate is
         still applied, so results are exact — pruning is purely an IO cut.
+        A ``None`` bound is an open end.
         """
-        if version is None:
-            version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
-        dirs = m["dirs"]
-        pruned = self._kept_dirs(m, between or {})
-        if not pruned:
-            df = self._read_dirs(dirs, version).limit(0)
-        else:
-            df = self._read_dirs(pruned, version)
         from pyspark.sql import functions as F
 
+        m = self._snapshot(version)
+        df = self._read_dirs(plan_dirs(m, between=between), m["version"])
         for c, (lo, hi) in (between or {}).items():
-            df = df.filter(F.col(c).between(lo, hi))
+            df = df.filter(_in_range(F.col(c), lo, hi))
         return df
 
     def hidden_partition_specs(self, version: int | None = None) -> dict:
@@ -1429,9 +1526,7 @@ class VersionedTable:
         ``{source_col: parsed_spec}``. A col whose spec any dir lacks (or
         records differently — partition evolution) is omitted; predicates on
         it simply don't prune, they stay exact via the residual filter."""
-        if version is None:
-            version = self.current_version()
-        m = self._manifest(version)
+        m = self._snapshot(version)
         per_dir = m.get("hidden_specs", {})
         dirs = m["dirs"]
         if not dirs or any(d not in per_dir for d in dirs):
@@ -1462,16 +1557,10 @@ class VersionedTable:
         result. Dir-level zone-map stats prune on top, as in ``scan``."""
         from pyspark.sql import functions as F
 
-        if version is None:
-            version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
-        specs = self.hidden_partition_specs(version)
-        dirs = self._kept_dirs(m, between or {})
-        if not dirs:
-            return self._read_dirs(m["dirs"], version).limit(0)
-        df = self._read_dirs(dirs, version, keep_hidden=bool(specs))
+        m = self._snapshot(version)
+        dirs = plan_dirs(m, between=between)
+        specs = self.hidden_partition_specs(m["version"]) if dirs else {}
+        df = self._read_dirs(dirs, m["version"], keep_hidden=bool(specs))
 
         def typed_lit(col: str, v):
             # The transform of a literal must be computed on the SOURCE
@@ -1491,66 +1580,21 @@ class VersionedTable:
         for c, (lo, hi) in (between or {}).items():
             s = specs.get(c)
             if s is not None and s["fn"] in _MONOTONIC_TRANSFORMS:
-                df = df.filter(
-                    F.col(s["hidden"]).between(
-                        _transform_expr(s["fn"], typed_lit(c, lo), s["n"]),
-                        _transform_expr(s["fn"], typed_lit(c, hi), s["n"]),
-                    )
+                t_lo, t_hi = (
+                    None
+                    if v is None
+                    else _transform_expr(s["fn"], typed_lit(c, v), s["n"])
+                    for v in (lo, hi)
                 )
-            df = df.filter(F.col(c).between(lo, hi))
+                df = df.filter(_in_range(F.col(s["hidden"]), t_lo, t_hi))
+            df = df.filter(_in_range(F.col(c), lo, hi))
         keep = [c for c in df.columns if not c.startswith("_p_")]
         return df.select(*keep)
 
-    @staticmethod
-    def _kept_dirs(manifest: dict, between: dict[str, tuple]) -> list[str]:
-        """Dirs whose stats overlap every requested range (no stats = keep)."""
-        stats = manifest.get("stats", {})
-
-        def keep(d: str) -> bool:
-            for c, (lo, hi) in between.items():
-                mm = stats.get(d, {}).get(c)
-                if mm is None or mm[0] is None or mm[1] is None:
-                    continue
-                if mm[1] < lo or mm[0] > hi:
-                    return False
-            return True
-
-        return [d for d in manifest["dirs"] if keep(d)]
-
     def pruned_dirs(self, between: dict[str, tuple], version: int | None = None) -> int:
         """How many manifest dirs a ``scan(between=...)`` would skip."""
-        if version is None:
-            version = self.current_version()
-        m = self._manifest(version)
-        return len(m["dirs"]) - len(self._kept_dirs(m, between))
-
-    @staticmethod
-    def _bloom_positions(value, bloom_bits: int) -> tuple[int, int]:
-        """Python twin of the commit-side hash: two md5-derived bucket
-        positions of Spark's string rendering of the value (exact for
-        int/string keys — the point-lookup types)."""
-        import hashlib
-
-        h = hashlib.md5(str(value).encode()).hexdigest()
-        return int(h[:8], 16) % bloom_bits, int(h[8:16], 16) % bloom_bits
-
-    def _bloom_kept_dirs(self, manifest: dict, col: str, value) -> list[str]:
-        """Dirs whose bloom could contain ``value`` (no bloom = keep: the
-        filter gives false positives, never false negatives)."""
-        bloom = manifest.get("bloom", {})
-        bits = manifest.get("bloom_bits")
-        if not bloom or bits is None:
-            return manifest["dirs"]
-        h1, h2 = self._bloom_positions(value, bits)
-
-        def keep(d: str) -> bool:
-            positions = bloom.get(d, {}).get(col)
-            if positions is None:
-                return True
-            s = set(positions)
-            return h1 in s and h2 in s
-
-        return [d for d in manifest["dirs"] if keep(d)]
+        m = self._snapshot(version)
+        return len(m["dirs"]) - len(plan_dirs(m, between=between))
 
     def scan_point(self, col: str, value, version: int | None = None) -> DataFrame:
         """Point lookup through the per-dir Bloom index: open only dirs whose
@@ -1561,24 +1605,18 @@ class VersionedTable:
         """
         from pyspark.sql import functions as F
 
-        if version is None:
-            version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
-        kept = self._bloom_kept_dirs(m, col, value)
-        if not kept:
-            return self.read(version).filter(F.lit(False))
-        return self._read_dirs(kept, version).filter(F.col(col) == F.lit(value))
+        m = self._snapshot(version)
+        kept = plan_dirs(m, points={col: [value]})
+        return self._read_dirs(kept, m["version"]).filter(
+            F.col(col) == F.lit(value)
+        )
 
     def pruned_dirs_point(
         self, col: str, value, version: int | None = None
     ) -> int:
         """How many manifest dirs ``scan_point`` skips for this lookup."""
-        if version is None:
-            version = self.current_version()
-        m = self._manifest(version)
-        return len(m["dirs"]) - len(self._bloom_kept_dirs(m, col, value))
+        m = self._snapshot(version)
+        return len(m["dirs"]) - len(plan_dirs(m, points={col: [value]}))
 
     def analyze(self, cols: Sequence[str], only_missing: bool = True) -> int:
         """``ANALYZE TABLE ... COMPUTE STATISTICS FOR COLUMNS``: retrofit
@@ -1598,7 +1636,8 @@ class VersionedTable:
         this attribution becomes a join on an extracted path token."""
         from pyspark.sql import functions as F
 
-        m = self._head()
+        m = self._snapshot()
+        _check_stats_cols(self.schema(m["version"]), cols)
         have = m.get("stats", {})
         targets = [
             d
@@ -1669,7 +1708,7 @@ class VersionedTable:
 
         from lakeflow.operators.aggregates import kmv_uniform
 
-        m = self._head()
+        m = self._snapshot()
         frame = self.read(m["version"])
         melted = frame.select(
             F.explode(
@@ -1706,8 +1745,7 @@ class VersionedTable:
         never analyzed. Planners that only need cardinality (broadcast
         decisions) should read this, not ``ndv_stats(col)["rows"]``, which
         additionally requires ``col`` itself to have been sketched."""
-        m = self._manifest(self.current_version())
-        rows = m.get("ndv", {}).get("rows")
+        rows = self._snapshot().get("ndv", {}).get("rows")
         if rows is None:
             raise ValueError(
                 f"no ANALYZE row count for {self.root}; run analyze_ndv()"
@@ -1718,8 +1756,7 @@ class VersionedTable:
         """The stored NDV sketch for ``col``: {"k", "minima", "rows",
         "estimate"} — metadata read only, no scan. Raises if the column
         was never ANALYZEd."""
-        m = self._manifest(self.current_version())
-        blob = m.get("ndv", {})
+        blob = self._snapshot().get("ndv", {})
         entry = blob.get("cols", {}).get(col)
         if entry is None:
             raise ValueError(
@@ -1774,7 +1811,7 @@ class VersionedTable:
         rows attribute to their owning dir by path boundary, exactly like
         :meth:`analyze`. Re-seal after DML — fingerprints describe the
         VISIBLE rows of the sealed snapshot's dirs."""
-        m = self._head()
+        m = self._snapshot()
         fps = self._content_fps(m["dirs"], m["version"])
         # The DV state the fingerprints were taken under: verify compares
         # apples to apples even if later DML adds vectors.
@@ -1796,7 +1833,7 @@ class VersionedTable:
         since disappeared. A flipped byte, swapped file, or silently
         truncated shard flips ``ok`` for exactly its dir."""
         if version is None:
-            version = self.current_version()
+            version = self._snapshot()["version"]
         sealed = None
         for v in range(version, 0, -1):
             try:
@@ -1858,8 +1895,9 @@ class VersionedTable:
 
         from lakeflow.catalog import zorder_value
 
-        m = self._head()
+        m = self._snapshot()
         df = self.read(m["version"])
+        _check_stats_cols(df.schema, cols)
         zdf, zcol = zorder_value(df, list(cols), bits)
         zr = zdf.agg(
             F.min(zcol).alias("lo"), F.max(zcol).alias("hi")
@@ -1921,11 +1959,8 @@ class VersionedTable:
         readers" from "gone from disk". After :meth:`delete_where_mor` this
         still returns the deleted rows; after :meth:`compact` (or any full
         rewrite, which reads through the vectors) it must not."""
-        version = self.current_version() if version is None else version
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
-        return self._read_dirs(m["dirs"], version, dvs=[])
+        m = self._snapshot(version)
+        return self._read_dirs(m["dirs"], m["version"], dvs=[])
 
     def update_where_mor(
         self,
@@ -1948,8 +1983,8 @@ class VersionedTable:
         rewritten versions, in the same snapshot. No match, no snapshot."""
         from pyspark.sql import functions as F
 
-        m = self._head()
-        touch = self._kept_dirs(m, prune_between or {})
+        m = self._snapshot()
+        touch = plan_dirs(m, between=prune_between)
         if not touch:
             return m["version"]
         frame = self._read_dirs(sorted(touch), m["version"], with_positions=True)
@@ -2001,11 +2036,7 @@ class VersionedTable:
         manifest walk only; no data file is opened."""
         import glob as _glob
 
-        if version is None:
-            version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
+        m = self._snapshot(version)
         part = m.get("partitioning", {})
         stats = m.get("stats", {})
         rows = []
@@ -2038,19 +2069,15 @@ class VersionedTable:
         The in-stream auto-compaction (``sinks.py::_autocompact_tables``)
         counts these per micro-batch and stats them to size the small-file
         tail without reading any data."""
-        v = self.current_version() if version is None else version
-        if v is None:
-            return []
-        return list(self._manifest(v).get("dirs", []))
+        m = self._current() if version is None else self._manifest(version)
+        return list(m.get("dirs", []))
 
     def detail(self) -> dict:
         """DESCRIBE DETAIL: one dict of current-table facts — version,
         operation, dir/file counts and bytes, schema width, constraints,
         deletion-vector count, transactional watermarks, layout mix."""
-        version = self.current_version()
-        if version is None:
-            raise ValueError(f"table {self.root} has no snapshots")
-        m = self._manifest(version)
+        m = self._snapshot()
+        version = m["version"]
         fr = self.files(version).agg(
             {"bytes": "sum", "n_files": "sum"}
         ).collect()[0]
@@ -2092,8 +2119,8 @@ class VersionedTable:
         """
         from pyspark.sql import functions as F
 
-        version = self.current_version()
-        if version is None:
+        m = self._current()
+        if not m:
             return self.commit(batch, mode="append")
         # Generated columns derive-or-validate on MOR upserts too — a CDC
         # batch that omits a declared column must not land NULLs where
@@ -2103,8 +2130,7 @@ class VersionedTable:
             batch = self._apply_generated(batch, gen)
         # Constraints gate MOR upserts before any DV or data dir lands.
         self._check_constraints(batch, self.constraints())
-        m = self._manifest(version)
-        frame = self._read_dirs(m["dirs"], version, with_positions=True)
+        frame = self._read_dirs(m["dirs"], m["version"], with_positions=True)
         keysel = batch.select(*list(keys)).distinct()
         tagged = frame.select(self.POS_FILE, self.POS_INDEX, *list(keys))
         dv = self._write_dv(
@@ -2126,7 +2152,7 @@ class VersionedTable:
         NULL-backfill contract as merge_schema evolution on append)."""
         from pyspark.sql.types import StructType, _parse_datatype_string
 
-        m = self._head()
+        m = self._snapshot()
         st = self.schema(m["version"])
         if st is None:
             raise ValueError("pre-schema-tracking table cannot ALTER")
@@ -2146,7 +2172,7 @@ class VersionedTable:
         request the column from the parquet footers."""
         from pyspark.sql.types import StructType
 
-        m = self._head()
+        m = self._snapshot()
         st = self.schema(m["version"])
         if st is None or name not in st.fieldNames():
             raise ValueError(f"no such column {name!r}")
@@ -2206,7 +2232,7 @@ class VersionedTable:
 
         from pyspark.sql import functions as F
 
-        m = self._head()
+        m = self._snapshot()
         version = m["version"]
         st = self.schema(version)
         if st is None:
@@ -2250,8 +2276,7 @@ class VersionedTable:
         )
 
     def generated_columns(self) -> dict:
-        v = self.current_version()
-        return {} if v is None else self._manifest(v).get("generated", {})
+        return self._current().get("generated", {})
 
     def _apply_generated(self, df: DataFrame, gen: dict) -> DataFrame:
         from pyspark.sql import functions as F
@@ -2298,7 +2323,7 @@ class VersionedTable:
         (drop the constraint first — Delta's rule)."""
         from pyspark.sql.types import StructField, StructType
 
-        m = self._head()
+        m = self._snapshot()
         st = self.schema(m["version"])
         if st is None:
             raise ValueError("pre-schema-tracking table cannot ALTER")
@@ -2374,17 +2399,16 @@ class VersionedTable:
         at add time (Delta's rule: you cannot add a constraint the current
         data violates). Constraints ride the manifest and survive every
         manifest-producing path, like txn watermarks."""
-        version = self.current_version()
-        if version is not None:
-            self._check_constraints(self.read(version), {name: check_expr})
-        m = self._manifest(version) if version is not None else {}
+        m = self._current()
+        if m:
+            self._check_constraints(self.read(m["version"]), {name: check_expr})
         return self._put_policy(
             m, "constraints", f"add-constraint:{name}", name, check_expr
         )
 
     def drop_constraint(self, name: str) -> int:
         return self._put_policy(
-            self._head(), "constraints", f"drop-constraint:{name}", name
+            self._snapshot(), "constraints", f"drop-constraint:{name}", name
         )
 
     def _put_policy(
@@ -2398,8 +2422,7 @@ class VersionedTable:
         return self._commit(m, operation, **{key: block})
 
     def constraints(self) -> dict:
-        v = self.current_version()
-        return {} if v is None else self._manifest(v).get("constraints", {})
+        return self._current().get("constraints", {})
 
     # -- governance policy: column masks + row filters ---------------------
     #
@@ -2416,7 +2439,7 @@ class VersionedTable:
         The mask must preserve the column's type — Delta's rule, enforced at
         declaration time by resolving the expression against the current
         snapshot's plan (no data read)."""
-        m = self._head()
+        m = self._snapshot()
         version = m["version"]
         st = self.schema(version)
         if st is not None and col not in st.fieldNames():
@@ -2436,7 +2459,7 @@ class VersionedTable:
         return self._put_policy(m, "masks", f"set-mask:{col}", col, mask_expr)
 
     def drop_column_mask(self, col: str) -> int:
-        return self._put_policy(self._head(), "masks", f"drop-mask:{col}", col)
+        return self._put_policy(self._snapshot(), "masks", f"drop-mask:{col}", col)
 
     def set_row_filter(self, name: str, filter_expr: str) -> int:
         """``ALTER TABLE t SET ROW FILTER name AS (expr)``: governed reads
@@ -2446,7 +2469,7 @@ class VersionedTable:
         filters-before-masks evaluation order."""
         from pyspark.sql import functions as F
 
-        m = self._head()
+        m = self._snapshot()
         # Resolve plan-side so a typo fails at declaration, not read time.
         self.read(m["version"]).filter(F.expr(filter_expr))
         return self._put_policy(
@@ -2455,7 +2478,7 @@ class VersionedTable:
 
     def drop_row_filter(self, name: str) -> int:
         return self._put_policy(
-            self._head(), "row_filters", f"drop-row-filter:{name}", name
+            self._snapshot(), "row_filters", f"drop-row-filter:{name}", name
         )
 
     # -- named refs (Iceberg tags) ------------------------------------------
@@ -2468,7 +2491,7 @@ class VersionedTable:
         matters operationally — ``expire_snapshots`` NEVER drops a tagged
         snapshot or its data, however old, until the tag is dropped. The tag
         map rides the manifest like constraints (metadata-only commit)."""
-        m = self._head()
+        m = self._snapshot()
         target = m["version"] if version is None else version
         if target not in self.versions():
             raise ValueError(f"no such snapshot version {target}")
@@ -2479,11 +2502,10 @@ class VersionedTable:
         )
 
     def drop_tag(self, name: str) -> int:
-        return self._put_policy(self._head(), "refs", f"drop-tag:{name}", name)
+        return self._put_policy(self._snapshot(), "refs", f"drop-tag:{name}", name)
 
     def tags(self) -> dict:
-        v = self.current_version()
-        return {} if v is None else self._manifest(v).get("refs", {})
+        return self._current().get("refs", {})
 
     # -- branches (Iceberg branch refs) -------------------------------------
 
@@ -2507,9 +2529,7 @@ class VersionedTable:
         branch, validate it, then swing production atomically."""
         if self._branch_name is not None:
             raise ValueError("create branches from the main table handle")
-        current = self.current_version()
-        if current is None:
-            raise ValueError(f"table {self.root} has no snapshots")
+        current = self._snapshot()["version"]
         target = current if version is None else version
         if target not in self.versions():
             raise ValueError(f"no such snapshot version {target}")
@@ -2573,11 +2593,11 @@ class VersionedTable:
         if self._branch_name is not None:
             raise ValueError("fast-forward from the main table handle")
         b = self.branch(name)
-        head = b.current_version()
-        hm = b._manifest(head)
+        hm = b._snapshot()
+        head = hm["version"]
         fork = b._manifest(1).get("fork_main_version")
-        current = self.current_version()
-        cur_m = self._manifest(current)
+        cur_m = self._snapshot()
+        current = cur_m["version"]
         if current != fork and cur_m.get("ff_branch") != name:
             raise ValueError(
                 f"main diverged since branch {name!r} forked at v{fork} "
@@ -2616,12 +2636,10 @@ class VersionedTable:
         return dirs, dvs
 
     def masks(self) -> dict:
-        v = self.current_version()
-        return {} if v is None else self._manifest(v).get("masks", {})
+        return self._current().get("masks", {})
 
     def row_filters(self) -> dict:
-        v = self.current_version()
-        return {} if v is None else self._manifest(v).get("row_filters", {})
+        return self._current().get("row_filters", {})
 
     def read_governed(
         self, version: int | None = None, timestamp: str | None = None
@@ -2693,7 +2711,8 @@ class VersionedTable:
         re-read (rewriting 100 TB to fix kilobyte files would be the
         classic compaction own-goal).
         """
-        m = self._head()
+        m = self._snapshot()
+        _check_stats_cols(self.schema(m["version"]), stats_cols)
         if small_dir_max_bytes is None:
             # A full compact is row-preserving, so indexes the table carried
             # must not vanish with the rewritten dirs: without explicit
@@ -3021,13 +3040,13 @@ class TableCatalog:
         """
         t = self.load(name)
         report = {"compacted": False, "expired": [], "orphans_removed": 0}
-        if t.current_version() is None:
+        m = t._current()
+        if not m:
             return report  # empty table: nothing to maintain
-        m = t._manifest(t.current_version())
         if len(m.get("delete_vectors", [])) > max_delete_vectors:
             t.compact()  # full rewrite: materializes and purges the vectors
             report["compacted"] = True
-            m = t._manifest(t.current_version())
+            m = t._current()
         small = _small_dirs(m["dirs"], small_dir_max_bytes)
         if not report["compacted"] and len(small) > max_small_dirs:
             t.compact(small_dir_max_bytes=small_dir_max_bytes)

@@ -57,7 +57,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakeflow.tables import VersionedTable
+from lakeflow.tables import VersionedTable, plan_dirs
 
 # App ids under which state commits record the reflected base versions as
 # transactional watermarks: one for a one-base view, one per side of a join
@@ -276,15 +276,13 @@ class _OneBaseView(_View):
         ``dirs_read`` counts only the dirs the refresh opened, and
         ``from_version`` is None when the refresh rebuilt the view.
         """
-        v_to = self.base.current_version()
-        if v_to is None:
-            raise ValueError("base table has no snapshots")
-        v_from = self.refreshed_version()
+        m_to = self.base._snapshot()
+        v_to, v_from = m_to["version"], self.refreshed_version()
         out = {
             "from_version": v_from,
             "to_version": v_to,
             "dirs_read": 0,
-            "dirs_total": len(self.base._manifest(v_to)["dirs"]),
+            "dirs_total": len(m_to["dirs"]),
         }
         if v_from == v_to:
             return out
@@ -440,27 +438,13 @@ class DirtyGroupAggView(_OneBaseView):
                 {"dirs_read": full["dirs_read"]},
             )
 
-        m_to = self.base._manifest(v_to)
         known = [v for v in dirty if v is not None]
-        null_dirty = len(known) < len(dirty)
         # Null-safe membership: NOT IN over a NULL key is NULL, which would
         # drop an untouched NULL group — or every group once NULL is dirty.
         is_dirty = F.coalesce(F.col(self.key).isin(known), F.lit(False))
-        if null_dirty:
+        if len(known) < len(dirty):
             is_dirty = is_dirty | F.col(self.key).isNull()
-        if null_dirty or not any(
-            self.key in s for s in m_to.get("stats", {}).values()
-        ):
-            # No key stats prune nothing, and no range excludes a NULL key.
-            kept = list(m_to["dirs"])
-        else:
-            kept = sorted(
-                {
-                    dd
-                    for v in known
-                    for dd in self.base._kept_dirs(m_to, {self.key: (v, v)})
-                }
-            )
+        kept = plan_dirs(self.base._manifest(v_to), points={self.key: dirty})
         recomputed = self._agg(
             self.base._read_dirs(kept, v_to).filter(is_dirty)
         )
@@ -556,12 +540,7 @@ class IncrementalJoinView(_View):
         """Static-side read at ``version``, opening only dirs whose key
         stats overlap ``bounds`` (dirs without stats always open — no false
         skips). Returns (frame, dirs_opened)."""
-        m = base._manifest(version)
-        dirs = (
-            VersionedTable._kept_dirs(m, dict(bounds)) if bounds else m["dirs"]
-        )
-        if not dirs:
-            return base._read_dirs(m["dirs"], version).limit(0), 0
+        dirs = plan_dirs(base._manifest(version), between=bounds)
         return base._read_dirs(dirs, version), len(dirs)
 
     def _state_cols(self, out_cols: list[str]) -> list[str]:
@@ -584,17 +563,14 @@ class IncrementalJoinView(_View):
         "dirs_total"}; ``dirs_read`` counts delta dirs PLUS the pruned
         static-side dirs each term actually opened — the number tests pin
         the incremental contract on."""
-        v_lt = self.left.current_version()
-        v_rt = self.right.current_version()
-        if v_lt is None or v_rt is None:
-            raise ValueError("a base table has no snapshots")
+        m_lt, m_rt = self.left._snapshot(), self.right._snapshot()
+        v_lt, v_rt = m_lt["version"], m_rt["version"]
         v_lf, v_rf = self.refreshed_versions()
         out = {
             "from_versions": (v_lf, v_rf),
             "to_versions": (v_lt, v_rt),
             "dirs_read": 0,
-            "dirs_total": len(self.left._manifest(v_lt)["dirs"])
-            + len(self.right._manifest(v_rt)["dirs"]),
+            "dirs_total": len(m_lt["dirs"]) + len(m_rt["dirs"]),
         }
         if (v_lf, v_rf) == (v_lt, v_rt):
             return out

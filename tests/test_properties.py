@@ -1292,3 +1292,103 @@ def test_asof_time_bucket_salt_is_output_invariant(
         )
     )
     assert salted == plain
+
+
+# One dir's rows: (k int, s str, flag bool, p int), any of them NULL.
+_plan_rows = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(-5, 5)),
+        st.one_of(st.none(), st.sampled_from(["a", "b", "c", "10"])),
+        st.one_of(st.none(), st.booleans()),
+        st.one_of(st.none(), st.integers(0, 3)),
+    ),
+    max_size=6,
+)
+_maybe = st.one_of(st.none(), st.integers(-6, 6))
+
+
+@given(
+    dirs=st.lists(
+        st.tuples(_plan_rows, st.booleans(), st.booleans(), st.booleans()),
+        min_size=1,
+        max_size=5,
+    ),
+    between=st.dictionaries(st.just("k"), st.tuples(_maybe, _maybe), max_size=1),
+    points=st.fixed_dictionaries(
+        {},
+        optional={
+            "k": st.lists(_maybe, max_size=3),
+            "s": st.lists(st.one_of(st.none(), st.sampled_from(["a", "c", "z"]))),
+            "flag": st.lists(st.booleans(), min_size=1, max_size=2),
+        },
+    ),
+    partitions=st.one_of(st.none(), st.lists(st.one_of(st.none(), st.integers(0, 4)))),
+    bits=st.sampled_from([8, 64]),
+)
+@settings(max_examples=500, deadline=None)
+def test_scan_planner_keeps_every_dir_with_a_matching_row(
+    dirs, between, points, partitions, bits
+):
+    """The scan planner over random manifests built from known per-dir rows
+    (zone maps on k and s, Bloom bits over Spark's string rendering of k,
+    s and the BOOLEAN flag, partition coverage of p, each present or not
+    per dir): every dir holding a row that matches all predicates is kept.
+    No Spark runs."""
+    import json
+
+    from lakeflow.tables import HIVE_DEFAULT_PARTITION, _bloom_positions, plan_dirs
+
+    def spark_str(v) -> str:  # Spark's string cast, which the commit hashes
+        return str(v).lower() if isinstance(v, bool) else str(v)
+
+    cols = {"k": 0, "s": 1, "flag": 2}
+    types = {"k": "integer", "s": "string", "flag": "boolean", "p": "integer"}
+    fields = [
+        {"name": n, "type": t, "nullable": True, "metadata": {}} for n, t in types.items()
+    ]
+    m = {
+        "dirs": [f"d{i}" for i in range(len(dirs))],
+        "schema": json.dumps({"type": "struct", "fields": fields}),
+        "stats": {},
+        "bloom": {},
+        "bloom_bits": bits,
+        "dir_parts": {},
+    }
+    for d, (rows, has_stats, has_bloom, has_parts) in zip(m["dirs"], dirs):
+        if has_stats:
+            m["stats"][d] = {}
+            for c in ("k", "s"):
+                vs = [r[cols[c]] for r in rows if r[cols[c]] is not None]
+                m["stats"][d][c] = [min(vs), max(vs)] if vs else [None, None]
+        if has_bloom:
+            m["bloom"][d] = {
+                c: sorted(
+                    {
+                        b
+                        for r in rows
+                        if r[i] is not None
+                        for b in _bloom_positions(spark_str(r[i]), bits)
+                    }
+                )
+                for c, i in cols.items()
+            }
+        if has_parts:
+            m["dir_parts"][d] = sorted(
+                {HIVE_DEFAULT_PARTITION if r[3] is None else str(r[3]) for r in rows}
+            )
+
+    def matches(r) -> bool:
+        for c, (lo, hi) in between.items():
+            v = r[cols[c]]
+            if v is None or lo is not None and v < lo or hi is not None and v > hi:
+                return False
+        for c, vs in points.items():
+            if r[cols[c]] is None or r[cols[c]] not in vs:
+                return False
+        return partitions is None or r[3] in partitions
+
+    kept = plan_dirs(m, between=between, points=points, partitions=partitions)
+    assert kept == [d for d in m["dirs"] if d in kept]  # manifest order
+    for d, (rows, *_flags) in zip(m["dirs"], dirs):
+        if any(matches(r) for r in rows):
+            assert d in kept, (d, rows)

@@ -112,6 +112,66 @@ def test_parallel_runner_rejects_bad_worker_count():
         _diamond().run(max_workers=0)
 
 
+def test_width_one_runs_in_topological_order_and_stops_at_failure():
+    """max_workers=1 is the sequential run: tasks start one at a time in
+    topological order, and with on_error="raise" nothing starts — or is
+    reported skipped — after the failing task."""
+    started = []
+
+    def mk(name: str, fail: bool = False):
+        def fn(results, **ctx):
+            started.append(name)
+            if fail:
+                raise RuntimeError(f"{name} boom")
+            return name
+
+        return fn
+
+    p = Pipeline("chain")
+    p.add(Task("a", mk("a")))
+    p.add(Task("b", mk("b", fail=True), deps=["a"]))
+    p.add(Task("c", mk("c"), deps=["a"]))
+    p.add(Task("d", mk("d")))
+    p.add(Task("e", mk("e"), deps=["c"]))
+    with pytest.raises(TaskFailureError) as ei:
+        p.run(resume_from={"e": {"status": "success"}})
+    assert ei.value.task == "b"
+    assert started == ["a", "d", "b"] == p.topo_order()[:3]
+    assert list(p.report) == ["a", "d", "b"]
+    started.clear()
+    res = p.run(on_error="skip_downstream")
+    assert started == ["a", "d", "b", "c", "e"] == p.topo_order()
+    assert res == {"a": "a", "d": "d", "c": "c", "e": "e"}
+
+
+@pytest.mark.parametrize("workers", [1, 2])
+def test_callers_job_group_covers_every_task(spark, workers):
+    """A job group set before ``run`` reaches every task's Spark jobs, on
+    whichever pool thread the task runs."""
+    sc = spark.sparkContext
+    group = f"pipeline-width-{workers}"
+    seen = {}
+
+    def task(name: str, n: int):
+        def fn(results, **ctx):
+            seen[name] = sc.getLocalProperty("spark.jobGroup.id")
+            return spark.range(n).count()
+
+        return fn
+
+    p = Pipeline("grouped")
+    p.add(Task("a", task("a", 10)))
+    p.add(Task("b", task("b", 20)))
+    sc.setJobGroup(group, "caller")
+    try:
+        assert p.run(max_workers=workers) == {"a": 10, "b": 20}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen == {"a": group, "b": group}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
+
+
 # ---------------------------------------------------------------------------
 # sign_bucket construction-path equality (ADVICE r13)
 # ---------------------------------------------------------------------------

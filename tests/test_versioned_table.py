@@ -3719,3 +3719,76 @@ def test_table_changes_stream_treats_vanished_vectors_as_change(
     q.awaitTermination(120)
     got = spark.table("vanished_skip").collect()
     assert {(r.k, r.v, r._change_type) for r in got} == {(3, "c", "insert")}
+
+
+def test_bloom_on_boolean_and_decimal_never_over_prunes(spark, tmp_path):
+    """The Bloom bits hash Spark's string rendering of a value ("true",
+    "5.00"), which a Python bool or an int probing a DECIMAL column does
+    not reproduce, so those lookups must keep every dir: both the table's
+    point scan and the pushdown source return every matching row."""
+    from pyspark.sql import functions as F
+
+    from lakeflow.sources.table_source import register_table_source
+
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    for i in range(4):
+        t.commit(
+            spark.range(i * 10, i * 10 + 10).select(
+                F.col("id").alias("k"),
+                (F.col("id") % 2 == 0).alias("flag"),
+                (F.col("id") / 4).cast("decimal(10,2)").alias("dec"),
+            ),
+            bloom_cols=["flag", "dec"],
+        )
+    base = t.read()
+    assert base.filter("flag").count() == 20
+    assert base.filter("dec = 5").count() == 1
+    assert t.scan_point("flag", True).count() == 20
+    assert t.scan_point("dec", 5).count() == 1
+    register_table_source(spark)
+    src = spark.read.format("lakeflow_table").option("path", t.root).load()
+    assert src.filter(F.col("flag") == True).count() == 20  # noqa: E712
+
+
+def test_zone_maps_refuse_temporal_columns_before_any_write(spark, tmp_path):
+    """Zone maps hold JSON min/max, so stats on a DATE/TIMESTAMP column are
+    refused up front: no data dir is written and no manifest tmp file is
+    left behind, by a commit or by an ANALYZE."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    df = spark.range(3).select(
+        "id", F.current_timestamp().alias("ts"), F.current_date().alias("d")
+    )
+    data = os.path.join(t.root, "data")
+    snaps = os.path.join(t.root, "_snapshots")
+    with pytest.raises(ValueError, match="numeric or string"):
+        t.commit(df, stats_cols=["ts"])
+    assert os.listdir(data) == []
+    t.commit(df)
+    before = sorted(os.listdir(data))
+    for cols in (["ts"], ["id", "d"]):
+        with pytest.raises(ValueError, match="numeric or string"):
+            t.analyze(cols)
+    assert sorted(os.listdir(data)) == before
+    assert not [f for f in os.listdir(snaps) if f.endswith(".tmp")]
+    assert t.current_version() == 1
+
+
+def test_open_and_mistyped_bounds_never_raise(spark, tmp_path):
+    """A None bound is an open end for the planner and for the residual
+    filter alike, and bounds the zone maps cannot compare with keep the
+    dir instead of raising."""
+    from pyspark.sql import functions as F
+
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    for i in range(4):
+        k = F.col("id").cast("int").alias("k")
+        t.commit(spark.range(i * 25, i * 25 + 25).select(k), stats_cols=["k"])
+    got = sorted(r.k for r in t.scan(between={"k": (60, None)}).collect())
+    assert got == list(range(60, 100))
+    assert t.pruned_dirs({"k": (60, None)}) == 2
+    assert t.pruned_dirs({"k": ("10", "20")}) == 0
+    t.delete_where("k = 3", prune_between={"k": ("0", "5")})
+    assert sorted(r.k for r in t.read().collect()) == [k for k in range(100) if k != 3]
