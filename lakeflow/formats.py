@@ -380,10 +380,10 @@ def import_delta(spark: SparkSession, path: str, dest: str):
     meta = None
     for c in commits:
         i = int(os.path.basename(c).split(".")[0])
-        t.commit(
+        t._land(
             read_delta_log(spark, path, version=i),
+            f"import_delta:{i}",
             mode="overwrite",
-            _operation=f"import_delta:{i}",
         )
         with open(c) as fh:
             for line in fh:

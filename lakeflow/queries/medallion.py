@@ -325,7 +325,8 @@ def medallion_gold_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat_csv = f"{work}/nation_csv"
 
     # The two raw-input CSV exports are independent jobs too — same §2.6
-    # overlap as the pipeline diamond below.
+    # overlap as the pipeline diamond below. Each worker inherits this
+    # thread's Spark local properties, so the caller's job group covers them.
     def _export(table: str, dest: str) -> None:
         load_table(spark, sf_dir, table).write.mode("overwrite").option(
             "header", True
@@ -333,10 +334,12 @@ def medallion_gold_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from concurrent.futures import ThreadPoolExecutor
 
+    from lakeflow.plans.runner import _inheriting
+
     with ThreadPoolExecutor(max_workers=2) as pool:
         for fut in [
-            pool.submit(_export, "customer", cust_csv),
-            pool.submit(_export, "nation", nat_csv),
+            pool.submit(_inheriting(_export), "customer", cust_csv),
+            pool.submit(_inheriting(_export), "nation", nat_csv),
         ]:
             fut.result()
     pipe = build_medallion_pipeline(spark, cust_csv, nat_csv, f"{work}/wh")

@@ -231,7 +231,7 @@ def _with_bucket(df: DataFrame, keys: list[str], num_buckets: int) -> DataFrame:
     )
 
 
-def _merge_batch(table, batch, keys, num_buckets, fold, **op) -> None:
+def _merge_batch(table, batch, keys, num_buckets, fold, operation=None) -> None:
     """One merge micro-batch: ``fold(target, batch)`` returns the new
     state, where target is None on the first commit. Without
     ``num_buckets`` the target is the whole table and the state overwrites
@@ -242,7 +242,7 @@ def _merge_batch(table, batch, keys, num_buckets, fold, **op) -> None:
     the same keys into the same state, so recovery is idempotent."""
     if num_buckets is None:
         target = None if table.current_version() is None else table.read()
-        table.commit(fold(target, batch), mode="overwrite", **op)
+        table._land(fold(target, batch), operation or "overwrite", "overwrite")
         return
     batch = _with_bucket(batch, keys, num_buckets)
     touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
@@ -255,7 +255,10 @@ def _merge_batch(table, batch, keys, num_buckets, fold, **op) -> None:
     # bucket leaves no state row to name that bucket, and without it the
     # bucket's old dirs would carry over and resurrect the deleted keys.
     table.commit_replace_partitions(
-        fold(target, batch), BUCKET_COL, touched_values=touched, **op
+        fold(target, batch),
+        BUCKET_COL,
+        touched_values=touched,
+        _operation=operation or "replace_partitions",
     )
 
 
@@ -363,7 +366,7 @@ def stream_scd2(
                 .withColumn("is_current", F.lit(1))
             )
 
-        _merge_batch(table, batch_df, keys, num_buckets, fold, _operation="scd2")
+        _merge_batch(table, batch_df, keys, num_buckets, fold, "scd2")
 
     return _foreach_batch(df, apply, checkpoint, available_now, processing_time)
 

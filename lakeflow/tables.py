@@ -80,6 +80,11 @@ def _unescape_partition_dir(raw: str) -> str:
     return _HIVE_ESCAPE_RE.sub(lambda m: chr(int(m.group(1), 16)), raw)
 
 
+def _split_value(path: str) -> str:
+    """The value token of a split-written dir ``<base>/<col>=<value>``."""
+    return _unescape_partition_dir(os.path.basename(path).split("=", 1)[1])
+
+
 def _union_stats_envelopes(prev_stats: dict, dirs, exclude=()) -> dict | None:
     """Over-approximate [min, max] union of per-dir zone-map envelopes, for
     a new dir that will hold a SUBSET of ``dirs``' rows (compaction fold,
@@ -604,8 +609,6 @@ class VersionedTable:
         bloom_cols: Sequence[str] | None = None,
         bloom_bits: int = 4096,
         txn: tuple[str, int] | Sequence[tuple[str, int]] | None = None,
-        _operation: str | None = None,
-        _existing_dir: str | None = None,
     ) -> int:
         """Write ``df`` as a new snapshot; returns the new version number.
 
@@ -646,101 +649,65 @@ class VersionedTable:
         of the domain); the bloom answers "could this dir contain key X?"
         from ≤``bloom_bits`` bits of manifest metadata — ``scan_point`` then
         prunes dirs with no false negatives.
+
+        The batch is admitted first (:meth:`_admit`: generated columns,
+        CHECK constraints), then written by :meth:`_write`.
         """
+        return self._land(
+            df, mode, mode, partition_by, stats_cols, merge_schema, bloom_cols,
+            bloom_bits, txn,
+        )
+
+    def _land(
+        self,
+        df: DataFrame,
+        operation: str,
+        mode: str = "append",
+        partition_by: Sequence[str] | None = None,
+        stats_cols: Sequence[str] | None = None,
+        merge_schema: bool = False,
+        bloom_cols: Sequence[str] | None = None,
+        bloom_bits: int = 4096,
+        txn: tuple[str, int] | Sequence[tuple[str, int]] | None = None,
+        audit=None,
+    ) -> int:
+        """:meth:`commit` recorded as ``operation``. ``audit`` (the WAP
+        hook) gets the written files before the publish and raises to
+        refuse them; their dir is then left for :meth:`remove_orphans`."""
         from pyspark.sql.types import StructType
 
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
         _check_stats_cols(df.schema, stats_cols)
-        txn_list: list[tuple[str, int]] | None = None
+        # The head is read once before the write: its txn marks decide a
+        # replay skip, its policy admits the batch, and an indexed table's
+        # bloom modulus is fixed when the index is CREATED — per-dir bit
+        # sets hashed mod different bloom_bits cannot share one probe, so
+        # it pins every later append, whatever this call's argument says.
+        head = self._current()
+        marks = None
         if txn is not None:
-            txn_list = [txn] if isinstance(txn[0], str) else [
-                (a, v) for a, v in txn
-            ]
-            head = self._current()
+            marks = dict([txn] if isinstance(txn[0], str) else txn)
             recorded = head.get("txns", {})
             if head and all(
                 recorded.get(a) is not None and v <= recorded[a]
-                for a, v in txn_list
+                for a, v in marks.items()
             ):
                 return head["version"]  # replayed batch: already folded, skip
-        # Generated columns derive (batch omits them) or validate (batch
-        # supplies them) BEFORE constraints, so a constraint may reference
-        # a generated column. The WAP path validates the staged files
-        # instead — staged data is immutable, so a missing generated column
-        # there is a hard error, not a derivation.
-        gen = self.generated_columns()
-        if gen:
-            if _existing_dir is None:
-                df = self._apply_generated(df, gen)
-            else:
-                staged = self.spark.read.parquet(_existing_dir)
-                missing = [c for c in gen if c not in staged.columns]
-                if missing:
-                    raise ValueError(
-                        f"staged data lacks generated columns {missing}"
-                    )
-                self._apply_generated(staged, gen)
-        # Table-level CHECK constraints gate every publish: the fresh-write
-        # path checks the batch BEFORE any data lands; the WAP path
-        # (_existing_dir) checks what was actually staged — either way a
-        # breaching batch never becomes a snapshot.
-        cons = self.constraints()
-        if cons:
-            target = (
-                df
-                if _existing_dir is None
-                else self.spark.read.parquet(_existing_dir)
-            )
-            self._check_constraints(target, cons)
-        # Hidden partitioning (Iceberg partition transforms): a spec like
-        # "day(ts)" or "bucket(16, user_id)" derives a hidden physical
-        # partition column at write; readers never see it, and
-        # scan_transformed rewrites source-column predicates onto it so
-        # Spark's partition pruning engages. The recorded table schema stays
-        # the USER schema — the transform is metadata, not a column.
-        parsed_specs = [
-            (_parse_partition_spec(p), p) for p in (partition_by or [])
-        ]
-        hidden = {s["hidden"]: s for s, _ in parsed_specs if s is not None}
-        phys_partition_by = [
-            s["hidden"] if s is not None else raw for s, raw in parsed_specs
-        ]
-        if hidden and _existing_dir is not None:
-            raise ValueError(
-                "partition transforms are unsupported on the staged-adoption "
-                "(WAP) path; stage with identity partitioning"
-            )
-        if _existing_dir is not None:
-            # WAP publish path: the data is already staged on disk; adopting
-            # it avoids a second write of the full batch.
-            data_dir = _existing_dir
-        else:
-            from pyspark.sql import functions as F
-
-            write_df = df
-            for h, s in hidden.items():
-                write_df = write_df.withColumn(
-                    h, _transform_expr(s["fn"], F.col(s["col"]), s["n"])
-                )
-            if hidden:
-                # Iceberg's hash write-distribution: cluster rows by the
-                # physical partition columns BEFORE partitionBy, so each
-                # dir is written by one task (one file per dir) instead of
-                # every shuffle task spraying a sliver into every dir —
-                # dirs × tasks small files, the classic transform-write
-                # trap (measured 10.7s → ~2s on the bench query).
-                write_df = write_df.repartition(
-                    *[F.col(c) for c in phys_partition_by]
-                )
-            data_dir = self._new_dir()
-            writer = write_df.write.mode("overwrite").format("parquet")
-            if phys_partition_by:
-                writer = writer.partitionBy(*phys_partition_by)
-            writer.save(data_dir)
-
-        parent = self._current()
         append = mode == "append"
+        if append and head.get("bloom"):
+            bloom_bits = head.get("bloom_bits", bloom_bits)
+        df = self._admit(df, head)
+        add = self._write(
+            df,
+            stats_cols=stats_cols,
+            bloom_cols=bloom_cols,
+            bloom_bits=bloom_bits,
+            partition_by=partition_by,
+        )
+        if audit is not None:
+            audit(self.spark.read.parquet(add[0][0]))
+        parent = self._current()
         next_schema = df.schema
         if append and parent.get("schema"):
             next_schema = self._evolve_schema(
@@ -748,35 +715,14 @@ class VersionedTable:
                 df.schema,
                 merge_schema,
             )
-        if append and parent.get("bloom"):
-            # The bloom modulus is fixed when the index is CREATED: per-dir
-            # bit sets hashed mod different bloom_bits cannot share one
-            # probe (scan_point would prune dirs that DO contain the value),
-            # so an indexed table's modulus pins every later append,
-            # whatever this call's argument says.
-            bloom_bits = parent.get("bloom_bits", bloom_bits)
-        meta = self._dir_meta(data_dir, stats_cols, bloom_cols, bloom_bits)
-        if partition_by:
-            # Per-dir layout record: partition EVOLUTION is legal (a later
-            # commit may choose different partition columns), and the read
-            # path groups dirs by layout — a metadata-only change, as in
-            # Iceberg, with no rewrite of existing dirs.
-            meta["partitioning"] = phys_partition_by
-        if hidden:
-            meta["hidden_specs"] = {h: s["spec"] for h, s in hidden.items()}
-        changes: dict = {
-            "schema": json.dumps(next_schema.jsonValue()),
-            "bloom_bits": bloom_bits,
-        }
-        if txn_list is not None:
-            changes["txns"] = dict(txn_list)
         return self._commit(
             parent,
-            _operation or mode,
-            add=[(data_dir, meta)],
+            operation,
+            add=add,
             keep=None if append else [],
-            rows_unchanged=_operation == "compact",
-            **changes,
+            schema=json.dumps(next_schema.jsonValue()),
+            bloom_bits=bloom_bits,
+            **({} if marks is None else {"txns": marks}),
         )
 
     def _commit(
@@ -884,26 +830,129 @@ class VersionedTable:
         # fallback listing, never correctness.
         self._write_latest_hint(version)
 
-    def _dir_meta(
+    def _admit(
         self,
-        path: str,
+        frame: DataFrame,
+        manifest: dict,
+        matched=None,
+        set_cols: Sequence[str] = (),
+    ) -> DataFrame:
+        """The one admission rule for rows entering the table, under the
+        policy of ``manifest`` (the head its caller already read): each
+        generated column ``frame`` omits is derived from its expression;
+        each one it supplies must equal it (NULL-safe); and no CHECK
+        constraint may be FALSE (NULL passes — SQL's and Delta's rule).
+        Derivation comes first, so a constraint may reference a generated
+        column, and both checks are ONE aggregate job before any byte
+        lands: per-rule violation counts, not row copies.
+
+        New rows (commit, WAP, replace-partitions, MOR upsert) are admitted
+        whole. An UPDATE passes ``matched`` (a boolean column marking its
+        updated rows, which alone are checked) and its ``set_cols``: a
+        generated column the SET names is validated, any other is
+        re-derived from the post-update row. Rewrites that only move rows
+        (compaction, Z-order) and DELETE are not admitted — their rows
+        passed at their own publish, or predate the policy."""
+        from pyspark.sql import functions as F
+
+        on = F.lit(True) if matched is None else matched
+        tests = {}
+        for c, spec in manifest.get("generated", {}).items():
+            value = F.expr(spec["expr"]).cast(spec["dtype"])
+            if c not in frame.columns:
+                frame = frame.withColumn(c, value)
+            elif matched is not None and c not in set_cols:
+                frame = frame.withColumn(c, F.when(on, value).otherwise(F.col(c)))
+            else:
+                tests[("generated", c)] = ~F.col(c).eqNullSafe(value)
+        for name, expr in manifest.get("constraints", {}).items():
+            tests[("constraint", name)] = ~F.coalesce(F.expr(expr), F.lit(True))
+        if not tests:
+            return frame
+        row = frame.agg(
+            *[
+                F.sum((on & t).cast("long")).alias(str(i))
+                for i, t in enumerate(tests.values())
+            ]
+        ).collect()[0]
+        bad = {key: int(n) for key, n in zip(tests, row) if n}
+        wrong = {c: n for (kind, c), n in bad.items() if kind == "generated"}
+        if wrong:
+            raise ValueError(
+                "generated-column mismatch (rows disagreeing with the "
+                f"declared expression): {wrong}"
+            )
+        if bad:
+            raise ConstraintViolationError(
+                f"constraint violations in {self.root}: "
+                + ", ".join(f"{n} ({c} rows)" for (_, n), c in bad.items())
+            )
+        return frame
+
+    def _write(
+        self,
+        frame: DataFrame,
+        like: dict | None = None,
         stats_cols: Sequence[str] | None = None,
         bloom_cols: Sequence[str] | None = None,
         bloom_bits: int = 4096,
-        by=None,
-    ) -> dict:
-        """Per-dir index entries for freshly written rows under ``path``:
-        zone-map ``stats`` (min/max of ``stats_cols``) and ``bloom`` bit
-        sets (the distinct ``bloom_bits``-bucket positions of two
-        md5-derived hashes per value of ``bloom_cols``), both folded into
-        ONE aggregate job per write — a commit-heavy stream pays one
-        metadata pass, not one per index kind per column, and the
-        collect_set payload is bounded by ``bloom_bits``, never by data
-        size. With ``by`` (a column splitting one write into several dirs)
-        the job groups by it and returns ``{group value: entries}``."""
-        if not (stats_cols or bloom_cols):
-            return {}
+        partition_by: Sequence[str] | None = None,
+        split: str | None = None,
+    ) -> list[tuple[str, dict]]:
+        """The one writer of data dirs: ``frame`` lands in ONE write job and
+        the result is the ``add`` change set for :meth:`_commit`, each new
+        dir with its per-dir index entries — zone-map ``stats`` (min/max of
+        ``stats_cols``) and ``bloom`` bit sets (the distinct
+        ``bloom_bits``-bucket positions of two md5-derived hashes per value
+        of ``bloom_cols``) — from ONE aggregate pass over the written
+        files: a commit-heavy stream pays one metadata pass, not one per
+        index kind per column, and the collect_set payload is bounded by
+        ``bloom_bits``, never by data size.
+
+        ``like`` (the parent manifest of a rewrite) indexes the rows as the
+        parent is indexed, so pruning does not decay as dirs get
+        rewritten: its stats columns unless ``stats_cols`` names others,
+        its bloom columns at its pinned modulus — each kept only where
+        ``frame`` has the column (a carried dir can pin entries for a
+        column a later schema change dropped).
+
+        Layout: ``partition_by`` writes one dir partitioned on identity
+        columns or Iceberg transforms (``"day(ts)"``, ``"bucket(16, id)"``):
+        a transform derives a hidden physical partition column that readers
+        never see, and ``scan_transformed`` rewrites source-column
+        predicates onto it. ``split`` writes one dir per value of that
+        column (``<dir>/<split>=<value>``, the column itself stripped from
+        the files), in the order the filesystem lists them."""
         from pyspark.sql import functions as F
+
+        if like is not None:
+            def indexed(key: str) -> set:
+                return {c for cs in like.get(key, {}).values() for c in cs}
+
+            cols = set(frame.columns)
+            stats_cols = sorted(set(stats_cols or indexed("stats")) & cols)
+            bloom_cols = sorted(indexed("bloom") & cols)
+            bloom_bits = like.get("bloom_bits", 4096)
+        specs = [(_parse_partition_spec(p), p) for p in partition_by or ()]
+        hidden = {s["hidden"]: s for s, _ in specs if s is not None}
+        layout = [s["hidden"] if s is not None else p for s, p in specs]
+        for h, s in hidden.items():
+            frame = frame.withColumn(
+                h, _transform_expr(s["fn"], F.col(s["col"]), s["n"])
+            )
+        if hidden:
+            # Iceberg's hash write-distribution: cluster rows by the
+            # physical partition columns BEFORE partitionBy, so each dir is
+            # written by one task (one file per dir) instead of every
+            # shuffle task spraying a sliver into every dir — dirs × tasks
+            # small files, the classic transform-write trap (measured
+            # 10.7s → ~2s on the bench query).
+            frame = frame.repartition(*[F.col(c) for c in layout])
+        base = self._new_dir()
+        writer = frame.write.mode("overwrite").format("parquet")
+        if layout or split:
+            writer = writer.partitionBy(*(layout or [split]))
+        writer.save(base)
 
         aggs = []
         for c in stats_cols or ():
@@ -927,18 +976,40 @@ class VersionedTable:
             if bloom_cols:
                 out["bloom"] = {
                     c: sorted(
-                        {int(b) for b in r[f"bloom_a_{c}"]}
-                        | {int(b) for b in r[f"bloom_b_{c}"]}
+                        {int(b) for b in r[f"bloom_a_{c}"] + r[f"bloom_b_{c}"]}
                     )
                     for c in bloom_cols
                 }
             return out
 
-        frame = self.spark.read.parquet(path)
-        if by is None:
-            return entries(frame.agg(*aggs).collect()[0])
-        rows = frame.groupBy(by.alias("__g")).agg(*aggs).collect()
-        return {r["__g"]: entries(r) for r in rows}
+        if split is not None:
+            dirs = [
+                os.path.join(base, n)
+                for n in os.listdir(base)
+                if n.startswith(f"{split}=")
+            ]
+            metas = {}
+            if aggs and dirs:
+                rows = (
+                    self.spark.read.parquet(base)
+                    .groupBy(_partition_token(split).alias("__g"))
+                    .agg(*aggs)
+                    .collect()
+                )
+                metas = {r["__g"]: entries(r) for r in rows}
+            return [(d, metas.get(_split_value(d), {})) for d in dirs]
+        meta = {}
+        if aggs:
+            meta = entries(self.spark.read.parquet(base).agg(*aggs).collect()[0])
+        if partition_by:
+            # Per-dir layout record: partition EVOLUTION is legal (a later
+            # commit may choose different partition columns), and the read
+            # path groups dirs by layout — a metadata-only change, as in
+            # Iceberg, with no rewrite of existing dirs.
+            meta["partitioning"] = layout
+        if hidden:
+            meta["hidden_specs"] = {h: s["spec"] for h, s in hidden.items()}
+        return [(base, meta)]
 
     def delete_where(
         self,
@@ -956,9 +1027,7 @@ class VersionedTable:
         documented full-rewrite fallback). Deleted rows stay visible via
         time travel until snapshots expire — exactly Delta's contract.
         """
-        return self._rewrite_where(
-            "delete", condition, prune_between, lambda frame, cond: frame.filter(~cond)
-        )
+        return self._rewrite_where("delete", condition, prune_between)
 
     def update_where(
         self,
@@ -972,54 +1041,49 @@ class VersionedTable:
         rows matching ``condition`` (others pass through unchanged). Prior
         values stay time-travelable until snapshot expiry.
         """
+        return self._rewrite_where("update", condition, prune_between, set_exprs)
+
+    def _updated(
+        self, frame: DataFrame, set_exprs: dict[str, str], cond, manifest: dict
+    ) -> DataFrame:
+        """``frame`` with ``set_exprs`` applied to the rows where ``cond``
+        holds, admitted as an UPDATE. ONE select, so the WHERE and every
+        SET expression evaluate against the PRE-update row (ANSI UPDATE
+        semantics: ``a = b, b = a`` swaps instead of cascading); SET results
+        cast back to the column's declared type (Delta's rule) so ``v + 1``
+        cannot fork the type between rewritten and carried-over files."""
         from pyspark.sql import functions as F
 
-        def rewrite(frame: DataFrame, cond) -> DataFrame:
-            types = self._set_types(frame, set_exprs)
-            # ONE select, so the WHERE and every SET expression evaluate
-            # against the PRE-update row (ANSI UPDATE semantics); SET
-            # results cast back to the column's declared type (Delta's
-            # rule) so `v + 1` cannot fork the type between rewritten and
-            # carried-over files.
-            frame = frame.select(
-                *[
-                    F.when(cond, F.expr(set_exprs[c]).cast(types[c]))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    if c in set_exprs
-                    else F.col(c)
-                    for c in frame.columns
-                ]
-            )
-            # CHECK constraints gate every publish — including UPDATE: the
-            # rewritten candidate rows are validated before any manifest
-            # lands (carried-over dirs passed at their own publish).
-            self._check_constraints(frame, self.constraints())
-            return frame
-
-        return self._rewrite_where(
-            "update", condition, prune_between, rewrite, exclude=set_exprs
-        )
-
-    @staticmethod
-    def _set_types(frame: DataFrame, set_exprs: dict[str, str]) -> dict:
         types = {f.name: f.dataType for f in frame.schema.fields}
         for col in set_exprs:
             if col not in types:
                 raise ValueError(f"UPDATE of unknown column {col!r}")
-        return types
+        flag = "__matched"
+        frame = frame.select(
+            *[
+                F.when(cond, F.expr(set_exprs[c]).cast(types[c]))
+                .otherwise(F.col(c))
+                .alias(c)
+                if c in set_exprs
+                else F.col(c)
+                for c in frame.columns
+            ],
+            cond.alias(flag),
+        )
+        return self._admit(frame, manifest, F.col(flag), set_exprs).drop(flag)
 
     def _rewrite_where(
-        self, operation, condition, prune_between, rewrite, exclude=()
+        self, operation, condition, prune_between, set_exprs=None
     ) -> int:
         """Copy-on-write DML: dirs whose stats rule out ``prune_between``
-        carry over by reference; the candidates are read, passed through
-        ``rewrite(frame, condition)`` and written as one new dir. That dir
-        holds a SUBSET of the candidates' rows (or, for UPDATE, their
-        pass-through columns), so the union of their envelopes and bit sets
-        stays a safe over-approximation (false positives only) — except for
-        the ``exclude``d SET columns, whose new values the old entries do
-        not cover."""
+        carry over by reference; the candidates are read, their rows
+        matching ``condition`` dropped (DELETE) or updated by ``set_exprs``,
+        and written as one new dir. That dir holds a SUBSET of the
+        candidates' rows (or, for UPDATE, their pass-through columns), so
+        the union of their envelopes and bit sets stays a safe
+        over-approximation (false positives only) — except for the SET
+        columns and the generated columns an UPDATE re-derives, whose new
+        values the old entries do not cover."""
         from pyspark.sql import functions as F
 
         m = self._snapshot()
@@ -1028,11 +1092,14 @@ class VersionedTable:
         touch = sorted(touched)
         add = []
         if touch:
+            frame = self._read_dirs(touch, m["version"])
             cond = F.coalesce(F.expr(condition), F.lit(False))
-            new_dir = self._new_dir()
-            rewrite(self._read_dirs(touch, m["version"]), cond).write.mode(
-                "overwrite"
-            ).parquet(new_dir)
+            if set_exprs is None:
+                frame, exclude = frame.filter(~cond), ()
+            else:
+                frame = self._updated(frame, set_exprs, cond, m)
+                exclude = {*set_exprs, *m.get("generated", {})}
+            [(new_dir, _)] = self._write(frame)
             meta = {
                 "stats": _union_stats_envelopes(m.get("stats", {}), touch, exclude),
                 "bloom": _union_bloom_sets(m.get("bloom", {}), touch, exclude),
@@ -1109,22 +1176,17 @@ class VersionedTable:
         would expose), not the input frame, so write-path corruption is in
         scope. On breach the staged dir is left for :meth:`remove_orphans`
         and :class:`lakeflow.quality.ExpectationFailedError` propagates.
+
+        The batch is admitted like any commit's before it is staged: an
+        omitted generated column is derived, so the audit sees it.
         """
         from lakeflow.quality import enforce
 
-        staged = self._new_dir()
-        writer = df.write.mode("overwrite")
-        partition_by = commit_kwargs.get("partition_by")
-        if partition_by:
-            # Stage in the final layout; the publish adopts the dir as-is.
-            writer = writer.partitionBy(*list(partition_by))
-        writer.parquet(staged)
-        enforce(self.spark.read.parquet(staged), expectations)
-        return self.commit(
-            self.spark.read.parquet(staged),
-            mode=mode,
-            _operation=f"{mode}_audited",
-            _existing_dir=staged,
+        return self._land(
+            df,
+            f"{mode}_audited",
+            mode,
+            audit=lambda staged: enforce(staged, expectations),
             **commit_kwargs,
         )
 
@@ -1187,61 +1249,29 @@ class VersionedTable:
         from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
 
-        # Same CHECK-constraint gate as commit(): the incoming state frame
-        # is bounded by the touched partitions, so the one-agg check stays
-        # O(batch state), never O(table).
-        self._check_constraints(df, self.constraints())
         _check_stats_cols(df.schema, stats_cols)
-        shadow = f"{partition_col}__p"
         parent = self._current()
+        # Admitted like commit()'s batch; the incoming state frame is
+        # bounded by the touched partitions, so the one-agg check stays
+        # O(batch state), never O(table).
+        df = self._admit(df, parent)
+        shadow = f"{partition_col}__p"
 
-        # Per-dir index maintenance (stats + bloom): a replace-managed
-        # table's indexes must not decay as dirs get rewritten. Every NEW
-        # dir gets fresh entries in ONE per-write aggregate — stats over
-        # stats_cols (explicit, else the parent's stats columns) and bloom
-        # bit sets over the parent's bloom columns at its pinned modulus.
-        # Both intersect the batch's columns: a carried dir can pin entries
-        # for a column a later schema change dropped, and recording nothing
-        # for it only costs pruning, never correctness.
-        batch_cols = set(df.columns)
-        bloom_cols = sorted(
-            {c for cs in parent.get("bloom", {}).values() for c in cs} & batch_cols
-        )
-        eff_stats_cols = sorted(
-            (
-                set(stats_cols)
-                if stats_cols
-                else {c for cs in parent.get("stats", {}).values() for c in cs}
-            )
-            & batch_cols
-        )
-        bloom_bits = parent.get("bloom_bits", 4096)
-        add: list[tuple[str, dict]] = []
-
-        def write_split(frame: DataFrame) -> None:
-            """One write job, split into per-partition subdirectories via a
-            shadow copy of the partition column (partitionBy strips its
-            column from the data files; the shadow keeps the real column in
-            place). Each subdir enters the manifest as a partition-pure dir,
-            keyed by its canonical (unescaped) partition token.
-            """
-            base = self._new_dir()
-            frame.withColumn(shadow, F.col(partition_col)).write.mode(
-                "overwrite"
-            ).partitionBy(shadow).parquet(base)
-            tokens = {
-                os.path.join(base, name): _unescape_partition_dir(
-                    name.split("=", 1)[1]
+        def write_split(frame: DataFrame) -> list[tuple[str, dict]]:
+            """One write job, split into partition-pure dirs via a shadow
+            copy of the partition column (the split strips its column from
+            the data files; the shadow keeps the real column in place),
+            each keyed by its canonical (unescaped) partition token and
+            indexed like the parent."""
+            return [
+                (d, {**meta, "dir_parts": [_split_value(d)]})
+                for d, meta in self._write(
+                    frame.withColumn(shadow, F.col(partition_col)),
+                    like=parent,
+                    stats_cols=stats_cols,
+                    split=shadow,
                 )
-                for name in os.listdir(base)
-                if name.startswith(f"{shadow}=")
-            }
-            metas = tokens and self._dir_meta(
-                base, eff_stats_cols, bloom_cols, bloom_bits,
-                by=_partition_token(shadow),
-            )
-            for d, token in tokens.items():
-                add.append((d, {"dir_parts": [token], **metas.get(token, {})}))
+            ]
 
         # Canonical tokens of the partitions this batch touches, rendered by
         # Spark (not Python str()) so they match the directory names Spark
@@ -1271,6 +1301,7 @@ class VersionedTable:
         prev_parts = parent.get("dir_parts", {})
         keep: list[str] = []
         rewrite_dirs: list[str] = []
+        add: list[tuple[str, dict]] = []
         for d in parent.get("dirs", []):
             parts = prev_parts.get(d)
             # Unknown coverage or overlap → the dir's untouched remainder is
@@ -1282,16 +1313,14 @@ class VersionedTable:
             # Token comparison is null-safe: NULL partition rows carry the
             # sentinel token, so they are kept when untouched and replaced
             # when the batch touches the NULL partition (a bare ~isin would
-            # evaluate to NULL and silently drop them).
-            remainder_reader = self.spark.read
-            if parent.get("schema"):
-                remainder_reader = remainder_reader.schema(next_schema)
-            write_split(
-                remainder_reader.parquet(*rewrite_dirs).filter(
+            # evaluate to NULL and silently drop them). The read applies the
+            # deletion vectors, so rows a MOR delete hid stay gone.
+            add += write_split(
+                self._read_dirs(rewrite_dirs, parent["version"]).filter(
                     ~_partition_token(partition_col).isin(list(touched))
                 )
             )
-        write_split(df)
+        add += write_split(df)
         return self._commit(
             parent,
             _operation,
@@ -1908,27 +1937,19 @@ class VersionedTable:
             F.lit(n_dirs - 1),
             ((F.col(zcol) - F.lit(lo)) * n_dirs / F.lit(span)).cast("bigint"),
         )
-        parent = self._new_dir()
-        (
-            zdf.withColumn("_zb", bucket)
-            .repartition(n_dirs, "_zb")
-            .sortWithinPartitions("_zb", zcol)
-            .drop(zcol)
-            .write.mode("overwrite")
-            .partitionBy("_zb")
-            .parquet(parent)
-        )
         # Z-order is row-preserving, so a bloom index the table carried is
         # rebuilt over the clustered dirs in the SAME per-dir metadata pass
         # as the stats.
-        metas = self._dir_meta(
-            parent,
-            list(cols),
-            sorted({c for cs in m.get("bloom", {}).values() for c in cs}),
-            m.get("bloom_bits", 4096),
-            by=F.col("_zb"),
+        add = self._write(
+            zdf.withColumn("_zb", bucket)
+            .repartition(n_dirs, "_zb")
+            .sortWithinPartitions("_zb", zcol)
+            .drop(zcol),
+            like=m,
+            stats_cols=list(cols),
+            split="_zb",
         )
-        add = [(os.path.join(parent, f"_zb={b}"), metas[b]) for b in sorted(metas)]
+        add.sort(key=lambda e: int(_split_value(e[0])))
         return self._commit(
             m, "optimize-zorder", add=add, keep=[], rows_unchanged=True
         )
@@ -1988,30 +2009,18 @@ class VersionedTable:
         if not touch:
             return m["version"]
         frame = self._read_dirs(sorted(touch), m["version"], with_positions=True)
-        if set_exprs is not None:
-            types = self._set_types(frame, set_exprs)
         matched = frame.filter(F.coalesce(F.expr(condition), F.lit(False)))
+        if set_exprs is not None:
+            # Only the rewritten rows are new — carried rows were admitted
+            # at their own publish — and they are admitted before any
+            # vector or dir lands.
+            rewritten = self._updated(matched, set_exprs, F.lit(True), m).drop(
+                self.POS_FILE, self.POS_INDEX
+            )
         dv = self._write_dv(matched)
         if dv is None:
             return m["version"]
-        add = []
-        if set_exprs is not None:
-            # One select: every SET expression sees the PRE-update row, so
-            # cross-referencing SETs (a = b, b = a) swap instead of cascading.
-            rewritten = matched.select(
-                *[
-                    F.expr(set_exprs[c]).cast(types[c]).alias(c)
-                    if c in set_exprs
-                    else F.col(c)
-                    for c in matched.columns
-                    if c not in (self.POS_FILE, self.POS_INDEX)
-                ]
-            )
-            # Constraints gate MOR publishes too: only the rewritten rows are
-            # new — carried rows were validated at their own publish.
-            self._check_constraints(rewritten, self.constraints())
-            add = [(self._new_dir(), {})]
-            rewritten.write.mode("overwrite").parquet(add[0][0])
+        add = [] if set_exprs is None else self._write(rewritten)
         return self._commit(m, operation, add=add, dvs=[dv])
 
     def _write_dv(self, rows: DataFrame) -> str | None:
@@ -2122,27 +2131,24 @@ class VersionedTable:
         m = self._current()
         if not m:
             return self.commit(batch, mode="append")
-        # Generated columns derive-or-validate on MOR upserts too — a CDC
-        # batch that omits a declared column must not land NULLs where
-        # every other commit path would derive the value.
-        gen = self.generated_columns()
-        if gen:
-            batch = self._apply_generated(batch, gen)
-        # Constraints gate MOR upserts before any DV or data dir lands.
-        self._check_constraints(batch, self.constraints())
+        # Admitted like any commit's batch — a CDC batch that omits a
+        # generated column must not land NULLs where every other path
+        # would derive the value — before any vector or dir lands.
+        batch = self._admit(batch, m)
         frame = self._read_dirs(m["dirs"], m["version"], with_positions=True)
         keysel = batch.select(*list(keys)).distinct()
         tagged = frame.select(self.POS_FILE, self.POS_INDEX, *list(keys))
         dv = self._write_dv(
             tagged.join(F.broadcast(keysel), list(keys), "left_semi")
         )
-        new_dir = self._new_dir()
         payload = [
             c for c in frame.columns if c not in (self.POS_FILE, self.POS_INDEX)
         ]
-        batch.select(*payload).write.mode("overwrite").parquet(new_dir)
         return self._commit(
-            m, "upsert-mor", add=[(new_dir, {})], dvs=[dv] if dv else []
+            m,
+            "upsert-mor",
+            add=self._write(batch.select(*payload)),
+            dvs=[dv] if dv else [],
         )
 
     def add_column(self, name: str, dtype: str) -> int:
@@ -2224,10 +2230,13 @@ class VersionedTable:
         columns, SURVEY §1.3): a NEW column whose value every future commit
         derives from ``expr`` when the batch omits it, and VALIDATES (one
         aggregate, before any byte lands) when the batch supplies it —
-        so the derivation can never drift from the declaration. Metadata
-        only: rows committed before the declaration read NULL (the additive
-        NULL-backfill contract), and the definition rides the manifest like
-        constraints, surviving every manifest-producing path and clones."""
+        so the derivation can never drift from the declaration. An UPDATE
+        re-derives the column on the rows it changes unless its SET names
+        the column, which is then validated. Metadata only: rows committed
+        before the declaration read NULL (the additive NULL-backfill
+        contract) until an UPDATE touches them — compaction moves them as
+        they are — and the definition rides the manifest like constraints,
+        surviving every manifest-producing path and clones."""
         from pyspark.sql.types import StructType, _parse_datatype_string
 
         from pyspark.sql import functions as F
@@ -2248,20 +2257,10 @@ class VersionedTable:
                     f"column {name!r} is {st[name].dataType.simpleString()}, "
                     f"declaration says {dtype!r}"
                 )
-            bad = (
-                self.read(version)
-                .filter(
-                    F.col(name).isNotNull()
-                    & ~F.col(name).eqNullSafe(F.expr(expr).cast(dtype))
-                )
-                .limit(1)
-                .count()
+            self._admit(
+                self.read(version).filter(F.col(name).isNotNull()),
+                {"generated": {name: {"dtype": dtype, "expr": expr}}},
             )
-            if bad:
-                raise ValueError(
-                    f"existing non-NULL values of {name!r} disagree with "
-                    f"the declared expression"
-                )
             new_st = st
         else:
             new_st = StructType(list(st.fields)).add(
@@ -2277,34 +2276,6 @@ class VersionedTable:
 
     def generated_columns(self) -> dict:
         return self._current().get("generated", {})
-
-    def _apply_generated(self, df: DataFrame, gen: dict) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        supplied = {c: s for c, s in gen.items() if c in df.columns}
-        for c, s in gen.items():
-            if c not in df.columns:
-                df = df.withColumn(c, F.expr(s["expr"]).cast(s["dtype"]))
-        if supplied:
-            row = df.agg(
-                *[
-                    F.sum(
-                        (
-                            ~F.col(c).eqNullSafe(
-                                F.expr(s["expr"]).cast(s["dtype"])
-                            )
-                        ).cast("long")
-                    ).alias(c)
-                    for c, s in supplied.items()
-                ]
-            ).collect()[0]
-            bad = {c: int(row[c] or 0) for c in supplied if row[c]}
-            if bad:
-                raise ValueError(
-                    f"generated-column mismatch (rows disagreeing with the "
-                    f"declared expression): {bad}"
-                )
-        return df
 
     ALIASES_KEY = "lakeflow.aliases"
 
@@ -2337,13 +2308,13 @@ class VersionedTable:
                 raise ValueError(
                     f"{new!r} is a historical name of column {f.name!r}"
                 )
-        for cname, expr in self.constraints().items():
+        for cname, expr in m.get("constraints", {}).items():
             if re.search(rf"\b{re.escape(old)}\b", expr):
                 raise ValueError(
                     f"column {old!r} is referenced by constraint {cname!r}: "
                     "drop the constraint before renaming"
                 )
-        for gname, spec in self.generated_columns().items():
+        for gname, spec in m.get("generated", {}).items():
             if gname == old or re.search(
                 rf"\b{re.escape(old)}\b", spec["expr"]
             ):
@@ -2401,7 +2372,7 @@ class VersionedTable:
         manifest-producing path, like txn watermarks."""
         m = self._current()
         if m:
-            self._check_constraints(self.read(m["version"]), {name: check_expr})
+            self._admit(self.read(m["version"]), {"constraints": {name: check_expr}})
         return self._put_policy(
             m, "constraints", f"add-constraint:{name}", name, check_expr
         )
@@ -2665,31 +2636,6 @@ class VersionedTable:
             )
         return df
 
-    def _check_constraints(self, df: DataFrame, cons: dict) -> None:
-        """One aggregate pass: per-rule violation counts over ``df``."""
-        if not cons:
-            return
-        from pyspark.sql import functions as F
-
-        # SQL CHECK semantics (and Delta's): only FALSE violates — a NULL
-        # (unknown) predicate result passes. Guard nullability explicitly
-        # with NOT NULL constraints where that is the intent.
-        aggs = [
-            F.sum(
-                F.when(
-                    ~F.coalesce(F.expr(expr), F.lit(True)), F.lit(1)
-                ).otherwise(F.lit(0))
-            ).alias(name)
-            for name, expr in cons.items()
-        ]
-        row = df.agg(*aggs).collect()[0]
-        breached = {n: int(row[n] or 0) for n in cons if (row[n] or 0) > 0}
-        if breached:
-            raise ConstraintViolationError(
-                f"constraint violations in {self.root}: "
-                + ", ".join(f"{n} ({c} rows)" for n, c in breached.items())
-            )
-
     # -- maintenance -------------------------------------------------------
     _dir_bytes = staticmethod(_dir_bytes)
 
@@ -2714,33 +2660,25 @@ class VersionedTable:
         m = self._snapshot()
         _check_stats_cols(self.schema(m["version"]), stats_cols)
         if small_dir_max_bytes is None:
-            # A full compact is row-preserving, so indexes the table carried
-            # must not vanish with the rewritten dirs: without explicit
-            # stats_cols it re-derives the parent's stats columns, and it
-            # always rebuilds the bloom index over its recorded columns at
-            # the pinned modulus — commit folds both into its single
-            # metadata pass over the new dir.
-            if stats_cols is None:
-                stats_cols = sorted(
-                    {c for cs in m.get("stats", {}).values() for c in cs}
-                ) or None
-            bloom_cols = sorted({c for cs in m.get("bloom", {}).values() for c in cs})
-            return self.commit(
-                self.read(m["version"]),
-                mode="overwrite",
-                stats_cols=stats_cols,
-                bloom_cols=bloom_cols or None,
-                bloom_bits=m.get("bloom_bits", 4096),
-                _operation="compact",
+            # Every dir folds into one, read through the deletion vectors,
+            # which is what purges them. The rows only move, so they are
+            # not admitted, and the new dir is indexed like the parent.
+            frame = self.read(m["version"])
+            return self._commit(
+                m,
+                "compact",
+                add=self._write(frame, like=m, stats_cols=stats_cols),
+                keep=[],
+                rows_unchanged=True,
+                schema=json.dumps(frame.schema.jsonValue()),
             )
         small = _small_dirs(m["dirs"], small_dir_max_bytes)
         if len(small) <= 1:
             # Nothing to coalesce; skip the no-op commit.
             return m["version"]
         keep = [d for d in m["dirs"] if d not in small]
-        merged_dir = self._new_dir()
-        self._read_dirs(list(small), m["version"]).write.mode("overwrite").parquet(
-            merged_dir
+        [(merged_dir, meta)] = self._write(
+            self._read_dirs(list(small), m["version"]), stats_cols=stats_cols
         )
         # The merged dir holds exactly the folded dirs' rows, so without
         # stats_cols its envelope per column is the union of theirs, its
@@ -2748,10 +2686,11 @@ class VersionedTable:
         # partition coverage the union of theirs — zero IO, and file-skip
         # pruning does not degrade because an auto-compaction fold did not
         # re-specify stats_cols.
-        meta = self._dir_meta(merged_dir, stats_cols) or {
-            "stats": _union_stats_envelopes(m.get("stats", {}), small)
+        meta = {
+            "stats": _union_stats_envelopes(m.get("stats", {}), small),
+            **meta,
+            "bloom": _union_bloom_sets(m.get("bloom", {}), small),
         }
-        meta["bloom"] = _union_bloom_sets(m.get("bloom", {}), small)
         parts = m.get("dir_parts", {})
         if all(parts.get(d) is not None for d in small):
             meta["dir_parts"] = sorted({p for d in small for p in parts[d]})

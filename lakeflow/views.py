@@ -242,10 +242,10 @@ class _View:
         a replay of the same refresh (txn version <= recorded) is skipped.
         Then record the versions in the sidecar marker."""
         if state is not None:
-            self.result.commit(
+            self.result._land(
                 state,
+                operation,
                 mode="overwrite",
-                _operation=operation,
                 txn=list(zip(self._WATERMARKS, versions)),
             )
         tmp = self._marker_path + ".tmp"

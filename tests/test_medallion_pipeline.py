@@ -68,3 +68,22 @@ def test_path_exists_resolves_scheme_and_propagates_errors(spark, tmp_path):
     assert not path_exists(spark, str(tmp_path / "absent"))
     with pytest.raises(Exception):
         path_exists(spark, "nosuchscheme://bucket/path")
+
+
+def test_medallion_gold_dim_jobs_stay_in_the_callers_group(spark):
+    """The query's two CSV exports run on a 2-worker pool; each worker
+    inherits the caller's job group, so no job of the query escapes it."""
+    from lakeflow.queries.medallion import medallion_gold_dim
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "medallion-gold-dim-caller"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        assert medallion_gold_dim(spark, SF_DIR).count() > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert tracker.getJobIdsForGroup(group)
