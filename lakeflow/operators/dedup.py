@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from lakeflow.operators.transforms import fan_out
+from lakeflow.operators.transforms import bucket_pairs, fan_out
 
 from lakeflow.functions.rounding import rnd
 
@@ -179,8 +179,9 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Band the signature and emit candidate pairs sharing any band bucket.
 
-    Output: (id_a, id_b) with id_a < id_b, distinct. The self-join keys on
-    (band_idx, band_hash) — cost proportional to real collisions.
+    Output: (id_a, id_b) with id_a < id_b, distinct. The self-join
+    (:func:`bucket_pairs`) keys on (band, bh) — cost proportional to real
+    collisions.
 
     ``max_bucket`` is the degenerate-bucket guard for huge corpora: a bucket
     with B members emits O(B²) pairs, and boilerplate-heavy content (empty
@@ -189,9 +190,12 @@ def lsh_candidate_pairs(
     so per-bucket pair counts stay O(max_bucket²)·splits. Cross-salt pairs
     inside a degenerate bucket are forgone deliberately — content that
     degenerate belongs to exact dedup (identical fingerprints), which runs
-    before LSH in the pipeline.
+    before LSH in the pipeline. A ``max_bucket`` below 1 raises ValueError.
     """
+    if max_bucket is not None and max_bucket < 1:
+        raise ValueError(f"max_bucket must be >= 1, got {max_bucket}")
     banded = band_buckets(signatures, bands=bands, rows_per_band=rows_per_band)
+    keys = ["band", "bh"]
     if max_bucket is not None:
         # Sizes via groupBy + broadcast join-back, NOT a window count over
         # (band, bh): measured r13 — the window forces a full exchange +
@@ -210,33 +214,13 @@ def lsh_candidate_pairs(
                     n_salts,
                 ),
             )
-            .drop("__n")
         )
-    else:
-        banded = banded.withColumn("salt", F.lit(0))
-    # Materialize once: the self-join would otherwise recompute the whole
-    # shingle→signature pipeline for BOTH sides (2× the dominant cost). At
-    # warehouse scale this is "write signatures to a table, join the table".
-    banded = banded.persist()
-    pairs = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.salt") == F.col("b.salt"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    # Materialize the (small) candidate set eagerly, then release the banded
-    # cache — otherwise repeated calls accumulate cached signature blocks for
-    # the session lifetime. localCheckpoint blocks are freed by the context
-    # cleaner when the returned frame is garbage-collected.
-    pairs = pairs.localCheckpoint(eager=True)
-    banded.unpersist()
-    return pairs
+        keys.append("salt")
+    # Materialize the (small, distinct) candidate set eagerly: consumers
+    # read it on both sides of a verify join. localCheckpoint blocks are
+    # freed by the context cleaner when the returned frame is
+    # garbage-collected.
+    return bucket_pairs(banded, keys).distinct().localCheckpoint(eager=True)
 
 
 def jaccard_pairs(
@@ -249,11 +233,9 @@ def jaccard_pairs(
     instead of raw shingles when |docs| is large.
     """
     sizes = shingles.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    a = shingles.alias("a")
-    b = shingles.alias("b")
     inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        bucket_pairs(shingles, ["shingle"])
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     out = (
@@ -423,27 +405,13 @@ def simhash_near_pairs(
     )
     if cache:
         keyed = keyed.persist()
-    a = keyed.alias("a")
-    b = keyed.alias("b")
-    ham = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash")).cast("int")
-    )
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.nib") == F.col("b.nib"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            ham.alias("hamming"),
-        )
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")).cast("int"))
+    return (
+        bucket_pairs(keyed, ["blk", "nib"], carry=["simhash"])
+        .select("id_a", "id_b", ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-    return pairs
 
 
 # Driver-side connected-components tier: edge lists at or under this many
@@ -828,25 +796,13 @@ def simhash64_near_pairs(
     )
     if cache:
         keyed = keyed.persist()
-    a, b = keyed.alias("a"), keyed.alias("b")
     ham = sum(
-        F.bit_count(
-            F.col(f"a.b{k}").bitwiseXOR(F.col(f"b.b{k}")).cast("int")
-        )
+        F.bit_count(F.col(f"b{k}_a").bitwiseXOR(F.col(f"b{k}_b")).cast("int"))
         for k in range(4)
     )
     return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            ham.cast("int").alias("hamming"),
-        )
+        bucket_pairs(keyed, ["blk", "val"], carry=["b0", "b1", "b2", "b3"])
+        .select("id_a", "id_b", ham.cast("int").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -961,15 +917,8 @@ def prefix_filtered_pairs(shingles: DataFrame, threshold: float) -> DataFrame:
         F.col("rn")
         <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
     )
-    a = prefix.select(
-        F.col("id").alias("id_a"), "shingle", F.col("sz").alias("sz_a")
-    )
-    b = prefix.select(
-        F.col("id").alias("id_b"), "shingle", F.col("sz").alias("sz_b")
-    )
     return (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(prefix, ["shingle"], carry=["sz"])
         .filter(F.col("sz_a") >= F.lit(threshold) * F.col("sz_b"))
         .filter(F.col("sz_b") >= F.lit(threshold) * F.col("sz_a"))
         .select("id_a", "id_b")
@@ -1030,18 +979,6 @@ def prefix_filtered_jaccard_join(
             "__pos", "shingle"
         ),
     ).select("id", "sz", (F.col("__pos") + 1).alias("rn"), "shingle")
-    a = pre.select(
-        F.col("id").alias("id_a"),
-        F.col("sz").alias("sz_a"),
-        F.col("rn").alias("rn_a"),
-        "shingle",
-    )
-    b = pre.select(
-        F.col("id").alias("id_b"),
-        F.col("sz").alias("sz_b"),
-        F.col("rn").alias("rn_b"),
-        "shingle",
-    )
     alpha = F.ceil(
         F.lit(t / (1.0 + t)) * (F.col("sz_a") + F.col("sz_b"))
     )
@@ -1055,8 +992,7 @@ def prefix_filtered_jaccard_join(
         F.col("sz_a") - F.min("rn_a"), F.col("sz_b") - F.min("rn_b")
     )
     cands = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(pre, ["shingle"], carry=["sz", "rn"])
         .filter(F.col("sz_a") >= F.lit(t) * F.col("sz_b"))
         .filter(F.col("sz_b") >= F.lit(t) * F.col("sz_a"))
         .groupBy("id_a", "id_b", "sz_a", "sz_b")

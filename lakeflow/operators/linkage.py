@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lakeflow.operators.transforms import bucket_pairs, fan_out
+
 
 def deletion_variants(col: str, max_deletes: int = 2):
     """Array column of all strings reachable from ``col`` by deleting up to
@@ -78,33 +80,6 @@ def edit_distance_pairs(
     the band is already implied by the equi-join key — an explicit filter
     would only drop xxhash64-collision candidates (which the levenshtein
     verify removes anyway) while widening every shuffled row.
-
-    Measured breakdown (r5, sf0.1 = 15k names, local[32], steady state):
-    candidate generation + checkpoint 2.3s, verify + name fetch + dedup
-    0.7s, total ~3.3s — already under the 4.5s polish target. The ~5s
-    single-shot bench figure is first-touch whole-stage-codegen of this
-    operator's unusually large generated expressions (~1.7s one-time),
-    which every query pays for its own plan in a one-pass bench; the
-    variant fan-out constant, not the verify join, dominates the steady
-    cost, and shrinking it further means truncated-prefix SymSpell, which
-    trades away the recall-1 guarantee.
-
-    r10 (VERDICT #7): the sentinel-position encoding below collapsed the
-    3-branch variant CASE into one uniform 3-substring concat — warm
-    in-session run dropped 3.9s → 3.2s at sf0.1 (same 163,383 pairs;
-    recall-1 property tests unchanged). Remaining cost is the variant
-    fan-out constant itself; further shrink = truncated-prefix SymSpell,
-    which trades away recall-1. Stopping here.
-
-    r7 re-profile of the reported 5.0→6.2s bench creep: this module is
-    byte-identical since the r5 note above, and re-measured today the
-    query runs 2.5-3.2s warm in isolation and 4.88s in exact bench
-    context (same headline prefix, fresh session, sf0.1, local[32]) —
-    back under the 5.0s target. Neither the variant fan-out nor the
-    verify grew; the 6.2s r6 driver figure was run-environment variance
-    on a one-shot measurement of a query whose first-touch codegen
-    (~1.7s of unusually large generated expressions) amplifies any
-    scheduler noise. No plan change warranted.
     """
     if max_dist != 2:
         raise ValueError("edit_distance_pairs currently supports max_dist=2")
@@ -127,8 +102,6 @@ def edit_distance_pairs(
     # narrow scan (one small parquet file → one task) would serialize that
     # string building on a single core. fan_out spreads the skinny input
     # rows across all cores before the explode.
-    from lakeflow.operators.transforms import fan_out
-
     df = fan_out(df)
     first_of_run = (
         f"(x = 1 OR substring({text_col}, x, 1) != substring({text_col}, x - 1, 1))"
@@ -161,10 +134,7 @@ def edit_distance_pairs(
         f"substring({text_col}, d.i + 1, d.j - d.i - 1), "
         f"substring({text_col}, d.j + 1))"
     )
-    # A NULL block key pairs with nothing: the equi-join this grouping
-    # replaced never matched NULL = NULL, while groupBy would bucket NULLs.
-    blocked = df.dropna(subset=list(block_cols)) if block_cols else df
-    keyed = blocked.select(
+    keyed = df.select(
         F.col(id_col).alias("id"),
         *[F.col(c) for c in block_cols],
         F.col(text_col),
@@ -174,44 +144,9 @@ def edit_distance_pairs(
         *block_cols,
         F.xxhash64(F.expr(variant)).alias("vh"),
     )
-    # Candidate generation as ONE exchange (r14, guide §2.4): group the
-    # variant rows by (vh, block) and expand each bucket's C(m, 2) id pairs
-    # row-locally, instead of the former self-join — which shuffled the
-    # SAME persisted frame TWICE (one exchange per join side) and paid the
-    # join machinery to produce exactly these in-bucket pairs. Multiplicity
-    # is identical (the multiset expansion i<j over a bucket's id list
-    # equals the join's cnt_a x cnt_b per id pair), ~99% of buckets are
-    # singletons and drop before any pair exists, and the variant
-    # generation now runs once with no persist/cache pass at all. Measured
-    # r14 at sf0.1 (fuzzy_name_pairs, interleaved 2x3-rep A/B, same
-    # session, noop sink): join form min 2.248 s vs groupBy form min
-    # 1.875 s (x0.83); identical 163,383 output rows.
-    ids = F.array_sort(F.collect_list("id"))
-    m = F.size("ids")
-    pair_structs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), m - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, m),
-                lambda j: F.struct(
-                    F.get("ids", i - 1).alias("a"),
-                    F.get("ids", j - 1).alias("b"),
-                ),
-            ),
-        )
-    )
-    cand = (
-        keyed.groupBy("vh", *block_cols)
-        .agg(ids.alias("ids"))
-        .filter(m >= 2)
-        .select(F.explode(pair_structs).alias("p"))
-        # A duplicate (id, vh) row (same-char-run variants the canonical
-        # encoding keeps) pairs with itself inside the bucket — the sorted
-        # expansion makes those a == b, exactly the rows the old join's
-        # id_a < id_b filter dropped.
-        .filter(F.col("p.a") != F.col("p.b"))
-        .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
-    )
+    # One self-join on (vh, block): a NULL block key pairs with nothing, and
+    # a duplicate (id, vh) row never pairs with itself (id_a < id_b).
+    cand = bucket_pairs(keyed, ["vh", *block_cols])
     if eager:
         # Two name-fetch consumers below: materialize the (small) candidate
         # list once rather than re-running the variant explode per side.

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from lakeflow.functions.rounding import rnd
 from lakeflow.functions.vectors import cosine, dot, norm
-from lakeflow.operators.transforms import fan_out
+from lakeflow.operators.transforms import bucket_pairs, fan_out
 
 
 def brute_force_topk(
@@ -235,15 +235,9 @@ def embedding_near_dups(
     )
     # Materialize once: the self-join would otherwise recompute the
     # projections for both sides; release the cache after the (small) pair
-    # set is materialized, mirroring lsh_candidate_pairs.
+    # set is materialized.
     if eager:
         keyed = keyed.persist()
-    a = keyed.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na"), "pk"
-    )
-    b = keyed.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("n").alias("nb"), "pk"
-    )
     # Score THEN dedup: a pair seen from several probe keys recomputes its
     # (deterministic) cosine once per sighting — 64 codegen mults — while
     # dedup-then-score would shuffle both full vectors (~1 KB/row, every
@@ -257,12 +251,11 @@ def embedding_near_dups(
     # probes with threshold=-1.0 (candidate topology is
     # threshold-independent).
     pairs = (
-        a.join(b, on=["pk"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(keyed, ["pk"], carry=["v", "n"])
         .select(
             "id_a",
             "id_b",
-            rnd(dot("va", "vb") / (F.col("na") * F.col("nb")), round_to).alias("cos"),
+            rnd(dot("v_a", "v_b") / (F.col("n_a") * F.col("n_b")), round_to).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
         .dropDuplicates(["id_a", "id_b"])

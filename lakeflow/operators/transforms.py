@@ -43,6 +43,38 @@ def fan_out(
     return df.repartition(n)
 
 
+def bucket_pairs(
+    keyed: DataFrame,
+    keys: Sequence[str],
+    id_col: str = "id",
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """Every pair of rows of ``keyed`` that share a bucket: the candidate
+    generation under each similarity, dedup and linkage join.
+
+    One aliased self equi-join on ``keys`` with ``a.id < b.id``. Output:
+    ``id_a``, ``id_b``, then ``<c>_a``, ``<c>_b`` for each ``carry`` column.
+    It emits one row per pair per shared bucket, and repeated ``(id, key)``
+    rows multiply, so callers keep their own dedup or counting. A NULL key
+    part never pairs (NULL = NULL is not true). Pairs stream out of the
+    join row by row: a bucket of m rows emits its C(m, 2) pairs while the
+    join buffers only the m rows, and no row ever holds the bucket's pairs.
+
+    Nothing is persisted: both sides read ``keyed``'s plan (Spark reuses
+    the exchange when both sides shuffle). Persist ``keyed`` first where
+    its plan is expensive enough that the join should not run it twice.
+    """
+    a, b = keyed.alias("a"), keyed.alias("b")
+    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    for k in keys:
+        cond = (F.col(f"a.{k}") == F.col(f"b.{k}")) & cond
+    return a.join(b, cond).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    )
+
+
 def rename_cols(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
     """Map-driven column rename (reference: _silver_utils.py:67-72)."""
     return df.withColumnsRenamed(dict(mapping))

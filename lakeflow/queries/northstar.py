@@ -1018,12 +1018,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     keyed = corpus.select(F.col("doc_id"), dd.fingerprint("text").alias("fp"))
-    a = keyed.select(F.col("doc_id").alias("id_a"), "fp")
-    b = keyed.select(F.col("doc_id").alias("id_b"), "fp")
-    pairs = a.join(b, "fp").filter(F.col("id_a") < F.col("id_b")).select(
-        "id_a", "id_b"
-    )
-    return dd.dup_clusters(pairs)
+    return dd.dup_clusters(transforms.bucket_pairs(keyed, ["fp"], id_col="doc_id"))
 
 
 @register(
@@ -2191,17 +2186,9 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    a, b = fps.alias("a"), fps.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.source") < F.col("b.source")),
-        )
-        .groupBy(
-            F.col("a.source").alias("source_a"),
-            F.col("b.source").alias("source_b"),
-        )
+        transforms.bucket_pairs(fps, ["fp"], id_col="source")
+        .groupBy(F.col("id_a").alias("source_a"), F.col("id_b").alias("source_b"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("shared_fps"))
     )
 
@@ -2310,19 +2297,10 @@ def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("vid", "cid", "v", "nrm")
     )
-    a, b = cells.alias("a"), cells.alias("b")
     dropped = (
-        a.join(
-            b,
-            (F.col("a.cid") == F.col("b.cid")) & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .filter(
-            _rnd(
-                dot("a.v", "b.v") / (F.col("a.nrm") * F.col("b.nrm")), 6
-            )
-            >= 0.35
-        )
-        .select(F.col("b.vid").alias("vid"))
+        transforms.bucket_pairs(cells, ["cid"], id_col="vid", carry=["v", "nrm"])
+        .filter(_rnd(dot("v_a", "v_b") / (F.col("nrm_a") * F.col("nrm_b")), 6) >= 0.35)
+        .select(F.col("id_b").alias("vid"))
         .distinct()
     )
     return cells.join(dropped, "vid", "left_anti").select(

@@ -720,6 +720,23 @@ def test_lsh_salt_guard_bounds_degenerate_buckets(spark):
     assert a == b
 
 
+@pytest.mark.parametrize("max_bucket", [0, -1])
+def test_lsh_max_bucket_below_one_is_refused(spark, max_bucket):
+    """A salt cap below 1 is refused before any Spark job runs (0 divided by
+    zero under ANSI, and silently ran unsalted otherwise)."""
+    from lakeflow.operators import dedup as dd
+
+    sigs = spark.createDataFrame([(1, ["h"] * 16)], "id long, sigs array<string>")
+    sc = spark.sparkContext
+    sc.setJobGroup("lsh-max-bucket", "validation")
+    try:
+        with pytest.raises(ValueError, match="max_bucket"):
+            dd.lsh_candidate_pairs(sigs, max_bucket=max_bucket)
+        assert list(sc.statusTracker().getJobIdsForGroup("lsh-max-bucket")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_deletion_neighborhood_matches_naive_quadratic(spark):
     """SymSpell candidate generation must have recall 1 for lev <= 2: the
     edit_distance_pairs result equals the naive within-block self-join on a
@@ -788,6 +805,50 @@ def test_deletion_neighborhood_null_block_keys_match_naive_join(spark):
     want = sorted(tuple(r) for r in naive.collect())
     assert want == [(0, 1, 1)]
     assert got == want
+
+
+def test_edit_distance_mega_bucket_pairs_come_from_the_join(spark):
+    """One block holds 200 copies of one name: exactly C(200, 2) dist-0
+    pairs, and the candidate join's output rows equal the sum of per-bucket
+    pair counts — the pairs stream out of a join, not out of one array row
+    per bucket."""
+    from collections import Counter
+    from itertools import combinations
+
+    from lakeflow.observability import execution_metrics
+    from lakeflow.operators.linkage import edit_distance_pairs
+
+    names = [("x", "abc")] * 200 + [
+        ("x", "abd"), ("x", "abcd"), ("x", "xyz"),
+        ("y", "abc"), ("y", "abd"), (None, "abc"),
+    ]
+    rows = [(i, blk, name) for i, (blk, name) in enumerate(names)]
+    df = spark.createDataFrame(rows, "id long, blk string, name string")
+
+    def variants(s):
+        # Up to 2 deletions; every name has distinct chars, so no repeats.
+        return (
+            {s}
+            | {s[:i] + s[i + 1:] for i in range(len(s))}
+            | {s[:i] + s[i + 1:j] + s[j + 1:] for i, j in combinations(range(len(s)), 2)}
+        )
+
+    buckets = Counter(
+        (blk, v) for _, blk, name in rows if blk is not None for v in variants(name)
+    )
+    expected = sum(m * (m - 1) // 2 for m in buckets.values())
+
+    # eager=True checkpoints the candidate pairs, so the candidate join is
+    # the latest execution at return.
+    out = edit_distance_pairs(df, "name", "id", ["blk"], 2)
+    join_rows = [
+        r["value"]
+        for r in execution_metrics(df, run=False)
+        if "Join" in r["operator"] and r["metric"] == "number of output rows"
+    ]
+    assert join_rows == [expected]
+    dists = Counter(r.dist for r in out.collect())
+    assert dists[0] == 200 * 199 // 2
 
 
 def test_winnow_jvm_matches_udtf(spark):

@@ -224,6 +224,43 @@ def test_symmetric_delete_pairs_match_naive(spark, names):
 
 @settings(**_SETTINGS)
 @given(
+    data=st.lists(
+        st.tuples(
+            st.integers(0, 5),
+            st.sampled_from([None, 0, 1]),
+            st.sampled_from([None, "x", "y"]),
+            st.integers(0, 9),
+        ),
+        min_size=0,
+        max_size=14,
+    )
+)
+def test_bucket_pairs_match_nested_loop(spark, data):
+    """bucket_pairs equals a nested loop over the rows: one output row per
+    row pair with a.rid < b.rid and equal, non-NULL key parts (repeated
+    (rid, key) rows multiply), carrying c from each side."""
+    from collections import Counter
+
+    from lakeflow.operators.transforms import bucket_pairs
+
+    df = spark.createDataFrame(data, "rid int, k1 int, k2 string, c int")
+    got = Counter(
+        tuple(r)
+        for r in bucket_pairs(df, ["k1", "k2"], id_col="rid", carry=["c"]).collect()
+    )
+    want = Counter(
+        (a[0], b[0], a[3], b[3])
+        for a in data
+        for b in data
+        if a[0] < b[0]
+        and None not in a[1:3]
+        and a[1:3] == b[1:3]
+    )
+    assert got == want
+
+
+@settings(**_SETTINGS)
+@given(
     batches=st.lists(
         st.lists(
             st.tuples(st.integers(0, 30), st.integers(0, 99)),
